@@ -10,6 +10,7 @@ derived views giving the SSB star schema over the same data.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,11 +97,14 @@ def ensure_session_confs(spark: SparkSession) -> None:
     for k, v in _SESSION_CONFS:
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except Exception as e:
             # a conf may be non-settable on some builds; every one above is a
             # runtime SQL conf in Spark 4.x, but never let a tightened conf
-            # surface as a table-load failure.
-            pass
+            # surface as a table-load failure — say which one and why.
+            warnings.warn(
+                f"ensure_session_confs: could not set {k}={v}: {e}",
+                stacklevel=2,
+            )
     _conf_applied.add(id(spark))
 
 

@@ -48,6 +48,26 @@ def cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     return (dot(a, b) / (norm_a * norm_b)).cast("double")
 
 
+def _topk_per_query(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    desc: bool = False,
+    extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """The per-query top-k cut every ANN serve ends with: a row_number
+    window PARTITIONED by q_id, ordered by `score` (descending for
+    similarities, ascending for distances) with ties to the smaller n_id,
+    filtered to rk <= k.  Output (q_id, n_id, `score`, rk long, *extra)."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("q_id").orderBy(order, F.col("n_id").asc())
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "n_id", score, F.col("rk").cast("long").alias("rk"), *extra)
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -75,12 +95,7 @@ def brute_force_topk(
             cosine_pre(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("long").alias("rk"))
-    )
+    return _topk_per_query(scored, "cosine", k, desc=True)
 
 
 def hyperplane_component(plane: int, dim: int) -> float:
@@ -318,51 +333,129 @@ def ivf_topk(
     list via a per-row argmax fold over the 1-row broadcast model — one
     shuffle-free projection of the corpus (no N×C expansion); queries
     probe the `nprobe` nearest lists and score exactly within them, so
-    the scored candidate set is ~nprobe/C of the corpus.
+    the scored candidate set is ~nprobe/C of the corpus.  Assignment
+    (_ivf_assign) and serve (_ivf_cosine_rank) are the same functions the
+    persisted index (sources/ann_index) runs, so the two forms agree
+    bit for bit.
     """
-    if centroids is not None:
-        cents = centroids
-    else:
-        cents = vectors.filter(F.col(id_col) % centroid_mod == 0).select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm(F.col(vec_col)).alias("c_norm"),
-        )
-    # Nearest-centroid choice ranks dot/|c| — the probe vector's own norm is
-    # a positive per-row constant, so dropping it preserves the cosine argmax
-    # and removes two of three dot products per (vector, centroid) pair.
-    # Tie-break toward the smaller centroid id.  The model rides along as a
-    # 1-row broadcast array (r5 perf pass): assignment is a per-row
-    # order-free fold, so the inverted lists are ONE shuffle-free
-    # projection of the corpus — no crossJoin expansion, no groupBy(n_id)
-    # exchange, no assigned⋈vectors re-join.
-    cmodel = F.broadcast(_model_1row(cents, "c_id", "c_vec", "c_norm"))
-    inv_lists = _spread(vectors).crossJoin(cmodel).select(
+    cents = (
+        centroids
+        if centroids is not None
+        else _mod_centroids(vectors, vec_col, id_col, centroid_mod)
+    )
+    cmodel = _ivf_model(cents)
+    return _ivf_cosine_rank(
+        _ivf_assign(vectors, cmodel, vec_col, id_col),
+        queries,
+        cmodel,
+        k,
+        nprobe,
+        extra=("q_vec", "n_vec") if keep_vecs else (),
+    )
+
+
+def _mod_centroids(
+    vectors: DataFrame, vec_col: str, id_col: str, centroid_mod: int
+) -> DataFrame:
+    """The deterministic, training-free coarse quantizer every untrained
+    IVF tier defaults to: the vectors whose id ≡ 0 (mod `centroid_mod`),
+    in the (c_id, c_vec, c_norm) centroid contract — the stand-in the
+    DuckDB oracles recompute exactly."""
+    return vectors.filter(F.col(id_col) % centroid_mod == 0).select(
+        F.col(id_col).alias("c_id"),
+        F.col(vec_col).alias("c_vec"),
+        norm(F.col(vec_col)).alias("c_norm"),
+    )
+
+
+def _ivf_model(cents: DataFrame) -> DataFrame:
+    """A (c_id, c_vec, c_norm) centroid frame as the 1-row broadcast model
+    array that both the assignment fold and the probe selection read."""
+    return F.broadcast(_model_1row(cents, "c_id", "c_vec", "c_norm"))
+
+
+def _ivf_assign(
+    vectors: DataFrame,
+    cmodel: DataFrame,
+    vec_col: str,
+    id_col: str,
+    meta_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Inverted lists (n_id, n_vec, n_norm, c_list[, meta...]): every
+    vector joins its nearest centroid's list.  Nearest-centroid choice
+    ranks dot/|c| — the vector's own norm is a positive per-row constant,
+    so dropping it preserves the cosine argmax and removes two of three
+    dot products per (vector, centroid) pair; ties go to the smaller
+    centroid id.  Assignment is a per-row order-free fold over the 1-row
+    broadcast model (r5 perf pass), so the lists are ONE shuffle-free
+    projection of the corpus — no crossJoin expansion, no groupBy(n_id)
+    exchange, no assigned⋈vectors re-join.  Shared by ivf_topk and the
+    persisted index's build / append / upsert passes."""
+    return _spread(vectors).crossJoin(cmodel).select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
         norm(F.col(vec_col)).alias("n_norm"),
-        _fold_argmax_sim(_centroid_sims(F.col(vec_col)))["c_id"].alias("c_id"),
+        _fold_argmax_sim(_centroid_sims(F.col(vec_col)))["c_id"].alias("c_list"),
+        *[F.col(c) for c in meta_cols],
     )
-    # Probe selection: _probe_centroids replays the old rank window's
-    # exact order (sim desc incl. NaN-first, ties to the smaller c_id)
-    probe_lists = _probe_centroids(queries, cmodel, nprobe).select(
-        "q_id", "q_vec", F.col("p")["c_id"].alias("c_id"), norm(F.col("q_vec")).alias("q_norm")
-    )
+
+
+def _probe_join_topk(
+    probes: DataFrame,
+    lists: DataFrame,
+    score_name: str,
+    score: Column,
+    k: int,
+    desc: bool = False,
+    part_type: str | None = None,
+    extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """The inverted-file serve skeleton shared by every IVF tier:
+    broadcast (q_id, c_list, ...) probes ⋈ `lists` on c_list, self-pairs
+    dropped, `score` computed per candidate, per-query top-k cut.
+
+    `part_type`: for a PARTITIONED lists scan, the inferred type of its
+    c_list partition column.  The PROBE side casts to it so the join key
+    types match while the scan-side partition column stays untouched — a
+    cast there can stop dynamic partition pruning from firing (r4 ADVICE),
+    silently voiding the "read only the probed lists" contract."""
+    if part_type is not None:
+        probes = probes.withColumn("c_list", F.col("c_list").cast(part_type))
     scored = (
-        F.broadcast(probe_lists)
-        .join(inv_lists, "c_id")
+        F.broadcast(probes)
+        .join(lists, "c_list")
         .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "cosine",
-            cosine_pre(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")),
-        )
+        .withColumn(score_name, score)
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    extra = ["q_vec", "n_vec"] if keep_vecs else []
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("long").alias("rk"), *extra)
+    return _topk_per_query(scored, score_name, k, desc, extra)
+
+
+def _ivf_cosine_rank(
+    lists: DataFrame,
+    queries: DataFrame,
+    cmodel: DataFrame,
+    k: int,
+    nprobe: int,
+    part_type: str | None = None,
+    extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """Flat-IVF cosine serve over inverted lists (n_id, n_vec, n_norm,
+    c_list) — in-memory (_ivf_assign) or a persisted `lists/` scan: per
+    query the `nprobe` nearest lists of the broadcast model, exact cosine
+    within them.  Probe selection is the WINDOW-FREE fold
+    (_probe_centroids, the old rank window's order): a window function on
+    the probe side makes Spark's PlanDynamicPruningFilters fail its
+    broadcast-reuse check and silently degrade a persisted scan's
+    partition filter to `dynamicpruningexpression(true)` (r8)."""
+    probes = _probe_centroids(queries, cmodel, nprobe).select(
+        "q_id",
+        "q_vec",
+        F.col("p")["c_id"].alias("c_list"),
+        norm(F.col("q_vec")).alias("q_norm"),
+    )
+    cos = cosine_pre(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm"))
+    return _probe_join_topk(
+        probes, lists, "cosine", cos, k, desc=True, part_type=part_type, extra=extra
     )
 
 
@@ -552,9 +645,8 @@ def _probe_centroids(
 def _centroid_sims(vec: Column) -> Column:
     """array<struct(sim, c_id)> of dot/|c| for `vec` against every
     centroid of the runtime 1-row model array (the ivf ranking; one
-    definition shared by the assignment sites in ivf_topk, ivf_pq_topk
-    and the index build — r5 review: three inlined copies risked
-    diverging)."""
+    definition shared by _ivf_assign and ivf_pq_scored's residual
+    assignment — r5 review: inlined copies risked diverging)."""
     return F.transform(
         F.col("model"),
         lambda c: F.struct(
@@ -564,32 +656,12 @@ def _centroid_sims(vec: Column) -> Column:
     )
 
 
-# Above this coarse-model size, ivfpq_encode_micro switches from the
-# literal array_min expression (whose SQL text grows with K·dim) to the
-# broadcast-model integer fold.  Both compute the identical
-# (min d, tie min c_id) assignment — pinned by tests/test_lloyd.py.
+# Above this model size, _micro_nearest switches from the literal
+# array_min / array_sort expression (whose SQL text grows with K·dim and
+# breaks codegen) to the broadcast-model form.  Both compute the identical
+# lexicographic (d, c_id) ranking — pinned by tests/test_lloyd.py and
+# tests/test_ann_index.py.
 _ENCODE_LITERAL_MAX = 32
-
-
-def _fold_argmin_micro(entries: Column) -> Column:
-    """struct(d bigint, c_id long, c array<long>) with the SMALLEST
-    integer L2 (ties to the smaller c_id) from an array of candidate
-    structs — the broadcast-fold twin of the literal
-    array_min(_sql_dist_arr(...)) ranking (lexicographic (d, c_id); the
-    carried center array never participates because c_id is unique)."""
-    init = F.struct(
-        F.lit(2**62).cast("long").alias("d"),
-        F.lit(-1).cast("long").alias("c_id"),
-        F.array().cast("array<long>").alias("c"),
-    )
-    return F.aggregate(
-        entries,
-        init,
-        lambda acc, s: F.when(
-            (s["d"] < acc["d"]) | ((s["d"] == acc["d"]) & (s["c_id"] < acc["c_id"])),
-            s,
-        ).otherwise(acc),
-    )
 
 
 def _fold_argmin_d(entries: Column) -> Column:
@@ -777,25 +849,30 @@ def pq_topk(
         F.map_from_entries(F.transform(F.col("model"), _adc_entry)).alias("amap"),
         *(["q_vec"] if keep_vecs else []),
     )
-    adc_sum: Column | None = None
-    for m in range(num_subspaces):
-        term = F.element_at(
-            F.col("amap"),
-            F.lit(m * num_codewords).cast("long") + F.element_at(F.col("cmap"), F.lit(m).cast("long")),
-        )
-        adc_sum = term if adc_sum is None else adc_sum + term
     scored = (
         codes_wide.crossJoin(F.broadcast(adc_wide))
         .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("adc_micro", adc_sum)
+        .withColumn("adc_micro", _adc_sum(num_subspaces, num_codewords))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_micro").asc(), F.col("n_id").asc())
-    extra = ["q_vec", "n_vec"] if keep_vecs else []
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "adc_micro", F.col("rk").cast("long").alias("rk"), *extra)
-    )
+    extra = ("q_vec", "n_vec") if keep_vecs else ()
+    return _topk_per_query(scored, "adc_micro", k, extra=extra)
+
+
+def _adc_sum(num_subspaces: int, num_codewords: int) -> Column:
+    """Σₘ amap[m·K + cmap[m]] — the asymmetric-distance score of one
+    (query, candidate) pair: the candidate's per-subspace code `cmap`
+    indexes the query-side lookup map `amap`, whose key is m·K + codeword
+    (K = num_codewords).  Integer (micro-unit) terms, so the sum is
+    order-free BIGINT; shared by every PQ / IVF-PQ serve."""
+    adc: Column | None = None
+    for m in range(num_subspaces):
+        term = F.element_at(
+            F.col("amap"),
+            F.lit(m * num_codewords).cast("long")
+            + F.element_at(F.col("cmap"), F.lit(m).cast("long")),
+        )
+        adc = term if adc is None else adc + term
+    return adc
 
 
 def ivf_pq_scored(
@@ -854,17 +931,13 @@ def ivf_pq_scored(
     ).alias("m")
     res = lambda v, c: F.zip_with(v, c, lambda x, y: x.cast("double") - y.cast("double"))  # noqa: E731
 
-    cents = vectors.filter(F.col(id_col) % centroid_mod == 0).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    )
+    cents = _mod_centroids(vectors, vec_col, id_col, centroid_mod)
     # nearest-centroid assignment (same ranking + tie-break as ivf_topk),
     # with the model riding along as a 1-row broadcast array (r5 perf
     # pass): argmax fold + centroid lookup + residual in ONE shuffle-free
     # projection — no crossJoin expansion, no groupBy(n_id) exchange, no
     # assigned⋈vectors⋈cents re-joins.
-    cmodel = F.broadcast(_model_1row(cents, "c_id", "c_vec", "c_norm"))
+    cmodel = _ivf_model(cents)
     with_res = (
         _spread(vectors).crossJoin(cmodel)
         .select(
@@ -955,18 +1028,10 @@ def ivf_pq_scored(
         "c_list",
         F.map_from_entries(F.transform(F.col("model"), _adc_entry)).alias("amap"),
     )
-    adc_sum: Column | None = None
-    for m in range(num_subspaces):
-        term = F.element_at(
-            F.col("amap"),
-            F.lit(m * num_codewords).cast("long")
-            + F.element_at(F.col("cmap"), F.lit(m).cast("long")),
-        )
-        adc_sum = term if adc_sum is None else adc_sum + term
     return (
         codes_wide.join(F.broadcast(adc_wide), "c_list")
         .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("adc_micro", adc_sum)
+        .withColumn("adc_micro", _adc_sum(num_subspaces, num_codewords))
         .select(
             "q_id",
             "n_id",
@@ -996,12 +1061,7 @@ def ivf_pq_topk(
         vectors, queries, dim, vec_col, id_col, centroid_mod, nprobe,
         num_subspaces, num_codewords, code_stride,
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_micro").asc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "adc_micro", F.col("rk").cast("long").alias("rk"))
-    )
+    return _topk_per_query(scored, "adc_micro", k)
 
 
 def exact_rerank(
@@ -1054,12 +1114,7 @@ def exact_rerank(
             ),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("long").alias("rk"))
-    )
+    return _topk_per_query(scored, "cosine", k, desc=True)
 
 
 def ivf_coarse_shortlist(
@@ -1089,28 +1144,12 @@ def ivf_coarse_shortlist(
     Scale shape: assignment is the shuffle-free broadcast-model argmax
     fold over the corpus; probes ride broadcast; the only exchange is the
     per-query rank window over probed-list members."""
-    cents = vectors.filter(F.col(id_col) % centroid_mod == 0).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    )
-    cmodel = F.broadcast(_model_1row(cents, "c_id", "c_vec", "c_norm"))
-    inv = _spread(vectors).crossJoin(cmodel).select(
-        F.col(id_col).alias("n_id"),
-        _fold_argmax_sim(_centroid_sims(F.col(vec_col)))["c_id"].alias("c_id"),
-    )
+    cmodel = _ivf_model(_mod_centroids(vectors, vec_col, id_col, centroid_mod))
+    inv = _ivf_assign(vectors, cmodel, vec_col, id_col).select("n_id", "c_list")
     probes = _probe_centroids(queries, cmodel, nprobe, with_rank=True).select(
-        "q_id", "pr", F.col("p")["c_id"].alias("c_id")
+        "q_id", "pr", F.col("p")["c_id"].alias("c_list")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("pr").asc(), F.col("n_id").asc())
-    return (
-        F.broadcast(probes)
-        .join(inv, "c_id")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= r)
-        .select("q_id", "n_id", F.col("rk").cast("long").alias("rk"))
-    )
+    return _probe_join_topk(probes, inv, "pr", F.col("pr"), r).drop("pr")
 
 
 def lsh_collision_shortlist(
@@ -1185,12 +1224,7 @@ def lsh_collision_shortlist(
         .groupBy("q_id", "n_id")
         .agg(F.count(F.lit(1)).alias("colls"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("colls").desc(), F.col("n_id").asc())
-    return (
-        colls.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= r)
-        .select("q_id", "n_id", "colls", F.col("rk").cast("long").alias("rk"))
-    )
+    return _topk_per_query(colls, "colls", r, desc=True)
 
 
 def lsh_bucket_topk(
@@ -1225,12 +1259,7 @@ def lsh_bucket_topk(
             cosine_pre(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("long").alias("rk"))
-    )
+    return _topk_per_query(scored, "cosine", k, desc=True)
 
 
 def ivf_assign_arrow(
@@ -1260,11 +1289,7 @@ def ivf_assign_arrow(
     import pandas as pd
 
     if centroids is None:
-        centroids = vectors.filter(F.col(id_col) % centroid_mod == 0).select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm(F.col(vec_col)).alias("c_norm"),
-        )
+        centroids = _mod_centroids(vectors, vec_col, id_col, centroid_mod)
     model = sorted(centroids.collect(), key=lambda r: r["c_id"])
     ids = np.array([int(r["c_id"]) for r in model], dtype=np.int64)
     C = np.array([[float(x) for x in r["c_vec"]] for r in model], dtype=np.float64)
@@ -1439,11 +1464,6 @@ def _sql_dist_arr(vec_sql: str, entries, with_center: bool = False) -> str:
     return "array(" + ",".join(elems) + ")"
 
 
-def _micro_dist_arr(vec_sql: str, entries, with_center: bool = False) -> Column:
-    """Column form of _sql_dist_arr (one F.expr parse)."""
-    return F.expr(_sql_dist_arr(vec_sql, entries, with_center))
-
-
 def _micro_argmin_sql(vec_sql: str, entries, with_center: bool = False) -> str:
     """SQL text for struct(d, c_id[, c]) of the nearest literal center
     (ties to the smaller c_id; `c` never participates in comparison
@@ -1451,9 +1471,136 @@ def _micro_argmin_sql(vec_sql: str, entries, with_center: bool = False) -> str:
     return f"array_min({_sql_dist_arr(vec_sql, entries, with_center)})"
 
 
-def _micro_argmin(vec_sql: str, entries, with_center: bool = False) -> Column:
-    """Column form of _micro_argmin_sql (one F.expr parse)."""
-    return F.expr(_micro_argmin_sql(vec_sql, entries, with_center))
+def _micro_nearest(
+    df: DataFrame,
+    vec: str,
+    cents: list,
+    keep: tuple[str, ...],
+    nprobe: int | None = None,
+    with_center: bool = False,
+) -> DataFrame:
+    """`df`'s `keep` columns plus `p` = struct(d, c_id[, c]): the nearest
+    of the micro centers `cents` ([(c_id, vec_micro)]) to the array<long>
+    column `vec` by BIGINT L2, ties to the smaller c_id — one row per input
+    row when `nprobe` is None (assignment), else the `nprobe` nearest
+    exploded one row each in ascending (d, c_id) order (probe selection,
+    exactly the old rank window's order).
+
+    The form is picked by model size: up to _ENCODE_LITERAL_MAX centers
+    the model inlines as a literal array_min / array_sort expression (the
+    oracle-shaped form); past that the model rides as a 1-row broadcast
+    array and the same array_min / array_sort runs over its per-row
+    distance structs — the identical lexicographic (d, c_id) comparison
+    (`c` never compares: c_id is unique), scaling to thousands of centers
+    (r9: corpus-grain quantizers).  Assignment over the broadcast model
+    spreads a small-partition corpus first (see _spread); probing a query
+    set does not."""
+    if len(cents) <= _ENCODE_LITERAL_MAX:
+        dist = _sql_dist_arr(vec, cents, with_center)
+        pick = (
+            f"array_min({dist})"
+            if nprobe is None
+            else f"explode(slice(array_sort({dist}), 1, {nprobe}))"
+        )
+        return df.selectExpr(*keep, f"{pick} AS p")
+    cmodel = F.broadcast(
+        _model_1row(
+            df.sparkSession.createDataFrame(sorted(cents), "c_id long, c array<long>"),
+            "c_id",
+            "c",
+        )
+    )
+    dist = F.transform(
+        F.col("model"),
+        lambda c: F.struct(
+            l2_micro(F.col(vec), c["c"]).alias("d"),
+            c["c_id"].cast("long").alias("c_id"),
+            *([c["c"].alias("c")] if with_center else []),
+        ),
+    )
+    if nprobe is None:
+        return _spread(df).crossJoin(cmodel).select(*keep, F.array_min(dist).alias("p"))
+    return df.crossJoin(cmodel).select(
+        *keep, F.explode(F.slice(F.array_sort(dist), 1, nprobe)).alias("p")
+    )
+
+
+def _micro_assign(
+    vectors: DataFrame, cents: list, vec_col: str, id_col: str
+) -> DataFrame:
+    """Micro inverted lists (n_id, v, c_list): micro-quantized vectors and
+    their nearest center — shared by ivf_topk_micro and the persisted
+    integer index build."""
+    vm = vectors.select(
+        F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("v")
+    )
+    return _micro_nearest(vm, "v", cents, ("n_id", "v")).select(
+        "n_id", "v", F.col("p")["c_id"].alias("c_list")
+    )
+
+
+def _ivf_micro_rank(
+    lists: DataFrame,
+    queries: DataFrame,
+    cents: list,
+    k: int,
+    nprobe: int,
+    part_type: str | None = None,
+) -> DataFrame:
+    """Flat-IVF integer-L2 serve over micro lists (n_id, v, c_list) —
+    in-memory (_micro_assign) or a persisted `lists/` scan: the `nprobe`
+    nearest centers per query (window-free, see _ivf_cosine_rank), exact
+    BIGINT L2 within them.  Output (q_id, n_id, l2_micro2, rk)."""
+    qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
+    probes = _micro_nearest(qm, "qv", cents, ("q_id", "qv"), nprobe=nprobe).select(
+        "q_id", "qv", F.col("p")["c_id"].alias("c_list")
+    )
+    l2 = l2_micro(F.col("qv"), F.col("v"))
+    return _probe_join_topk(probes, lists, "l2_micro2", l2, k, part_type=part_type)
+
+
+def _micro_residuals(
+    vm: DataFrame, cents: list, meta_cols: tuple[str, ...] = ()
+) -> DataFrame:
+    """(n_id, c_list, r[, meta...]) over micro vectors (n_id, v[, meta...]):
+    the nearest coarse center and the exact BIGINT residual v − c — the
+    IVFADC encode input, shared by training and encoding."""
+    return _micro_nearest(
+        vm, "v", cents, ("n_id", "v", *meta_cols), with_center=True
+    ).select(
+        "n_id",
+        F.col("p")["c_id"].alias("c_list"),
+        F.zip_with(F.col("v"), F.col("p")["c"], lambda x, y: x - y).alias("r"),
+        *[F.col(c) for c in meta_cols],
+    )
+
+
+def _micro_code_map(vec: str, cbs: list, sub: int, num_subspaces: int) -> Column:
+    """cmap = map<m, code>: per subspace m, the nearest literal codeword of
+    the m-th `sub`-wide slice of the array<long> column `vec` (BIGINT L2,
+    ties to the smaller id) — the PQ encode of pq_topk_micro and the
+    IVFADC residual encode.  `cbs` = [(m, c_id, c_sub_micro)]."""
+    by_m: dict[int, list] = {}
+    for m, c_id, c_sub_v in cbs:
+        by_m.setdefault(int(m), []).append((c_id, c_sub_v))
+    entries = ",".join(
+        f"named_struct('m',CAST({m} AS BIGINT),'code',"
+        f"({_micro_argmin_sql(f'slice({vec},{m * sub + 1},{sub})', by_m[m])}).c_id)"
+        for m in range(num_subspaces)
+    )
+    return F.expr(f"map_from_entries(array({entries}))")
+
+
+def _micro_adc_map(vec: str, cbs: list, sub: int, num_codewords: int) -> Column:
+    """amap = map<m·K + c_id, BIGINT L2 of `vec`'s m-th slice to codeword
+    c_id> — the query-side ADC lookup table _adc_sum reads (K =
+    num_codewords)."""
+    entries = ",".join(
+        f"named_struct('key',CAST({int(m) * num_codewords + int(c_id)} AS BIGINT),"
+        f"'contrib',{_sql_l2_micro(f'slice({vec},{int(m) * sub + 1},{sub})', _sql_long_arr(c_sub_v))})"
+        for m, c_id, c_sub_v in cbs
+    )
+    return F.expr(f"map_from_entries(array({entries}))")
 
 
 def kmeans_lloyd_micro(
@@ -1609,36 +1756,16 @@ def ivf_topk_micro(
     whole query (training included) is bit-exact against a SQL oracle.
 
     Same semantics as ivf_topk with the model folded into map-side
-    expressions (the r5 perf pass): corpus assignment is a literal-model
-    argmin projection (no crossJoin expansion, no groupBy(n_id) shuffle)
-    and probe selection is array_sort over the same literal distances
+    expressions (the r5 perf pass, _micro_nearest): corpus assignment is
+    an argmin projection (no crossJoin expansion, no groupBy(n_id)
+    shuffle) and probe selection is array_sort over the same distances
     (ascending (d, c_id) — exactly the old rank window's order) sliced to
     nprobe — so the serve plan is scan → broadcast join → ONE top-k
-    window.  Output (q_id, n_id, l2_micro2, rk); smaller = nearer.
+    window.  The persisted integer index runs the same assignment and
+    serve core.  Output (q_id, n_id, l2_micro2, rk); smaller = nearer.
     """
-    vm = vectors.select(
-        F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("v")
-    )
-    assigned = vm.select(
-        "n_id", "v", F.expr(f"({_micro_argmin_sql('v', cents)}).c_id").alias("c_id")
-    )
-    qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
-    probes = qm.selectExpr(
-        "q_id",
-        "qv",
-        f"explode(slice(array_sort({_sql_dist_arr('qv', cents)}), 1, {nprobe})) AS p",
-    ).select("q_id", "qv", F.col("p.c_id").alias("c_id"))
-    scored = (
-        F.broadcast(probes)
-        .join(assigned, "c_id")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("l2_micro2", l2_micro(F.col("qv"), F.col("v")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("l2_micro2").asc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "l2_micro2", F.col("rk").cast("long").alias("rk"))
+    return _ivf_micro_rank(
+        _micro_assign(vectors, cents, vec_col, id_col), queries, cents, k, nprobe
     )
 
 
@@ -1735,48 +1862,18 @@ def pq_topk_micro(
             f"pq_topk_micro: codebook c_id(s) {bad} >= num_codewords "
             f"{num_codewords} — ADC keys would alias adjacent subspaces"
         )
-    by_m: dict[int, list] = {}
-    for m, c_id, c_sub_v in codebooks:
-        by_m.setdefault(int(m), []).append((c_id, c_sub_v))
-    vvdf = vectors.select(
+    codes_wide = vectors.select(
         F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("vv")
-    )
-    code_entries = ",".join(
-        f"named_struct('m',CAST({m} AS BIGINT),'c_id',"
-        f"({_micro_argmin_sql(f'slice(vv,{m * sub + 1},{sub})', by_m[m])}).c_id)"
-        for m in range(num_subspaces)
-    )
-    codes_wide = vvdf.select(
-        "n_id", F.expr(f"map_from_entries(array({code_entries}))").alias("cmap")
-    )
-    qdf = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
-    amap_entries = ",".join(
-        f"named_struct('key',CAST({int(m) * num_codewords + int(c_id)} AS BIGINT),"
-        f"'contrib',{_sql_l2_micro(f'slice(qv,{int(m) * sub + 1},{sub})', _sql_long_arr(c_sub_v))})"
-        for m, c_id, c_sub_v in codebooks
-    )
-    adc_wide = qdf.select(
-        "q_id", F.expr(f"map_from_entries(array({amap_entries}))").alias("amap")
-    )
-    adc_sum: Column | None = None
-    for m in range(num_subspaces):
-        term = F.element_at(
-            F.col("amap"),
-            F.lit(m * num_codewords).cast("long")
-            + F.element_at(F.col("cmap"), F.lit(m).cast("long")),
-        )
-        adc_sum = term if adc_sum is None else adc_sum + term
+    ).select("n_id", _micro_code_map("vv", codebooks, sub, num_subspaces).alias("cmap"))
+    adc_wide = queries.select(
+        "q_id", quantize_micro(F.col("q_vec")).alias("qv")
+    ).select("q_id", _micro_adc_map("qv", codebooks, sub, num_codewords).alias("amap"))
     scored = (
         codes_wide.crossJoin(F.broadcast(adc_wide))
         .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("adc_q", adc_sum)
+        .withColumn("adc_q", _adc_sum(num_subspaces, num_codewords))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_q").asc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "adc_q", F.col("rk").cast("long").alias("rk"))
-    )
+    return _topk_per_query(scored, "adc_q", k)
 
 
 def ivf_pq_topk_lloyd_micro(
@@ -1892,17 +1989,7 @@ def ivfpq_train_micro(
         ],
     )
     # residuals: nearest coarse centroid (integer L2, min-c_id ties), r = v − c
-    # (one argmin into a struct column; the later projection reads both
-    # fields — Catalyst inlines it, duplicating a cheap per-row fold)
-    best = _micro_argmin_sql("v", cents, with_center=True)
-    res = (
-        vm.selectExpr(
-            "n_id",
-            f"({best}).c_id AS c_list",
-            f"zip_with(v, ({best}).c, (x,y)->x-y) AS r",
-        )
-        .persist()  # feeds the Lloyd stats rounds
-    )
+    res = _micro_residuals(vm, cents).persist()  # feeds the Lloyd stats rounds
     try:
         ms = F.explode(
             F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)])
@@ -1961,13 +2048,9 @@ def ivfpq_encode_micro(
     per-subspace residual-codeword argmin, all map-side (see
     ivf_pq_topk_lloyd_micro's plan-shape note).
 
-    The coarse assignment picks its expression form by model size: up to
-    _ENCODE_LITERAL_MAX centroids inline as the literal array_min
-    expression (the oracle-shaped form); past that the SQL text grows
-    with K·dim and breaks codegen, so the model rides as a 1-row
-    broadcast array and a per-row integer-L2 fold computes the SAME
-    (min d, tie min c_id) ranking — the flat-IVF _assign shape, scaling
-    to thousands of centroids (r9: what lets the persisted-IVFADC
+    The coarse assignment is _micro_nearest, so its expression form is
+    picked by model size — literal up to _ENCODE_LITERAL_MAX centroids,
+    the broadcast model past it (r9: what lets the persisted-IVFADC
     mutation path run at corpus-grain quantizers)."""
     sub = dim // num_subspaces
     vm = vectors.select(
@@ -1975,63 +2058,11 @@ def ivfpq_encode_micro(
         quantize_micro(F.col(vec_col)).alias("v"),
         *[F.col(c) for c in meta_cols],
     )
-    if len(cents) <= _ENCODE_LITERAL_MAX:
-        best = _micro_argmin_sql("v", cents, with_center=True)
-        res = vm.selectExpr(
-            "n_id",
-            f"({best}).c_id AS c_list",
-            f"zip_with(v, ({best}).c, (x,y)->x-y) AS r",
-            *meta_cols,
-        )
-    else:
-        cmodel = F.broadcast(
-            _model_1row(
-                vectors.sparkSession.createDataFrame(
-                    sorted(cents), "c_id long, c array<long>"
-                ),
-                "c_id",
-                "c",
-            )
-        )
-        entries = F.transform(
-            F.col("model"),
-            lambda c: F.struct(
-                l2_micro(F.col("v"), c["c"]).alias("d"),
-                c["c_id"].cast("long").alias("c_id"),
-                c["c"].alias("c"),
-            ),
-        )
-        best_c = _fold_argmin_micro(entries)
-        res = (
-            _spread(vm)
-            .crossJoin(cmodel)
-            .select(
-                "n_id",
-                "v",
-                best_c.alias("__best"),
-                *[F.col(c) for c in meta_cols],
-            )
-            .select(
-                "n_id",
-                F.col("__best")["c_id"].alias("c_list"),
-                F.zip_with(
-                    F.col("v"), F.col("__best")["c"], lambda x, y: x - y
-                ).alias("r"),
-                *[F.col(c) for c in meta_cols],
-            )
-        )
-    by_m: dict[int, list] = {}
-    for m, c_id, c_sub_v in cbs:
-        by_m.setdefault(int(m), []).append((c_id, c_sub_v))
-    code_entries = ",".join(
-        f"named_struct('m',CAST({m} AS BIGINT),'pq_c',"
-        f"({_micro_argmin_sql(f'slice(r,{m * sub + 1},{sub})', by_m[m])}).c_id)"
-        for m in range(num_subspaces)
-    )
+    res = _micro_residuals(vm, cents, meta_cols)
     return res.select(
         "n_id",
         "c_list",
-        F.expr(f"map_from_entries(array({code_entries}))").alias("cmap"),
+        _micro_code_map("r", cbs, sub, num_subspaces).alias("cmap"),
         *[F.col(c) for c in meta_cols],
     )
 
@@ -2050,98 +2081,28 @@ def ivfpq_rank_micro(
 ) -> DataFrame:
     """ADC top-k over an encoded IVFADC corpus `codes_wide`
     (n_id, c_list, cmap — from ivfpq_encode_micro or a persisted index
-    scan): literal-model probe selection, per-(query, probed list) ADC
-    lookup maps as a pure projection, one top-k window.  Output
-    (q_id, n_id, adc_q, rk); smaller = nearer.
-
-    `probe_list_type`: for a PARTITIONED codes scan, the inferred type of
-    its c_list partition column — the probe side casts to it so the join
-    key types match without touching the scan side (a cast there can stop
-    dynamic partition pruning from firing, r4 ADVICE)."""
+    scan): probe selection (_micro_nearest), per-(query, probed list) ADC
+    lookup maps as a pure projection, then the shared probe ⋈ lists →
+    top-k skeleton (_probe_join_topk).  Output (q_id, n_id, adc_q, rk);
+    smaller = nearer.  `probe_list_type`: the c_list partition type of a
+    persisted codes scan (see _probe_join_topk)."""
     sub = dim // num_subspaces
-    # probes: nprobe nearest coarse lists per query; query residual per
-    # list.  Same size switch as ivfpq_encode_micro: past
-    # _ENCODE_LITERAL_MAX centroids the literal array_sort expression is
-    # replaced by the broadcast-model form — array_sort over
-    # struct(d, c_id, c) entries is the IDENTICAL lexicographic (d, c_id)
-    # probe order (c never compares: c_id is unique).
+    # probes: nprobe nearest coarse lists per query (_micro_nearest, the
+    # same size switch as the encode); query residual per list
     qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
-    if len(cents) <= _ENCODE_LITERAL_MAX:
-        list_sql = (
-            f"CAST(p.c_id AS {probe_list_type})" if probe_list_type else "p.c_id"
-        )
-        probes = qm.selectExpr(
-            "q_id",
-            "qv",
-            f"explode(slice(array_sort({_sql_dist_arr('qv', cents, with_center=True)}), 1, {nprobe})) AS p",
-        ).selectExpr(
-            "q_id",
-            f"{list_sql} AS c_list",
-            "zip_with(qv, p.c, (x,y)->x-y) AS qr",
-        )
-    else:
-        cmodel = F.broadcast(
-            _model_1row(
-                queries.sparkSession.createDataFrame(
-                    sorted(cents), "c_id long, c array<long>"
-                ),
-                "c_id",
-                "c",
-            )
-        )
-        entries = F.transform(
-            F.col("model"),
-            lambda c: F.struct(
-                l2_micro(F.col("qv"), c["c"]).alias("d"),
-                c["c_id"].cast("long").alias("c_id"),
-                c["c"].alias("c"),
-            ),
-        )
-        probes = (
-            qm.crossJoin(cmodel)
-            .select(
-                "q_id",
-                "qv",
-                F.explode(F.slice(F.array_sort(entries), 1, nprobe)).alias("p"),
-            )
-            .select(
-                "q_id",
-                F.col("p")["c_id"]
-                .cast(probe_list_type or "bigint")
-                .alias("c_list"),
-                F.zip_with(
-                    F.col("qv"), F.col("p")["c"], lambda x, y: x - y
-                ).alias("qr"),
-            )
-        )
-    amap_entries = ",".join(
-        f"named_struct('key',CAST({int(m) * num_codewords + int(c_id)} AS BIGINT),"
-        f"'contrib',{_sql_l2_micro(f'slice(qr,{int(m) * sub + 1},{sub})', _sql_long_arr(c_sub_v))})"
-        for m, c_id, c_sub_v in cbs
+    probes = _micro_nearest(
+        qm, "qv", cents, ("q_id", "qv"), nprobe=nprobe, with_center=True
+    ).select(
+        "q_id",
+        F.col("p")["c_id"].alias("c_list"),
+        F.zip_with(F.col("qv"), F.col("p")["c"], lambda x, y: x - y).alias("qr"),
     )
     adc_wide = probes.select(
-        "q_id",
-        "c_list",
-        F.expr(f"map_from_entries(array({amap_entries}))").alias("amap"),
+        "q_id", "c_list", _micro_adc_map("qr", cbs, sub, num_codewords).alias("amap")
     )
-    adc_sum: Column | None = None
-    for m in range(num_subspaces):
-        term = F.element_at(
-            F.col("amap"),
-            F.lit(m * num_codewords).cast("long")
-            + F.element_at(F.col("cmap"), F.lit(m).cast("long")),
-        )
-        adc_sum = term if adc_sum is None else adc_sum + term
-    scored = (
-        codes_wide.join(F.broadcast(adc_wide), "c_list")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("adc_q", adc_sum)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_q").asc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "adc_q", F.col("rk").cast("long").alias("rk"))
+    adc = _adc_sum(num_subspaces, num_codewords)
+    return _probe_join_topk(
+        adc_wide, codes_wide, "adc_q", adc, k, part_type=probe_list_type
     )
 
 
@@ -2207,12 +2168,7 @@ def sq8_topk(
             F.expr("aggregate(zip_with(qq, nq, (a, b) -> a * b), 0L, (s, x) -> s + x)"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dot_q").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "dot_q", "rk")
-    )
+    return _topk_per_query(scored, "dot_q", k, desc=True)
 
 
 def pca_power_micro(

@@ -18,9 +18,11 @@ is the index-as-a-table form:
   storage layout instead of a custom in-memory structure: at 1e10 vectors
   a query touches nprobe partitions, not the corpus.
 
-Results are bit-identical to operators/similarity.ivf_topk (same
-assignment expressions, norms persisted as exact doubles, same
-cosine_pre scoring), so the sim_ann_ivf oracle gates the indexed path too.
+Results are bit-identical to operators/similarity.ivf_topk: both forms
+run the same assignment (similarity._ivf_assign) and the same serve core
+(similarity._ivf_cosine_rank; the integer tier _micro_assign /
+_ivf_micro_rank), with norms persisted as exact doubles — so the
+sim_ann_ivf oracle gates the indexed path too.
 """
 
 from __future__ import annotations
@@ -28,17 +30,16 @@ from __future__ import annotations
 import os
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.operators.similarity import (
-    _centroid_sims,
-    _fold_argmax_sim,
-    _model_1row,
-    _probe_centroids,
-    _spread,
-    cosine_pre,
-    norm,
+    _ivf_assign,
+    _ivf_cosine_rank,
+    _ivf_micro_rank,
+    _ivf_model,
+    _micro_assign,
+    _mod_centroids,
 )
 
 
@@ -127,12 +128,8 @@ def ivf_index_build(
     corpus is.
     """
     if centroids is None:
-        centroids = vectors.filter(F.col(id_col) % centroid_mod == 0).select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            norm(F.col(vec_col)).alias("c_norm"),
-        )
-    lists = _assign(vectors, centroids, vec_col, id_col, meta_cols)
+        centroids = _mod_centroids(vectors, vec_col, id_col, centroid_mod)
+    lists = _ivf_assign(vectors, _ivf_model(centroids), vec_col, id_col, meta_cols)
 
     def _write_cents() -> None:
         centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
@@ -166,28 +163,6 @@ def ivf_index_build(
             os.path.join(path, "centroids")
         ).count()
         _write_lists(lists, path, None, n_dirs_hint=int(n_lists))
-
-
-def _assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    vec_col: str,
-    id_col: str,
-    meta_cols: tuple[str, ...],
-) -> DataFrame:
-    """Nearest-centroid assignment projection shared by build, append and
-    upsert: 1-row broadcast model + per-row order-free argmax fold (the
-    ivf_topk r5 plan shape) — one shuffle-free projection instead of a
-    crossJoin-expand + groupBy(n_id) + re-join, so the only exchange left
-    before the layout write is the repartition the layout wants."""
-    cmodel = F.broadcast(_model_1row(centroids, "c_id", "c_vec", "c_norm"))
-    return _spread(vectors).crossJoin(cmodel).select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        norm(F.col(vec_col)).alias("n_norm"),
-        _fold_argmax_sim(_centroid_sims(F.col(vec_col)))["c_id"].alias("c_list"),
-        *[F.col(c) for c in meta_cols],
-    )
 
 
 def _check_append_schema(assigned: DataFrame, existing: DataFrame) -> None:
@@ -259,7 +234,9 @@ def ivf_index_append(
     verbatim sim_ann_ivf oracle)."""
     spark = new_vectors.sparkSession
     centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    assigned = _assign(new_vectors, centroids, vec_col, id_col, meta_cols)
+    assigned = _ivf_assign(
+        new_vectors, _ivf_model(centroids), vec_col, id_col, meta_cols
+    )
     _append_assigned(spark, path, assigned)
 
 
@@ -302,9 +279,9 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
     # ONE fused stats pass (r12; was two sequential collects — the batch's
     # per-list counts, then the touched lists' existing counts+slots): the
     # batch and the thin (c_list, c_slot) projection of the layout union
-    # into one aggregate, and only lists the batch actually touches
-    # (_new > 0) are collected — still bounded by the batch's target
-    # lists, never K'.
+    # into one aggregate.  The union still lists and scans every c_list
+    # directory (all K'); only the COLLECT is bounded by the batch — it
+    # returns just the lists the batch touches (_new > 0).
     stats = (
         assigned.select(
             F.col("c_list").cast("long").alias("c_list"),
@@ -438,7 +415,9 @@ def ivf_index_upsert(
         raise ValueError("ivf_index_upsert: pass spark= when updates is None")
     if updates is not None:
         centroids = spark.read.parquet(os.path.join(path, "centroids"))
-        assigned = _assign(updates, centroids, vec_col, id_col, meta_cols)
+        assigned = _ivf_assign(
+            updates, _ivf_model(centroids), vec_col, id_col, meta_cols
+        )
     else:
         assigned = None
     return _upsert_assigned(
@@ -767,45 +746,15 @@ def ivf_index_topk(
     restricted to the probed lists — the same probe semantics as the
     unfiltered path."""
     cents = _scan(spark, os.path.join(path, "centroids"), cached)
-    # The scan-side partition column stays UNTOUCHED: rewriting it with a
-    # cast can stop dynamic partition pruning from firing (r4 ADVICE), which
-    # would silently void the "read only nprobe partitions" contract.  The
-    # probe side casts to whatever type partition discovery inferred instead;
-    # scripts/explain_audit.py pins the LIVE dynamicpruning subquery on this
-    # scan.
     lists = _scan(spark, os.path.join(path, "lists"), cached)
     if candidate_filter is not None:
         lists = lists.filter(candidate_filter)
-    part_type = dict(lists.dtypes)["c_list"]
-    # Probe selection is the WINDOW-FREE fold (similarity._probe_centroids,
-    # same order as the old rank window — r8 DPP fix): a window function on
-    # the probe side makes Spark's PlanDynamicPruningFilters fail its
-    # broadcast-reuse check and silently degrade the partition filter to
-    # `dynamicpruningexpression(true)` — the scan then opens EVERY list
-    # file (measured at 16x: 1104 partition files / the whole index read
-    # vs ~nprobe·queries files after this fix).  The fold keeps the probe
-    # side reusable, so DPP actually prunes the unprobed partitions.
-    cmodel = F.broadcast(_model_1row(cents, "c_id", "c_vec", "c_norm"))
-    probe_lists = _probe_centroids(queries, cmodel, nprobe).select(
-        "q_id",
-        "q_vec",
-        F.col("p")["c_id"].cast(part_type).alias("c_list"),
-        norm(F.col("q_vec")).alias("q_norm"),
-    )
-    scored = (
-        F.broadcast(probe_lists)
-        .join(lists, "c_list")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "cosine",
-            cosine_pre(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm")),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("long").alias("rk"))
+    # the probe side casts to the partition type discovery inferred; the
+    # scan side stays untouched so DPP fires (scripts/explain_audit.py pins
+    # the LIVE dynamicpruning subquery on this scan)
+    return _ivf_cosine_rank(
+        lists, queries, _ivf_model(cents), k, nprobe,
+        part_type=dict(lists.dtypes)["c_list"],
     )
 
 
@@ -871,27 +820,14 @@ def ivf_index_build_micro(
     ivf_index_build) but BIGINT vectors and integer-L2 assignment, so the
     whole train→persist→serve loop stays bit-replayable by a SQL
     oracle."""
-    from codecdb_queryengine_spark.operators.similarity import (
-        _micro_argmin_sql,
-        quantize_micro,
-    )
-
     spark = vectors.sparkSession
     _write_model_table(
         spark, os.path.join(path, "centroids"), sorted(cents),
         (("c_id", "long"), ("c", "array")),
     )
-    vm = vectors.select(
-        F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("v")
-    )
-    # literal-model argmin projection (operators/similarity._micro_argmin_sql):
-    # same assignment semantics as before, with no crossJoin expansion and
-    # no groupBy(n_id) shuffle ahead of the repartition(c_list) write
-    assigned = vm.select(
-        "n_id",
-        "v",
-        F.expr(f"({_micro_argmin_sql('v', cents)}).c_id").alias("c_list"),
-    )
+    # the in-memory tier's own assignment projection (no crossJoin
+    # expansion, no groupBy(n_id) shuffle ahead of the repartition write)
+    assigned = _micro_assign(vectors, cents, vec_col, id_col)
     _write_lists(assigned, path, max_list_rows, n_dirs_hint=len(cents))
 
 
@@ -903,79 +839,18 @@ def ivf_index_topk_micro(
     nprobe: int = 2,
     cached: bool = False,
 ) -> DataFrame:
-    """Top-k over the persisted integer index: same partition-pruned plan
-    shape as ivf_index_topk (literal-model probe selection, nprobe lists
-    per query, DPP on the c_list equi-join — scan-side partition column
-    untouched), every distance BIGINT.  Output matches operators/
-    similarity.ivf_topk_micro exactly, so one oracle gates both forms.
-    Probe selection is the window-free array_sort/slice form (the
-    ivf_topk_micro serve shape — exactly the old rank window's ascending
-    (d, c_id) order): a window on the probe side silently degrades DPP to
-    `dynamicpruningexpression(true)` (see ivf_index_topk, r8)."""
-    from codecdb_queryengine_spark.operators.similarity import (
-        _sql_dist_arr,
-        l2_micro,
-        quantize_micro,
-    )
-
+    """Top-k over the persisted integer index: the in-memory tier's serve
+    core (similarity._ivf_micro_rank — window-free probe selection, nprobe
+    lists per query, DPP on the c_list equi-join with the scan-side
+    partition column untouched) over the scanned lists, every distance
+    BIGINT.  Output matches operators/similarity.ivf_topk_micro exactly,
+    so one oracle gates both forms."""
     cents = _collect_rows(spark, os.path.join(path, "centroids"), ("c_id", "c"))
     if not cents:
         raise ValueError(f"ivf_index_topk_micro: empty centroid artifact at {path}")
     lists = _scan(spark, os.path.join(path, "lists"), cached)
-    part_type = dict(lists.dtypes)["c_list"]
-    qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
-    # same size switch as ivfpq_rank_micro (r9): past _ENCODE_LITERAL_MAX
-    # centroids the literal probe expression breaks codegen, so the model
-    # rides as a 1-row broadcast and array_sort over struct(d, c_id)
-    # entries gives the identical lexicographic probe order
-    from codecdb_queryengine_spark.operators.similarity import (
-        _ENCODE_LITERAL_MAX,
-        _model_1row,
-    )
-
-    if len(cents) <= _ENCODE_LITERAL_MAX:
-        probes = qm.selectExpr(
-            "q_id",
-            "qv",
-            f"explode(slice(array_sort({_sql_dist_arr('qv', cents)}), 1, {nprobe})) AS p",
-        ).select("q_id", "qv", F.col("p.c_id").cast(part_type).alias("c_list"))
-    else:
-        cmodel = F.broadcast(
-            _model_1row(
-                spark.createDataFrame(sorted(cents), "c_id long, c array<long>"),
-                "c_id",
-                "c",
-            )
-        )
-        entries = F.transform(
-            F.col("model"),
-            lambda c: F.struct(
-                l2_micro(F.col("qv"), c["c"]).alias("d"),
-                c["c_id"].cast("long").alias("c_id"),
-            ),
-        )
-        probes = (
-            qm.crossJoin(cmodel)
-            .select(
-                "q_id",
-                "qv",
-                F.explode(F.slice(F.array_sort(entries), 1, nprobe)).alias("p"),
-            )
-            .select(
-                "q_id", "qv", F.col("p")["c_id"].cast(part_type).alias("c_list")
-            )
-        )
-    scored = (
-        F.broadcast(probes)
-        .join(lists, "c_list")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("l2_micro2", l2_micro(F.col("qv"), F.col("v")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("l2_micro2").asc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "l2_micro2", F.col("rk").cast("long").alias("rk"))
+    return _ivf_micro_rank(
+        lists, queries, cents, k, nprobe, part_type=dict(lists.dtypes)["c_list"]
     )
 
 

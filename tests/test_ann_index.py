@@ -452,9 +452,15 @@ def test_micro_serves_fold_path_matches_literal_at_large_k(spark, sf_dir, monkey
     p1 = tempfile.mkdtemp(prefix="ivf_micro_bigk_")
     AI.ivf_index_build_micro(emb, p1, cents)
     fold = AI.ivf_index_topk_micro(spark, p1, qs, k=5, nprobe=2).collect()
+    # the in-memory serve shares the assignment and serve core, so it takes
+    # the same size switch: both of its forms must equal the persisted serve
+    mem_fold = S.ivf_topk_micro(emb, qs, cents, k=5, nprobe=2).collect()
     monkeypatch.setattr(SIM, "_ENCODE_LITERAL_MAX", 10_000)
     lit = AI.ivf_index_topk_micro(spark, p1, qs, k=5, nprobe=2).collect()
+    mem_lit = S.ivf_topk_micro(emb, qs, cents, k=5, nprobe=2).collect()
     assert sorted(map(tuple, fold)) == sorted(map(tuple, lit))
+    assert sorted(map(tuple, mem_fold)) == sorted(map(tuple, fold))
+    assert sorted(map(tuple, mem_lit)) == sorted(map(tuple, fold))
     monkeypatch.undo()
     # IVFADC tier (build encode takes the fold path too at this K)
     sub = 64 // 4

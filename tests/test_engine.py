@@ -54,3 +54,29 @@ def test_cli_run_and_sql(capsys, sf_dir):
     assert "revenue" in out
     assert main(["sql", "SELECT count(*) AS n FROM lineitem", "--sf-dir", sf_dir]) == 0
     assert "n" in capsys.readouterr().out
+
+
+def test_ensure_session_confs_warns_with_conf_and_cause():
+    """A conf the session refuses is reported, not swallowed: the warning
+    names the conf and the error, and the remaining confs are still set."""
+    from codecdb_queryengine_spark import catalog
+
+    class _Conf:
+        def __init__(self):
+            self.set_ok = []
+
+        def set(self, k, v):
+            if k == "spark.sql.ansi.enabled":
+                raise RuntimeError("locked by the cluster")
+            self.set_ok.append(k)
+
+    class _Session:
+        conf = _Conf()
+
+    stub = _Session()
+    try:
+        with pytest.warns(UserWarning, match=r"spark\.sql\.ansi\.enabled.*locked by the cluster"):
+            catalog.ensure_session_confs(stub)
+        assert len(stub.conf.set_ok) == len(catalog._SESSION_CONFS) - 1
+    finally:
+        catalog._conf_applied.discard(id(stub))

@@ -11,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from codecdb_queryengine_spark.operators.similarity import norm
 from codecdb_queryengine_spark.sources import ann_index as AI
 from codecdb_queryengine_spark.sources import io as IO
 from codecdb_queryengine_spark.sources import text_index as TI
@@ -40,7 +41,7 @@ def test_upsert_slot_plan_counts_insert_only_target_lists(spark, tmp_path):
     cents = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
         "c_id long, c_vec array<float>",
-    ).select("c_id", "c_vec", AI.norm(F.col("c_vec")).alias("c_norm"))
+    ).select("c_id", "c_vec", norm(F.col("c_vec")).alias("c_norm"))
     AI.ivf_index_build(emb, path, centroids=cents, max_list_rows=4)
     lists_path = os.path.join(path, "lists")
     assert len(_slot_rows(lists_path, spark, 1)) == 3  # ceil(9/4)
@@ -71,6 +72,12 @@ def test_local_fs_path_scheme_handling():
     assert IO._local_fs_path("file:/a/b") == "/a/b"
     assert IO._local_fs_path("file:///a/b") == "/a/b"
     assert IO._local_fs_path("file://localhost/a/b") == "/a/b"
+    # Percent-escapes stay literal, NOT decoded: Spark's Hadoop Path keeps
+    # them too (`write.parquet("file:/…/a%20b")` creates a directory
+    # literally named `a%20b`, and Path(...).toUri().getPath() returns
+    # `/…/a%20b`), so decoding here would send the pyarrow fast path to a
+    # different directory than the Spark fallback.
+    assert IO._local_fs_path("file:/a%20b") == "/a%20b"
     assert IO._local_fs_path("hdfs://nn/a") is None
     assert IO._local_fs_path("s3a://bucket/k") is None
     assert IO._local_fs_path("wasbs://c@acct/k") is None
