@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from codecdb_queryengine_spark.catalog import plan_once
 from codecdb_queryengine_spark.queries import extensions, pipeline, sqltext, ssb, tpch
 
 # Queries bench.py does NOT time (correctness-gated like everything else):
@@ -190,6 +191,16 @@ BENCH_PREBUILT = frozenset({
 })
 
 
+# Plan once, run many: entries whose build only plans over the immutable
+# base tables (no Spark job, no file, no stream), declared by each query
+# module.  queries() wraps them in catalog.plan_once, so a session analyzes
+# each once per sf_dir and every later call runs a fresh Dataset over the
+# kept analyzed plan.  Index, stream, mutation and training entries build
+# on every call.  The SQL-text twins stay uncached: bench.py times their
+# parse and analysis on purpose (_SQL_KEEP).
+PLAN_ONCE = tpch.PLAN_ONCE | ssb.PLAN_ONCE | pipeline.PLAN_ONCE | extensions.PLAN_ONCE
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1 pricing summary) on /root/testdata/sf0.001."""
     return tpch.q1(spark, "/root/testdata/sf0.001")
@@ -212,7 +223,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     assert not missing, f"DRIVER_FIRST names not registered: {missing}"
     out = {n: merged[n] for n in DRIVER_FIRST}
     out.update(merged)
-    return out
+    return {n: plan_once(n, fn) if n in PLAN_ONCE else fn for n, fn in out.items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -14,6 +14,17 @@ can switch with three lines:
 
 Everything is thin delegation — no logic lives here — so the facade can
 never drift from the gated query surface.
+
+Plan once, run many: `query` goes through the registry, which analyzes a
+pure base-table entry (one whose build launches no job, writes no file and
+starts no stream; each query module declares them in `PLAN_ONCE`) once per
+(session, sf_dir) and returns a fresh Dataset over the kept analyzed plan
+on later calls (catalog.plan_once).  Optimization, physical planning and
+execution run on every call: the DataFrame itself is never reused, because
+re-collecting one under AQE reuses its materialized shuffle stages, which
+would make it a result cache.  A new session, another sf_dir,
+catalog.reload_tables, or a change of session time zone, ANSI mode or case
+sensitivity builds afresh.
 """
 
 from __future__ import annotations

@@ -1574,6 +1574,45 @@ QUERIES = {
     "ext_salted_join": ext_salted_join,
 }
 
+# Entries whose build only plans over the base tables — no Spark job, no
+# file, no stream — so the registry analyzes each once per session
+# (catalog.plan_once).  Index, stream, mutation and build-time-training
+# entries are absent: their build does the work being asked for.
+PLAN_ONCE = frozenset({
+    "ext_rollup",
+    "ext_zorder",
+    "ext_profile",
+    "ext_snapshot_diff",
+    "ext_corr",
+    "ext_join_skew",
+    "ext_grouped_topk",
+    "ext_grouping_sets",
+    "q2_plan",
+    "q3_plan",
+    "q17_plan",
+    "q21_plan",
+    "q13_plan",
+    "q14_plan",
+    "ssb_q2_1_plan",
+    "ext_cube",
+    "ext_window_funcs",
+    "ext_stats",
+    "ext_stats_approx",
+    "ext_collect",
+    "ext_full_outer",
+    "ext_recursive_cte",
+    "ext_lateral_topk",
+    "ext_setops",
+    "ext_approx_distinct",
+    "ext_pivot",
+    "ext_unpivot",
+    "encsel_features",
+    "encsel_decision",
+    "ext_salted_agg",
+    "ext_salted_join",
+})
+
+
 from codecdb_queryengine_spark.queries.ssb import ORACLE as _SSB_ORACLE  # noqa: E402
 from codecdb_queryengine_spark.queries.tpch import ORACLE as _TPCH_ORACLE  # noqa: E402
 

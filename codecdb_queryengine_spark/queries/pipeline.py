@@ -7734,6 +7734,92 @@ QUERIES = {
     "emb_stream_ivfpq_ingest": emb_stream_ivfpq_ingest,
 }
 
+# Entries whose build only plans over the base tables — no Spark job, no
+# file, no stream — so the registry analyzes each once per session
+# (catalog.plan_once).  Index, stream, mutation and build-time-training
+# entries are absent: their build does the work being asked for.
+PLAN_ONCE = frozenset({
+    "text_stats",
+    "text_quality",
+    "text_langid",
+    "text_fingerprint",
+    "text_bpe_stats",
+    "dedup_exact",
+    "dedup_minhash",
+    "dedup_simhash",
+    "dedup_simhash_pairs",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_verified",
+    "dedup_fuzzy",
+    "dedup_canonical",
+    "docs_dedup_segments",
+    "docs_dedup_substrings",
+    "docs_chunk_overlap",
+    "dedup_incremental",
+    "docs_topterms",
+    "docs_bigrams",
+    "docs_pmi",
+    "docs_mixture_weights",
+    "docs_dsir_sample",
+    "graph_triangles",
+    "docs_dup_spans",
+    "docs_winnow",
+    "events_variant_props",
+    "events_hll_rollup",
+    "docs_quality_by_source",
+    "docs_train_split",
+    "docs_downsample_stratified",
+    "docs_corpus_mix",
+    "docs_sample_stratified",
+    "docs_sample_weighted",
+    "docs_decontaminate",
+    "docs_decontaminate_lsh",
+    "docs_pack_sequences",
+    "docs_pack_chunks",
+    "docs_quality_filter",
+    "text_redact",
+    "text_repetition",
+    "docs_length_hist",
+    "docs_tfidf",
+    "text_countmin",
+    "text_lm_score",
+    "docs_classify",
+    "docs_novelty",
+    "events_funnel",
+    "events_json_props",
+    "events_resample",
+    "events_interpolate",
+    "events_ewma",
+    "events_anomaly",
+    "events_retention",
+    "sim_topk",
+    "sim_ann_lsh",
+    "sim_ann_ivf",
+    "sim_ann_pq",
+    "sim_ann_recall_ivf",
+    "sim_ann_recall_lsh",
+    "sim_ann_ivf_reranked",
+    "sim_ann_recall_ivf_reranked",
+    "sim_ann_lsh_reranked",
+    "sim_ann_recall_lsh_reranked",
+    "mm_features",
+    "mm_decode_real",
+    "mm_phash_dedup",
+    "mm_phash_resized",
+    "mm_decode_audio",
+    "mm_decode_video",
+    "mm_frames",
+    "mm_ann",
+    "events_window",
+    "events_rolling",
+    "events_sessionize",
+    "events_asof",
+    "events_asof_forward",
+    "events_range_join",
+    "emb_label_centroids",
+})
+
+
 ORACLE: dict[str, str] = {
     "text_stats": _TEXT_STATS_SQL,
     "text_quality": _TEXT_QUALITY_SQL,

@@ -337,6 +337,8 @@ QUERIES = {
     "ssb_q4_2": q4_2,
     "ssb_q4_3": q4_3,
 }
+# Every SSB entry only plans over the base tables (catalog.plan_once).
+PLAN_ONCE = frozenset(QUERIES)
 
 ORACLE: dict[str, str] = {
     "ssb_q1_1": f"""

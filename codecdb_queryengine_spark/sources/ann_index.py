@@ -276,34 +276,7 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
             "regrow hot lists past their cap; rebuild the index once with "
             "the current ivf_index_build to persist max_list_rows"
         )
-    # ONE fused stats pass (r12; was two sequential collects — the batch's
-    # per-list counts, then the touched lists' existing counts+slots): the
-    # batch and the thin (c_list, c_slot) projection of the layout union
-    # into one aggregate.  The union still lists and scans every c_list
-    # directory (all K'); only the COLLECT is bounded by the batch — it
-    # returns just the lists the batch touches (_new > 0).
-    stats = (
-        assigned.select(
-            F.col("c_list").cast("long").alias("c_list"),
-            F.lit(None).cast(existing.schema["c_slot"].dataType).alias("c_slot"),
-            F.lit(1).alias("_b"),
-        )
-        .unionByName(
-            existing.select(
-                F.col("c_list").cast("long").alias("c_list"),
-                "c_slot",
-                F.lit(0).alias("_b"),
-            )
-        )
-        .groupBy("c_list")
-        .agg(
-            F.sum("_b").alias("_new"),
-            F.count(F.when(F.col("_b") == 0, 1)).alias("_old"),
-            (F.max(F.when(F.col("_b") == 0, F.col("c_slot"))) + 1).alias("_slots"),
-        )
-        .filter(F.col("_new") > 0)
-        .collect()
-    )
+    stats = _append_stats(existing, assigned).collect()
     new_counts = {int(r["c_list"]): int(r["_new"]) for r in stats}
     old_stats = {
         int(r["c_list"]): (
@@ -378,6 +351,43 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
     invalidate_layout(path)
 
 
+def _append_stats(existing: DataFrame, assigned: DataFrame) -> DataFrame:
+    """ONE fused stats pass for a split-layout append: per touched list,
+    the batch's new rows (_new), the layout's existing rows (_old) and its
+    slot count (_slots).
+    The layout side is first semi-joined with the batch's distinct c_list
+    values (broadcast, cast to the partition type so the join key stays
+    the bare partition column), so the union and the aggregate see only
+    the touched lists, and dynamic partition pruning scans only their
+    directories rather than all K'.  Spark inserts that pruning only when
+    the batch's plan carries a selective filter (a CDC micro-batch's op
+    filter, a filtered source); an unfiltered batch, e.g. one made with
+    createDataFrame, still scans every list directory.  Still one action."""
+    touched = assigned.select(
+        F.col("c_list").cast(existing.schema["c_list"].dataType).alias("c_list")
+    ).distinct()
+    return (
+        assigned.select(
+            F.col("c_list").cast("long").alias("c_list"),
+            F.lit(None).cast(existing.schema["c_slot"].dataType).alias("c_slot"),
+            F.lit(1).alias("_b"),
+        )
+        .unionByName(
+            existing.join(F.broadcast(touched), "c_list", "left_semi").select(
+                F.col("c_list").cast("long").alias("c_list"),
+                "c_slot",
+                F.lit(0).alias("_b"),
+            )
+        )
+        .groupBy("c_list")
+        .agg(
+            F.sum("_b").alias("_new"),
+            F.count(F.when(F.col("_b") == 0, 1)).alias("_old"),
+            (F.max(F.when(F.col("_b") == 0, F.col("c_slot"))) + 1).alias("_slots"),
+        )
+    )
+
+
 def ivf_index_upsert(
     path: str,
     updates: DataFrame | None = None,
@@ -442,14 +452,6 @@ def _upsert_assigned(
     from codecdb_queryengine_spark.sources import io as IO
 
     lists_path = os.path.join(path, "lists")
-    existing = spark.read.parquet(lists_path)
-    split = "c_slot" in existing.columns
-    cap = _read_layout_meta(spark, path)
-    if split and cap is None:
-        raise ValueError(
-            f"{path}: c_slot-split lists without a lists_meta artifact — "
-            "rebuild once with the current index build"
-        )
     if delete_ids is None:
         del_df = spark.createDataFrame([], "n_id long")
     elif isinstance(delete_ids, DataFrame):
@@ -461,7 +463,6 @@ def _upsert_assigned(
             sorted({(int(i),) for i in delete_ids}), "n_id long"
         )
     if assigned is not None:
-        _check_append_schema(assigned, existing)
         # the raw update-id frame when the caller has one: the assignment
         # (IVF centroid fold / IVFADC re-encode) is a 1:1 projection of the
         # updates, so the id set is identical — but deriving ids from
@@ -475,9 +476,9 @@ def _upsert_assigned(
     else:
         upd_ids = spark.createDataFrame([], "n_id long")
     mutated = del_df.unionByName(upd_ids).distinct()
-    # TWO jobs, overlapped (r12 optimization round; was four sequential —
-    # guard agg, per-list update counts, locate stats, each a ~0.3-0.5 s
-    # fixed-floor action at maintenance batch sizes):
+    # TWO actions, the second only for a non-empty batch (an empty, drained
+    # CDC tail pays one aggregate over its own events and scans nothing of
+    # the layout — not even its schema):
     #
     # 1. ONE rollup aggregate over the batch events answers together the
     #    batch-sanity guard text_index_upsert mirrors (r9 ADVICE items
@@ -495,8 +496,7 @@ def _upsert_assigned(
     #    existing count MUST enter merged_n or the slot plan undersizes
     #    and rows-per-slot silently exceed the persisted cap (r11 ADVICE,
     #    high).  The target-list bound is a broadcast semi-join against
-    #    the batch's own distinct lists, so this job shares nothing with
-    #    job 1 and the two run concurrently (guide §2.6).
+    #    the batch's own distinct lists.
     ev = del_df.select(
         "n_id", F.lit(None).cast("long").alias("c_list"), F.lit(1).alias("_d")
     )
@@ -507,42 +507,16 @@ def _upsert_assigned(
                 F.lit(0).alias("_d"),
             )
         )
-
-    def _batch_stats():
-        return (
-            ev.rollup("_d", "c_list")
-            .agg(
-                F.grouping_id().alias("_gid"),
-                F.count(F.lit(1)).alias("_n"),
-                F.countDistinct("n_id").alias("_nd"),
-                F.count(F.when(F.col("n_id").isNull(), 1)).alias("_null"),
-            )
-            .collect()
+    stats = (
+        ev.rollup("_d", "c_list")
+        .agg(
+            F.grouping_id().alias("_gid"),
+            F.count(F.lit(1)).alias("_n"),
+            F.countDistinct("n_id").alias("_nd"),
+            F.count(F.when(F.col("n_id").isNull(), 1)).alias("_null"),
         )
-
-    def _loc_stats():
-        base = (
-            existing.select("n_id", "c_list")
-            .join(F.broadcast(mutated.withColumn("_m", F.lit(1))), "n_id", "left")
-            .groupBy("c_list")
-            .agg(F.count(F.lit(1)).alias("_n"), F.count("_m").alias("_dead"))
-        )
-        keep = F.col("_dead") > 0
-        if assigned is not None:
-            tgt = assigned.select(F.col("c_list").cast("long").alias("c_list")).distinct()
-            base = base.join(
-                F.broadcast(tgt.withColumn("_t", F.lit(1))), "c_list", "left"
-            )
-            keep = keep | F.col("_t").isNotNull()
-        return base.filter(keep).collect()
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_batch = pool.submit(_batch_stats)
-        f_loc = pool.submit(_loc_stats)
-        stats = f_batch.result()
-        loc_stats = f_loc.result()
+        .collect()
+    )
     g = next((r for r in stats if r["_gid"] == 3), None)
     if g is None or not g["_n"]:
         return 0  # empty mutation batch (e.g. a drained CDC stream's tail)
@@ -559,6 +533,31 @@ def _upsert_assigned(
             "latest state; pre-reduce the batch to one terminal event per "
             "id (or split into two calls)"
         )
+
+    existing = spark.read.parquet(lists_path)
+    split = "c_slot" in existing.columns
+    cap = _read_layout_meta(spark, path)
+    if split and cap is None:
+        raise ValueError(
+            f"{path}: c_slot-split lists without a lists_meta artifact — "
+            "rebuild once with the current index build"
+        )
+    if assigned is not None:
+        _check_append_schema(assigned, existing)
+    base = (
+        existing.select("n_id", "c_list")
+        .join(F.broadcast(mutated.withColumn("_m", F.lit(1))), "n_id", "left")
+        .groupBy("c_list")
+        .agg(F.count(F.lit(1)).alias("_n"), F.count("_m").alias("_dead"))
+    )
+    keep = F.col("_dead") > 0
+    if assigned is not None:
+        tgt = assigned.select(F.col("c_list").cast("long").alias("c_list")).distinct()
+        base = base.join(
+            F.broadcast(tgt.withColumn("_t", F.lit(1))), "c_list", "left"
+        )
+        keep = keep | F.col("_t").isNotNull()
+    loc_stats = base.filter(keep).collect()
     new_n = {
         int(r["c_list"]): int(r["_n"])
         for r in stats

@@ -32,8 +32,25 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from codecdb_queryengine_spark.functions import text as T
+
+
+# Every read-back of a layout this module writes names its schema instead
+# of running Spark's schema-inference job (one job per read).  Each schema
+# is declared next to its writer; tests/test_plan_once.py pins each to what
+# Spark infers from a layout the writers produce.  A layout's doc_id is the
+# corpus's long key.
+def _cols(**types) -> StructType:
+    return StructType([StructField(n, t) for n, t in types.items()])
 
 
 # Bucket-partitioned layout writes pay per-TASK overhead, not per-row, at
@@ -83,6 +100,9 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+META_SCHEMA = _cols(num_buckets=IntegerType())
+
+
 def _write_meta(
     spark: SparkSession, path: str, num_buckets: int, layout: str = "postings"
 ) -> None:
@@ -130,7 +150,9 @@ def _read_buckets(
                 raise ValueError(f"{meta}: bucket meta table has no rows")
             return int(t.column("num_buckets")[0].as_py())
         if _fs_exists(spark, meta):
-            return int(spark.read.parquet(meta).first()["num_buckets"])
+            return int(
+                spark.read.schema(META_SCHEMA).parquet(meta).first()["num_buckets"]
+            )
     return fallback
 
 
@@ -148,6 +170,9 @@ def _buckets_of_layout(
         v = _read_buckets(spark, path, fallback, layout=layout)
         cache[key] = v
     return v
+
+
+POSTINGS_SCHEMA = _cols(doc_id=LongType(), term=StringType(), t_bucket=IntegerType())
 
 
 def postings_of(
@@ -208,7 +233,7 @@ def text_index_search_all(
     want = sorted(set(terms))
     num_buckets = _buckets_of_layout(spark, path, num_buckets, "postings", cached)
     buckets = sorted({_bucket_of(t, num_buckets) for t in want})
-    postings = _live_postings(spark, path, "postings", cached)
+    postings = _live_rows(spark, path, "postings", cached)
     hits = postings.filter(
         F.col("t_bucket").isin(buckets) & F.col("term").isin(want)
     )
@@ -221,6 +246,11 @@ def text_index_search_all(
 
 
 # --- positional postings: phrase queries ------------------------------------
+
+
+POSTINGS_POS_SCHEMA = _cols(
+    doc_id=LongType(), pos=IntegerType(), term=StringType(), t_bucket=IntegerType()
+)
 
 
 def positional_postings_of(
@@ -280,7 +310,7 @@ def text_index_search_phrase(
         raise ValueError("text_index_search_phrase: empty phrase")
     num_buckets = _buckets_of_layout(spark, path, num_buckets, "postings_pos", cached)
     buckets = sorted({_bucket_of(t, num_buckets) for t in phrase})
-    postings = _live_postings(spark, path, "postings_pos", cached)
+    postings = _live_rows(spark, path, "postings_pos", cached)
     hits = postings.filter(
         F.col("t_bucket").isin(buckets) & F.col("term").isin(sorted(set(phrase)))
     ).select("doc_id", "pos", "term")
@@ -296,6 +326,12 @@ def text_index_search_phrase(
 
 
 # --- ranked retrieval (BM25-shaped) -----------------------------------------
+
+
+POSTINGS_TF_SCHEMA = _cols(
+    doc_id=LongType(), term=StringType(), tf=LongType(), t_bucket=IntegerType()
+)
+DOCLENS_SCHEMA = _cols(doc_id=LongType(), dl=LongType())
 
 
 def tf_postings_of(
@@ -380,11 +416,11 @@ def text_index_search_ranked(
     num_buckets = _buckets_of_layout(spark, path, num_buckets, "postings_tf", cached)
     buckets = sorted({_bucket_of(t, num_buckets) for t in want})
     tfp = (
-        _live_postings(spark, path, "postings_tf", cached)
+        _live_rows(spark, path, "postings_tf", cached)
         .filter(F.col("t_bucket").isin(buckets) & F.col("term").isin(want))
         .select("doc_id", "term", "tf")
     )
-    doclens = _live_doclens(spark, path, cached)
+    doclens = _live_rows(spark, path, "doclens", cached)
     stats = doclens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
@@ -457,11 +493,11 @@ def text_index_search_ranked_batch(
     num_buckets = _buckets_of_layout(spark, path, num_buckets, "postings_tf", cached)
     buckets = sorted({_bucket_of(t, num_buckets) for t in union_terms})
     tfp = (
-        _live_postings(spark, path, "postings_tf", cached)
+        _live_rows(spark, path, "postings_tf", cached)
         .filter(F.col("t_bucket").isin(buckets) & F.col("term").isin(union_terms))
         .select("doc_id", "term", "tf")
     )
-    doclens = _live_doclens(spark, path, cached)
+    doclens = _live_rows(spark, path, "doclens", cached)
     stats = doclens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
@@ -545,6 +581,25 @@ _LAYOUTS: dict[str, object] = {
     "postings_pos": positional_postings_of,
     "postings_tf": tf_postings_of,
 }
+_LAYOUT_SCHEMAS = {
+    "postings": POSTINGS_SCHEMA,
+    "postings_pos": POSTINGS_POS_SCHEMA,
+    "postings_tf": POSTINGS_TF_SCHEMA,
+    "doclens": DOCLENS_SCHEMA,
+}
+DOCGEN_SCHEMA = _cols(doc_id=LongType(), gen=IntegerType(), deleted=BooleanType())
+
+
+def _delta_schema(layout: str) -> StructType:
+    """A `<layout>_delta` read: the layout's file columns, then the
+    partition columns in path order — gen=N, and t_bucket=M for postings
+    layouts."""
+    fields = _LAYOUT_SCHEMAS[layout].fields
+    return StructType(
+        [f for f in fields if f.name != "t_bucket"]
+        + [StructField("gen", IntegerType())]
+        + [f for f in fields if f.name == "t_bucket"]
+    )
 
 
 # Opt-in cached serving (the ANN index's r8 cached-file-index discipline,
@@ -601,67 +656,38 @@ def _read_docgen(spark: SparkSession, path: str) -> DataFrame | None:
     IO.recover_swap(dg)
     if not _fs_exists(spark, dg):
         return None
-    return spark.read.parquet(dg)
+    return spark.read.schema(DOCGEN_SCHEMA).parquet(dg)
 
 
-def _live_postings(
+def _live_rows(
     spark: SparkSession, path: str, layout: str, cached: bool = False
 ) -> DataFrame:
-    """The layout's CURRENT postings: base rows of never-mutated documents
-    plus the latest-generation delta rows of live mutated ones.  Everything
-    docgen-shaped is broadcast (the mutation set between purges, not the
-    corpus); a bucket/term filter applied by the caller pushes into both
-    parquet scans, so serving keeps the static-prune scale shape.
-    `cached=True` memoizes the resolved overlay plan (see _SERVE_CACHE)."""
+    """The layout's CURRENT rows (a postings layout or doclens): base rows
+    of never-mutated documents plus the latest-generation delta rows of
+    live mutated ones.  Everything docgen-shaped is broadcast (the mutation
+    set between purges, not the corpus); a bucket/term filter applied by
+    the caller pushes into both parquet scans, so serving keeps the
+    static-prune scale shape.  `cached=True` memoizes the resolved overlay
+    plan (see _SERVE_CACHE)."""
     if cached:
         cache = _session_cache(spark)
         key = (path.rstrip("/"), f"live:{layout}")
         df = cache.get(key)
         if df is None:
-            df = _live_postings(spark, path, layout)
+            df = _live_rows(spark, path, layout)
             cache[key] = df
         return df
-    base = spark.read.parquet(os.path.join(path, layout))
+    base = spark.read.schema(_LAYOUT_SCHEMAS[layout]).parquet(os.path.join(path, layout))
     dg = _read_docgen(spark, path)
     if dg is None:
         return base
     live = base.join(F.broadcast(dg.select("doc_id")), "doc_id", "left_anti")
     delta_dir = _delta_root(path, layout)
     if _fs_exists(spark, delta_dir):
-        keep = dg.filter(~F.col("deleted")).select(
-            "doc_id", F.col("gen").cast("int").alias("gen")
-        )
+        keep = dg.filter(~F.col("deleted")).select("doc_id", "gen")
         cur = (
-            spark.read.parquet(delta_dir)
-            .join(F.broadcast(keep), ["doc_id", "gen"])
-            .select(*base.columns)
-        )
-        live = live.unionByName(cur)
-    return live
-
-
-def _live_doclens(spark: SparkSession, path: str, cached: bool = False) -> DataFrame:
-    """doclens under the same overlay as the postings layouts."""
-    if cached:
-        cache = _session_cache(spark)
-        key = (path.rstrip("/"), "live:doclens")
-        df = cache.get(key)
-        if df is None:
-            df = _live_doclens(spark, path)
-            cache[key] = df
-        return df
-    base = spark.read.parquet(os.path.join(path, "doclens"))
-    dg = _read_docgen(spark, path)
-    if dg is None:
-        return base
-    live = base.join(F.broadcast(dg.select("doc_id")), "doc_id", "left_anti")
-    delta_dir = _delta_root(path, "doclens")
-    if _fs_exists(spark, delta_dir):
-        keep = dg.filter(~F.col("deleted")).select(
-            "doc_id", F.col("gen").cast("int").alias("gen")
-        )
-        cur = (
-            spark.read.parquet(delta_dir)
+            spark.read.schema(_delta_schema(layout))
+            .parquet(delta_dir)
             .join(F.broadcast(keep), ["doc_id", "gen"])
             .select(*base.columns)
         )
@@ -811,16 +837,16 @@ def text_index_upsert(
     else:
         writes = []
 
-    batch = batch.withColumn("gen", F.lit(new_gen).cast("int"))
+    batch = batch.select(
+        "doc_id", F.lit(new_gen).cast("int").alias("gen"), "deleted"
+    )  # DOCGEN_SCHEMA's column order
     if old_dg is None:
         new_dg = batch
     else:
         survivors = old_dg.join(
             F.broadcast(batch.select("doc_id")), "doc_id", "left_anti"
         )
-        new_dg = survivors.select("doc_id", "gen", "deleted").unionByName(
-            batch.select("doc_id", "gen", "deleted")
-        )
+        new_dg = survivors.unionByName(batch)
     # Independent writes — the per-layout deltas AND the docgen STAGING —
     # run up to 3 in flight (guide §2.6).  The commit protocol is
     # unchanged: nothing reads the staging sibling, so only the promote
@@ -863,7 +889,7 @@ def text_index_purge(spark: SparkSession, path: str) -> list[str]:
     def _fold(layout: str) -> None:
         base_path = os.path.join(path, layout)
         IO.recover_swap(base_path)
-        live = _live_postings(spark, path, layout)
+        live = _live_rows(spark, path, layout)
         nb = _read_buckets(spark, path, 32, layout=layout)
         tmp = base_path + ".purging"
         (
@@ -878,7 +904,7 @@ def text_index_purge(spark: SparkSession, path: str) -> list[str]:
         dl_path = os.path.join(path, "doclens")
         IO.recover_swap(dl_path)
         tmp = dl_path + ".purging"
-        _live_doclens(spark, path).write.mode("overwrite").parquet(tmp)
+        _live_rows(spark, path, "doclens").write.mode("overwrite").parquet(tmp)
         IO.swap_layout(dl_path, tmp)
 
     folds = [lambda l=l: _fold(l) for l in layouts]

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from codecdb_queryengine_spark.catalog import _fix_nanos
+from codecdb_queryengine_spark.catalog import _fix_nanos, raw_schema
 
 
 def default_state_partitions(spark: SparkSession) -> int:
@@ -65,18 +65,13 @@ def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame
     readStream requires an explicit schema, and the testdata's `ts` column
     has shipped both as TIMESTAMP(MICROS) (a real timestamp) and as
     TIMESTAMP(NANOS) (surfaces as long under nanosAsLong, catalog.py) —
-    take the schema from a batch read of the same file so the stream always
-    matches the data, then apply the same nanos fix the catalog uses.
+    take the raw schema the catalog read from the same file (no second
+    schema-inference job), so the stream always matches the data, then
+    apply the same nanos fix the catalog uses.  Going through the catalog
+    also applies the session confs (notably shuffle.partitions: state-store
+    count, no AQE coalescing).
     """
-    # Session confs normally applied by catalog.load_tables — the streaming
-    # entry points don't go through the catalog, so apply here as well
-    # (notably shuffle.partitions: state-store count, no AQE coalescing).
-    import os
-
-    from codecdb_queryengine_spark.catalog import ensure_session_confs
-
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).schema
+    schema = raw_schema(spark, sf_dir, table)
     # File stream sources require a directory; select the single table
     # file out of the sf dir with a glob filter.
     raw = (

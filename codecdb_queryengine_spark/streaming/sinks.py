@@ -165,10 +165,10 @@ def stream_apply_vector_mutations(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         # No pre-probe job (r12): the upsert core's fused rollup guard
         # answers op presence itself, so the sink adds no probe action of
-        # its own.  An empty batch still pays the upsert's stats pass —
-        # the locate job (_loc_stats) runs alongside the guard and scans
-        # the layout's (n_id, c_list) projection — but no rewrite.  A
-        # delete-only batch rides its (empty) update frame through the
+        # its own.  An empty batch pays only that guard aggregate over its
+        # own events: the locate pass over the layout's (n_id, c_list)
+        # projection runs only after the guard shows a non-empty batch.
+        # A delete-only batch rides its (empty) update frame through the
         # same plan; the re-assignment expressions evaluate inside the
         # jobs the upsert already runs.
         upsert(

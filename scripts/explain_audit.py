@@ -10,6 +10,13 @@ Checks per query:
 - NESTED-LOOP!: CartesianProduct / BroadcastNestedLoopJoin outside the
            queries whose algorithm is intentionally all-pairs / 1-row-probe
 - readcols: ReadSchema widths (projection pruning evidence)
+- cached:  for every plan-once entry (__spark_entry__.PLAN_ONCE) a second
+           row: the entry is built again, which the registry serves from
+           its cached analyzed plan, and the normalized physical plan the
+           planner made (AQE's initial plan) must equal the fresh build's.
+           The final plan is not compared: AQE re-plans from runtime
+           statistics in the order query stages finish, so two runs of one
+           fresh build can already end in different join strategies
 
 Usage: python scripts/explain_audit.py [sf_dir] [name...]
 """
@@ -276,6 +283,15 @@ def audit(name: str, plan: str, gwins: list[str] | None = None) -> tuple[bool, s
     return ok, " ".join(notes)
 
 
+def planned(jplan) -> str:
+    """The physical plan as planned, before AQE re-planned it at run time,
+    without the expression, subquery and exchange ids that differ between
+    two builds of one query."""
+    if jplan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        jplan = jplan.initialPlan()
+    return re.sub(r"#\d+L?\b|plan_id=\d+", "#", jplan.toString())
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:]
@@ -285,6 +301,7 @@ def main() -> int:
     for name, fn in queries.items():
         if names and name not in names:
             continue
+        jplan = None
         try:
             df = fn(spark, sf_dir)
             df.collect()  # drive to completion so AQE finalizes the plan
@@ -295,6 +312,18 @@ def main() -> int:
         print(f"{'OK ' if ok else 'BAD'} {name:22s} {notes}", flush=True)
         if not ok:
             bad.append(name)
+        if name not in entry_mod.PLAN_ONCE or jplan is None:
+            continue
+        try:
+            again = fn(spark, sf_dir)  # served from the plan cache
+            again.collect()
+            same = planned(again._jdf.queryExecution().executedPlan()) == planned(jplan)
+            ok, notes = same, "same-plan" if same else "PLAN-DIFFERS!"
+        except Exception as e:  # noqa: BLE001
+            ok, notes = False, f"EXCEPTION {e}"
+        print(f"{'OK ' if ok else 'BAD'} {name + ' [cached]':22s} {notes}", flush=True)
+        if not ok:
+            bad.append(f"{name} [cached]")
     if bad:
         print("bad:", ", ".join(bad))
     return 1 if bad else 0

@@ -586,3 +586,96 @@ def test_vector_cdc_intra_batch_conflict_fails_batch(spark, sf_dir):
     q = SK.stream_apply_vector_mutations(stream, path, os.path.join(base, "ckpt"))
     with pytest.raises(StreamingQueryException, match="both updates and delete_ids"):
         q.awaitTermination()
+
+
+def _one_action(spark, group, fn):
+    """Run fn under job group `group`; return (result, the SQL executions
+    it started).  Each Spark action is one SQL execution; under AQE its
+    shuffle stages show up as several status-tracker jobs of that one
+    execution, so "one job" is counted as one execution here, with every
+    tracker job of the group belonging to it."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    n0 = store.executionsCount()
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList(n0, store.executionsCount() - n0)
+    execs = [execs.apply(i) for i in range(execs.size())]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert sum(e.jobs().size() for e in execs) == len(jobs)  # no job outside an action
+    return out, execs
+
+
+def test_empty_upsert_runs_one_job_and_never_reads_the_layout(spark, sf_dir):
+    """An empty, drained CDC tail pays only the guard aggregate over its
+    own events; the locate pass (and even the layout's schema read) waits
+    for a non-empty batch."""
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    path = tempfile.mkdtemp(prefix="ivf_empty_upsert_")
+    AI.ivf_index_build(emb, path, centroid_mod=29)
+    lists = os.path.join(path, "lists")
+    before = sorted(os.listdir(lists))
+    drained = spark.range(10).filter(F.col("id") < 0).select(F.col("id").alias("vec_id"))
+    for i, dels in enumerate(([], drained)):
+        n, execs = _one_action(
+            spark, f"empty-upsert-{i}",
+            lambda: AI.ivf_index_upsert(path, delete_ids=dels, spark=spark),
+        )
+        assert n == 0
+        assert len(execs) == 1
+        assert lists not in execs[0].physicalPlanDescription()
+    assert sorted(os.listdir(lists)) == before
+
+
+def test_append_stats_scan_only_touched_lists(spark, sf_dir):
+    """The fused append stats pass semi-joins the layout with the batch's
+    distinct lists, so dynamic partition pruning scans only the touched
+    list directories — still one action."""
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_vec"),
+        S.norm(F.col("embedding")).alias("c_norm"),
+    )
+    path = tempfile.mkdtemp(prefix="ivf_append_stats_")
+    AI.ivf_index_build(
+        emb.filter(F.col("vec_id") % 2 == 0), path, centroids=cents, max_list_rows=16
+    )
+    existing = spark.read.parquet(os.path.join(path, "lists"))
+    batch = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 40))
+    assigned = S._ivf_assign(
+        batch,
+        S._ivf_model(spark.read.parquet(os.path.join(path, "centroids"))),
+        "embedding",
+        "vec_id",
+    )
+    stats_df = AI._append_stats(existing, assigned)
+    stats, execs = _one_action(spark, "append-stats", stats_df.collect)
+    assert len(execs) == 1
+    touched = {r.c_list for r in assigned.select("c_list").distinct().collect()}
+    assert {r.c_list for r in stats} == touched
+    n_dirs = len([d for d in os.listdir(os.path.join(path, "lists")) if d.startswith("c_list=")])
+    assert len(touched) < n_dirs  # the fixture leaves lists untouched
+    assert _dpp_live(stats_df)
+    plan = stats_df._jdf.queryExecution().executedPlan()
+
+    def scans(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            yield from scans(node.executedPlan())
+            return
+        if cls.endswith("QueryStageExec"):
+            yield from scans(node.plan())
+            return
+        if cls == "FileSourceScanExec" and node.relation().partitionSchema().nonEmpty():
+            yield node  # the lists layout is the only partitioned scan
+        ch = node.children()
+        for i in range(ch.size()):
+            yield from scans(ch.apply(i))
+
+    (lists_scan,) = list(scans(plan))
+    assert lists_scan.metrics().get("numPartitions").get().value() == len(touched)

@@ -79,4 +79,4 @@ def test_ensure_session_confs_warns_with_conf_and_cause():
             catalog.ensure_session_confs(stub)
         assert len(stub.conf.set_ok) == len(catalog._SESSION_CONFS) - 1
     finally:
-        catalog._conf_applied.discard(id(stub))
+        catalog._conf_applied.discard(stub)
