@@ -105,22 +105,6 @@ def lang_guess(c: str) -> Column:
     )
 
 
-def char_shingles(c: str, k: int = 8) -> Column:
-    """Distinct character k-gram shingles of lower-cased text.
-
-    Mirror SQL: list_distinct(list_transform(range(0, length-k+1),
-    i -> substring(lower(c), i+1, k))).  Guarded so text shorter than k
-    yields an empty array (Spark's sequence(0,-1) would DESCEND).
-    """
-    lc = f"lower({c})"
-    return F.expr(
-        f"CASE WHEN length({lc}) >= {k} THEN "
-        f"array_distinct(transform(sequence(0, length({lc}) - {k}), "
-        f"i -> substring({lc}, i + 1, {k}))) "
-        f"ELSE array() END"
-    )
-
-
 def word_shingles(c: str, k: int = 3) -> Column:
     """Distinct word k-gram shingles joined by single spaces.
 
@@ -256,11 +240,6 @@ def fingerprint(c: str) -> Column:
         F.lit(0).cast("long"),
         lambda h, code: (h * FP_BASE + code) % FP_MOD,
     )
-
-
-def sql_stopword_pattern() -> str:
-    """The regex the oracle SQL uses — kept next to STOPWORDS."""
-    return r"\b(" + "|".join(STOPWORDS) + r")\b"
 
 
 def md5_slice32(prefix: str, c: Column) -> Column:

@@ -400,19 +400,19 @@ def _ivf_assign(
     )
 
 
-def _probe_join_topk(
+def _probe_join(
     probes: DataFrame,
     lists: DataFrame,
     score_name: str,
     score: Column,
-    k: int,
-    desc: bool = False,
+    on: str | None = "c_list",
     part_type: str | None = None,
-    extra: tuple[str, ...] = (),
 ) -> DataFrame:
-    """The inverted-file serve skeleton shared by every IVF tier:
+    """The probe join every IVF and PQ serve scores through:
     broadcast (q_id, c_list, ...) probes ⋈ `lists` on c_list, self-pairs
-    dropped, `score` computed per candidate, per-query top-k cut.
+    dropped, `score` computed per candidate.  Serves cut the result with
+    _topk_per_query.  `on=None` is the flat (single-list) case: a keyless
+    join, every probe meets every vector.
 
     `part_type`: for a PARTITIONED lists scan, the inferred type of its
     c_list partition column.  The PROBE side casts to it so the join key
@@ -421,13 +421,9 @@ def _probe_join_topk(
     silently voiding the "read only the probed lists" contract."""
     if part_type is not None:
         probes = probes.withColumn("c_list", F.col("c_list").cast(part_type))
-    scored = (
-        F.broadcast(probes)
-        .join(lists, "c_list")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(score_name, score)
-    )
-    return _topk_per_query(scored, score_name, k, desc, extra)
+    probes = F.broadcast(probes)
+    pairs = probes.crossJoin(lists) if on is None else probes.join(lists, on)
+    return pairs.filter(F.col("q_id") != F.col("n_id")).withColumn(score_name, score)
 
 
 def _ivf_cosine_rank(
@@ -454,9 +450,8 @@ def _ivf_cosine_rank(
         norm(F.col("q_vec")).alias("q_norm"),
     )
     cos = cosine_pre(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm"))
-    return _probe_join_topk(
-        probes, lists, "cosine", cos, k, desc=True, part_type=part_type, extra=extra
-    )
+    scored = _probe_join(probes, lists, "cosine", cos, part_type=part_type)
+    return _topk_per_query(scored, "cosine", k, desc=True, extra=extra)
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -529,8 +524,9 @@ def _fold_argmax_sim(entries: Column) -> Column:
     )
 
 
-def _pq_model_1row(cbm: DataFrame, id_field: str, num_subspaces: int) -> DataFrame:
-    """1-row codebook model array (columns m, `id_field`, c_sub) with an
+def _pq_model_1row(cbm: DataFrame, num_subspaces: int) -> DataFrame:
+    """A (m, c_id, c_sub) codebook frame as the 1-row broadcast model
+    array `model` the float encode and ADC maps read, with an
     execution-time subspace-coverage guard (r5 review): an m absent from
     the codebook would make the per-row argmin fold return its −1 init,
     and the ADC lookup key m·K−1 would ALIAS the previous subspace's last
@@ -538,53 +534,145 @@ def _pq_model_1row(cbm: DataFrame, id_field: str, num_subspaces: int) -> DataFra
     guard is evaluated once on the single model row (assert_true inside
     the model projection, so column pruning cannot drop it), never in the
     per-row encode path."""
-
-    def has_m(m: int) -> Column:
-        return F.exists(F.col("model0"), lambda e: e["m"] == F.lit(m))
-
-    cond = has_m(0)
-    for m in range(1, num_subspaces):
-        cond = cond & has_m(m)
+    cond = F.forall(
+        F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)]),
+        lambda m: F.exists(F.col("model0"), lambda e: e["m"] == m),
+    )
     agg = cbm.agg(
-        F.collect_list(F.struct("m", id_field, "c_sub")).alias("model0")
+        F.collect_list(F.struct("m", "c_id", "c_sub")).alias("model0")
     )
-    return agg.select(
-        F.when(
-            F.assert_true(
-                cond,
-                F.lit(
-                    "pq encode: codebook has no entries for some subspace in "
-                    f"0..{num_subspaces - 1} — ADC keys would alias adjacent "
-                    "subspaces"
-                ),
-            ).isNull(),
-            F.col("model0"),
-        ).alias("model")
+    return F.broadcast(
+        agg.select(
+            F.when(
+                F.assert_true(
+                    cond,
+                    F.lit(
+                        "pq encode: codebook has no entries for some subspace in "
+                        f"0..{num_subspaces - 1} — ADC keys would alias adjacent "
+                        "subspaces"
+                    ),
+                ).isNull(),
+                F.col("model0"),
+            ).alias("model")
+        )
     )
 
 
-def _pq_code_entry(m: int, sub: int, vec: Column, id_field: str) -> Column:
-    """map entry (m, codeword) for subspace `m`: order-free argmin of the
-    left-assoc squared-L2 between `vec`'s m-th slice and the runtime model
-    array's subspace-m codewords (ties to the smaller id).  Shared by
-    pq_topk and ivf_pq_topk (r5 review: the two inlined copies risked
-    diverging).  NB: per-m values are captured via this def, not lambda
-    default args — PySpark infers HOF lambda arity from the signature, so
-    a second (defaulted) parameter would silently become the ARRAY
-    INDEX."""
-    ents = F.filter(F.col("model"), lambda e: e["m"] == F.lit(m))
-    return F.struct(
-        F.lit(m).cast("long").alias("m"),
-        _fold_argmin_d(
-            F.transform(
-                ents,
-                lambda e: F.struct(
-                    l2sq(F.slice(vec, m * sub + 1, sub), e["c_sub"]).alias("d"),
-                    e[id_field].cast("long").alias("c_id"),
-                ),
+def _pq_code_map(vec: Column, sub: int, num_subspaces: int) -> Column:
+    """cmap = map<m, code> over the runtime codebook model: per subspace m
+    the order-free argmin of the left-assoc squared-L2 between `vec`'s
+    m-th `sub`-wide slice and the model's subspace-m codewords (ties to
+    the smaller id) — the float encode of pq_topk and the IVFADC residual
+    encode; the integer twin is _micro_code_map.  NB: per-m values are
+    captured via the `entry` def, not lambda default args — PySpark
+    infers HOF lambda arity from the signature, so a second (defaulted)
+    parameter would silently become the ARRAY INDEX."""
+
+    def entry(m: int) -> Column:
+        ents = F.filter(F.col("model"), lambda e: e["m"] == F.lit(m))
+        return F.struct(
+            F.lit(m).cast("long").alias("m"),
+            _fold_argmin_d(
+                F.transform(
+                    ents,
+                    lambda e: F.struct(
+                        l2sq(F.slice(vec, m * sub + 1, sub), e["c_sub"]).alias("d"),
+                        e["c_id"].cast("long").alias("c_id"),
+                    ),
+                )
+            )["c_id"].alias("code"),
+        )
+
+    return F.map_from_entries(F.array(*[entry(m) for m in range(num_subspaces)]))
+
+
+def _pq_adc_map(qvec: str, sub: int, num_codewords: int) -> Column:
+    """amap = map<m·K + c_id, round(1e6 · squared-L2 of `qvec`'s m-th
+    slice to that codeword)> over the runtime codebook model — the float
+    query-side ADC lookup table _adc_sum reads; the integer twin is
+    _micro_adc_map.  Contributions are quantized to integer micro-units
+    BEFORE the per-pair sum, so the ranking sum is an order-free BIGINT.
+
+    Every codebook c_id must be < num_codewords, or m·K + c_id aliases an
+    adjacent subspace's entry and silently corrupts every score (r4
+    ADVICE).  Zero-cost lazy guard: misuse fails loudly at execution.
+    Encode and lookup read the same model array, so guarding the key
+    build covers the lookup too."""
+
+    def entry(e: Column) -> Column:
+        key = F.when(
+            e["c_id"] < num_codewords,
+            e["m"] * num_codewords + e["c_id"],
+        ).otherwise(
+            F.raise_error(
+                F.format_string(
+                    "pq ADC: codebook c_id %s >= num_codewords %s — ADC keys "
+                    "would alias adjacent subspaces; pass num_codewords matching "
+                    "the trained codebooks",
+                    e["c_id"].cast("string"),
+                    F.lit(str(num_codewords)),
+                )
+            ).cast("long")
+        )
+        contrib = F.round(
+            F.lit(1e6)
+            * l2sq(
+                F.slice(F.col(qvec), (e["m"] * sub + 1).cast("int"), sub),
+                e["c_sub"],
             )
-        )["c_id"].alias("code"),
+        ).cast("long")
+        return F.struct(key.alias("key"), contrib.alias("contrib"))
+
+    return F.map_from_entries(F.transform(F.col("model"), entry))
+
+
+def _subspace_width(dim: int, num_subspaces: int) -> int:
+    """The PQ slice width; a remainder would silently drop trailing dims."""
+    sub = dim // num_subspaces
+    if sub * num_subspaces != dim:
+        raise ValueError(f"dim={dim} not divisible by num_subspaces={num_subspaces}")
+    return sub
+
+
+def _subspace_slices(
+    df: DataFrame,
+    vec: str,
+    sub: int,
+    num_subspaces: int,
+    out: str,
+    keep: tuple[str, ...],
+) -> DataFrame:
+    """(*keep, m, `out`): one row per (input row, subspace m) holding the
+    m-th `sub`-wide slice of the array column `vec` — the per-subspace
+    view every codebook sample and Lloyd trainer reads."""
+    ms = F.explode(
+        F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)])
+    ).alias("m")
+    return df.select(*keep, vec, ms).select(
+        *keep,
+        "m",
+        F.slice(F.col(vec), (F.col("m") * sub + 1).cast("int"), sub).alias(out),
     )
+
+
+def _stride_codebook(
+    df: DataFrame,
+    id_col: str,
+    vec: Column,
+    sub: int,
+    num_subspaces: int,
+    num_codewords: int,
+    stride: int,
+) -> DataFrame:
+    """(c_id, m, c_sub): the deterministic, training-free PQ codebook —
+    codeword c of subspace m is the m-th slice of `vec` on the row whose
+    `id_col` = c·stride (the mod-id stand-in convention of the IVF tiers,
+    so the DuckDB oracles recompute the codes exactly).  Also the init of
+    the exact-Lloyd PQ trainer."""
+    sample = df.filter(
+        (F.col(id_col) % stride == 0) & (F.col(id_col) < stride * num_codewords)
+    ).select((F.col(id_col) / stride).cast("long").alias("c_id"), vec.alias("cv"))
+    return _subspace_slices(sample, "cv", sub, num_subspaces, "c_sub", ("c_id",))
 
 
 def _probe_centroids(
@@ -772,88 +860,38 @@ def pq_topk(
 
     Plan shape (r5 perf pass): the codebook rides along as a 1-row
     broadcast array, so encode is num_subspaces per-row order-free argmin
-    folds — one shuffle-free projection of the corpus; scoring =
-    crossJoin against the broadcast per-query lookup maps (n rows
-    streaming, no pair shuffle) + the top-k window on q_id, the only
-    exchange left.  Scored output column `adc_micro` is the
-    micro-quantized squared-L2 ADC estimate (smaller = nearer).
+    folds — one shuffle-free projection of the corpus; scoring is the
+    flat (keyless) case of the IVF probe join: the broadcast per-query
+    lookup maps meet every code row (n rows streaming, no pair shuffle),
+    then the top-k window on q_id, the only exchange left.  Scored output
+    column `adc_micro` is the micro-quantized squared-L2 ADC estimate
+    (smaller = nearer).
     """
-    sub = dim // num_subspaces
-    if sub * num_subspaces != dim:
-        raise ValueError(f"dim={dim} not divisible by num_subspaces={num_subspaces}")
-    ms = F.explode(F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)])).alias("m")
-    if codebooks is not None:
-        cbm = codebooks
-        # The ADC map key is m·K + c_id, so every codebook c_id must be
-        # < num_codewords or adjacent subspaces' entries alias and corrupt
-        # scores.  The caller passes K explicitly (pq_codebooks_kmeans can
-        # return FEWER centers per subspace — ids stay dense from 0, which
-        # only leaves unused key slots); no eager job runs at plan-build
-        # time (r3 ADVICE: the old max(c_id) probe was a surprising action
-        # inside a pure plan-building API).
-    else:
-        cbm = (
-            vectors.filter(
-                (F.col(id_col) % code_stride == 0)
-                & (F.col(id_col) < code_stride * num_codewords)
-            )
-            .select((F.col(id_col) / code_stride).cast("long").alias("c_id"), F.col(vec_col).alias("cv"), ms)
-            .select("c_id", "m", F.slice(F.col("cv"), (F.col("m") * sub + 1).cast("int"), sub).alias("c_sub"))
+    sub = _subspace_width(dim, num_subspaces)
+    # The caller passes K explicitly (pq_codebooks_kmeans can return FEWER
+    # centers per subspace — ids stay dense from 0, which only leaves
+    # unused key slots); the c_id < K rule is checked lazily by
+    # _pq_adc_map, so no eager job runs at plan-build time (r3 ADVICE: the
+    # old max(c_id) probe was a surprising action inside a pure
+    # plan-building API).
+    if codebooks is None:
+        codebooks = _stride_codebook(
+            vectors, id_col, F.col(vec_col), sub, num_subspaces, num_codewords,
+            code_stride,
         )
-    # The codebook rides along as a 1-row broadcast array (r5 perf pass):
-    # encode is num_subspaces per-row order-free argmin folds — one
-    # shuffle-free projection of the corpus instead of the old explode ×
-    # join × two groupBy exchanges.
-    cb1 = F.broadcast(_pq_model_1row(cbm, "c_id", num_subspaces))
-    code_entries = [
-        _pq_code_entry(m, sub, F.col(vec_col), "c_id") for m in range(num_subspaces)
-    ]
-    codes_wide = _spread(vectors).crossJoin(cb1).select(
+    cb1 = _pq_model_1row(codebooks, num_subspaces)
+    codes = _spread(vectors).crossJoin(cb1).select(
         F.col(id_col).alias("n_id"),
-        F.map_from_entries(F.array(*code_entries)).alias("cmap"),
+        _pq_code_map(F.col(vec_col), sub, num_subspaces).alias("cmap"),
         *([F.col(vec_col).alias("n_vec")] if keep_vecs else []),
     )
-
-    # The ADC map key is m·K + c_id; a codebook row with c_id >= K would
-    # alias an adjacent subspace's entry and silently corrupt every score
-    # (r4 ADVICE).  Zero-cost lazy guard: misuse fails loudly at execution
-    # instead of returning wrong rankings.  Both map-build and lookup go
-    # through the same model array, so guarding the key build covers the
-    # lookup too.
-    def _adc_entry(e: Column) -> Column:
-        key = F.when(
-            e["c_id"] < num_codewords,
-            e["m"] * num_codewords + e["c_id"],
-        ).otherwise(
-            F.raise_error(
-                F.format_string(
-                    "pq_topk: codebook c_id %s >= num_codewords %s — ADC keys "
-                    "would alias adjacent subspaces; pass num_codewords matching "
-                    "the trained codebooks",
-                    e["c_id"].cast("string"),
-                    F.lit(str(num_codewords)),
-                )
-            ).cast("long")
-        )
-        contrib = F.round(
-            F.lit(1e6)
-            * l2sq(
-                F.slice(F.col("q_vec"), (e["m"] * sub + 1).cast("int"), sub),
-                e["c_sub"],
-            )
-        ).cast("long")
-        return F.struct(key.alias("key"), contrib.alias("contrib"))
-
-    adc_wide = queries.crossJoin(cb1).select(
+    amaps = queries.crossJoin(cb1).select(
         "q_id",
-        F.map_from_entries(F.transform(F.col("model"), _adc_entry)).alias("amap"),
+        _pq_adc_map("q_vec", sub, num_codewords).alias("amap"),
         *(["q_vec"] if keep_vecs else []),
     )
-    scored = (
-        codes_wide.crossJoin(F.broadcast(adc_wide))
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("adc_micro", _adc_sum(num_subspaces, num_codewords))
-    )
+    adc = _adc_sum(num_subspaces, num_codewords)
+    scored = _probe_join(amaps, codes, "adc_micro", adc, on=None)
     extra = ("q_vec", "n_vec") if keep_vecs else ()
     return _topk_per_query(scored, "adc_micro", k, extra=extra)
 
@@ -923,22 +961,40 @@ def ivf_pq_scored(
     all-lists relation (nprobe = K) servable at every smaller nprobe by
     a filter: the factoring the recall-vs-cost curve gate sweeps over.
     """
-    sub = dim // num_subspaces
-    if sub * num_subspaces != dim:
-        raise ValueError(f"dim={dim} not divisible by num_subspaces={num_subspaces}")
-    ms = F.explode(
-        F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)])
-    ).alias("m")
-    res = lambda v, c: F.zip_with(v, c, lambda x, y: x.cast("double") - y.cast("double"))  # noqa: E731
+    sub = _subspace_width(dim, num_subspaces)
+    cmodel = _ivf_model(_mod_centroids(vectors, vec_col, id_col, centroid_mod))
+    res = _ivf_residuals(vectors, cmodel, vec_col, id_col)
+    rcb1 = _pq_model_1row(
+        _stride_codebook(
+            res, "n_id", F.col("r"), sub, num_subspaces, num_codewords, code_stride
+        ),
+        num_subspaces,
+    )
+    codes = res.crossJoin(rcb1).select(
+        "n_id", "c_list", _pq_code_map(F.col("r"), sub, num_subspaces).alias("cmap")
+    )
+    return _ivfpq_rank(
+        codes, queries, cmodel, rcb1, sub, nprobe, num_subspaces, num_codewords,
+        with_probe_rank,
+    )
 
-    cents = _mod_centroids(vectors, vec_col, id_col, centroid_mod)
-    # nearest-centroid assignment (same ranking + tie-break as ivf_topk),
-    # with the model riding along as a 1-row broadcast array (r5 perf
-    # pass): argmax fold + centroid lookup + residual in ONE shuffle-free
-    # projection — no crossJoin expansion, no groupBy(n_id) exchange, no
-    # assigned⋈vectors⋈cents re-joins.
-    cmodel = _ivf_model(cents)
-    with_res = (
+
+def _residual(v: Column, c: Column) -> Column:
+    """v − c element-wise as array<double>."""
+    return F.zip_with(v, c, lambda x, y: x.cast("double") - y.cast("double"))
+
+
+def _ivf_residuals(
+    vectors: DataFrame, cmodel: DataFrame, vec_col: str, id_col: str
+) -> DataFrame:
+    """(n_id, c_list, r): every vector's nearest coarse centroid (the
+    _ivf_assign ranking + tie-break) and its double residual v − c — the
+    float IVFADC encode input; the integer twin is _micro_residuals.  The
+    model rides along as a 1-row broadcast array (r5 perf pass): argmax
+    fold + centroid lookup + residual in ONE shuffle-free projection — no
+    crossJoin expansion, no groupBy(n_id) exchange, no
+    assigned⋈vectors⋈cents re-joins."""
+    return (
         _spread(vectors).crossJoin(cmodel)
         .select(
             F.col(id_col).alias("n_id"),
@@ -949,7 +1005,7 @@ def ivf_pq_scored(
         .select(
             "n_id",
             F.col("w")["c_id"].alias("c_list"),
-            res(
+            _residual(
                 F.col("v"),
                 F.element_at(
                     F.filter(
@@ -971,73 +1027,42 @@ def ivf_pq_scored(
         # checkpoint blocks are not recomputable on executor loss.
         .localCheckpoint(eager=False)
     )
-    # residual codebooks from the sampled vectors' residuals
-    rcb = (
-        with_res.filter(
-            (F.col("n_id") % code_stride == 0)
-            & (F.col("n_id") < code_stride * num_codewords)
-        )
-        .select((F.col("n_id") / code_stride).cast("long").alias("pq_c"), F.col("r").alias("cr"), ms)
-        .select("pq_c", "m", F.slice(F.col("cr"), (F.col("m") * sub + 1).cast("int"), sub).alias("c_sub"))
-    )
-    # encode every residual: the residual codebook as a second 1-row
-    # broadcast array (coverage-guarded); num_subspaces per-row argmin
-    # folds, no shuffle
-    rcb1 = F.broadcast(_pq_model_1row(rcb, "pq_c", num_subspaces))
-    codes_wide = with_res.crossJoin(rcb1).select(
-        "n_id",
-        "c_list",
-        F.map_from_entries(
-            F.array(
-                *[
-                    _pq_code_entry(m, sub, F.col("r"), "pq_c")
-                    for m in range(num_subspaces)
-                ]
-            )
-        ).alias("cmap"),
-    )
-    # query probes: nprobe nearest coarse lists per query
-    # (_probe_centroids = the old rank window's exact order), residual
-    # per probed list — the probed centroid rides in the sort struct
-    probe_lists = _probe_centroids(
+
+
+def _ivfpq_rank(
+    codes: DataFrame,
+    queries: DataFrame,
+    cmodel: DataFrame,
+    rcb1: DataFrame,
+    sub: int,
+    nprobe: int,
+    num_subspaces: int,
+    num_codewords: int,
+    with_probe_rank: bool,
+) -> DataFrame:
+    """Float ADC scoring over an encoded IVFADC corpus `codes` (n_id,
+    c_list, cmap): per query the `nprobe` nearest coarse lists
+    (_probe_centroids, the old rank window's exact order — the probed
+    centroid rides in the sort struct), the query residual per probed
+    list, its ADC lookup map over the residual codebook model `rcb1`,
+    then the shared probe join.  Returns the scored relation (q_id, n_id,
+    [pr,] adc_micro) before any top-k cut; the integer twin is
+    ivfpq_rank_micro."""
+    pr = [F.col("pr")] if with_probe_rank else []
+    probes = _probe_centroids(
         queries, cmodel, nprobe, with_vec=True, with_rank=with_probe_rank
     ).select(
         "q_id",
         *([(F.col("pr") + 1).cast("long").alias("pr")] if with_probe_rank else []),
         F.col("p")["c_id"].alias("c_list"),
-        res(F.col("q_vec"), F.col("p")["c_vec"]).alias("qr"),
+        _residual(F.col("q_vec"), F.col("p")["c_vec"]).alias("qr"),
     )
-
-    def _adc_entry(e: Column) -> Column:
-        return F.struct(
-            (e["m"] * num_codewords + e["pq_c"]).alias("key"),
-            F.round(
-                F.lit(1e6)
-                * l2sq(
-                    F.slice(F.col("qr"), (e["m"] * sub + 1).cast("int"), sub),
-                    e["c_sub"],
-                )
-            )
-            .cast("long")
-            .alias("contrib"),
-        )
-
-    adc_wide = probe_lists.crossJoin(rcb1).select(
-        "q_id",
-        *(["pr"] if with_probe_rank else []),
-        "c_list",
-        F.map_from_entries(F.transform(F.col("model"), _adc_entry)).alias("amap"),
+    amaps = probes.crossJoin(rcb1).select(
+        "q_id", *pr, "c_list", _pq_adc_map("qr", sub, num_codewords).alias("amap")
     )
-    return (
-        codes_wide.join(F.broadcast(adc_wide), "c_list")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("adc_micro", _adc_sum(num_subspaces, num_codewords))
-        .select(
-            "q_id",
-            "n_id",
-            *(["pr"] if with_probe_rank else []),
-            "adc_micro",
-        )
+    adc = _adc_sum(num_subspaces, num_codewords)
+    return _probe_join(amaps, codes, "adc_micro", adc).select(
+        "q_id", "n_id", *pr, "adc_micro"
     )
 
 
@@ -1149,7 +1174,8 @@ def ivf_coarse_shortlist(
     probes = _probe_centroids(queries, cmodel, nprobe, with_rank=True).select(
         "q_id", "pr", F.col("p")["c_id"].alias("c_list")
     )
-    return _probe_join_topk(probes, inv, "pr", F.col("pr"), r).drop("pr")
+    scored = _probe_join(probes, inv, "pr", F.col("pr"))
+    return _topk_per_query(scored, "pr", r).drop("pr")
 
 
 def lsh_collision_shortlist(
@@ -1416,15 +1442,6 @@ def dot_micro(a: Column, b: Column) -> Column:
     )
 
 
-def _sql_dot_micro(a_sql: str, b_sql: str) -> str:
-    """SQL text for dot_micro (BIGINT Σ aᵢ·bᵢ fold) — same shape as the
-    Column form so oracles replay it exactly."""
-    return (
-        f"aggregate(zip_with({a_sql},{b_sql},(x,y)->x*y),"
-        f"CAST(0 AS BIGINT),(acc,x)->acc+x)"
-    )
-
-
 def _sql_long_arr(vals) -> str:
     """SQL text for an array<bigint> literal."""
     return "array(" + ",".join(f"{int(v)}L" for v in vals) + ")"
@@ -1556,7 +1573,8 @@ def _ivf_micro_rank(
         "q_id", "qv", F.col("p")["c_id"].alias("c_list")
     )
     l2 = l2_micro(F.col("qv"), F.col("v"))
-    return _probe_join_topk(probes, lists, "l2_micro2", l2, k, part_type=part_type)
+    scored = _probe_join(probes, lists, "l2_micro2", l2, part_type=part_type)
+    return _topk_per_query(scored, "l2_micro2", k)
 
 
 def _micro_residuals(
@@ -1594,7 +1612,15 @@ def _micro_code_map(vec: str, cbs: list, sub: int, num_subspaces: int) -> Column
 def _micro_adc_map(vec: str, cbs: list, sub: int, num_codewords: int) -> Column:
     """amap = map<m·K + c_id, BIGINT L2 of `vec`'s m-th slice to codeword
     c_id> — the query-side ADC lookup table _adc_sum reads (K =
-    num_codewords)."""
+    num_codewords).  The same key-aliasing rule _pq_adc_map guards: a
+    codebook c_id >= K would collide with an adjacent subspace's slot.
+    The codebook is driver-side here, so it fails loudly at BUILD time."""
+    bad = sorted({int(c_id) for _, c_id, _ in cbs if int(c_id) >= num_codewords})
+    if bad:
+        raise ValueError(
+            f"pq ADC: codebook c_id(s) {bad} >= num_codewords {num_codewords} "
+            "— ADC keys would alias adjacent subspaces"
+        )
     entries = ",".join(
         f"named_struct('key',CAST({int(m) * num_codewords + int(c_id)} AS BIGINT),"
         f"'contrib',{_sql_l2_micro(f'slice({vec},{int(m) * sub + 1},{sub})', _sql_long_arr(c_sub_v))})"
@@ -1791,32 +1817,21 @@ def pq_codebooks_lloyd_micro(
     ONE (num_subspaces·k)×(sub+1)-cell aggregation; the 32-row model is
     collected per round.  Returns [(m, c_id, c_sub_micro)] rows.
     """
-    sub = dim // num_subspaces
-    ms = F.explode(
-        F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)])
-    ).alias("m")
-    vm = (
+    sub = _subspace_width(dim, num_subspaces)
+    vm = _subspace_slices(
         vectors.select(
-            F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("vv"), ms
-        )
-        .select(
-            "n_id",
-            "m",
-            F.slice(F.col("vv"), (F.col("m") * sub + 1).cast("int"), sub).alias("v"),
-        )
+            F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("vv")
+        ),
+        "vv", sub, num_subspaces, "v", ("n_id",),
     )
     spark = vectors.sparkSession
-    init = (
-        vectors.filter(
-            (F.col(id_col) % stride == 0) & (F.col(id_col) < stride * num_codewords)
-        )
-        .select((F.col(id_col) / stride).cast("long").alias("c_id"),
-                quantize_micro(F.col(vec_col)).alias("vv"), ms)
-        .select("m", "c_id",
-                F.slice(F.col("vv"), (F.col("m") * sub + 1).cast("int"), sub).alias("c"))
-        .collect()
+    init = _stride_codebook(
+        vectors, id_col, quantize_micro(F.col(vec_col)), sub, num_subspaces,
+        num_codewords, stride,
+    ).collect()
+    cbs = sorted(
+        (int(r["m"]), int(r["c_id"]), [int(x) for x in r["c_sub"]]) for r in init
     )
-    cbs = sorted((int(r["m"]), int(r["c_id"]), [int(x) for x in r["c"]]) for r in init)
     # operator-owned cache lifetime: the sliced frame feeds every Lloyd
     # round — persist for the loop, release before returning
     if iters > 1:
@@ -1852,27 +1867,15 @@ def pq_topk_micro(
     join, no groupBy) and the per-query ADC lookup map is the same pure
     projection over the query frame; the only shuffle left is the final
     top-k window.  Output (q_id, n_id, adc_q, rk); smaller = nearer."""
-    sub = dim // num_subspaces
-    # Same aliasing hazard pq_topk guards (r4 ADVICE): a codebook c_id >=
-    # num_codewords would silently collide with an adjacent subspace's map
-    # slot.  The codebook is driver-side here, so fail loudly at BUILD time.
-    bad = sorted({int(c_id) for _, c_id, _ in codebooks if int(c_id) >= num_codewords})
-    if bad:
-        raise ValueError(
-            f"pq_topk_micro: codebook c_id(s) {bad} >= num_codewords "
-            f"{num_codewords} — ADC keys would alias adjacent subspaces"
-        )
-    codes_wide = vectors.select(
-        F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("vv")
-    ).select("n_id", _micro_code_map("vv", codebooks, sub, num_subspaces).alias("cmap"))
-    adc_wide = queries.select(
+    sub = _subspace_width(dim, num_subspaces)
+    amaps = queries.select(
         "q_id", quantize_micro(F.col("q_vec")).alias("qv")
     ).select("q_id", _micro_adc_map("qv", codebooks, sub, num_codewords).alias("amap"))
-    scored = (
-        codes_wide.crossJoin(F.broadcast(adc_wide))
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("adc_q", _adc_sum(num_subspaces, num_codewords))
-    )
+    codes = vectors.select(
+        F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("vv")
+    ).select("n_id", _micro_code_map("vv", codebooks, sub, num_subspaces).alias("cmap"))
+    adc = _adc_sum(num_subspaces, num_codewords)
+    scored = _probe_join(amaps, codes, "adc_q", adc, on=None)
     return _topk_per_query(scored, "adc_q", k)
 
 
@@ -1961,7 +1964,7 @@ def ivfpq_train_micro(
     cbs = [(m, c_id, c_sub_micro)] — the driver-side artifacts
     ivfpq_encode_micro / ivfpq_rank_micro (and the persisted index build)
     consume.  See ivf_pq_topk_lloyd_micro for the exactness story."""
-    sub = dim // num_subspaces
+    sub = _subspace_width(dim, num_subspaces)
     spark = vectors.sparkSession
     # ONE stride-sample collect feeds BOTH quantizers' inits (r12; was two
     # — the coarse init inside kmeans_lloyd_micro plus a residual-slice
@@ -1991,15 +1994,6 @@ def ivfpq_train_micro(
     # residuals: nearest coarse centroid (integer L2, min-c_id ties), r = v − c
     res = _micro_residuals(vm, cents).persist()  # feeds the Lloyd stats rounds
     try:
-        ms = F.explode(
-            F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)])
-        ).alias("m")
-        rm = res.select("n_id", "c_list", F.col("r"), ms).select(
-            "n_id",
-            "c_list",
-            "m",
-            F.slice(F.col("r"), (F.col("m") * sub + 1).cast("int"), sub).alias("v_sub"),
-        )
         cbs = []
         for nid, v in sample.items():
             if nid >= stride * num_codewords:
@@ -2017,7 +2011,7 @@ def ivfpq_train_micro(
         cbs = sorted(cbs)
         cbs = _lloyd_rounds(
             spark,
-            rm.select("n_id", "m", F.col("v_sub").alias("v")),
+            _subspace_slices(res, "r", sub, num_subspaces, "v", ("n_id",)),
             ("m",),
             cbs,
             sub,
@@ -2052,7 +2046,7 @@ def ivfpq_encode_micro(
     picked by model size — literal up to _ENCODE_LITERAL_MAX centroids,
     the broadcast model past it (r9: what lets the persisted-IVFADC
     mutation path run at corpus-grain quantizers)."""
-    sub = dim // num_subspaces
+    sub = _subspace_width(dim, num_subspaces)
     vm = vectors.select(
         F.col(id_col).alias("n_id"),
         quantize_micro(F.col(vec_col)).alias("v"),
@@ -2082,11 +2076,11 @@ def ivfpq_rank_micro(
     """ADC top-k over an encoded IVFADC corpus `codes_wide`
     (n_id, c_list, cmap — from ivfpq_encode_micro or a persisted index
     scan): probe selection (_micro_nearest), per-(query, probed list) ADC
-    lookup maps as a pure projection, then the shared probe ⋈ lists →
-    top-k skeleton (_probe_join_topk).  Output (q_id, n_id, adc_q, rk);
+    lookup maps as a pure projection, then the shared probe join
+    (_probe_join) and top-k cut.  Output (q_id, n_id, adc_q, rk);
     smaller = nearer.  `probe_list_type`: the c_list partition type of a
-    persisted codes scan (see _probe_join_topk)."""
-    sub = dim // num_subspaces
+    persisted codes scan (see _probe_join)."""
+    sub = _subspace_width(dim, num_subspaces)
     # probes: nprobe nearest coarse lists per query (_micro_nearest, the
     # same size switch as the encode); query residual per list
     qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
@@ -2097,13 +2091,12 @@ def ivfpq_rank_micro(
         F.col("p")["c_id"].alias("c_list"),
         F.zip_with(F.col("qv"), F.col("p")["c"], lambda x, y: x - y).alias("qr"),
     )
-    adc_wide = probes.select(
+    amaps = probes.select(
         "q_id", "c_list", _micro_adc_map("qr", cbs, sub, num_codewords).alias("amap")
     )
     adc = _adc_sum(num_subspaces, num_codewords)
-    return _probe_join_topk(
-        adc_wide, codes_wide, "adc_q", adc, k, part_type=probe_list_type
-    )
+    scored = _probe_join(amaps, codes_wide, "adc_q", adc, part_type=probe_list_type)
+    return _topk_per_query(scored, "adc_q", k)
 
 
 def sq8_scale(vectors: DataFrame, vec_col: str = "embedding") -> float:

@@ -5375,6 +5375,7 @@ def docs_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     conjunctive search through the plan-time bucket-pruned read path —
     the text twin of emb_stream_index_ingest, gated by the same
     docs_search_index oracle."""
+    from codecdb_queryengine_spark.sources import io as IO
     from codecdb_queryengine_spark.sources import text_index as TI
     from codecdb_queryengine_spark.streaming import events as E
     from codecdb_queryengine_spark.streaming import sinks as SK
@@ -5392,7 +5393,7 @@ def docs_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(base, "postings"),
         os.path.join(base, "ckpt"),
         partition_by=("t_bucket",),
-        n_write_tasks=TI._bucket_write_parts(spark, 32),
+        n_write_tasks=IO.write_task_count(spark, 32, TI.BUCKETS_PER_WRITE_TASK),
     )
     q.awaitTermination()
     TI._write_meta(spark, base, 32)
@@ -5542,7 +5543,7 @@ def docs_stream_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         postings_path,
         os.path.join(base, "ckpt"),
         partition_by=("t_bucket",),
-        n_write_tasks=TI._bucket_write_parts(spark, 32),
+        n_write_tasks=IO.write_task_count(spark, 32, TI.BUCKETS_PER_WRITE_TASK),
     )
     q.awaitTermination()
     TI._write_meta(spark, base, 32)

@@ -41,6 +41,7 @@ from codecdb_queryengine_spark.operators.similarity import (
     _micro_assign,
     _mod_centroids,
 )
+from codecdb_queryengine_spark.sources.io import write_task_count
 
 
 # Serving-side scan cache (OPT-IN via the serve functions' cached=True):
@@ -188,19 +189,11 @@ def _list_dir(values) -> list[str]:
 # dynamic-partition write keyed repartition inherits spark.sql.shuffle.
 # partitions (64 locally), and 64 tasks writing ~140 tiny partition dirs
 # measured 3.2 s vs 1.05 s at 8 tasks for the identical layout (r11
-# optimization round, guide §2.2/§6 — fewer, larger write tasks).  Size the
-# exchange to the number of physical partition dirs instead: ~DIRS_PER_TASK
-# dirs per task, still capped by the session's shuffle parallelism so a
-# 100-TB index (millions of lists) saturates the cluster exactly as before.
+# optimization round).  So every list write sizes its exchange to the
+# number of physical partition dirs (io.write_task_count, capped by the
+# shuffle parallelism so a 100-TB index still saturates the cluster).
 # Hash partitioning on the full partition-column tuple keeps every dir's
 # rows in ONE task, so the one-file-per-directory layout is unchanged.
-# (io.write_task_count is the one shared sizing rule.)
-
-
-def _write_parts(spark: SparkSession, n_dirs: int) -> int:
-    from codecdb_queryengine_spark.sources import io as IO
-
-    return IO.write_task_count(spark, n_dirs)
 
 
 def ivf_index_append(
@@ -253,7 +246,7 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
     _check_append_schema(assigned, existing)
     if "c_slot" not in existing.columns:
         # Per-list routing plan: batch-sized aggregate; it sizes the
-        # pre-write exchange (see _write_parts).
+        # pre-write exchange (see io.write_task_count).
         new_counts = {
             int(r["c_list"]): int(r["_n"])
             for r in assigned.groupBy("c_list")
@@ -261,7 +254,7 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
             .collect()
         }
         (
-            assigned.repartition(_write_parts(spark, len(new_counts)), "c_list")
+            assigned.repartition(write_task_count(spark, len(new_counts)), "c_list")
             .write.mode("append")
             .partitionBy("c_list")
             .parquet(lists_path)
@@ -307,7 +300,7 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
                 sorted(stay.items()),
             )
             .repartition(
-                _write_parts(spark, sum(stay.values())), "c_list", "c_slot"
+                write_task_count(spark, sum(stay.values())), "c_list", "c_slot"
             )
             .write.mode("append")
             .partitionBy("c_list", "c_slot")
@@ -332,7 +325,7 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
         (
             _apply_slots(merged, spark, plan)
             .repartition(
-                _write_parts(spark, sum(s for _, s in plan)), "c_list", "c_slot"
+                write_task_count(spark, sum(s for _, s in plan)), "c_list", "c_slot"
             )
             .write.mode("overwrite")
             .partitionBy("c_list", "c_slot")
@@ -596,7 +589,7 @@ def _upsert_assigned(
         n_dirs = sum(1 for n in merged_n.values() if n > 0)
     tmp = lists_path.rstrip("/") + ".upserting"
     (
-        merged.repartition(max(1, _write_parts(spark, n_dirs)), *part_cols)
+        merged.repartition(max(1, write_task_count(spark, n_dirs)), *part_cols)
         .write.mode("overwrite")
         .partitionBy(*part_cols)
         .parquet(tmp)
@@ -657,8 +650,8 @@ def _write_lists(
     regrowing hot lists.
 
     The pre-write exchange is sized to the number of physical partition
-    directories (_write_parts): the capped path knows it exactly from its
-    own slot plan; the uncapped path uses `n_dirs_hint` (the centroid
+    directories (io.write_task_count): the capped path knows it exactly
+    from its own slot plan; the uncapped path uses `n_dirs_hint` (the centroid
     count) and falls back to the keyed default when no hint is given."""
     spark = lists.sparkSession
     part_cols = ["c_list"]
@@ -676,7 +669,7 @@ def _write_lists(
         lists = _apply_slots(lists, spark, plan)
         part_cols = ["c_list", "c_slot"]
     shaped = (
-        lists.repartition(_write_parts(spark, n_dirs), *part_cols)
+        lists.repartition(write_task_count(spark, n_dirs), *part_cols)
         if n_dirs is not None
         else lists.repartition(*part_cols)
     )

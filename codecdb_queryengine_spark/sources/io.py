@@ -40,24 +40,28 @@ READ_FORMATS = ("parquet", "csv", "json", "orc", "xml")
 # plain parquet either way — both engines read each other's files.
 
 
-# Dynamic-partition writes pay per-TASK overhead AND per-file serial cost
-# within a task: one task writing ~140 partition dirs measured 3.1 s vs
-# 1.05 s spread over 8 tasks for the identical one-file-per-dir layout (r11
-# optimization round).  Size such writes to ~DIRS_PER_TASK directories per
-# task, capped by the session's shuffle parallelism (the cluster-scale
-# knob).  Shared by the index layouts (ann_index/text_index keep their own
-# thin wrappers) and the partitioned compaction below.
-_DIRS_PER_WRITE_TASK = max(
-    1, int(os.environ.get("SPARK_GRAFT_DIRS_PER_WRITE_TASK", "16"))
-)
+# Layout writes pay per-TASK overhead AND per-file serial cost within a
+# task: one task writing ~140 partition dirs measured 3.1 s vs 1.05 s
+# spread over 8 tasks for the identical one-file-per-dir layout (r11
+# optimization round).  Size such writes to ~DIRS_PER_WRITE_TASK
+# directories per task, capped by the session's shuffle parallelism (the
+# cluster-scale knob).
+_DIRS_PER_WRITE_TASK = 16
 
 
-def write_task_count(spark: SparkSession, n_dirs: int) -> int:
+def write_task_count(
+    spark: SparkSession, n_units: int, per_task: int = _DIRS_PER_WRITE_TASK
+) -> int:
+    """The one write-task sizing rule every layout writer shares:
+    ceil(n_units / per_task) tasks, at least 1, at most the session's
+    spark.sql.shuffle.partitions.  A unit is whatever one task's cost
+    scales with — partition directories (the default), bucket directories
+    (text_index) or sorted rows (layout)."""
     try:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         cap = 64
-    return max(1, min(cap, -(-int(n_dirs) // _DIRS_PER_WRITE_TASK)))
+    return max(1, min(cap, -(-int(n_units) // per_task)))
 
 
 _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*:")

@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from codecdb_queryengine_spark.sources.io import write_task_count
+
 
 def z_value(cols: Sequence[Column], bits: int = 10) -> Column:
     """Morton interleave of `bits` low bits of each column (non-negative
@@ -84,9 +86,10 @@ def zorder_write(
     n_rows = _check_bounds(df, cols, bits, "zorder_write")
     z = z_value([F.col(c) for c in cols], bits).alias("__z")
     zdf = df.withColumn("__z", z)
-    zdf = zdf.repartitionByRange(
-        num_files or _sort_write_parts(df.sparkSession, n_rows), "__z"
+    n_tasks = num_files or write_task_count(
+        df.sparkSession, n_rows, _SORT_ROWS_PER_TASK
     )
+    zdf = zdf.repartitionByRange(n_tasks, "__z")
     zdf.sortWithinPartitions("__z").drop("__z").write.mode(mode).parquet(path)
 
 
@@ -174,22 +177,12 @@ def _read_zmeta(spark, path: str) -> tuple[list[str], int, int]:
 
 
 # A sort-write's range exchange pays per-task overhead like every layout
-# write (see ann_index._write_parts): size it to the rows it is about to
-# sort instead of inheriting spark.sql.shuffle.partitions.  Row count rides
-# on the bounds aggregate the writers already run (no extra job); the env
-# knob is the local default — at cluster scale the shuffle-partitions cap
-# keeps big tables saturating their executors.
-_SORT_ROWS_PER_TASK = max(
-    1, int(os.environ.get("SPARK_GRAFT_SORT_ROWS_PER_TASK", "32768"))
-)
-
-
-def _sort_write_parts(spark, n_rows: int) -> int:
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 64
-    return max(1, min(cap, -(-int(n_rows) // _SORT_ROWS_PER_TASK)))
+# write (io.write_task_count): size it to the rows it is about to sort
+# instead of inheriting spark.sql.shuffle.partitions.  Row count rides on
+# the bounds aggregate the writers already run (no extra job); at cluster
+# scale the shuffle-partitions cap keeps big tables saturating their
+# executors.
+_SORT_ROWS_PER_TASK = 32768
 
 
 def _check_bounds(df: DataFrame, cols: Sequence[str], bits: int, who: str) -> int:
@@ -239,7 +232,9 @@ def zorder_write_partitioned(
     # z-slices (parallel within a big directory, since z_hi is a z prefix)
     # and every file covers a disjoint z-rectangle
     (
-        zdf.repartitionByRange(_sort_write_parts(df.sparkSession, n_rows), "__z")
+        zdf.repartitionByRange(
+            write_task_count(df.sparkSession, n_rows, _SORT_ROWS_PER_TASK), "__z"
+        )
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")
@@ -261,7 +256,9 @@ def zorder_append(df: DataFrame, path: str) -> None:
     # z-slices (parallel within a big directory, since z_hi is a z prefix)
     # and every file covers a disjoint z-rectangle
     (
-        zdf.repartitionByRange(_sort_write_parts(df.sparkSession, n_rows), "__z")
+        zdf.repartitionByRange(
+            write_task_count(df.sparkSession, n_rows, _SORT_ROWS_PER_TASK), "__z"
+        )
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("append")

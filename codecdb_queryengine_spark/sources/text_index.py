@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from codecdb_queryengine_spark.functions import text as T
+from codecdb_queryengine_spark.sources.io import write_task_count
 
 
 # Every read-back of a layout this module writes names its schema instead
@@ -57,20 +58,9 @@ def _cols(**types) -> StructType:
 # maintenance scale: repartition("t_bucket") inherits spark.sql.shuffle.
 # partitions (64 locally) and 64 tasks writing ≤32 bucket dirs measured
 # 1.45 s vs 0.63 s at 8 tasks for the identical layout (r11 optimization
-# round, guide §2.2/§6 — fewer, larger write tasks).  ~BUCKETS_PER_TASK dirs
-# per task, capped by the session's shuffle parallelism so a cluster-scale
-# bucket count still saturates its executors.
-_BUCKETS_PER_TASK = max(
-    1, int(os.environ.get("SPARK_GRAFT_BUCKETS_PER_WRITE_TASK", "4"))
-)
-
-
-def _bucket_write_parts(spark: SparkSession, num_buckets: int) -> int:
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 64
-    return max(1, min(cap, -(-int(num_buckets) // _BUCKETS_PER_TASK)))
+# round, guide §2.2/§6 — fewer, larger write tasks).  io.write_task_count
+# sizes them at ~BUCKETS_PER_WRITE_TASK dirs per task.
+BUCKETS_PER_WRITE_TASK = 4
 
 
 def _bucket_of(term: str, num_buckets: int) -> int:
@@ -206,7 +196,8 @@ def text_index_build(
     postings = postings_of(docs, text_col, id_col, num_buckets)
     (
         postings.repartition(
-            _bucket_write_parts(docs.sparkSession, num_buckets), "t_bucket"
+            write_task_count(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
+            "t_bucket",
         )
         .write.mode("overwrite")
         .partitionBy("t_bucket")
@@ -283,7 +274,8 @@ def text_index_build_positional(
     (
         positional_postings_of(docs, text_col, id_col, num_buckets)
         .repartition(
-            _bucket_write_parts(docs.sparkSession, num_buckets), "t_bucket"
+            write_task_count(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
+            "t_bucket",
         )
         .write.mode("overwrite")
         .partitionBy("t_bucket")
@@ -363,7 +355,8 @@ def text_index_build_ranked(
     tf = tf_postings_of(docs, text_col, id_col, num_buckets)
     (
         tf.repartition(
-            _bucket_write_parts(docs.sparkSession, num_buckets), "t_bucket"
+            write_task_count(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
+            "t_bucket",
         )
         .write.mode("overwrite")
         .partitionBy("t_bucket")
@@ -719,12 +712,6 @@ def _promote_docgen(spark: SparkSession, path: str, staging: str) -> None:
         os.rename(staging, dg)
 
 
-def _commit_docgen(spark: SparkSession, path: str, new_dg: DataFrame) -> None:
-    """Replace the docgen table atomically: stage the full new generation,
-    then promote it (see _stage_docgen/_promote_docgen)."""
-    _promote_docgen(spark, path, _stage_docgen(path, new_dg))
-
-
 def text_index_upsert(
     path: str,
     updates: DataFrame | None = None,
@@ -893,7 +880,9 @@ def text_index_purge(spark: SparkSession, path: str) -> list[str]:
         nb = _read_buckets(spark, path, 32, layout=layout)
         tmp = base_path + ".purging"
         (
-            live.repartition(_bucket_write_parts(spark, nb), "t_bucket")
+            live.repartition(
+                write_task_count(spark, nb, BUCKETS_PER_WRITE_TASK), "t_bucket"
+            )
             .write.mode("overwrite")
             .partitionBy("t_bucket")
             .parquet(tmp)
@@ -954,7 +943,7 @@ def text_index_build_all(
         F.col(id_col).alias("doc_id"), T.tokens(text_col).alias("__toks")
     ).persist()
     bucket = (T.md5_slice32("ti|", F.col("term")) % num_buckets).cast("int")
-    nparts = _bucket_write_parts(spark, num_buckets)
+    nparts = write_task_count(spark, num_buckets, BUCKETS_PER_WRITE_TASK)
 
     # The per-layout writes are INDEPENDENT jobs over the one cached token
     # pass — run 2 in flight (guide §2.6) so one write's task tail

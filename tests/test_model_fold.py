@@ -16,6 +16,8 @@ The load-bearing claims pinned here:
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import load_tables
@@ -107,6 +109,29 @@ def test_pq_encode_matches_python_argmin(spark, sf_dir):
     for r in got.collect():
         nid, score = expect[int(r["q_id"])][int(r["rk"]) - 1]
         assert (int(r["n_id"]), int(r["adc_micro"])) == (nid, score), r
+
+
+def test_pq_codebook_guards(spark, sf_dir):
+    """The three PQ codebook guards fail loudly instead of scoring with
+    aliased ADC keys: a float codebook c_id >= num_codewords raises when
+    the plan runs, a codebook missing a subspace trips the model's
+    coverage assert, and the integer serve rejects a bad c_id at build."""
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    M, K, sub = 4, 8, 16
+
+    def books(rows):
+        return spark.createDataFrame(rows, "m long, c_id long, c_sub array<double>")
+
+    too_big = books([(m, c, [float(c)] * sub) for m in range(M) for c in range(K + 1)])
+    aliased = r">= num_codewords 8 — ADC keys would alias adjacent subspaces"
+    with pytest.raises(Exception, match=aliased):
+        S.pq_topk(emb, _queries(emb), dim=64, k=3, codebooks=too_big).collect()
+    no_m3 = books([(m, c, [float(c)] * sub) for m in range(M - 1) for c in range(K)])
+    with pytest.raises(Exception, match="no entries for some subspace"):
+        S.pq_topk(emb, _queries(emb), dim=64, k=3, codebooks=no_m3).collect()
+    micro = [(m, c, [c] * sub) for m in range(M) for c in range(K + 1)]
+    with pytest.raises(ValueError, match="alias adjacent subspaces"):
+        S.pq_topk_micro(emb, _queries(emb), micro, dim=64, k=3)
 
 
 def test_spread_noop_when_partitioned(spark, sf_dir):

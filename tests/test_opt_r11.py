@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.sources import ann_index as AI
 from codecdb_queryengine_spark.sources import io as IO
+from codecdb_queryengine_spark.sources import layout as L
+from codecdb_queryengine_spark.sources import text_index as TI
 
 
 def test_write_task_count_bounds(spark):
@@ -22,6 +24,17 @@ def test_write_task_count_bounds(spark):
     assert IO.write_task_count(spark, 10**9) == cap
     # monotone in the directory count
     assert IO.write_task_count(spark, 64) <= IO.write_task_count(spark, 640)
+    # per-task unit sizes: 16 dirs (default), 4 text-index buckets, 32768
+    # sorted rows — ceil-divided, then capped
+    for per_task in (
+        IO._DIRS_PER_WRITE_TASK, TI.BUCKETS_PER_WRITE_TASK, L._SORT_ROWS_PER_TASK
+    ):
+        assert IO.write_task_count(spark, 0, per_task) == 1
+        assert IO.write_task_count(spark, per_task, per_task) == 1
+        assert IO.write_task_count(spark, per_task + 1, per_task) == min(2, cap)
+        assert IO.write_task_count(spark, per_task * 10**6, per_task) == cap
+    assert IO.write_task_count(spark, 32, TI.BUCKETS_PER_WRITE_TASK) == min(8, cap)
+    assert IO.write_task_count(spark, 100_000, L._SORT_ROWS_PER_TASK) == min(4, cap)
 
 
 def test_slot_plan_matches_ceil_rule():
