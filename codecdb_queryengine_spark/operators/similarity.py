@@ -23,6 +23,8 @@ import pandas as pd  # noqa: F401
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from codecdb_queryengine_spark.session import run_parallel
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢbᵢ as double, JVM-side (zip_with + aggregate)."""
@@ -788,8 +790,6 @@ def pq_codebooks_kmeans(
     exactly like ivf's kmeans_centroids.  Engine-specific by construction
     (KMeans|| init), so consumers gate rows-only + recall tests.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -812,10 +812,11 @@ def pq_codebooks_kmeans(
     # their (short, serial-stage-heavy) job chains on the shared scheduler
     # (r5 perf pass).  Each fit stays seed-deterministic — threading only
     # changes when jobs are *submitted* — and assembly order is pinned by
-    # iterating futures in subspace order.
-    with ThreadPoolExecutor(max_workers=num_subspaces) as pool:
-        futures = [pool.submit(_fit, m) for m in range(num_subspaces)]
-        rows = [r for fut in futures for r in fut.result()]
+    # the result order of run_parallel.
+    fits = run_parallel(
+        spark, [lambda m=m: _fit(m) for m in range(num_subspaces)], num_subspaces
+    )
+    rows = [r for fit in fits for r in fit]
     return spark.createDataFrame(rows, "m long, c_id long, c_sub array<double>")
 
 

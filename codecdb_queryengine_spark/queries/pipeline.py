@@ -24,6 +24,7 @@ from codecdb_queryengine_spark.operators import corpus as C
 from codecdb_queryengine_spark.operators import dedup as D
 from codecdb_queryengine_spark.operators import multimodal as M
 from codecdb_queryengine_spark.operators import similarity as S
+from codecdb_queryengine_spark.session import run_parallel
 
 # ---------------------------------------------------------------------------
 # SQL fragments shared by the oracles (must mirror functions/text.py exactly)
@@ -1136,13 +1137,11 @@ def _write_mutation_files(base: str, src: str, gens) -> None:
     writes are independent jobs — run them 2-in-flight (guide §2.6); the
     mtimes are set explicitly, so completion order is irrelevant."""
     import time as _time
-    from concurrent.futures import ThreadPoolExecutor
 
     now = _time.time()
     os.makedirs(src, exist_ok=True)
 
-    def _one(i_g) -> None:
-        i, g = i_g
+    def _one(i: int, g: DataFrame) -> None:
         tmp = os.path.join(base, f"mut{i}")
         g.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = next(
@@ -1153,8 +1152,8 @@ def _write_mutation_files(base: str, src: str, gens) -> None:
         os.rename(os.path.join(tmp, part), dst)
         os.utime(dst, (now + i, now + i))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(_one, enumerate(gens)))
+    jobs = [lambda i=i, g=g: _one(i, g) for i, g in enumerate(gens)]
+    run_parallel(gens[0].sparkSession, jobs, 2)
 
 
 def emb_stream_mutations(spark: SparkSession, sf_dir: str) -> DataFrame:

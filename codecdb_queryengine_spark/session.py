@@ -25,7 +25,12 @@ from __future__ import annotations
 
 import os
 
+from collections.abc import Callable, Sequence
+from typing import TypeVar
+
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 
 def _cpus() -> int:
@@ -87,3 +92,29 @@ def get_spark(app_name: str = "codecdb-queryengine-spark", **extra_conf: str) ->
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_parallel(
+    spark: SparkSession, jobs: Sequence[Callable[[], _T]], max_in_flight: int
+) -> list[_T]:
+    """Run independent driver-side jobs (no-argument callables that launch
+    Spark actions) up to `max_in_flight` at once, so one job's task tail
+    back-fills with the next job's tasks; results come back in `jobs`
+    order.  A single job runs inline.
+
+    Each job is wrapped with pyspark.inheritable_thread_target(spark) at
+    call time, so its pool thread carries the caller's local properties as
+    they are now — job group, description, scheduler pool — and the jobs
+    it launches count under the caller's job group (a plain pool thread's
+    jobs belong to no group)."""
+    if len(jobs) <= 1:
+        return [job() for job in jobs]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    if wrap is spark:  # pinned-thread mode off: threads share JVM properties
+        wrap = lambda job: job  # noqa: E731
+    with ThreadPoolExecutor(max_workers=max_in_flight) as pool:
+        return list(pool.map(lambda job: job(), [wrap(job) for job in jobs]))

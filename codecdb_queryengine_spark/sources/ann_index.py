@@ -28,7 +28,6 @@ sim_ann_ivf oracle gates the indexed path too.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,55 +40,18 @@ from codecdb_queryengine_spark.operators.similarity import (
     _micro_assign,
     _mod_centroids,
 )
-from codecdb_queryengine_spark.sources.io import write_task_count
-
-
-# Serving-side scan cache (OPT-IN via the serve functions' cached=True):
-# partition discovery over a many-list layout is a full directory listing
-# (one listing task per partition dir — the measured serve residual in
-# SCALE_MEASURED.md: 1104 listing tasks at 16x dominate the query wall), and
-# a serving process answers MANY queries against the same immutable layout
-# generation.  Caching the DataFrame HANDLE per (session, layout dir) reuses
-# its resolved file index, so only the first query after a layout generation
-# pays the listing.  Every maintenance pass in this module (build / append /
-# upsert) invalidates its layout; an OUT-OF-BAND mutation (e.g.
-# io.compact_partitioned directly on <path>/lists, or a streamed re-ingest)
-# must call invalidate_layout(path) — which is exactly why the cache is
-# opt-in: a stale handle fails loudly on swapped-out files rather than
-# returning silently wrong results, but correctness must not depend on every
-# caller remembering.  The gated queries serve uncached (each gate rebuilds
-# its layout per run); a long-lived serving process opts in.
-# Keyed on the SparkSession itself through a WeakKeyDictionary (r8 advice):
-# id(spark) can be recycled by CPython after a session is collected, which
-# would hand a NEW session a cached handle bound to the dead one — weak keys
-# make entries die with their session instead.
-_SCAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
+from codecdb_queryengine_spark.session import run_parallel
+from codecdb_queryengine_spark.sources.io import (
+    invalidate_layout,
+    serve_memo,
+    write_task_count,
 )
 
 
-def invalidate_layout(path: str) -> None:
-    """Drop cached scan handles for an index layout after an out-of-band
-    mutation (the in-module maintenance passes call this themselves)."""
-    p = path.rstrip("/")
-    for d in _SCAN_CACHE.values():
-        for key in [k for k in d if k.startswith(p)]:
-            del d[key]
-
-
 def _scan(spark: SparkSession, table_dir: str, cached: bool) -> DataFrame:
-    if not cached:
-        return spark.read.parquet(table_dir)
-    cache = _SCAN_CACHE.get(spark)
-    if cache is None:
-        cache = {}
-        _SCAN_CACHE[spark] = cache
-    key = table_dir.rstrip("/")
-    df = cache.get(key)
-    if df is None:
-        df = spark.read.parquet(table_dir)
-        cache[key] = df
-    return df
+    """A layout table's DataFrame handle; cached=True reuses the resolved
+    file index across serves (io.serve_memo)."""
+    return serve_memo(spark, table_dir, lambda: spark.read.parquet(table_dir), cached)
 
 
 def ivf_index_build(
@@ -142,17 +104,17 @@ def ivf_index_build(
         # the centroid DataFrame, not the written artifact): overlap them
         # (guide §2.6; was three sequential actions, now two overlapped +
         # the lists write).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_c = pool.submit(_write_cents)
-            f_n = pool.submit(
+        _, rows = run_parallel(
+            vectors.sparkSession,
+            [
+                _write_cents,
                 lambda: lists.groupBy("c_list")
                 .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            f_c.result()
-            counts = {int(r["c_list"]): int(r["_n"]) for r in f_n.result()}
+                .collect(),
+            ],
+            2,
+        )
+        counts = {int(r["c_list"]): int(r["_n"]) for r in rows}
         _write_lists(lists, path, max_list_rows, precomputed_counts=counts)
     else:
         _write_cents()
@@ -334,13 +296,7 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
         IO.swap_partition_dirs(lists_path, tmp, promote=_list_dir(grow))
 
     writes = ([_write_stay] if stay else []) + ([_write_grow] if grow else [])
-    if len(writes) == 1:
-        writes[0]()
-    elif writes:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(lambda f: f(), writes))
+    run_parallel(spark, writes, 2)
     invalidate_layout(path)
 
 

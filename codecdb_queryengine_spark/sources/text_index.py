@@ -28,9 +28,10 @@ from __future__ import annotations
 
 import hashlib
 import os
-import weakref
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -42,7 +43,12 @@ from pyspark.sql.types import (
 )
 
 from codecdb_queryengine_spark.functions import text as T
-from codecdb_queryengine_spark.sources.io import write_task_count
+from codecdb_queryengine_spark.session import run_parallel
+from codecdb_queryengine_spark.sources.io import (
+    invalidate_layout,
+    serve_memo,
+    write_task_count,
+)
 
 
 # Every read-back of a layout this module writes names its schema instead
@@ -61,6 +67,17 @@ def _cols(**types) -> StructType:
 # round, guide §2.2/§6 — fewer, larger write tasks).  io.write_task_count
 # sizes them at ~BUCKETS_PER_WRITE_TASK dirs per task.
 BUCKETS_PER_WRITE_TASK = 4
+
+
+def _write_bucketed(rows: DataFrame, out: str, n_tasks: int) -> None:
+    """The one bucket-partitioned layout write (builds, upsert deltas and
+    purge folds): `n_tasks` write tasks, one directory per t_bucket."""
+    (
+        rows.repartition(n_tasks, "t_bucket")
+        .write.mode("overwrite")
+        .partitionBy("t_bucket")
+        .parquet(out)
+    )
 
 
 def _bucket_of(term: str, num_buckets: int) -> int:
@@ -151,18 +168,51 @@ def _buckets_of_layout(
 ) -> int:
     """_read_buckets with the serve cache: the meta read is a (tiny) Spark
     job per query — a long-lived serving process pays it once."""
-    if not cached:
-        return _read_buckets(spark, path, fallback, layout=layout)
-    cache = _session_cache(spark)
-    key = (path.rstrip("/"), f"nb:{layout}")
-    v = cache.get(key)
-    if v is None:
-        v = _read_buckets(spark, path, fallback, layout=layout)
-        cache[key] = v
-    return v
+    return serve_memo(
+        spark,
+        _meta_path(path, layout),
+        lambda: _read_buckets(spark, path, fallback, layout=layout),
+        cached,
+    )
 
 
 POSTINGS_SCHEMA = _cols(doc_id=LongType(), term=StringType(), t_bucket=IntegerType())
+
+
+class _Tokens(NamedTuple):
+    """The one tokenize projection, (doc_id, tokens) over `frame`, that
+    every layout's rows derive from through one row function per layout;
+    the builds, the upsert delta writes and the public *_postings_of all go
+    through them, so no two paths can tokenize or bucket differently.
+
+    Over the corpus the two columns stay EXPRESSIONS, so each layout's
+    generator tokenizes inline, exactly once per row: a projected
+    (doc_id, tokens) frame would make Spark infer `size(tokens) > 0`
+    below posexplode and push it into the scan, re-running the tokenizer.
+    _persisted turns them into the cached columns."""
+
+    frame: DataFrame
+    doc_id: Column
+    tokens: Column
+
+
+def _tokenized(docs: DataFrame, text_col: str, id_col: str) -> _Tokens:
+    return _Tokens(docs, F.col(id_col).alias("doc_id"), T.tokens(text_col))
+
+
+def _persisted(toks: _Tokens) -> _Tokens:
+    frame = toks.frame.select(toks.doc_id, toks.tokens.alias("tokens")).persist()
+    return _Tokens(frame, F.col("doc_id"), F.col("tokens"))
+
+
+def _bucket(num_buckets: int) -> Column:
+    return (T.md5_slice32("ti|", F.col("term")) % num_buckets).cast("int")
+
+
+def _distinct_rows(toks: _Tokens, num_buckets: int) -> DataFrame:
+    return toks.frame.select(
+        toks.doc_id, F.explode(F.array_distinct(toks.tokens)).alias("term")
+    ).withColumn("t_bucket", _bucket(num_buckets))
 
 
 def postings_of(
@@ -176,12 +226,7 @@ def postings_of(
     on a STREAMING frame — the in-stream indexing path
     (docs_stream_index_ingest) and the batch build share this exact
     expression, which is what keeps the two layouts interchangeable."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(T.tokens(text_col))).alias("term"),
-    ).withColumn(
-        "t_bucket", (T.md5_slice32("ti|", F.col("term")) % num_buckets).cast("int")
-    )
+    return _distinct_rows(_tokenized(docs, text_col, id_col), num_buckets)
 
 
 def text_index_build(
@@ -193,18 +238,7 @@ def text_index_build(
 ) -> None:
     """Explode per-document DISTINCT terms and persist the postings
     partitioned by term bucket."""
-    postings = postings_of(docs, text_col, id_col, num_buckets)
-    (
-        postings.repartition(
-            write_task_count(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
-            "t_bucket",
-        )
-        .write.mode("overwrite")
-        .partitionBy("t_bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
-    _write_meta(docs.sparkSession, path, num_buckets, layout="postings")
-    invalidate_layout(path)
+    text_index_build_all(docs, path, text_col, id_col, num_buckets, ("postings",))
 
 
 def text_index_search_all(
@@ -244,6 +278,12 @@ POSTINGS_POS_SCHEMA = _cols(
 )
 
 
+def _positional_rows(toks: _Tokens, num_buckets: int) -> DataFrame:
+    return toks.frame.select(
+        toks.doc_id, F.posexplode(toks.tokens).alias("pos", "term")
+    ).withColumn("t_bucket", _bucket(num_buckets))
+
+
 def positional_postings_of(
     docs: DataFrame,
     text_col: str = "text",
@@ -254,12 +294,7 @@ def positional_postings_of(
     0-based position — the positional layout phrase queries need (the
     distinct layout answers AND/OR membership but cannot see adjacency).
     ~n_tokens rows instead of distinct-terms rows; same bucketing."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(T.tokens(text_col)).alias("pos", "term"),
-    ).withColumn(
-        "t_bucket", (T.md5_slice32("ti|", F.col("term")) % num_buckets).cast("int")
-    )
+    return _positional_rows(_tokenized(docs, text_col, id_col), num_buckets)
 
 
 def text_index_build_positional(
@@ -271,18 +306,7 @@ def text_index_build_positional(
 ) -> None:
     """Persist the positional postings under `<path>/postings_pos`,
     bucket-partitioned like the distinct layout."""
-    (
-        positional_postings_of(docs, text_col, id_col, num_buckets)
-        .repartition(
-            write_task_count(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
-            "t_bucket",
-        )
-        .write.mode("overwrite")
-        .partitionBy("t_bucket")
-        .parquet(os.path.join(path, "postings_pos"))
-    )
-    _write_meta(docs.sparkSession, path, num_buckets, layout="postings_pos")
-    invalidate_layout(path)
+    text_index_build_all(docs, path, text_col, id_col, num_buckets, ("postings_pos",))
 
 
 def text_index_search_phrase(
@@ -326,6 +350,19 @@ POSTINGS_TF_SCHEMA = _cols(
 DOCLENS_SCHEMA = _cols(doc_id=LongType(), dl=LongType())
 
 
+def _tf_rows(toks: _Tokens, num_buckets: int) -> DataFrame:
+    return (
+        _positional_rows(toks, num_buckets)
+        .groupBy("doc_id", "term", "t_bucket")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
+def _doclens_rows(toks: _Tokens) -> DataFrame:
+    dl = F.size(toks.tokens).cast("long").alias("dl")
+    return toks.frame.select(toks.doc_id, dl)
+
+
 def tf_postings_of(
     docs: DataFrame,
     text_col: str = "text",
@@ -335,10 +372,7 @@ def tf_postings_of(
     """(doc_id, term, tf, t_bucket): per-document term frequencies — the
     ranked layout's row shape.  Shared by the batch build and the upsert
     delta writer so the two paths can never tokenize differently."""
-    pos = positional_postings_of(docs, text_col, id_col, num_buckets)
-    return pos.groupBy("doc_id", "term", "t_bucket").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
+    return _tf_rows(_tokenized(docs, text_col, id_col), num_buckets)
 
 
 def text_index_build_ranked(
@@ -352,21 +386,58 @@ def text_index_build_ranked(
     (doc_id, term, tf) bucket-partitioned like the other layouts, plus
     `<path>/doclens` (doc_id, dl) — the per-document statistics BM25-style
     scoring needs."""
-    tf = tf_postings_of(docs, text_col, id_col, num_buckets)
-    (
-        tf.repartition(
-            write_task_count(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
-            "t_bucket",
-        )
-        .write.mode("overwrite")
-        .partitionBy("t_bucket")
-        .parquet(os.path.join(path, "postings_tf"))
+    text_index_build_all(docs, path, text_col, id_col, num_buckets, ("postings_tf",))
+
+
+def _bm25(
+    spark: SparkSession,
+    path: str,
+    terms: list[str],
+    k1: float,
+    b: float,
+    num_buckets: int,
+    cached: bool,
+) -> tuple[DataFrame, list[Column], Column]:
+    """The one BM25 scorer (text_index_search_ranked documents the
+    formula): (doc_id, term, part) over the live postings of `terms`
+    (sorted, distinct), the per-term pivot aggregates p0..pN, and the score
+    that sums them in that FIXED term order — coalesced to 0.0 for a term
+    the group lacks.  Each search groups the parts its own way, applies the
+    pivot, and keeps its own top-k cut."""
+    num_buckets = _buckets_of_layout(spark, path, num_buckets, "postings_tf", cached)
+    buckets = sorted({_bucket_of(t, num_buckets) for t in terms})
+    tfp = (
+        _live_rows(spark, path, "postings_tf", cached)
+        .filter(F.col("t_bucket").isin(buckets) & F.col("term").isin(terms))
+        .select("doc_id", "term", "tf")
     )
-    docs.select(
-        F.col(id_col).alias("doc_id"), T.token_count(text_col).alias("dl")
-    ).write.mode("overwrite").parquet(os.path.join(path, "doclens"))
-    _write_meta(docs.sparkSession, path, num_buckets, layout="postings_tf")
-    invalidate_layout(path)
+    doclens = _live_rows(spark, path, "doclens", cached)
+    stats = doclens.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
+    )
+    dfs = tfp.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    hits = (
+        tfp.join(doclens, "doc_id")
+        .join(F.broadcast(dfs), "term")
+        .crossJoin(F.broadcast(stats))
+    )
+    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
+    idf_r = ((F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5)) / (
+        F.col("df").cast("double") + F.lit(0.5)
+    )
+    tff = (F.col("tf").cast("double") * F.lit(k1 + 1.0)) / (
+        F.col("tf").cast("double")
+        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
+    )
+    parts = hits.select("doc_id", "term", (idf_r * tff).alias("part"))
+    pivot = [
+        F.max(F.when(F.col("term") == t, F.col("part"))).alias(f"p{i}")
+        for i, t in enumerate(terms)
+    ]
+    score = F.coalesce(F.col("p0"), F.lit(0.0))
+    for i in range(1, len(terms)):
+        score = score + F.coalesce(F.col(f"p{i}"), F.lit(0.0))
+    return parts, pivot, score.alias("score")
 
 
 def text_index_search_ranked(
@@ -405,44 +476,13 @@ def text_index_search_ranked(
     """
     if not terms:  # explicit: assert is stripped under python -O (r9 ADVICE)
         raise ValueError("text_index_search_ranked: empty query")
-    want = sorted(set(terms))
-    num_buckets = _buckets_of_layout(spark, path, num_buckets, "postings_tf", cached)
-    buckets = sorted({_bucket_of(t, num_buckets) for t in want})
-    tfp = (
-        _live_rows(spark, path, "postings_tf", cached)
-        .filter(F.col("t_bucket").isin(buckets) & F.col("term").isin(want))
-        .select("doc_id", "term", "tf")
+    parts, pivot, score = _bm25(
+        spark, path, sorted(set(terms)), k1, b, num_buckets, cached
     )
-    doclens = _live_rows(spark, path, "doclens", cached)
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    dfs = tfp.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    hits = (
-        tfp.join(doclens, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(stats))
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    idf_r = ((F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5)) / (
-        F.col("df").cast("double") + F.lit(0.5)
-    )
-    tff = (F.col("tf").cast("double") * F.lit(k1 + 1.0)) / (
-        F.col("tf").cast("double")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
-    )
-    parts = hits.select("doc_id", "term", (idf_r * tff).alias("part"))
-    agg = parts.groupBy("doc_id").agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.col("part"))).alias(f"p{i}")
-            for i, t in enumerate(want)
-        ]
-    )
-    score = F.coalesce(F.col("p0"), F.lit(0.0))
-    for i in range(1, len(want)):
-        score = score + F.coalesce(F.col(f"p{i}"), F.lit(0.0))
     return (
-        agg.select("doc_id", score.alias("score"))
+        parts.groupBy("doc_id")
+        .agg(*pivot)
+        .select("doc_id", score)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
     )
@@ -469,7 +509,7 @@ def text_index_search_ranked_batch(
     a single-partition window.
 
     Scores are bit-identical to the single-query path: per-term parts
-    use the same idf_r·tff expressions (df per term is a property of the
+    come from the same scorer, _bm25 (df per term is a property of the
     corpus, not of the batch), and each (q_id, doc) score sums its parts
     in the FIXED global sorted-union term order via one pivoted column
     per term — terms a query didn't ask for are absent by the fan-out
@@ -483,53 +523,19 @@ def text_index_search_ranked_batch(
             "no terms — every (q_id, terms) entry needs at least one term"
         )
     union_terms = sorted({t for _, ts in queries for t in ts})
-    num_buckets = _buckets_of_layout(spark, path, num_buckets, "postings_tf", cached)
-    buckets = sorted({_bucket_of(t, num_buckets) for t in union_terms})
-    tfp = (
-        _live_rows(spark, path, "postings_tf", cached)
-        .filter(F.col("t_bucket").isin(buckets) & F.col("term").isin(union_terms))
-        .select("doc_id", "term", "tf")
-    )
-    doclens = _live_rows(spark, path, "doclens", cached)
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    dfs = tfp.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    hits = (
-        tfp.join(doclens, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(stats))
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    idf_r = ((F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5)) / (
-        F.col("df").cast("double") + F.lit(0.5)
-    )
-    tff = (F.col("tf").cast("double") * F.lit(k1 + 1.0)) / (
-        F.col("tf").cast("double")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
-    )
+    parts, pivot, score = _bm25(spark, path, union_terms, k1, b, num_buckets, cached)
     qdf = spark.createDataFrame(
         sorted((int(q), t) for q, ts in queries for t in set(ts)),
         "q_id long, term string",
     )
-    parts = (
-        hits.select("doc_id", "term", (idf_r * tff).alias("part"))
-        .join(F.broadcast(qdf), "term")
-    )
-    agg = parts.groupBy("q_id", "doc_id").agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.col("part"))).alias(f"p{i}")
-            for i, t in enumerate(union_terms)
-        ]
-    )
-    score = F.coalesce(F.col("p0"), F.lit(0.0))
-    for i in range(1, len(union_terms)):
-        score = score + F.coalesce(F.col(f"p{i}"), F.lit(0.0))
     w = Window.partitionBy("q_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
     return (
-        agg.select("q_id", "doc_id", score.alias("score"))
+        parts.join(F.broadcast(qdf), "term")
+        .groupBy("q_id", "doc_id")
+        .agg(*pivot)
+        .select("q_id", "doc_id", score)
         .withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= k)
     )
@@ -569,10 +575,11 @@ def text_index_search_ranked_batch(
 # gen=1 OVERWRITING each gen directory before any docgen row can point
 # at it again).
 
-_LAYOUTS: dict[str, object] = {
-    "postings": postings_of,
-    "postings_pos": positional_postings_of,
-    "postings_tf": tf_postings_of,
+# Each postings layout's row function (doclens rides with postings_tf).
+_LAYOUTS = {
+    "postings": _distinct_rows,
+    "postings_pos": _positional_rows,
+    "postings_tf": _tf_rows,
 }
 _LAYOUT_SCHEMAS = {
     "postings": POSTINGS_SCHEMA,
@@ -593,41 +600,6 @@ def _delta_schema(layout: str) -> StructType:
         + [StructField("gen", IntegerType())]
         + [f for f in fields if f.name == "t_bucket"]
     )
-
-
-# Opt-in cached serving (the ANN index's r8 cached-file-index discipline,
-# sources/ann_index._SCAN_CACHE): a cold search pays the layout's listing
-# and meta-read jobs on every query; a long-lived serving process passes
-# cached=True to reuse the RESOLVED overlay plan (base scan + docgen +
-# delta join) and the layout's bucket count across queries.  Every
-# in-module mutation (upsert, purge) invalidates its layout; out-of-band
-# mutations need an explicit invalidate_layout(path) — which is exactly
-# why the cache is opt-in and the default stays uncached.
-#
-# Keyed on the SparkSession itself through a WeakKeyDictionary (r8 advice):
-# id(spark) can be recycled by CPython after a session is collected, which
-# would hand a NEW session a cached plan bound to the dead one — weak keys
-# make entries die with their session instead.
-_SERVE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], object]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _session_cache(spark: SparkSession) -> dict[tuple[str, str], object]:
-    d = _SERVE_CACHE.get(spark)
-    if d is None:
-        d = {}
-        _SERVE_CACHE[spark] = d
-    return d
-
-
-def invalidate_layout(path: str) -> None:
-    """Drop every cached serving plan under `path` (all layouts, every
-    live session)."""
-    p = path.rstrip("/")
-    for d in _SERVE_CACHE.values():
-        for key in [k for k in d if k[0] == p]:
-            del d[key]
 
 
 def _docgen_path(path: str) -> str:
@@ -652,6 +624,11 @@ def _read_docgen(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.schema(DOCGEN_SCHEMA).parquet(dg)
 
 
+# Opt-in cached serving (io.serve_memo): a long-lived serving process passes
+# cached=True to reuse the RESOLVED overlay plan (base scan + docgen + delta
+# join) and the layout's bucket count across queries.  Every in-module
+# mutation (build, upsert, purge) invalidates its layout; out-of-band
+# mutations need an explicit invalidate_layout(path).
 def _live_rows(
     spark: SparkSession, path: str, layout: str, cached: bool = False
 ) -> DataFrame:
@@ -661,15 +638,10 @@ def _live_rows(
     set between purges, not the corpus); a bucket/term filter applied by
     the caller pushes into both parquet scans, so serving keeps the
     static-prune scale shape.  `cached=True` memoizes the resolved overlay
-    plan (see _SERVE_CACHE)."""
+    plan (io.serve_memo)."""
     if cached:
-        cache = _session_cache(spark)
-        key = (path.rstrip("/"), f"live:{layout}")
-        df = cache.get(key)
-        if df is None:
-            df = _live_rows(spark, path, layout)
-            cache[key] = df
-        return df
+        key = os.path.join(path, layout)
+        return serve_memo(spark, key, lambda: _live_rows(spark, path, layout), True)
     base = spark.read.schema(_LAYOUT_SCHEMAS[layout]).parquet(os.path.join(path, layout))
     dg = _read_docgen(spark, path)
     if dg is None:
@@ -796,23 +768,17 @@ def text_index_upsert(
         # it): a typical mutation batch is thousands of docs, and a fixed
         # 32-way repartition would pay 32 tasks to write a few hundred rows
         # each — per-job overhead, not data, dominates maintenance cost
-        nparts = max(1, min(32, int(g["n"]) // 2000 + 1))
+        n_tasks = write_task_count(spark, int(g["n"]), per_task=2000)
+        toks = _tokenized(updates, text_col, id_col)
 
         def _delta_write(layout: str) -> None:
             nb = _read_buckets(spark, path, 32, layout=layout)
-            delta = _LAYOUTS[layout](updates, text_col, id_col, nb)
-            (
-                delta.repartition(nparts, "t_bucket")
-                .write.mode("overwrite")
-                .partitionBy("t_bucket")
-                .parquet(os.path.join(_delta_root(path, layout), f"gen={new_gen}"))
-            )
+            out = os.path.join(_delta_root(path, layout), f"gen={new_gen}")
+            _write_bucketed(_LAYOUTS[layout](toks, nb), out, n_tasks)
 
         def _doclens_delta() -> None:
             (
-                updates.select(
-                    F.col(id_col).alias("doc_id"), T.token_count(text_col).alias("dl")
-                )
+                _doclens_rows(toks)
                 .coalesce(1)
                 .write.mode("overwrite")
                 .parquet(os.path.join(_delta_root(path, "doclens"), f"gen={new_gen}"))
@@ -839,16 +805,9 @@ def text_index_upsert(
     # unchanged: nothing reads the staging sibling, so only the promote
     # below (after every delta of the generation has fully landed)
     # publishes the new generation; crash replay is as before.
-    staged: list[str] = []
-    writes.append(lambda: staged.append(_stage_docgen(path, new_dg)))
-    if len(writes) == 1:
-        writes[0]()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(lambda f: f(), writes))
-    _promote_docgen(spark, path, staged[0])
+    writes.append(lambda: _stage_docgen(path, new_dg))
+    staged = run_parallel(spark, writes, 3)[-1]
+    _promote_docgen(spark, path, staged)
     invalidate_layout(path)
     return new_gen
 
@@ -871,41 +830,24 @@ def text_index_purge(spark: SparkSession, path: str) -> list[str]:
 
     # Folds are independent whole-layout rewrites (any completion order is
     # crash-safe — a folded base re-derives the same rows under the
-    # overlay), so run 2 in flight (guide §2.6) with the fold write sized
-    # to the bucket count like every other layout write.
+    # overlay), so run 3 in flight (guide §2.6) with each postings fold
+    # sized to the bucket count like every other layout write.
     def _fold(layout: str) -> None:
         base_path = os.path.join(path, layout)
         IO.recover_swap(base_path)
         live = _live_rows(spark, path, layout)
-        nb = _read_buckets(spark, path, 32, layout=layout)
         tmp = base_path + ".purging"
-        (
-            live.repartition(
-                write_task_count(spark, nb, BUCKETS_PER_WRITE_TASK), "t_bucket"
+        if layout == "doclens":
+            live.write.mode("overwrite").parquet(tmp)
+        else:
+            nb = _read_buckets(spark, path, 32, layout=layout)
+            _write_bucketed(
+                live, tmp, write_task_count(spark, nb, BUCKETS_PER_WRITE_TASK)
             )
-            .write.mode("overwrite")
-            .partitionBy("t_bucket")
-            .parquet(tmp)
-        )
         IO.swap_layout(base_path, tmp)
 
-    def _fold_doclens() -> None:
-        dl_path = os.path.join(path, "doclens")
-        IO.recover_swap(dl_path)
-        tmp = dl_path + ".purging"
-        _live_rows(spark, path, "doclens").write.mode("overwrite").parquet(tmp)
-        IO.swap_layout(dl_path, tmp)
-
-    folds = [lambda l=l: _fold(l) for l in layouts]
-    if "postings_tf" in layouts:
-        folds.append(_fold_doclens)
-    if len(folds) == 1:
-        folds[0]()
-    elif folds:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(lambda f: f(), folds))
+    folded = layouts + (["doclens"] if "postings_tf" in layouts else [])
+    run_parallel(spark, [lambda l=l: _fold(l) for l in folded], 3)
     shutil.rmtree(_docgen_path(path))
     for layout in [*layouts, "doclens"]:
         shutil.rmtree(_delta_root(path, layout), ignore_errors=True)
@@ -921,92 +863,51 @@ def text_index_build_all(
     num_buckets: int = 32,
     layouts: tuple[str, ...] = ("postings", "postings_pos", "postings_tf"),
 ) -> None:
-    """Build every requested serving layout from ONE tokenization pass.
+    """Build every requested serving layout from ONE tokenization pass —
+    the one build core; the single-layout builders call it with one layout.
 
-    The separate builders each re-scan and re-tokenize the corpus — three
-    corpus reads for a full index at 100 TB.  This pass persists the
-    token ARRAYS once and derives every layout's rows map-side from the
-    cached arrays (array_distinct-explode, posexplode, size), paying
-    exactly the per-layout bucket shuffles the separate builders pay and
-    reading the corpus once.  Row-level semantics (including NULL-text
-    documents) match the separate builders exactly.
+    Separate builds each re-scan and re-tokenize the corpus — three corpus
+    reads for a full index at 100 TB.  For more than one layout this pass
+    persists the token ARRAYS once and derives every layout's rows
+    map-side from the cached arrays (array_distinct-explode, posexplode,
+    size), paying exactly the per-layout bucket shuffles and reading the
+    corpus once.  A single layout reads the corpus directly (a cache would
+    only add its materializing job).
     """
     unknown = set(layouts) - set(_LAYOUTS)
     if unknown:
         raise ValueError(f"unknown layouts {sorted(unknown)}")
     spark = docs.sparkSession
     # persist the TOKEN ARRAYS, not an exploded shape: every layout's rows
-    # then derive map-side from the cached arrays (array_distinct explode,
-    # posexplode, size) with exactly the per-layout shuffles the separate
-    # builders pay — no extra distinct/groupBy sneaks in
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), T.tokens(text_col).alias("__toks")
-    ).persist()
-    bucket = (T.md5_slice32("ti|", F.col("term")) % num_buckets).cast("int")
-    nparts = write_task_count(spark, num_buckets, BUCKETS_PER_WRITE_TASK)
+    # then derive map-side from the cached arrays with exactly the
+    # per-layout shuffles — no extra distinct/groupBy sneaks in
+    shared = len(set(layouts)) > 1
+    toks = _tokenized(docs, text_col, id_col)
+    if shared:
+        toks = _persisted(toks)
+    n_tasks = write_task_count(spark, num_buckets, BUCKETS_PER_WRITE_TASK)
 
-    # The per-layout writes are INDEPENDENT jobs over the one cached token
-    # pass — run 2 in flight (guide §2.6) so one write's task tail
-    # back-fills with the next write's tasks instead of idling the
-    # executors.  The cache is materialized first so concurrent jobs read
-    # it instead of racing to compute it.
-    def _build_pos() -> None:
-        pos = toks.select(
-            "doc_id", F.posexplode("__toks").alias("pos", "term")
-        ).withColumn("t_bucket", bucket)
-        (
-            pos.repartition(nparts, "t_bucket")
-            .write.mode("overwrite")
-            .partitionBy("t_bucket")
-            .parquet(os.path.join(path, "postings_pos"))
-        )
-        _write_meta(spark, path, num_buckets, layout="postings_pos")
+    def _build(layout: str) -> None:
+        out = os.path.join(path, layout)
+        _write_bucketed(_LAYOUTS[layout](toks, num_buckets), out, n_tasks)
+        _write_meta(spark, path, num_buckets, layout=layout)
 
-    def _build_distinct() -> None:
-        p = toks.select(
-            "doc_id", F.explode(F.array_distinct("__toks")).alias("term")
-        ).withColumn("t_bucket", bucket)
-        (
-            p.repartition(nparts, "t_bucket")
-            .write.mode("overwrite")
-            .partitionBy("t_bucket")
-            .parquet(os.path.join(path, "postings"))
-        )
-        _write_meta(spark, path, num_buckets, layout="postings")
+    def _build_doclens() -> None:
+        out = os.path.join(path, "doclens")
+        _doclens_rows(toks).write.mode("overwrite").parquet(out)
 
-    def _build_tf() -> None:
-        tf = (
-            toks.select("doc_id", F.posexplode("__toks").alias("pos", "term"))
-            .withColumn("t_bucket", bucket)
-            .groupBy("doc_id", "term", "t_bucket")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        (
-            tf.repartition(nparts, "t_bucket")
-            .write.mode("overwrite")
-            .partitionBy("t_bucket")
-            .parquet(os.path.join(path, "postings_tf"))
-        )
-        toks.select(
-            "doc_id", F.size("__toks").cast("long").alias("dl")
-        ).write.mode("overwrite").parquet(os.path.join(path, "doclens"))
-        _write_meta(spark, path, num_buckets, layout="postings_tf")
-
-    builders = {
-        "postings_pos": _build_pos,
-        "postings": _build_distinct,
-        "postings_tf": _build_tf,
-    }
-    jobs = [builders[l] for l in builders if l in layouts]
+    # The writes are INDEPENDENT jobs — run 2 in flight (guide §2.6) so one
+    # write's task tail back-fills with the next write's tasks instead of
+    # idling the executors.  A shared cache is materialized first so
+    # concurrent jobs read it instead of racing to compute it.
+    writes = [lambda l=l: _build(l) for l in _LAYOUTS if l in layouts]
+    if "postings_tf" in layouts:
+        writes.append(_build_doclens)
     try:
-        toks.count()  # materialize the cache once, before the parallel reads
-        if len(jobs) == 1:
-            jobs[0]()
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                list(pool.map(lambda f: f(), jobs))
+        if shared:
+            toks.frame.count()  # materialize once, before the parallel reads
+        run_parallel(spark, writes, 2)
     finally:
-        toks.unpersist()
+        if shared:
+            toks.frame.unpersist()
     invalidate_layout(path)

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from codecdb_queryengine_spark.catalog import load_tables
 from codecdb_queryengine_spark.operators import similarity as S
 from codecdb_queryengine_spark.sources import ann_index as AI
+from codecdb_queryengine_spark.sources import io as IO
 
 
 def _dpp_live(df) -> bool:
@@ -293,7 +294,7 @@ def test_cached_serving_sees_maintenance_passes(spark, sf_dir):
     # out-of-band mutations have an explicit hook
     AI.invalidate_layout(path)
     assert all(
-        not key.startswith(path) for d in AI._SCAN_CACHE.values() for key in d
+        not key.startswith(path) for d in IO._SERVE_CACHE.values() for key in d
     )
 
 

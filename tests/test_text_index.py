@@ -522,33 +522,64 @@ def test_cached_serving_invalidates_on_mutation_and_rebuild(spark, tmp_path):
     TI.invalidate_layout(path)  # explicit hook for out-of-band writers
 
 
-def test_build_all_one_pass_equals_separate_builds(spark, tmp_path):
-    one = str(tmp_path / "one")
-    sep = str(tmp_path / "sep")
-    TI.text_index_build_all(_corpus(spark), one, num_buckets=8)
-    TI.text_index_build(_corpus(spark), sep, num_buckets=8)
-    TI.text_index_build_positional(_corpus(spark), sep, num_buckets=8)
-    TI.text_index_build_ranked(_corpus(spark), sep, num_buckets=8)
-    assert _search_ids(spark, one, ["alpha", "beta"]) == _search_ids(
-        spark, sep, ["alpha", "beta"]
-    )
-    for p in (one, sep):
-        got = {
-            r["doc_id"]
-            for r in TI.text_index_search_phrase(
-                spark, p, ["beta", "gamma"], num_buckets=8
-            ).collect()
-        }
-        assert got == {0, 2}, p
-    r1 = TI.text_index_search_ranked(spark, one, ["alpha"], k=10).collect()
-    r2 = TI.text_index_search_ranked(spark, sep, ["alpha"], k=10).collect()
-    assert [(r["doc_id"], r["score"]) for r in r1] == [
-        (r["doc_id"], r["score"]) for r in r2
-    ]
+def _python_rows(rows, num_buckets):
+    """Every layout's rows computed in Python from (doc_id, text): tokens
+    mirror split(trim(text), '\\s+') — trim strips spaces only, and Java's
+    \\s is the ASCII whitespace set — and the bucket mirrors md5_slice32."""
+    import hashlib
+    import re
+
+    def bucket(t):
+        return int(hashlib.md5(f"ti|{t}".encode()).hexdigest()[:8], 16) % num_buckets
+
+    out = {layout: set() for layout in TI._LAYOUT_SCHEMAS}
+    for doc, text in rows:
+        if text is None:
+            continue
+        toks = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
+        out["doclens"].add((doc, len(toks)))
+        for pos, t in enumerate(toks):
+            out["postings_pos"].add((doc, pos, t, bucket(t)))
+        for t in set(toks):
+            out["postings"].add((doc, t, bucket(t)))
+            out["postings_tf"].add((doc, t, toks.count(t), bucket(t)))
+    return out
+
+
+def test_both_build_forms_write_the_python_tokenizer_rows(spark, tmp_path):
+    """The one-pass build and the three single-layout builds each write
+    exactly the rows a Python mirror of the tokenizer derives, NULL text,
+    empty text and runs of whitespace included."""
     import pytest
 
+    rows = [
+        (0, "alpha beta gamma"),
+        (1, "  alpha   beta  "),  # runs of spaces, trimmed ends
+        (2, "beta\tgamma\t"),  # trim keeps tabs: a trailing empty token
+        (3, "alpha alpha alpha"),
+        (4, None),
+        (5, ""),  # one empty token
+        (6, "   "),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _python_rows(rows, 8)
+    # a NULL text has no tokens, and its doclens row is what Spark's
+    # size() of a NULL array returns with ANSI off: -1
+    want["doclens"].add((4, -1))
+    one = str(tmp_path / "one")
+    sep = str(tmp_path / "sep")
+    TI.text_index_build_all(docs, one, num_buckets=8)
+    TI.text_index_build(docs, sep, num_buckets=8)
+    TI.text_index_build_positional(docs, sep, num_buckets=8)
+    TI.text_index_build_ranked(docs, sep, num_buckets=8)
+    for path in (one, sep):
+        for layout, expected in want.items():
+            cols = [f.name for f in TI._LAYOUT_SCHEMAS[layout].fields]
+            got = spark.read.parquet(f"{path}/{layout}").select(*cols).collect()
+            assert len(got) == len(expected), (path, layout)
+            assert set(map(tuple, got)) == expected, (path, layout)
     with pytest.raises(ValueError, match="unknown layouts"):
-        TI.text_index_build_all(_corpus(spark), one, layouts=("nope",))
+        TI.text_index_build_all(docs, one, layouts=("nope",))
 
 
 def test_batch_ranked_search_matches_single_query_per_query(spark, tmp_path):
