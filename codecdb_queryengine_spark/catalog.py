@@ -10,6 +10,7 @@ derived views giving the SSB star schema over the same data.
 from __future__ import annotations
 
 import functools
+import json
 import os
 import warnings
 import weakref
@@ -138,15 +139,72 @@ _catalogs: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Entry]]" = (
 )
 
 
+# The fact tables every star query scans.  Spark cannot split a parquet
+# row group, so one stored as a single row group is scanned by ONE task
+# however many cores wait (the reference's block is a row group processed
+# by one thread each).  When such a table is one local parquet file with
+# fewer row groups than the session's default parallelism, the catalog
+# scans an engine-owned copy cut into one row group per core instead
+# (sources/layout.row_group_split), kept under the session's warehouse
+# dir.  The source file is never written.  Their money sums are exact
+# integer-unit sums (queries/sums.py), so the answers do not depend on
+# this layout.
+_SPLIT_TABLES = ("lineitem", "orders")
+
+
+def _scan_path(spark: SparkSession, name: str, path: str) -> str:
+    """Where the catalog scans base table `name` stored at `path`."""
+    from codecdb_queryengine_spark.sources import io as IO
+    from codecdb_queryengine_spark.sources import layout
+
+    local = IO._local_fs_path(path)
+    warehouse = IO._local_fs_path(spark.conf.get("spark.sql.warehouse.dir"))
+    if name not in _SPLIT_TABLES or local is None or warehouse is None:
+        return path
+    import pyarrow.parquet as pq
+
+    n = spark.sparkContext.defaultParallelism
+    if not os.path.isfile(local) or not 0 < pq.ParquetFile(local).metadata.num_row_groups < n:
+        return path
+    return layout.row_group_split(local, os.path.join(warehouse, "row_group_splits"), n) or path
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark's parquet reader infers for the single file at
+    `path` under the session's confs (nanosAsLong, inferTimestampNTZ,
+    binaryAsString, ...), read from its footer on the driver through
+    Spark's own converter: no schema-inference job.  None when `path` is
+    a directory (Spark infers it)."""
+    jvm = spark._jvm
+    js = spark._jsparkSession
+    conf = js.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(conf).getFileStatus(hpath).isFile():
+        return None
+    hadoop = jvm.org.apache.parquet.hadoop
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        hadoop.Footer(hpath, hadoop.ParquetFileReader.readFooter(conf, hpath)),
+        parquet.ParquetToSparkSchemaConverter(js.sessionState().conf()),
+    )
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def _read_base(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    reader = spark.read
+    schema = _footer_schema(spark, path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(_scan_path(spark, name, path))
+
+
 def _entry(spark: SparkSession, sf_dir: str) -> _Entry:
     ensure_session_confs(spark)
     per_dir = _catalogs.setdefault(spark, {})
     e = per_dir.get(sf_dir)
     if e is None:
-        raw = {
-            name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-            for name in TABLES
-        }
+        raw = {name: _read_base(spark, name, sf_dir) for name in TABLES}
         e = _Entry({name: _fix_nanos(name, df) for name, df in raw.items()}, raw)
         per_dir[sf_dir] = e
     return e

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import load_tables
 from codecdb_queryengine_spark.operators.encsel import SORT_WINDOW
+from codecdb_queryengine_spark.queries.sums import unit_sum, unit_sum_sql
 
 
 def ext_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -26,16 +27,16 @@ def ext_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"),
             F.count(F.lit(1)).alias("n"),
         )
         .orderBy("l_returnflag", "l_linestatus")
     )
 
 
-_ROLLUP_SQL = """
+_ROLLUP_SQL = f"""
     SELECT l_returnflag, l_linestatus,
-           sum(l_extendedprice * (1 - l_discount)) AS revenue,
+           {unit_sum_sql("l_extendedprice * (1 - l_discount)", 4)} AS revenue,
            count(*) AS n
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
@@ -48,13 +49,14 @@ def ext_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir)["orders"]
     return (
         o.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("total"))
+        .agg(F.count(F.lit(1)).alias("n"), unit_sum(F.col("o_totalprice"), 2).alias("total"))
         .orderBy("o_orderstatus", "o_orderpriority")
     )
 
 
-_CUBE_SQL = """
-    SELECT o_orderstatus, o_orderpriority, count(*) AS n, sum(o_totalprice) AS total
+_CUBE_SQL = f"""
+    SELECT o_orderstatus, o_orderpriority, count(*) AS n,
+           {unit_sum_sql("o_totalprice", 2)} AS total
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     ORDER BY o_orderstatus, o_orderpriority
@@ -722,7 +724,7 @@ def q3_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     as q3; proves the builder vocabulary composes to the identical result.
     """
     from codecdb_queryengine_spark.plans.builder import Plan
-    from codecdb_queryengine_spark.queries.tpch import _msum, _ts
+    from codecdb_queryengine_spark.queries.tpch import _ts
 
     t = load_tables(spark, sf_dir)
     cust = Plan.scan(t["customer"], ["c_custkey", "c_mktsegment"]).filter(
@@ -739,7 +741,7 @@ def q3_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .agg(
-            _msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"),
+            unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"),
             by=["l_orderkey", "o_orderdate", "o_orderpriority"],
         )
         .topk(10, F.col("revenue").desc(), F.col("o_orderdate").asc(), F.col("l_orderkey").asc())
@@ -770,7 +772,7 @@ def ssb_q2_1_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         Plan.scan(ssb._fact(t))
         .semi_join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(part, F.col("l_partkey") == F.col("p_partkey"), broadcast=True)
-        .agg(ssb._money_sum(F.col("lo_revenue"), "revenue"), by=["d_year", "p_brand"])
+        .agg(unit_sum(F.col("lo_revenue"), 4).alias("revenue"), by=["d_year", "p_brand"])
         .sort(F.col("d_year").asc(), F.col("p_brand").asc())
         .select("d_year", "p_brand", "revenue")
         .done()
@@ -928,7 +930,7 @@ def ext_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT: revenue matrix linestatus × returnflag (explicit value list so
     the plan is a single groupBy — no distinct-scan to discover columns).
     Sums are decimal-anchored so the double totals are order-stable across
-    engines (same trick as ssb._money_sum)."""
+    engines (the exact-sum rule of queries/sums.py)."""
     li = load_tables(spark, sf_dir)["lineitem"]
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(18,4)"
@@ -1348,10 +1350,8 @@ def q14_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 FX.lit(100.0)
-                * FX.sum(
-                    FX.when(FX.col("p_type").startswith("PROMO"), disc).otherwise(0.0)
-                )
-                / FX.sum(disc)
+                * unit_sum(FX.when(FX.col("p_type").startswith("PROMO"), disc).otherwise(0.0), 4)
+                / unit_sum(disc, 4)
             ).alias("promo_revenue")
         )
         .done()

@@ -28,20 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import load_tables
-
-
-def _money_sum(term, alias: str):
-    """Money aggregation: sum DECIMAL(18,4) terms, emit double.
-
-    Double summation is order-dependent; when a 2-decimal-rounded total
-    lands on a half boundary, any plan change (shuffle order, AQE
-    coalescing, SQL-text vs DataFrame form) flips the last cent and the
-    oracle hash (observed: ssb q2_2/q3_2).  Decimal addition is exact and
-    associative, so every plan and engine produces the bit-identical
-    total; the final cast keeps the public schema double.  Mirrors the
-    oracle's CAST(sum(CAST(term AS DECIMAL(18,4))) AS DOUBLE).
-    """
-    return F.sum(term.cast("decimal(18,4)")).cast("double").alias(alias)
+from codecdb_queryengine_spark.queries.sums import unit_sum, unit_sum_sql
 
 
 def _fact(t: dict[str, DataFrame]) -> DataFrame:
@@ -117,7 +104,7 @@ def q1_1(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("d_year") == 1996)
         & F.col("l_discount").between(0.01, 0.03)
         & (F.col("l_quantity") < 25)
-    ).agg(_money_sum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"))
+    ).agg(unit_sum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias("revenue"))
 
 
 def q1_2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,7 +113,7 @@ def q1_2(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("d_yearmonthnum") == 199704)
         & F.col("l_discount").between(0.04, 0.06)
         & F.col("l_quantity").between(26, 35)
-    ).agg(_money_sum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"))
+    ).agg(unit_sum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias("revenue"))
 
 
 def q1_3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,7 +123,7 @@ def q1_3(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("d_year") == 1997)
         & F.col("l_discount").between(0.05, 0.07)
         & F.col("l_quantity").between(26, 35)
-    ).agg(_money_sum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"))
+    ).agg(unit_sum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias("revenue"))
 
 
 # --- Q2.x: fact ⋈ part ⋈ supplier, group by year × brand ------------------
@@ -151,7 +138,7 @@ def _q2(spark: SparkSession, sf_dir: str, part_pred, supp_region: str) -> DataFr
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
         .groupBy("d_year", "p_brand")
-        .agg(_money_sum(F.col("lo_revenue"), "revenue"))
+        .agg(unit_sum(F.col("lo_revenue"), 4).alias("revenue"))
         .orderBy("d_year", "p_brand")
     )
 
@@ -170,7 +157,7 @@ def q2_3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_q2(part_cond: str, supp_region: str) -> str:
     return f"""
-        SELECT d_year, p_brand, CAST(sum(CAST(lo_revenue AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        SELECT d_year, p_brand, {unit_sum_sql("lo_revenue", 4)} AS revenue
         FROM ({_SQL_FACT}) f
         JOIN part ON l_partkey = p_partkey
         WHERE {part_cond}
@@ -199,7 +186,7 @@ def _q3(
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("c_nation", "s_nation", "d_year")
-        .agg(_money_sum(F.col("lo_revenue"), "revenue"))
+        .agg(unit_sum(F.col("lo_revenue"), 4).alias("revenue"))
         .orderBy(F.col("d_year").asc(), F.col("revenue").desc())
     )
 
@@ -248,7 +235,7 @@ def q3_4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_q3(cust_cond: str, supp_cond: str, year_cond: str) -> str:
     return f"""
-        SELECT c_nation, s_nation, d_year, CAST(sum(CAST(lo_revenue AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        SELECT c_nation, s_nation, d_year, {unit_sum_sql("lo_revenue", 4)} AS revenue
         FROM ({_SQL_FACT}) f
         JOIN ({_SQL_CUST}) c ON o_custkey = c_custkey
         JOIN ({_SQL_SUPP}) s ON l_suppkey = s_suppkey
@@ -283,7 +270,7 @@ def q4_1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
         .groupBy("d_year", "c_nation")
-        .agg(_money_sum(_profit(), "profit"))
+        .agg(unit_sum(_profit(), 4).alias("profit"))
         .orderBy("d_year", "c_nation")
     )
 
@@ -302,7 +289,7 @@ def q4_2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"), "left_semi")
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("d_year", "s_nation", "p_type")
-        .agg(_money_sum(_profit(), "profit"))
+        .agg(unit_sum(_profit(), 4).alias("profit"))
         .orderBy("d_year", "s_nation", "p_type")
     )
 
@@ -317,7 +304,7 @@ def q4_3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
         .groupBy("d_year", "p_brand")
-        .agg(_money_sum(_profit(), "profit"))
+        .agg(unit_sum(_profit(), 4).alias("profit"))
         .orderBy("d_year", "p_brand")
     )
 
@@ -342,18 +329,18 @@ PLAN_ONCE = frozenset(QUERIES)
 
 ORACLE: dict[str, str] = {
     "ssb_q1_1": f"""
-        SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        SELECT {unit_sum_sql("l_extendedprice * l_discount", 4)} AS revenue
         FROM ({_SQL_FACT}) f
         WHERE d_year = 1996 AND l_discount BETWEEN 0.01 AND 0.03 AND l_quantity < 25
     """,
     "ssb_q1_2": f"""
-        SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        SELECT {unit_sum_sql("l_extendedprice * l_discount", 4)} AS revenue
         FROM ({_SQL_FACT}) f
         WHERE d_yearmonthnum = 199704 AND l_discount BETWEEN 0.04 AND 0.06
           AND l_quantity BETWEEN 26 AND 35
     """,
     "ssb_q1_3": f"""
-        SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        SELECT {unit_sum_sql("l_extendedprice * l_discount", 4)} AS revenue
         FROM ({_SQL_FACT}) f
         WHERE d_weeknuminyear = 6 AND d_year = 1997
           AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity BETWEEN 26 AND 35
@@ -378,7 +365,7 @@ ORACLE: dict[str, str] = {
         "d_yearmonthnum = 199712",
     ),
     "ssb_q4_1": f"""
-        SELECT d_year, c_nation, CAST(sum(CAST({_SQL_PROFIT} AS DECIMAL(18,4))) AS DOUBLE) AS profit
+        SELECT d_year, c_nation, {unit_sum_sql(_SQL_PROFIT, 4)} AS profit
         FROM ({_SQL_FACT}) f
         JOIN part ON l_partkey = p_partkey
         JOIN ({_SQL_CUST}) c ON o_custkey = c_custkey
@@ -388,7 +375,7 @@ ORACLE: dict[str, str] = {
         ORDER BY d_year, c_nation
     """,
     "ssb_q4_2": f"""
-        SELECT d_year, s_nation, p_type, CAST(sum(CAST({_SQL_PROFIT} AS DECIMAL(18,4))) AS DOUBLE) AS profit
+        SELECT d_year, s_nation, p_type, {unit_sum_sql(_SQL_PROFIT, 4)} AS profit
         FROM ({_SQL_FACT}) f
         JOIN part ON l_partkey = p_partkey
         JOIN ({_SQL_SUPP}) s ON l_suppkey = s_suppkey
@@ -399,7 +386,7 @@ ORACLE: dict[str, str] = {
         ORDER BY d_year, s_nation, p_type
     """,
     "ssb_q4_3": f"""
-        SELECT d_year, p_brand, CAST(sum(CAST({_SQL_PROFIT} AS DECIMAL(18,4))) AS DOUBLE) AS profit
+        SELECT d_year, p_brand, {unit_sum_sql(_SQL_PROFIT, 4)} AS profit
         FROM ({_SQL_FACT}) f
         JOIN part ON l_partkey = p_partkey
         WHERE d_year IN (1997, 1998) AND p_type = 'ECONOMY'

@@ -24,24 +24,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import load_tables
+from codecdb_queryengine_spark.queries.sums import unit_sum, unit_sum_sql
 
 
 def _ts(s: str):
     return F.lit(s).cast("timestamp")
-
-
-def _msum(term, alias: str, scale: int = 4):
-    """Decimal-anchored money sum (the ssb._money_sum discipline): the
-    per-row DOUBLE term is an exact `scale`-decimal quantity (cent prices x
-    2-decimal factors), so casting it to DECIMAL(18,scale) is unambiguous in
-    both engines and the sum is exact and ASSOCIATIVE — every plan shape,
-    partitioning, and engine produces the bit-identical total (raw double
-    sums after a join re-order in the 1e-10s and flip rounded hashes; r4
-    exact sweep: q3/q5/q7/q9/q10/q17/q19/q22).  Final cast keeps the public
-    schema double.  Oracle mirror: CAST(sum(CAST(t AS DECIMAL(18,s))) AS
-    DOUBLE).  At 100 TB this is also the determinism story: a
-    1000-executor merge of decimal partials is order-free."""
-    return F.sum(term.cast(f"decimal(18,{scale})")).cast("double").alias(alias)
 
 
 # ---------------------------------------------------------------------------
@@ -51,20 +38,22 @@ def _msum(term, alias: str, scale: int = 4):
 # array-indexed agg fast path is Spark-internal.
 def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
+    price = F.col("l_extendedprice")
+    disc_price = price * (1 - F.col("l_discount"))
+    n = F.count(F.lit(1))
     return (
         li.filter(F.col("l_shipdate") <= _ts("2001-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
+            # quantities are whole numbers: their double sums are exact
             F.sum("l_quantity").alias("sum_qty"),
-            F.sum("l_extendedprice").alias("sum_base_price"),
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
-            ).alias("sum_charge"),
+            unit_sum(price, 2).alias("sum_base_price"),
+            unit_sum(disc_price, 4).alias("sum_disc_price"),
+            unit_sum(disc_price * (1 + F.col("l_tax")), 6).alias("sum_charge"),
             F.avg("l_quantity").alias("avg_qty"),
-            F.avg("l_extendedprice").alias("avg_price"),
-            F.avg("l_discount").alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
+            (unit_sum(price, 2) / n).alias("avg_price"),
+            (unit_sum(F.col("l_discount"), 2) / n).alias("avg_disc"),
+            n.alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
     )
@@ -109,7 +98,7 @@ def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("o_orderdate").asc(), F.col("l_orderkey").asc())
         .limit(10)
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
@@ -163,7 +152,7 @@ def q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(orders.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("o_orderdate").asc(), F.col("l_orderkey").asc())
         .limit(10)
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
@@ -220,7 +209,7 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(asia_nations), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
-        .agg(_msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"))
         .orderBy(F.col("revenue").desc())
     )
 
@@ -236,7 +225,7 @@ def q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") >= 0.05)
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
-    ).agg(F.sum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
+    ).agg(unit_sum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias("revenue"))
 
 
 # Q7 — volume shipping between two nations: self-aliased nation dim, OR of
@@ -271,7 +260,7 @@ def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("volume"),
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(_msum(F.col("volume"), "revenue"))
+        .agg(unit_sum(F.col("volume"), 4).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -313,8 +302,11 @@ def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         vol.groupBy("o_year")
         .agg(
             (
-                F.sum(F.when(F.col("supp_nation") == "NATION_3", F.col("volume")).otherwise(0.0))
-                / F.sum("volume")
+                unit_sum(
+                    F.when(F.col("supp_nation") == "NATION_3", F.col("volume")).otherwise(0.0),
+                    4,
+                )
+                / unit_sum(F.col("volume"), 4)
             ).alias("mkt_share")
         )
         .orderBy("o_year")
@@ -340,7 +332,7 @@ def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("amount"),
         )
         .groupBy("nation", "o_year")
-        .agg(_msum(F.col("amount"), "sum_profit"))
+        .agg(unit_sum(F.col("amount"), 4).alias("sum_profit"))
         .orderBy(F.col("nation").asc(), F.col("o_year").desc())
     )
 
@@ -359,7 +351,7 @@ def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(_msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
+        .agg(unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
         .limit(20)
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
@@ -379,8 +371,8 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
         .select("l_partkey", (F.col("l_extendedprice") * F.col("l_quantity")).alias("v"))
     )
-    grouped = base.groupBy("l_partkey").agg(F.sum("v").alias("part_value"))
-    thr = base.agg((F.sum("v") * 0.001).alias("threshold"))
+    grouped = base.groupBy("l_partkey").agg(unit_sum(F.col("v"), 2).alias("part_value"))
+    thr = base.agg((unit_sum(F.col("v"), 2) * 0.001).alias("threshold"))
     return (
         grouped.join(F.broadcast(thr))
         .filter(F.col("part_value") > F.col("threshold"))
@@ -444,8 +436,8 @@ def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.lit(100.0)
-                * F.sum(F.when(F.col("p_type").startswith("PROMO"), disc).otherwise(0.0))
-                / F.sum(disc)
+                * unit_sum(F.when(F.col("p_type").startswith("PROMO"), disc).otherwise(0.0), 4)
+                / unit_sum(disc, 4)
             ).alias("promo_revenue")
         )
     )
@@ -465,7 +457,11 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_shipdate") >= _ts("1996-01-01")) & (F.col("l_shipdate") < _ts("1996-04-01"))
         )
         .groupBy("l_suppkey")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_revenue"))
+        .agg(
+            unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
+                "total_revenue"
+            )
+        )
     )
     mx = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     return (
@@ -633,7 +629,7 @@ def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return j.filter(clause).agg(
-        _msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue")
+        unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue")
     )
 
 
@@ -755,16 +751,18 @@ QUERIES["q18_bucketed"] = q18_bucketed
 PLAN_ONCE = frozenset(QUERIES) - {"q3_bucketed", "q18_bucketed"}
 
 
+_DISC = "l_extendedprice * (1 - l_discount)"
+_VALUE = "l_extendedprice * l_quantity"
 ORACLE: dict[str, str] = {
-    "q1": """
+    "q1": f"""
         SELECT l_returnflag, l_linestatus,
                sum(l_quantity) AS sum_qty,
-               sum(l_extendedprice) AS sum_base_price,
-               sum(l_extendedprice * (1 - l_discount)) AS sum_disc_price,
-               sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS sum_charge,
+               {unit_sum_sql("l_extendedprice", 2)} AS sum_base_price,
+               {unit_sum_sql(_DISC, 4)} AS sum_disc_price,
+               {unit_sum_sql(f"{_DISC} * (1 + l_tax)", 6)} AS sum_charge,
                avg(l_quantity) AS avg_qty,
-               avg(l_extendedprice) AS avg_price,
-               avg(l_discount) AS avg_disc,
+               {unit_sum_sql("l_extendedprice", 2)} / count(*) AS avg_price,
+               {unit_sum_sql("l_discount", 2)} / count(*) AS avg_disc,
                count(*) AS count_order
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '2001-09-02'
@@ -780,9 +778,9 @@ ORACLE: dict[str, str] = {
               AND r_name = 'EUROPE')
         WHERE rk = 1 ORDER BY n_name, s_name
     """,
-    "q3": """
+    "q3": f"""
         SELECT l_orderkey,
-               CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+               {unit_sum_sql(_DISC, 4)} AS revenue,
                o_orderdate, o_orderpriority
         FROM customer, orders, lineitem
         WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
@@ -803,8 +801,8 @@ ORACLE: dict[str, str] = {
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
     """,
-    "q5": """
-        SELECT n_name, CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+    "q5": f"""
+        SELECT n_name, {unit_sum_sql(_DISC, 4)} AS revenue
         FROM customer, orders, lineitem, supplier, nation, region
         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
           AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
@@ -815,17 +813,17 @@ ORACLE: dict[str, str] = {
         GROUP BY n_name
         ORDER BY revenue DESC
     """,
-    "q6": """
-        SELECT sum(l_extendedprice * l_discount) AS revenue
+    "q6": f"""
+        SELECT {unit_sum_sql("l_extendedprice * l_discount", 4)} AS revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
           AND l_shipdate < TIMESTAMP '1997-01-01'
           AND l_discount >= 0.05 AND l_discount <= 0.07
           AND l_quantity < 24
     """,
-    "q7": """
+    "q7": f"""
         SELECT supp_nation, cust_nation, l_year,
-               CAST(sum(CAST(volume AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+               {unit_sum_sql("volume", 4)} AS revenue
         FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                      CAST(year(l_shipdate) AS BIGINT) AS l_year,
                      l_extendedprice * (1 - l_discount) AS volume
@@ -839,9 +837,10 @@ ORACLE: dict[str, str] = {
         GROUP BY supp_nation, cust_nation, l_year
         ORDER BY supp_nation, cust_nation, l_year
     """,
-    "q8": """
+    "q8": f"""
         SELECT o_year,
-               sum(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END) / sum(volume) AS mkt_share
+               {unit_sum_sql("CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END", 4)}
+               / {unit_sum_sql("volume", 4)} AS mkt_share
         FROM (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
                      l_extendedprice * (1 - l_discount) AS volume,
                      n2.n_name AS nation
@@ -855,8 +854,8 @@ ORACLE: dict[str, str] = {
         GROUP BY o_year
         ORDER BY o_year
     """,
-    "q9": """
-        SELECT nation, o_year, CAST(sum(CAST(amount AS DECIMAL(18,4))) AS DOUBLE) AS sum_profit
+    "q9": f"""
+        SELECT nation, o_year, {unit_sum_sql("amount", 4)} AS sum_profit
         FROM (SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
                      l_extendedprice * (1 - l_discount) AS amount
               FROM part, supplier, lineitem, orders, nation
@@ -866,9 +865,9 @@ ORACLE: dict[str, str] = {
         GROUP BY nation, o_year
         ORDER BY nation, o_year DESC
     """,
-    "q10": """
+    "q10": f"""
         SELECT c_custkey, c_name,
-               CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+               {unit_sum_sql(_DISC, 4)} AS revenue,
                c_acctbal, n_name
         FROM customer, orders, lineitem, nation
         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
@@ -879,14 +878,14 @@ ORACLE: dict[str, str] = {
         ORDER BY revenue DESC, c_custkey
         LIMIT 20
     """,
-    "q11": """
-        SELECT l_partkey, sum(l_extendedprice * l_quantity) AS part_value
+    "q11": f"""
+        SELECT l_partkey, {unit_sum_sql(_VALUE, 2)} AS part_value
         FROM lineitem, supplier, nation
         WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
           AND n_name = 'NATION_5'
         GROUP BY l_partkey
-        HAVING sum(l_extendedprice * l_quantity) > (
-            SELECT sum(l_extendedprice * l_quantity) * 0.001
+        HAVING {unit_sum_sql(_VALUE, 2)} > (
+            SELECT {unit_sum_sql(_VALUE, 2)} * 0.001
             FROM lineitem, supplier, nation
             WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
               AND n_name = 'NATION_5')
@@ -913,20 +912,18 @@ ORACLE: dict[str, str] = {
         GROUP BY c_count
         ORDER BY custdist DESC, c_count DESC
     """,
-    "q14": """
-        SELECT 100.00 * sum(CASE WHEN p_type LIKE 'PROMO%'
-                                 THEN l_extendedprice * (1 - l_discount)
-                                 ELSE 0 END)
-               / sum(l_extendedprice * (1 - l_discount)) AS promo_revenue
+    "q14": f"""
+        SELECT 100.00 * {unit_sum_sql(f"CASE WHEN p_type LIKE 'PROMO%' THEN {_DISC} ELSE 0 END", 4)}
+               / {unit_sum_sql(_DISC, 4)} AS promo_revenue
         FROM lineitem, part
         WHERE l_partkey = p_partkey
           AND l_shipdate >= TIMESTAMP '1996-09-01'
           AND l_shipdate < TIMESTAMP '1996-10-01'
     """,
-    "q15": """
+    "q15": f"""
         WITH revenue AS (
             SELECT l_suppkey AS supplier_no,
-                   sum(l_extendedprice * (1 - l_discount)) AS total_revenue
+                   {unit_sum_sql(_DISC, 4)} AS total_revenue
             FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1996-01-01'
               AND l_shipdate < TIMESTAMP '1996-04-01'
@@ -966,8 +963,8 @@ ORACLE: dict[str, str] = {
         ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
         LIMIT 100
     """,
-    "q19": """
-        SELECT CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+    "q19": f"""
+        SELECT {unit_sum_sql(_DISC, 4)} AS revenue
         FROM lineitem, part
         WHERE p_partkey = l_partkey
           AND ((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5

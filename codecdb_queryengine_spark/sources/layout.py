@@ -1,5 +1,5 @@
 """Data-layout operators: Z-order (Morton) clustering for multi-column
-data skipping.
+data skipping, and the row-group split the catalog scans its fact tables in.
 
 No reference counterpart (the reference reads pre-made TPC-H parquet,
 cpp/src/lqf/data_model.cc:239-260); this is the 100-TB table-maintenance
@@ -290,3 +290,77 @@ def zorder_maintain(
         target_file_bytes=target_file_bytes,
         sort_within_exprs=[z_value([F.col(c) for c in cols], bits)],
     )
+
+
+# --- row-group split: the scan layout the catalog reads its fact tables in --
+#
+# Spark cannot split a parquet row group, so a table stored as one row group
+# is scanned by one task however many cores wait.  The reference's block is
+# a row group processed by one thread each; row_group_split gives a
+# one-row-group file its equivalent: a copy cut into `n_files` files of one
+# row group each, in the source's row order and with its parquet schema, so
+# the scan runs one task per core.  It is written once, driver-side with
+# pyarrow (the io.tiny_meta_write pattern), no Spark job.
+
+
+def row_group_split(src: str, root: str, n_files: int) -> str | None:
+    """The directory of a `n_files`-file, one-row-group-per-file copy of
+    the local, non-empty parquet file `src`, under `root`; written unless
+    already there.  None when a pyarrow round trip would change the
+    source's parquet schema (e.g. INT96 timestamps): read the source then.
+
+    The copy's name keys it by the source's absolute path, size and
+    mtime_ns and by `n_files`, so a changed source gets a new copy; the
+    copy is written to a temp dir and renamed into place, and a stale copy
+    of the same source is removed rather than kept beside it."""
+    import hashlib
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    src = os.path.abspath(src)
+    st = os.stat(src)
+    stem = os.path.basename(src).rsplit(".", 1)[0]
+    prefix = f"{stem}-{hashlib.sha256(src.encode()).hexdigest()[:12]}-"
+    version = f"{st.st_size}|{st.st_mtime_ns}|{n_files}".encode()
+    out = os.path.join(root, prefix + hashlib.sha256(version).hexdigest()[:12])
+    if not os.path.isdir(out):
+        source = pq.ParquetFile(src)
+        codec = source.metadata.row_group(0).column(0).compression
+        tmp = f"{out}.tmp{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        step = -(-source.metadata.num_rows // n_files)
+        for i, part in enumerate(_row_chunks(source, step)):
+            path = os.path.join(tmp, f"part-{i:05d}.parquet")
+            pq.write_table(part, path, compression=codec, row_group_size=part.num_rows)
+            if i == 0 and not pq.ParquetFile(path).schema.equals(source.schema):
+                shutil.rmtree(tmp)
+                return None
+        try:
+            os.rename(tmp, out)
+        except OSError:  # another process renamed its copy into place first
+            shutil.rmtree(tmp, ignore_errors=True)
+    for name in os.listdir(root):
+        if name.startswith(prefix) and ".tmp" not in name and name != os.path.basename(out):
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    return out
+
+
+def _row_chunks(source, step: int):
+    """The rows of a pyarrow ParquetFile in order, as tables of `step`
+    rows (the last one shorter), holding one chunk in memory at a time."""
+    import pyarrow as pa
+
+    buf, have = [], 0
+    for batch in source.iter_batches(batch_size=min(step, 65536)):
+        while batch.num_rows:
+            take = batch.slice(0, step - have)
+            buf.append(take)
+            have += take.num_rows
+            batch = batch.slice(take.num_rows)
+            if have == step:
+                yield pa.Table.from_batches(buf)
+                buf, have = [], 0
+    if buf:
+        yield pa.Table.from_batches(buf)

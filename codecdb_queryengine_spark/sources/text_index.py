@@ -359,7 +359,9 @@ def _tf_rows(toks: _Tokens, num_buckets: int) -> DataFrame:
 
 
 def _doclens_rows(toks: _Tokens) -> DataFrame:
-    dl = F.size(toks.tokens).cast("long").alias("dl")
+    # a NULL text has no tokens: dl 0, as the oracle's sum(dl) skips it
+    # (size() of a NULL array is -1 with ANSI off)
+    dl = F.coalesce(F.array_size(toks.tokens), F.lit(0)).cast("long").alias("dl")
     return toks.frame.select(toks.doc_id, dl)
 
 

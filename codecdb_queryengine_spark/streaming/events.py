@@ -96,7 +96,7 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
         .agg(
             F.count(F.lit(1)).alias("n"),
             # decimal anchor: state-merge order is engine/runtime-dependent;
-            # 2-decimal values sum exactly (queries/tpch._msum discipline)
+            # 2-decimal values sum exactly (the queries/sums.py exact-sum rule)
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
         .select(

@@ -197,7 +197,8 @@ def test_plan_builder_q3_shape(spark, sf_dir):
     (filter -> join -> join -> agg -> topk, cpp/src/lqf/tpch/query3.cc:33-99)
     and pin it against the declarative q3."""
     from codecdb_queryengine_spark.catalog import load_tables
-    from codecdb_queryengine_spark.queries.tpch import _msum, q3
+    from codecdb_queryengine_spark.queries.sums import unit_sum
+    from codecdb_queryengine_spark.queries.tpch import q3
 
     t = load_tables(spark, sf_dir)
     ts = F.lit("1998-03-15").cast("timestamp")
@@ -214,9 +215,9 @@ def test_plan_builder_q3_shape(spark, sf_dir):
             broadcast=True,
         )
         .agg(
-            # same decimal anchor as tpch.q3 (r4 float discipline) so the
-            # two plans agree bit-for-bit
-            _msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"),
+            # same integer-unit sum as tpch.q3, so the two plans agree
+            # bit-for-bit
+            unit_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("revenue"),
             by=["l_orderkey", "o_orderdate", "o_orderpriority"],
         )
         .topk(10, F.col("revenue").desc(), F.col("o_orderdate").asc(), F.col("l_orderkey").asc())

@@ -563,9 +563,9 @@ def test_both_build_forms_write_the_python_tokenizer_rows(spark, tmp_path):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     want = _python_rows(rows, 8)
-    # a NULL text has no tokens, and its doclens row is what Spark's
-    # size() of a NULL array returns with ANSI off: -1
-    want["doclens"].add((4, -1))
+    # a NULL text has no tokens: its doclens row holds 0, so BM25's
+    # sum_dl counts nothing for it
+    want["doclens"].add((4, 0))
     one = str(tmp_path / "one")
     sep = str(tmp_path / "sep")
     TI.text_index_build_all(docs, one, num_buckets=8)
@@ -629,3 +629,34 @@ def test_ranked_batch_empty_input_raises_value_error(spark, sf_dir):
         TI.text_index_search_phrase(spark, "/nonexistent", [])
     with pytest.raises(ValueError, match="empty"):
         TI.text_index_search_ranked(spark, "/nonexistent", [])
+
+
+def test_ranked_search_with_a_null_text_matches_the_oracle(spark, tmp_path):
+    """BM25 over a corpus holding a NULL text: the document counts in
+    n_docs and adds nothing to sum_dl on both sides, so every score equals
+    the DuckDB oracle's bit for bit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from codecdb_queryengine_spark.oracle import compare
+    from codecdb_queryengine_spark.queries.pipeline import _SEARCH_TERMS, _search_ranked_sql
+
+    texts = [
+        "hash scan merge", "hash hash join", None, "scan the table", "merge sort merge",
+        "a b c d e f hash", None, "scan", "",
+    ]
+    src = tmp_path / "corpus"
+    src.mkdir()
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": pa.array(texts, pa.string()),
+        }),
+        str(src / "documents.parquet"),
+    )
+    docs = spark.read.parquet(str(src / "documents.parquet"))
+    path = str(tmp_path / "ti_null")
+    TI.text_index_build_ranked(docs, path, num_buckets=8)
+    got = TI.text_index_search_ranked(spark, path, _SEARCH_TERMS, k=10)
+    ok, detail = compare(got, _search_ranked_sql(), str(src), ndigits=None)
+    assert ok, detail
