@@ -109,9 +109,8 @@ def word_shingles(c: str, k: int = 3) -> Column:
     """Distinct word k-gram shingles joined by single spaces.
 
     NOTE: re-evaluates the regex split for every shingle index inside the
-    interpreted transform lambda — O(tokens²) per doc.  Hot paths should
-    bind tokens in their own projection and use `word_shingles_from_tokens`
-    (identical output).
+    interpreted transform lambda — O(tokens²) per doc.  Hot paths use the
+    Arrow shingler of operators/dedup.py (identical output).
     """
     return F.expr(
         f"CASE WHEN size(split(trim({c}), '\\\\s+')) >= {k} THEN "
@@ -122,22 +121,10 @@ def word_shingles(c: str, k: int = 3) -> Column:
     )
 
 
-def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingles over a pre-bound token-array column.
-
-    Same output as `word_shingles(c, k)` when toks = tokens(c); the regex
-    split runs once per row (in the projection that bound `toks`) instead of
-    once per shingle index — higher-order-function lambdas are interpreted,
-    so Catalyst's subexpression elimination can't rescue the inline form.
-    """
-    return F.array_distinct(word_shingles_all_from_tokens(toks, k))
-
-
 def word_shingles_all_from_tokens(toks: Column, k: int = 3) -> Column:
     """ALL word k-gram shingles (duplicates kept) over a pre-bound token
     array — the input to repetition measurement, where the duplicate count
-    IS the signal.  The single source of the shingle construction:
-    word_shingles_from_tokens is array_distinct of this."""
+    IS the signal."""
     return F.when(
         F.size(toks) >= k,
         F.transform(
@@ -155,9 +142,9 @@ def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
     signature computes scan-side even at 100 TB.
 
     NOTE: costs num_hashes md5 digests per shingle.  The hot dedup path
-    uses minhash_digests + minhash_signature_from_digests, which slice
-    four 32-bit hashes out of each digest (4× less hashing); kept for the
-    simple one-expression form and existing fixtures.
+    (operators/dedup.minhash_signatures) slices four 32-bit hashes out of
+    each digest instead (4× less hashing); kept for the simple
+    one-expression form and existing fixtures.
     """
     # NB: the lambda must be single-argument — pyspark inspects lambda arity,
     # and a `lambda s, i=i:` form is treated as the (element, index) binary
@@ -179,53 +166,6 @@ HASHES_PER_DIGEST = 4
 def minhash_digest_prefix(j: int) -> str:
     """Salt prefix for digest family j (j=0 unsalted, matching plain md5(s))."""
     return "" if j == 0 else f"{j}~"
-
-
-def minhash_digests(shingles: Column, num_hashes: int = 8) -> list[Column]:
-    """One digest-array Column per hash family: element = md5(prefix_j || s).
-
-    Callers MUST bind each returned Column in its own projection (e.g.
-    withColumn) before slicing — higher-order-function lambdas are
-    interpreted, so an inlined digest array would be recomputed by every
-    consumer expression.
-    """
-    # Closure factory, NOT `lambda s, p=p:` — pyspark binds two-parameter
-    # lambdas (defaults included) as the (element, index) variant.
-    def hash_with(p: str):
-        if not p:
-            return lambda s: F.md5(s)
-        return lambda s: F.md5(F.concat(F.lit(p), s))
-
-    n_digests = -(-num_hashes // HASHES_PER_DIGEST)
-    return [
-        F.transform(shingles, hash_with(minhash_digest_prefix(j)))
-        for j in range(n_digests)
-    ]
-
-
-def minhash_signature_from_digests(
-    digest_cols: list[Column], num_hashes: int = 8
-) -> Column:
-    """Signature element i = min over shingles of digest_{i//4}[slot i%4],
-    where slot k is hex chars [8k+1, 8k+8] of the 32-char md5.
-
-    String-min over a fixed-width hex slice is the same valid uniform hash
-    order as full-digest min; 32-bit slices are ample for LSH banding
-    (collisions across a corpus's shingle vocabulary only ever *add*
-    candidate pairs, and verification filters them).
-    """
-    # Closure factory, NOT a default-arg lambda: pyspark counts lambda
-    # parameters (defaults included), and a two-parameter lambda is bound as
-    # the (element, index) variant — the "start" default would silently
-    # become the array-index Column.
-    def slice_at(start: int):
-        return lambda h: F.substring(h, start, 8)
-
-    sig = []
-    for i in range(num_hashes):
-        j, slot = divmod(i, HASHES_PER_DIGEST)
-        sig.append(F.array_min(F.transform(digest_cols[j], slice_at(slot * 8 + 1))))
-    return F.array(*sig)
 
 
 def fingerprint(c: str) -> Column:

@@ -43,7 +43,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-doc count of distinct word k-shingles shared with an eval set.
 
@@ -55,16 +54,15 @@ def decontaminate(
     the (small) contaminated subset.  The corpus is never shuffled on
     shingles; compare the inverted-index self-join in dedup.py, which is
     reserved for corpus-vs-corpus work.  Shingles come from
-    dedup.shingle_sets: Arrow-vectorized by default (measured ~2x the
-    whole-query throughput vs the interpreted transform-lambda tree),
-    expression form as the oracle-pinned fallback — both bit-identical.
+    dedup.shingle_sets, Arrow-vectorized (measured ~2x the whole-query
+    throughput of the interpreted transform-lambda tree).
     """
     ev = (
-        D.shingle_sets(eval_docs, text_col, id_col, k, use_arrow)
+        D.shingle_sets(eval_docs, text_col, id_col, k)
         .select(F.explode("shingles").alias("s"))
         .distinct()
     )
-    tr = D.shingle_sets(docs, text_col, id_col, k, use_arrow).select(
+    tr = D.shingle_sets(docs, text_col, id_col, k).select(
         F.col("mh_id").alias(id_col), F.explode("shingles").alias("s")
     )
     return (
@@ -166,52 +164,42 @@ def repetition_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Gopher-style intra-document repetition: the fraction of word
     k-grams that are repeats of an earlier k-gram in the same doc.
 
     Output: (id_col, n_shingles, n_uniq_shingles, dup_ratio).  dup_ratio
     is a quotient of small ints — bit-identical across engines.  Pure
-    scan-side, zero shuffles at any scale.  Default path counts shingles
-    per Arrow batch (the interpreted transform-lambda tree re-evaluates
-    per element; same tradeoff as dedup.shingle_sets); use_arrow=False is
-    the expression form the DuckDB oracle mirrors — identical output.
+    scan-side, zero shuffles at any scale.  Shingles are counted per Arrow
+    batch (the interpreted transform-lambda tree re-evaluates per element;
+    same tradeoff as dedup.shingle_sets).
     """
-    if use_arrow:
-        import re as _re
+    import re as _re
 
-        from pyspark.sql.pandas.functions import pandas_udf
-        from pyspark.sql.types import LongType
+    from pyspark.sql.pandas.functions import pandas_udf
+    from pyspark.sql.types import LongType
 
-        ws = _re.compile(r"\s+")
+    ws = _re.compile(r"\s+")
 
-        def shingles(text):
-            toks = ws.split(text.strip()) if text is not None else []
-            if len(toks) < k:
-                return []
-            return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+    def shingles(text):
+        toks = ws.split(text.strip()) if text is not None else []
+        if len(toks) < k:
+            return []
+        return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
 
-        @pandas_udf(returnType=LongType())
-        def n_all(texts: pd.Series) -> pd.Series:
-            return texts.map(lambda t: len(shingles(t)))
+    @pandas_udf(returnType=LongType())
+    def n_all(texts: pd.Series) -> pd.Series:
+        return texts.map(lambda t: len(shingles(t)))
 
-        @pandas_udf(returnType=LongType())
-        def n_uniq(texts: pd.Series) -> pd.Series:
-            return texts.map(lambda t: len(set(shingles(t))))
+    @pandas_udf(returnType=LongType())
+    def n_uniq(texts: pd.Series) -> pd.Series:
+        return texts.map(lambda t: len(set(shingles(t))))
 
-        out = docs.select(
-            F.col(id_col),
-            n_all(F.col(text_col)).alias("n_shingles"),
-            n_uniq(F.col(text_col)).alias("n_uniq_shingles"),
-        )
-    else:
-        sh = T.word_shingles_all_from_tokens(T.tokens(text_col), k)
-        out = docs.select(F.col(id_col), sh.alias("__sh")).select(
-            id_col,
-            F.size("__sh").cast("long").alias("n_shingles"),
-            F.size(F.array_distinct("__sh")).cast("long").alias("n_uniq_shingles"),
-        )
+    out = docs.select(
+        F.col(id_col),
+        n_all(F.col(text_col)).alias("n_shingles"),
+        n_uniq(F.col(text_col)).alias("n_uniq_shingles"),
+    )
     return out.withColumn(
         "dup_ratio",
         F.when(

@@ -4,7 +4,7 @@ No counterpart exists in the reference engine (its world is TPC-H/SSB —
 SURVEY.md §2); these are the driver-mandated extensions, built Spark-first:
 
 - exact_dedup          hash-groupBy on a content digest (one shuffle)
-- minhash_lsh_*        shingle → MinHash signature (scan-side array expr,
+- minhash_lsh_*        shingle → MinHash signature (scan-side Arrow UDF,
                        no explode) → band keys → bucket self-join → verified
                        Jaccard.  The standard near-dup pipeline: candidate
                        generation is O(n·bands) shuffle, verification runs
@@ -41,9 +41,12 @@ from __future__ import annotations
 
 # Module-level so the pandas-UDF type hints (stringified by the future
 # annotations import) resolve against module globals.
+import re
+
 import pandas as pd  # noqa: F401
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.functions import pandas_udf
 
 from codecdb_queryengine_spark.functions import text as T
 
@@ -102,120 +105,36 @@ def minhash_signatures(
     id_col: str,
     num_hashes: int = 8,
     shingle_words: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """id, shingles, MinHash signature — computed scan-side, no shuffle
     (beyond the parallelism spread for pathological single-partition inputs).
 
-    Two implementations with identical output:
-    - use_arrow=True (default): one Arrow-batched pandas UDF computes
-      tokens → shingles → signature per batch.  Python's hashlib.md5 is
-      bit-identical to JVM md5 and the hex-slice mins are plain string
-      compares, so the result is engine-pinned exactly like the expression
-      form.  Measured ~10× faster: Spark's higher-order-function lambdas
-      (transform/aggregate) are interpreted per element, ~1 ms/doc for the
-      shingle+digest tree, while the vectorized Python loop is ~0.1 ms/doc
-      and Arrow moves only (id, text) in and (shingles, sig) out.
-    - use_arrow=False: pure pyspark.sql.functions expression tree (the
-      DuckDB-oracle-mirroring form; also the fallback if Arrow is off).
-    """
-    if use_arrow:
-        return _minhash_signatures_arrow(df, content_col, id_col, num_hashes, shingle_words)
-    df = _spread(df, id_col)
-    shingled = (
-        # tokens bound in their own projection so the regex split runs once
-        # per row; the shingle lambda then slices the bound array (the
-        # single-projection form re-split per shingle index — O(tokens²))
-        df.select(F.col(id_col).alias("mh_id"), T.tokens(content_col).alias("__toks"))
-        .select(
-            "mh_id",
-            T.word_shingles_from_tokens(F.col("__toks"), shingle_words).alias("shingles"),
-        )
-        # Docs shorter than shingle_words words have NO shingles: their
-        # signature would be all-null and every such doc would share the one
-        # empty band_key per band, collapsing into a single giant LSH bucket
-        # whose candidate join is quadratic in the short-doc count.  They can
-        # never pass Jaccard verification anyway — drop them before banding.
-        .filter(F.size("shingles") > 0)
-    )
-    # Digest arrays bound in their own projections (one md5 pass per
-    # family), then sliced into 32-bit signature elements — 4 hashes per
-    # digest instead of one digest per hash (see functions/text.py).
-    return _bind_digests(shingled, num_hashes)
+    One Arrow-batched pandas UDF computes tokens → shingles → signature per
+    batch: whitespace-regex tokens, first-occurrence-distinct word k-grams,
+    signature element i = min over shingles of hex chars
+    [8·(i%4), 8·(i%4)+8) of md5(prefix_{i//4} || shingle) — four 32-bit
+    hashes per digest (functions/text.py HASHES_PER_DIGEST).  Python's
+    hashlib.md5 is bit-identical to DuckDB's md5 and the hex-slice mins are
+    plain string compares, so the oracle's SQL mirror pins the result
+    exactly.  Measured ~10× faster than the same tree as Spark
+    higher-order-function lambdas (transform/aggregate are interpreted per
+    element, ~1 ms/doc, against ~0.1 ms/doc here); Arrow moves only
+    (id, text) in and (shingles, sig) out.
 
-
-def shingle_sets(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    shingle_words: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """(mh_id, shingles): distinct word k-gram sets per doc (empty sets
-    dropped).  Arrow path mirrors functions/text.py word shingling exactly;
-    expression path is the oracle-pinned form."""
-    if not use_arrow:
-        return (
-            df.select(F.col(id_col).alias("mh_id"), T.tokens(content_col).alias("__toks"))
-            .select(
-                "mh_id",
-                T.word_shingles_from_tokens(F.col("__toks"), shingle_words).alias("shingles"),
-            )
-            .filter(F.size("shingles") > 0)
-        )
-    import re as _re
-
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    k = shingle_words
-    ws = _re.compile(r"\s+")
-
-    @pandas_udf(returnType=ArrayType(StringType()))
-    def sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            toks = ws.split(text.strip()) if text is not None else []
-            if len(toks) < k:
-                out.append([])
-                continue
-            out.append(
-                list(dict.fromkeys(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)))
-            )
-        return pd.Series(out)
-
-    return (
-        _spread(df, id_col)
-        .select(F.col(id_col).alias("mh_id"), sh(F.col(content_col)).alias("shingles"))
-        .filter(F.size("shingles") > 0)
-    )
-
-
-def _minhash_signatures_arrow(
-    df: DataFrame,
-    content_col: str,
-    id_col: str,
-    num_hashes: int,
-    shingle_words: int,
-) -> DataFrame:
-    """Arrow fast path for minhash_signatures (see its docstring).
-
-    The per-batch loop mirrors functions/text.py exactly: whitespace-regex
-    tokens, first-occurrence-distinct word k-grams, signature element i =
-    min over shingles of hex chars [8·(i%4), 8·(i%4)+8) of
-    md5(prefix_{i//4} || shingle).
+    Docs shorter than shingle_words words have NO shingles: their signature
+    would be all-null and every such doc would share the one empty band_key
+    per band, collapsing into a single giant LSH bucket whose candidate join
+    is quadratic in the short-doc count.  They can never pass Jaccard
+    verification anyway — they are dropped before banding.
     """
     import hashlib
-    import re as _re
 
-    from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-    k = shingle_words
+    shingler = _shingler(shingle_words)
     n_digests = -(-num_hashes // T.HASHES_PER_DIGEST)
     prefixes = [T.minhash_digest_prefix(j).encode() for j in range(n_digests)]
     slots = [divmod(i, T.HASHES_PER_DIGEST) for i in range(num_hashes)]
-    ws = _re.compile(r"\s+")
 
     out_type = StructType(
         [
@@ -228,14 +147,11 @@ def _minhash_signatures_arrow(
     def mh(texts: pd.Series) -> pd.DataFrame:
         sh_out, sig_out = [], []
         for text in texts:
-            toks = ws.split(text.strip()) if text is not None else []
-            if len(toks) < k:
+            shingles = shingler(text)
+            if not shingles:
                 sh_out.append([])
                 sig_out.append(None)
                 continue
-            shingles = list(
-                dict.fromkeys(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1))
-            )
             digests = [
                 [hashlib.md5(p + s.encode()).hexdigest() for s in shingles]
                 for p in prefixes
@@ -255,13 +171,44 @@ def _minhash_signatures_arrow(
     )
 
 
-def _bind_digests(df: DataFrame, num_hashes: int) -> DataFrame:
-    digests = T.minhash_digests(F.col("shingles"), num_hashes)
-    names = [f"__d{j}" for j in range(len(digests))]
-    for n, d in zip(names, digests):
-        df = df.withColumn(n, d)
-    sig = T.minhash_signature_from_digests([F.col(n) for n in names], num_hashes)
-    return df.withColumn("sig", sig).drop(*names)
+def _shingler(k: int):
+    """text -> its distinct word k-grams in first-occurrence order, as the
+    oracle's list_distinct over whitespace-split tokens builds them; empty
+    when the text has fewer than k words.  Built per call, so the pandas
+    UDFs that use it ship it by value to the Python workers."""
+    ws = re.compile(r"\s+")
+
+    def shingles(text: str | None) -> list[str]:
+        toks = ws.split(text.strip()) if text is not None else []
+        if len(toks) < k:
+            return []
+        return list(dict.fromkeys(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)))
+
+    return shingles
+
+
+def shingle_sets(
+    df: DataFrame,
+    content_col: str,
+    id_col: str,
+    shingle_words: int = 3,
+) -> DataFrame:
+    """(mh_id, shingles): distinct word k-gram sets per doc (empty sets
+    dropped), built per Arrow batch exactly as minhash_signatures builds
+    them."""
+    from pyspark.sql.types import ArrayType, StringType
+
+    shingler = _shingler(shingle_words)
+
+    @pandas_udf(returnType=ArrayType(StringType()))
+    def sh(texts: pd.Series) -> pd.Series:
+        return pd.Series([shingler(text) for text in texts])
+
+    return (
+        _spread(df, id_col)
+        .select(F.col(id_col).alias("mh_id"), sh(F.col(content_col)).alias("shingles"))
+        .filter(F.size("shingles") > 0)
+    )
 
 
 def minhash_band_keys(sig_df: DataFrame, bands: int, rows_per_band: int) -> DataFrame:

@@ -242,7 +242,6 @@ def lsh_band_pairs(
     id_col: str = "vec_id",
     bands: int = 4,
     planes_per_band: int = 4,
-    use_arrow: bool = True,
     plane_stride: int | None = None,
 ) -> DataFrame:
     """Candidate pairs sharing ≥1 hyperplane band (random-projection LSH).
@@ -253,24 +252,9 @@ def lsh_band_pairs(
     O(n²) cross join.  `plane_stride` (see lsh_band_keys_arrow) pins each
     band's plane identities independent of the planes count.
     """
-    stride = planes_per_band if plane_stride is None else plane_stride
-    if use_arrow:
-        bk = lsh_band_keys_arrow(
-            vectors, dim, vec_col, id_col, bands, planes_per_band, plane_stride=stride
-        )
-    else:
-        band_structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                hyperplane_signature(
-                    F.col(vec_col), dim, planes_per_band, base_plane=b * stride
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-        bk = vectors.select(
-            F.col(id_col).alias("bid"), F.explode(F.array(*band_structs)).alias("bk")
-        ).select("bid", F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key"))
+    bk = lsh_band_keys_arrow(
+        vectors, dim, vec_col, id_col, bands, planes_per_band, plane_stride=plane_stride
+    )
     from codecdb_queryengine_spark.operators.bucketing import bucket_candidate_pairs
 
     return bucket_candidate_pairs(bk, "bid", ["band", "band_key"])

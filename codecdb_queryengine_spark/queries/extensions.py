@@ -700,17 +700,15 @@ def ext_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("s_nationkey")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("sum_qty"),
+            unit_sum(F.col("l_quantity"), 2).alias("sum_qty"),
         )
         .orderBy("s_nationkey")
     )
 
 
-_SALTED_JOIN_SQL = """
+_SALTED_JOIN_SQL = f"""
     SELECT s_nationkey, count(*) AS n,
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+           {unit_sum_sql("l_quantity", 2)} AS sum_qty
     FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
     GROUP BY s_nationkey ORDER BY s_nationkey
 """
@@ -852,8 +850,7 @@ def q17_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(avg_q, F.col("l_partkey") == F.col("ap_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(
-            (F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double") / 7.0)
-            .alias("avg_yearly")
+            (unit_sum(F.col("l_extendedprice"), 2) / 7.0).alias("avg_yearly")
         )
         .done()
     )
@@ -929,31 +926,28 @@ def q21_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT: revenue matrix linestatus × returnflag (explicit value list so
     the plan is a single groupBy — no distinct-scan to discover columns).
-    Sums are decimal-anchored so the double totals are order-stable across
-    engines (the exact-sum rule of queries/sums.py)."""
+    The cells are exact integer-unit sums (queries/sums.py), so the double
+    totals are order-stable across engines."""
     li = load_tables(spark, sf_dir)["lineitem"]
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,4)"
-    )
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.groupBy("l_linestatus")
         .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(F.sum(rev).cast("double"))
+        .agg(unit_sum(rev, 4))
         .orderBy("l_linestatus")
     )
 
 
-_PIVOT_SQL = """
+def _pivot_cell(flag: str) -> str:
+    term = f"CASE WHEN l_returnflag = '{flag}' THEN l_extendedprice * (1 - l_discount) END"
+    return f'{unit_sum_sql(term, 4)} AS "{flag}"'
+
+
+_PIVOT_SQL = f"""
     SELECT l_linestatus,
-           CAST(sum(CASE WHEN l_returnflag = 'A'
-                THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) END)
-                AS DOUBLE) AS "A",
-           CAST(sum(CASE WHEN l_returnflag = 'N'
-                THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) END)
-                AS DOUBLE) AS "N",
-           CAST(sum(CASE WHEN l_returnflag = 'R'
-                THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) END)
-                AS DOUBLE) AS "R"
+           {_pivot_cell("A")},
+           {_pivot_cell("N")},
+           {_pivot_cell("R")}
     FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus
 """
 
@@ -974,15 +968,15 @@ def ext_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         long.groupBy("metric")
         .agg(
-            F.sum(F.col("val").cast("decimal(18,4)")).cast("double").alias("total"),
+            unit_sum(F.col("val"), 2).alias("total"),
             F.count(F.lit(1)).alias("n"),
         )
         .orderBy("metric")
     )
 
 
-_UNPIVOT_SQL = """
-    SELECT metric, CAST(sum(CAST(val AS DECIMAL(18,4))) AS DOUBLE) AS total,
+_UNPIVOT_SQL = f"""
+    SELECT metric, {unit_sum_sql("val", 2)} AS total,
            count(*) AS n
     FROM (
         SELECT 'l_quantity' AS metric, CAST(l_quantity AS DOUBLE) AS val FROM lineitem
@@ -1017,7 +1011,7 @@ def ext_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("zcell")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+            unit_sum(F.col("l_quantity"), 2).alias("sum_qty"),
         )
         .orderBy("zcell")
     )
@@ -1030,7 +1024,7 @@ def _zorder_sql() -> str:
     return f"""
         SELECT ({z} // 1024) AS zcell,
                count(*) AS n_rows,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+               {unit_sum_sql("l_quantity", 2)} AS sum_qty
         FROM lineitem
         GROUP BY zcell ORDER BY zcell
     """
@@ -1068,7 +1062,7 @@ def ext_zorder_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = li.select(
         (F.col("l_partkey") % 256).alias("pk"),
         (F.col("l_suppkey") % 64).alias("sk"),
-        F.col("l_quantity").cast("decimal(18,2)").alias("qty"),
+        F.col("l_quantity").alias("qty"),
         "l_orderkey",
     )
     path = _os.path.join(_scratch_dir("zorder_lifecycle", sf_dir, fresh=True), "zl")
@@ -1109,7 +1103,7 @@ def ext_zorder_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("zcell")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum("qty").cast("double").alias("sum_qty"),
+            unit_sum(F.col("qty"), 2).alias("sum_qty"),
         )
         .orderBy("zcell")
     )
@@ -1122,11 +1116,11 @@ def _zorder_lifecycle_sql() -> str:
     return f"""
         WITH rows_kept AS (
             SELECT l_partkey % 256 AS pk, l_suppkey % 64 AS sk,
-                   CAST(l_quantity AS DECIMAL(18,2)) AS qty
+                   l_quantity AS qty
             FROM lineitem WHERE {_ZL_BASE} OR {_ZL_APPEND})
         SELECT ({z} // 1024) AS zcell,
                count(*) AS n_rows,
-               CAST(sum(qty) AS DOUBLE) AS sum_qty
+               {unit_sum_sql("qty", 2)} AS sum_qty
         FROM rows_kept
         GROUP BY zcell ORDER BY zcell
     """

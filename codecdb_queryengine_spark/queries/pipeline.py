@@ -24,6 +24,7 @@ from codecdb_queryengine_spark.operators import corpus as C
 from codecdb_queryengine_spark.operators import dedup as D
 from codecdb_queryengine_spark.operators import multimodal as M
 from codecdb_queryengine_spark.operators import similarity as S
+from codecdb_queryengine_spark.queries.sums import unit_sum, unit_sum_sql
 from codecdb_queryengine_spark.session import run_parallel
 
 # ---------------------------------------------------------------------------
@@ -178,7 +179,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_minhash_mins(num_hashes: int = 8) -> str:
-    """Mirror of text.minhash_signature_from_digests: element i = min of an
+    """Mirror of dedup.minhash_signatures: element i = min of an
     8-hex-char slice of md5(prefix_{i//4} || s).  (DuckDB re-derives the
     digest per slice; the oracle is correctness-only.)"""
     parts = []
@@ -559,8 +560,8 @@ def _ensure_layout(
     invocations reuse the persisted layout, so the timed number is the
     SERVE instead of N identical rebuilds of the same base (bench.py's
     median over N_RUNS discards the one building run).  Unset (the
-    driver's correctness gate, tests, scale_measure), every invocation
-    builds fresh exactly as before — correctness timing stays
+    correctness gate, tests, perfbench), every invocation builds fresh
+    exactly as before — correctness timing stays
     fixture-free and the build protocol stays value-gated.
 
     The marker lives inside the per-(kind, sf, pid) scratch dir, so there
@@ -3406,15 +3407,15 @@ def events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+            unit_sum(F.col("value"), 2).alias("sum_value"),
         )
         .orderBy("window_start", "event_type")
     )
 
 
-_EVENTS_WINDOW_SQL = """
+_EVENTS_WINDOW_SQL = f"""
     SELECT date_trunc('hour', ts) AS window_start, event_type,
-           count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+           count(*) AS n, {unit_sum_sql("value", 2)} AS sum_value
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
 """
 
@@ -3424,11 +3425,12 @@ def events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum / max of `value` over the trailing 10 minutes — the range-frame
     window (RANGE BETWEEN INTERVAL ... PRECEDING) that ext_window_funcs'
     rows-frames cannot express.  The frame is keyed on unix MICROseconds
-    (identical integer order-by on both engines) and the sum is
-    DECIMAL(18,2)-anchored, so the result is independent of how each
-    engine evaluates the sliding frame (Spark re-accumulates per frame,
-    DuckDB uses a segment tree — different double association orders, the
-    exact reason raw double sums are banned here).
+    (identical integer order-by on both engines) and the sum is an exact
+    integer-unit sum (queries/sums.py), so the result is independent of
+    how each engine evaluates the sliding frame (Spark re-accumulates per
+    frame, DuckDB uses a segment tree — different double association
+    orders, the exact reason raw double sums are banned here).  A max is
+    exact already.
 
     Scale shape: one hash shuffle on user_id, then a per-partition sort —
     the same cost as any windowed analytic; no self-join, no expansion.
@@ -3439,22 +3441,21 @@ def events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.unix_micros("ts"))
         .rangeBetween(-600_000_000, Window.currentRow)
     )
-    dec = F.col("value").cast("decimal(18,2)")
     return ev.filter(F.col("user_id") < 500).select(
         "event_id",
         "user_id",
         "ts",
         F.count(F.lit(1)).over(w).alias("n_10m"),
-        F.sum(dec).over(w).cast("double").alias("sum_value_10m"),
-        F.max(dec).over(w).cast("double").alias("max_value_10m"),
+        unit_sum(F.col("value"), 2, over=w).alias("sum_value_10m"),
+        F.max("value").over(w).alias("max_value_10m"),
     )
 
 
-_EVENTS_ROLLING_SQL = """
+_EVENTS_ROLLING_SQL = f"""
     SELECT event_id, user_id, ts,
            count(*) OVER w AS n_10m,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_value_10m,
-           CAST(max(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS max_value_10m
+           {unit_sum_sql("value", 2, over="w")} AS sum_value_10m,
+           max(value) OVER w AS max_value_10m
     FROM events WHERE user_id < 500
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
                  RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)
@@ -6255,7 +6256,7 @@ def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring pass an event pipeline runs continuously.  Per-type stats
     are one tiny aggregate broadcast back to the scan (no second shuffle
     of the fact stream); the gated output is the per-type outlier count
-    plus decimal-anchored outlier value volume, so the only float
+    plus the exact outlier value volume, so the only float
     comparison is the threshold itself (not a rounding grid).
     """
     ev = load_tables(spark, sf_dir)["events"]
@@ -6271,20 +6272,18 @@ def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         flagged.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_outliers"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias(
-                "outlier_value_sum"
-            ),
+            unit_sum(F.col("value"), 2).alias("outlier_value_sum"),
         )
         .orderBy("event_type")
     )
 
 
-_EVENTS_ANOMALY_SQL = """
+_EVENTS_ANOMALY_SQL = f"""
     WITH stats AS (
         SELECT event_type, avg(value) AS mu, stddev_samp(value) AS sd
         FROM events GROUP BY event_type)
     SELECT event_type, count(*) AS n_outliers,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS outlier_value_sum
+           {unit_sum_sql("value", 2)} AS outlier_value_sum
     FROM events JOIN stats USING (event_type)
     WHERE abs((value - mu) / sd) > 2.5
     GROUP BY event_type ORDER BY event_type
@@ -6316,7 +6315,7 @@ def events_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("hour", F.col("ts")).alias("bucket"), "event_type"
         ).agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
+            unit_sum(F.col("value"), 2).alias("sum_value"),
         )
     )
     return (
@@ -6332,7 +6331,7 @@ def events_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVENTS_RESAMPLE_SQL = """
+_EVENTS_RESAMPLE_SQL = f"""
     WITH bounds AS (
         SELECT date_trunc('hour', min(ts)) AS lo, date_trunc('hour', max(ts)) AS hi
         FROM events),
@@ -6341,7 +6340,7 @@ _EVENTS_RESAMPLE_SQL = """
     hourly AS (
         SELECT date_trunc('hour', ts) AS bucket, event_type,
                count(*) AS n,
-               CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+               {unit_sum_sql("value", 2)} AS sum_value
         FROM events GROUP BY 1, 2)
     SELECT g.bucket, t.event_type,
            coalesce(h.n, 0) AS n,
@@ -6665,11 +6664,7 @@ def events_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.orderBy("window_start", "event_type")
 
 
-_EVENTS_STREAM_WINDOW_SQL = """
-    SELECT date_trunc('hour', ts) AS window_start, event_type,
-           count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events GROUP BY 1, 2 ORDER BY 1, 2
-"""
+_EVENTS_STREAM_WINDOW_SQL = _EVENTS_WINDOW_SQL
 
 
 def events_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6685,8 +6680,8 @@ def events_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.orderBy("user_id")
 
 
-_EVENTS_STREAM_TOTALS_SQL = """
-    SELECT user_id, count(*) AS n_events, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+_EVENTS_STREAM_TOTALS_SQL = f"""
+    SELECT user_id, count(*) AS n_events, {unit_sum_sql("value", 2)} AS sum_value
     FROM events GROUP BY user_id ORDER BY user_id
 """
 
@@ -6742,18 +6737,18 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+            unit_sum(F.col("value"), 2).alias("sum_value"),
         )
         .orderBy("event_type")
     )
 
 
-_EVENTS_STREAM_DEDUP_SQL = """
+_EVENTS_STREAM_DEDUP_SQL = f"""
     WITH d AS (
         SELECT event_type, value,
                row_number() OVER (PARTITION BY event_id ORDER BY ts) AS rn
         FROM events)
-    SELECT event_type, count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+    SELECT event_type, count(*) AS n, {unit_sum_sql("value", 2)} AS sum_value
     FROM d WHERE rn = 1 GROUP BY event_type ORDER BY event_type
 """
 
@@ -6776,7 +6771,7 @@ def events_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVENTS_STREAM_SLIDING_SQL = """
+_EVENTS_STREAM_SLIDING_SQL = f"""
     WITH b AS (
         SELECT event_type, value,
                time_bucket(INTERVAL 30 MINUTE, ts) AS bucket
@@ -6785,7 +6780,7 @@ _EVENTS_STREAM_SLIDING_SQL = """
         SELECT event_type, value, bucket AS window_start FROM b
         UNION ALL
         SELECT event_type, value, bucket - INTERVAL 30 MINUTE FROM b)
-    SELECT window_start, event_type, count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+    SELECT window_start, event_type, count(*) AS n, {unit_sum_sql("value", 2)} AS sum_value
     FROM x GROUP BY 1, 2 ORDER BY 1, 2
 """
 
@@ -6883,10 +6878,10 @@ def events_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVENTS_STREAM_ROLLUP_SQL = """
+_EVENTS_STREAM_ROLLUP_SQL = f"""
     WITH b AS (SELECT max(ts) AS mx FROM events)
     SELECT date_trunc('hour', ts) AS window_start, event_type,
-           count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+           count(*) AS n, {unit_sum_sql("value", 2)} AS sum_value
     FROM events, b
     WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= mx - INTERVAL 2 HOUR
     GROUP BY 1, 2 ORDER BY 1, 2
@@ -6917,15 +6912,15 @@ def events_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
+            unit_sum(F.col("value"), 2).alias("sum_value"),
         )
         .orderBy("event_type")
     )
 
 
-_EVENTS_STREAM_FILES_SQL = """
+_EVENTS_STREAM_FILES_SQL = f"""
     SELECT event_type, count(*) AS n,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+           {unit_sum_sql("value", 2)} AS sum_value
     FROM events GROUP BY event_type ORDER BY event_type
 """
 
@@ -6945,9 +6940,9 @@ def events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.orderBy("n_name")
 
 
-_EVENTS_STREAM_ENRICH_SQL = """
+_EVENTS_STREAM_ENRICH_SQL = f"""
     SELECT n_name, count(*) AS n,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+           {unit_sum_sql("value", 2)} AS sum_value
     FROM events e
     JOIN customer c ON e.user_id = c.c_custkey
     JOIN nation ON c_nationkey = n_nationkey
@@ -7037,7 +7032,7 @@ def events_stream_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     which flags z-score outliers row-wise — the production pattern of a
     trained model scoring an unbounded stream (stateless append, no state
     store; contrast events_anomaly, which is the batch training pass).
-    Gated output: per-type outlier count + decimal-anchored value volume,
+    Gated output: per-type outlier count + exact value volume,
     equal to the batch computation since the stream replays the table."""
     from codecdb_queryengine_spark.streaming import events as E
 
@@ -7050,14 +7045,14 @@ def events_stream_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.join(F.broadcast(stats), "event_type")
         .withColumn("z", (F.col("value") - F.col("mu")) / F.col("sd"))
         .filter(F.abs(F.col("z")) > 2.5)
-        .select("event_type", F.col("value").cast("decimal(18,4)").alias("v"))
+        .select("event_type", "value")
     )
     res = E.run_to_memory(flagged, "q_events_stream_score", output_mode="append")
     return (
         res.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_outliers"),
-            F.sum("v").cast("double").alias("outlier_value_sum"),
+            unit_sum(F.col("value"), 2).alias("outlier_value_sum"),
         )
         .orderBy("event_type")
     )

@@ -517,8 +517,7 @@ def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(avg_q, F.col("l_partkey") == F.col("ap_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(
-            (F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double") / 7.0)
-            .alias("avg_yearly")
+            (unit_sum(F.col("l_extendedprice"), 2) / 7.0).alias("avg_yearly")
         )
     )
 
@@ -736,7 +735,7 @@ def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("cntrycode"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double").alias("totacctbal"),
+            unit_sum(F.col("c_acctbal"), 2).alias("totacctbal"),
         )
         .orderBy("cntrycode")
     )
@@ -945,8 +944,8 @@ ORACLE: dict[str, str] = {
         GROUP BY p_brand, p_type, p_size
         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
-    "q17": """
-        SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
+    "q17": f"""
+        SELECT {unit_sum_sql("l_extendedprice", 2)} / 7.0 AS avg_yearly
         FROM lineitem, part
         WHERE p_partkey = l_partkey AND p_brand = 'Brand#3'
           AND l_quantity < (SELECT 0.2 * avg(l_quantity)
@@ -1009,9 +1008,9 @@ ORACLE: dict[str, str] = {
         ORDER BY numwait DESC, s_name
         LIMIT 100
     """,
-    "q22": """
+    "q22": f"""
         SELECT cntrycode, count(*) AS numcust,
-               CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+               {unit_sum_sql("c_acctbal", 2)} AS totacctbal
         FROM (SELECT c_nationkey AS cntrycode, c_acctbal
               FROM customer
               WHERE c_nationkey IN (1, 2, 3, 4, 5, 6, 7)

@@ -635,38 +635,25 @@ def _write_lists(
         .parquet(os.path.join(path, "lists"))
     )
     cap = None if max_list_rows is None else int(max_list_rows)
-    meta = os.path.join(path, "lists_meta")
+    import pyarrow as pa
+
     from codecdb_queryengine_spark.sources import io as IO
 
-    try:
-        import pyarrow as pa
-
-        done = IO.tiny_meta_write(
-            meta, pa.table({"max_list_rows": pa.array([cap], type=pa.int64())})
-        )
-    except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-        done = False
-    if not done:  # schemed storage: the Spark job is the portable path
-        spark.createDataFrame([(cap,)], "max_list_rows long").write.mode(
-            "overwrite"
-        ).parquet(meta)
+    IO.tiny_meta_write(
+        spark,
+        os.path.join(path, "lists_meta"),
+        pa.table({"max_list_rows": pa.array([cap], type=pa.int64())}),
+    )
     invalidate_layout(path)
 
 
 def _read_layout_meta(spark: SparkSession, path: str) -> int | None:
     """The layout's persisted max_list_rows cap, or None when the layout
     predates the meta artifact or was built uncapped."""
-    meta = os.path.join(path, "lists_meta")
-    if not os.path.exists(meta):
-        return None
     from codecdb_queryengine_spark.sources import io as IO
 
-    t = IO.tiny_meta_read(meta)
-    if t is not None:
-        v = t.column("max_list_rows")[0].as_py() if t.num_rows else None
-    else:
-        rows = spark.read.parquet(meta).collect()
-        v = rows[0]["max_list_rows"] if rows else None
+    t = IO.tiny_meta_read(spark, os.path.join(path, "lists_meta"))
+    v = t.column("max_list_rows")[0].as_py() if t is not None and t.num_rows else None
     return None if v is None else int(v)
 
 
@@ -716,40 +703,20 @@ def _write_model_table(
     fields: tuple[tuple[str, str], ...],
 ) -> None:
     """Persist a tiny driver-side model artifact ([(ints and [int,...])
-    tuples]) — pyarrow on local paths (~5 ms vs a 0.3-0.5 s Spark job per
-    artifact; a trained build writes several), the Spark write kept as
-    the schemed-storage fallback.  `fields` is ((name, "long"|"array"),
-    ...).  Readers (_collect_rows / spark.read.parquet) see the same
-    values either way."""
+    tuples]) through io.tiny_meta_write — pyarrow on local paths (~5 ms vs
+    a 0.3-0.5 s Spark job per artifact; a trained build writes several).
+    `fields` is ((name, "long"|"array"), ...)."""
+    import pyarrow as pa
+
     from codecdb_queryengine_spark.sources import io as IO
 
-    done = False
-    if rows:
-        try:
-            import pyarrow as pa
-
-            cols = list(zip(*rows))
-            done = IO.tiny_meta_write(
-                table_dir,
-                pa.table(
-                    {
-                        name: pa.array(
-                            list(col),
-                            type=pa.list_(pa.int64()) if kind == "array" else pa.int64(),
-                        )
-                        for (name, kind), col in zip(fields, cols)
-                    }
-                ),
-            )
-        except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-            done = False
-    if not done:
-        schema = ", ".join(
-            f"{n} {'array<long>' if k == 'array' else 'long'}" for n, k in fields
-        )
-        spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-            table_dir
-        )
+    types = {"long": pa.int64(), "array": pa.list_(pa.int64())}
+    schema = pa.schema([(name, types[kind]) for name, kind in fields])
+    IO.tiny_meta_write(
+        spark,
+        table_dir,
+        pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema),
+    )
 
 
 def ivf_index_build_micro(
@@ -920,11 +887,10 @@ def _read_pq_models(spark: SparkSession, path: str) -> tuple[list, list]:
 def _collect_rows(
     spark: SparkSession, table_dir: str, cols: tuple[str, ...]
 ) -> list[tuple]:
-    """Sorted tuples of a (tiny) model artifact's columns — driver-side
-    through pyarrow on local paths (no Spark job per artifact read; a
-    serve/encode pass touches several), the usual collect on schemed
-    storage.  Ints stay ints and array cells become [int, ...] either
-    way, so the literal-model expressions are bit-identical."""
+    """Sorted tuples of a (tiny) model artifact's columns through
+    io.tiny_meta_read (no Spark job on local paths; a serve/encode pass
+    touches several).  Ints stay ints and array cells become [int, ...],
+    so the literal-model expressions are bit-identical."""
     from codecdb_queryengine_spark.sources import io as IO
 
     def _norm(v):
@@ -932,14 +898,11 @@ def _collect_rows(
             return [int(x) for x in v]
         return int(v)
 
-    t = IO.tiny_meta_read(table_dir)
-    if t is not None:
-        data = [t.column(c).to_pylist() for c in cols]
-        return sorted(tuple(_norm(v) for v in row) for row in zip(*data))
-    return sorted(
-        tuple(_norm(r[c]) for c in cols)
-        for r in spark.read.parquet(table_dir).collect()
-    )
+    t = IO.tiny_meta_read(spark, table_dir)
+    if t is None:
+        raise FileNotFoundError(f"{table_dir}: no model table")
+    data = [t.column(c).to_pylist() for c in cols]
+    return sorted(tuple(_norm(v) for v in row) for row in zip(*data))
 
 
 def _encode_against_layout(

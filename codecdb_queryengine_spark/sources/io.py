@@ -38,10 +38,10 @@ READ_FORMATS = ("parquet", "csv", "json", "orc", "xml")
 # job-launch round trip (~0.3-0.5 s measured locally) for a handful of bytes,
 # and the lifecycle gates touch several per maintenance pass.  On a LOCAL
 # filesystem the same parquet bytes can be moved driver-side through pyarrow
-# in single-digit milliseconds; on schemed storage (hdfs://, s3a://) these
-# helpers return None/False and callers fall back to the Spark path, so
-# cluster deployments behave exactly as before.  The on-disk format stays
-# plain parquet either way — both engines read each other's files.
+# in single-digit milliseconds; on schemed storage (hdfs://, s3a://)
+# tiny_meta_write / tiny_meta_read take the Spark path themselves, so
+# callers never branch on storage.  The on-disk format stays plain parquet
+# either way — both engines read each other's files.
 
 
 # Layout writes pay per-TASK overhead AND per-file serial cost within a
@@ -89,40 +89,48 @@ def _local_fs_path(path: str) -> str | None:
     return path
 
 
-def tiny_meta_write(path: str, table) -> bool:
-    """Write a (tiny) pyarrow table as `<path>/part-00000.parquet`,
-    replacing the directory.  Returns False on schemed paths (caller
-    falls back to a Spark write)."""
+def fs_exists(spark: SparkSession, path: str) -> bool:
+    """Existence through the Hadoop FileSystem of the path's scheme, so
+    the check is correct on hdfs:// and s3a:// layouts too, not only on
+    the local filesystem the tests use."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return bool(hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath))
+
+
+def tiny_meta_write(spark: SparkSession, path: str, table) -> None:
+    """Write a (tiny) pyarrow table as the parquet directory `path`,
+    replacing it: `<path>/part-00000.parquet` through pyarrow on a local
+    path (no Spark job), one Spark write on schemed storage."""
+    lp = _local_fs_path(path)
+    if lp is None:
+        spark.createDataFrame(table).coalesce(1).write.mode("overwrite").parquet(path)
+        return
     import shutil
 
     import pyarrow.parquet as pq
 
-    lp = _local_fs_path(path)
-    if lp is None:
-        return False
     shutil.rmtree(lp, ignore_errors=True)
     os.makedirs(lp, exist_ok=True)
     pq.write_table(table, os.path.join(lp, "part-00000.parquet"))
-    return True
 
 
-def tiny_meta_read(path: str):
-    """Read a (tiny) parquet table directory driver-side: a pyarrow table
-    over every `*.parquet` part file (Spark's _SUCCESS markers skipped), or
-    None on schemed paths / missing dirs (caller falls back to Spark)."""
+def tiny_meta_read(spark: SparkSession, path: str):
+    """Read a (tiny) parquet table directory as a pyarrow table, or None
+    when there is none at `path`: every `*.parquet` part file through
+    pyarrow on a local path (Spark's _SUCCESS markers skipped; no Spark
+    job), one Spark read on schemed storage."""
+    lp = _local_fs_path(path)
+    if lp is None:
+        return spark.read.parquet(path).toArrow() if fs_exists(spark, path) else None
+    if not os.path.isdir(lp):
+        return None
     import glob
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    lp = _local_fs_path(path)
-    if lp is None or not os.path.isdir(lp):
-        return None
     parts = sorted(glob.glob(os.path.join(lp, "*.parquet")))
-    if not parts:
-        return None
-    import pyarrow as pa
-
-    return pa.concat_tables([pq.read_table(p) for p in parts])
+    return pa.concat_tables([pq.read_table(p) for p in parts]) if parts else pa.table({})
 
 
 def tiny_meta_col_max(path: str, col: str):

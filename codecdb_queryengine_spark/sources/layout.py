@@ -130,50 +130,38 @@ def _zmeta_path(path: str) -> str:
 def _write_zmeta(
     df: DataFrame, path: str, cols: Sequence[str], bits: int, prefix_bits: int
 ) -> None:
+    import pyarrow as pa
+
     from codecdb_queryengine_spark.sources import io as IO
 
-    try:
-        import pyarrow as pa
-
-        done = IO.tiny_meta_write(
-            _zmeta_path(path),
-            pa.table(
-                {
-                    "cols": pa.array([list(cols)], type=pa.list_(pa.string())),
-                    "bits": pa.array([int(bits)], type=pa.int32()),
-                    "prefix_bits": pa.array([int(prefix_bits)], type=pa.int32()),
-                }
-            ),
-        )
-    except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-        done = False
-    if not done:  # schemed storage: the Spark job is the portable path
-        df.sparkSession.createDataFrame(
-            [(list(cols), int(bits), int(prefix_bits))],
-            "cols array<string>, bits int, prefix_bits int",
-        ).coalesce(1).write.mode("overwrite").parquet(_zmeta_path(path))
+    IO.tiny_meta_write(
+        df.sparkSession,
+        _zmeta_path(path),
+        pa.table(
+            {
+                "cols": pa.array([list(cols)], type=pa.list_(pa.string())),
+                "bits": pa.array([int(bits)], type=pa.int32()),
+                "prefix_bits": pa.array([int(prefix_bits)], type=pa.int32()),
+            }
+        ),
+    )
 
 
 def _read_zmeta(spark, path: str) -> tuple[list[str], int, int]:
-    import os
-
     from codecdb_queryengine_spark.sources import io as IO
 
-    if not os.path.exists(_zmeta_path(path)):
+    t = IO.tiny_meta_read(spark, _zmeta_path(path))
+    if t is None or not t.num_rows:
         raise ValueError(
             f"{path}: no _zmeta artifact — not a zorder_write_partitioned "
             "layout (flat zorder_write layouts have no append path; rebuild "
             "or re-write partitioned)"
         )
-    t = IO.tiny_meta_read(_zmeta_path(path))
-    if t is not None and t.num_rows:
-        return (
-            [str(c) for c in t.column("cols")[0].as_py()],
-            int(t.column("bits")[0].as_py()),
-            int(t.column("prefix_bits")[0].as_py()),
-        )
-    r = spark.read.parquet(_zmeta_path(path)).first()
-    return list(r["cols"]), int(r["bits"]), int(r["prefix_bits"])
+    return (
+        [str(c) for c in t.column("cols")[0].as_py()],
+        int(t.column("bits")[0].as_py()),
+        int(t.column("prefix_bits")[0].as_py()),
+    )
 
 
 # A sort-write's range exchange pays per-task overhead like every layout

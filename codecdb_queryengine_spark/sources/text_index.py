@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 from codecdb_queryengine_spark.functions import text as T
 from codecdb_queryengine_spark.session import run_parallel
 from codecdb_queryengine_spark.sources.io import (
+    fs_exists,
     invalidate_layout,
     serve_memo,
     write_task_count,
@@ -97,19 +98,6 @@ def _meta_path(path: str, layout: str) -> str:
     return os.path.join(path, f"meta_{layout}")
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence through the Hadoop FileSystem of the path's scheme, so
-    the check is correct on hdfs:// and s3a:// layouts too, not only on
-    the local filesystem the tests use."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-META_SCHEMA = _cols(num_buckets=IntegerType())
-
-
 def _write_meta(
     spark: SparkSession, path: str, num_buckets: int, layout: str = "postings"
 ) -> None:
@@ -118,22 +106,15 @@ def _write_meta(
     posting whose bucket doesn't collide — a wrong-answer class, not an
     error — so the layout records the constant and searches read it back
     instead of trusting their caller."""
+    import pyarrow as pa
+
     from codecdb_queryengine_spark.sources import io as IO
 
-    meta = _meta_path(path, layout)
-    try:
-        import pyarrow as pa
-
-        done = IO.tiny_meta_write(
-            meta,
-            pa.table({"num_buckets": pa.array([int(num_buckets)], type=pa.int32())}),
-        )
-    except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-        done = False
-    if not done:  # schemed storage: the Spark job is the portable path
-        spark.createDataFrame([(int(num_buckets),)], "num_buckets int").coalesce(
-            1
-        ).write.mode("overwrite").parquet(meta)
+    IO.tiny_meta_write(
+        spark,
+        _meta_path(path, layout),
+        pa.table({"num_buckets": pa.array([int(num_buckets)], type=pa.int32())}),
+    )
 
 
 def _read_buckets(
@@ -148,7 +129,7 @@ def _read_buckets(
     from codecdb_queryengine_spark.sources import io as IO
 
     for meta in (_meta_path(path, layout), os.path.join(path, "meta")):
-        t = IO.tiny_meta_read(meta)
+        t = IO.tiny_meta_read(spark, meta)
         if t is not None:
             if not t.num_rows:
                 # An existing meta dir with zero rows is a read anomaly,
@@ -156,10 +137,6 @@ def _read_buckets(
                 # wrong-answer prune, so it must propagate (r11 ADVICE).
                 raise ValueError(f"{meta}: bucket meta table has no rows")
             return int(t.column("num_buckets")[0].as_py())
-        if _fs_exists(spark, meta):
-            return int(
-                spark.read.schema(META_SCHEMA).parquet(meta).first()["num_buckets"]
-            )
     return fallback
 
 
@@ -621,7 +598,7 @@ def _read_docgen(spark: SparkSession, path: str) -> DataFrame | None:
 
     dg = _docgen_path(path)
     IO.recover_swap(dg)
-    if not _fs_exists(spark, dg):
+    if not fs_exists(spark, dg):
         return None
     return spark.read.schema(DOCGEN_SCHEMA).parquet(dg)
 
@@ -650,7 +627,7 @@ def _live_rows(
         return base
     live = base.join(F.broadcast(dg.select("doc_id")), "doc_id", "left_anti")
     delta_dir = _delta_root(path, layout)
-    if _fs_exists(spark, delta_dir):
+    if fs_exists(spark, delta_dir):
         keep = dg.filter(~F.col("deleted")).select("doc_id", "gen")
         cur = (
             spark.read.schema(_delta_schema(layout))
@@ -680,7 +657,7 @@ def _promote_docgen(spark: SparkSession, path: str, staging: str) -> None:
     from codecdb_queryengine_spark.sources import io as IO
 
     dg = _docgen_path(path)
-    if _fs_exists(spark, dg):
+    if fs_exists(spark, dg):
         IO.swap_layout(dg, staging)
     else:
         os.rename(staging, dg)
@@ -762,7 +739,7 @@ def text_index_upsert(
             int(mx) if mx is not None else old_dg.agg(F.max("gen")).first()[0]
         ) + 1
 
-    layouts = [l for l in _LAYOUTS if _fs_exists(spark, os.path.join(path, l))]
+    layouts = [l for l in _LAYOUTS if fs_exists(spark, os.path.join(path, l))]
     if not layouts:
         raise ValueError(f"text_index_upsert: no index layouts at {path}")
     if updates is not None and g["n_upd"]:
@@ -828,7 +805,7 @@ def text_index_purge(spark: SparkSession, path: str) -> list[str]:
 
     if _read_docgen(spark, path) is None:
         return []
-    layouts = [l for l in _LAYOUTS if _fs_exists(spark, os.path.join(path, l))]
+    layouts = [l for l in _LAYOUTS if fs_exists(spark, os.path.join(path, l))]
 
     # Folds are independent whole-layout rewrites (any completion order is
     # crash-safe — a folded base re-derives the same rows under the

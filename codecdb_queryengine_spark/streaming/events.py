@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import _fix_nanos, raw_schema
+from codecdb_queryengine_spark.queries.sums import unit_sum, unit_total
 
 
 def default_state_partitions(spark: SparkSession) -> int:
@@ -95,9 +96,9 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
         .groupBy(F.window("ts", window), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            # decimal anchor: state-merge order is engine/runtime-dependent;
-            # 2-decimal values sum exactly (the queries/sums.py exact-sum rule)
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+            # state-merge order is engine/runtime-dependent; the unit sum is
+            # not
+            unit_sum(F.col("value"), 2).alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
@@ -110,21 +111,22 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
 
 def sliding_avg(events: DataFrame, window: str = "1 hour", slide: str = "30 minutes") -> DataFrame:
     """Sliding-window average value per event type (count and sum emitted
-    alongside — the algebraic partials the average folds over)."""
+    alongside — the algebraic partials the average folds over).  The
+    average is the exact sum over the count, so it too is independent of
+    the state-merge order."""
     return (
         events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", window, slide), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-            F.avg("value").alias("avg_value"),
+            unit_sum(F.col("value"), 2).alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
             "event_type",
             "n",
             "sum_value",
-            "avg_value",
+            (F.col("sum_value") / F.col("n")).alias("avg_value"),
         )
     )
 
@@ -202,16 +204,13 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     def update(key, pdf_iter, state):
         import pandas as pd
 
-        import numpy as np
-
         (user_id,) = key
         n, cents = state.get() if state.exists else (0, 0)
         for pdf in pdf_iter:
             n += len(pdf)
-            # integer-cent accumulation: floor(v*100 + 0.5) recovers the
-            # exact 2-decimal value (same anchor as the decimal sums), so
-            # the running total is order-free and engine-free
-            cents += int(np.floor(pdf["value"].to_numpy() * 100.0 + 0.5).sum())
+            # integer cents (queries/sums.py): the running total is
+            # order-free and engine-free
+            cents += unit_total(pdf["value"].to_numpy(), 2)
         state.update((n, cents))
         yield pd.DataFrame(
             {"user_id": [user_id], "n_events": [n], "sum_value": [cents / 100.0]}
@@ -253,9 +252,7 @@ def static_enriched_totals(
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias(
-                "sum_value"
-            ),
+            unit_sum(F.col("value"), 2).alias("sum_value"),
         )
     )
 

@@ -56,23 +56,33 @@ def test_pack_offsets_zero_token_doc_stays_in_place(spark):
     assert rows[8] == (0, 0, 1)
 
 
-def test_decontaminate_arrow_equals_expression_path(spark):
-    """The Arrow shingle path must be bit-identical to the oracle-pinned
-    expression form (same claim dedup.shingle_sets makes)."""
-    train = spark.createDataFrame(
-        [(i, f"w{i} common a b c tail{i % 3}") for i in range(1, 9)],
-        ["doc_id", "text"],
+def test_decontaminate_matches_the_oracle_mirror(spark):
+    """The Arrow shingle path equals DuckDB running docs_decontaminate's
+    own oracle text (eval docs are those with doc_id % 23 = 0), edge
+    inputs included."""
+    import duckdb
+
+    from codecdb_queryengine_spark.queries.pipeline import _DECONTAM_SQL
+
+    rows = [(i, f"w{i} common a b c tail{i % 3}") for i in range(1, 9)] + [
+        (9, "a b"),  # too short: no shingles
+        (10, ""),
+        (11, "  common   a   b   c  "),
+        (23, "common a b c"),
+        (46, "x y"),  # a too-short eval doc adds nothing
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    got = sorted(
+        tuple(r)
+        for r in C.decontaminate(
+            docs.filter(F.col("doc_id") % 23 != 0), docs.filter(F.col("doc_id") % 23 == 0)
+        ).collect()
     )
-    ev = spark.createDataFrame([(100, "common a b c")], ["doc_id", "text"])
-    arrow = sorted(
-        (r.doc_id, r.n_contaminated)
-        for r in C.decontaminate(train, ev, use_arrow=True).collect()
-    )
-    expr = sorted(
-        (r.doc_id, r.n_contaminated)
-        for r in C.decontaminate(train, ev, use_arrow=False).collect()
-    )
-    assert arrow == expr and len(arrow) > 0
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(con.execute(_DECONTAM_SQL).fetchall())
+    assert got == want and (11, 2) in got
 
 
 def test_stream_tmpdir_reaps_dead_and_own_dirs(tmp_path, monkeypatch):

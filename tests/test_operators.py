@@ -294,27 +294,41 @@ def test_bpe_pieces_classes(spark):
     assert pieces == ["Hello", ",", "world", "42", "!", "x", "3"]
 
 
-def test_minhash_arrow_matches_expression_path(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "pack my box with five dozen liquor jugs"),
-            (3, "x y"),  # too short -> dropped by both paths
-            (4, ""),
-            (5, "  spaced   out   tokens   here   now "),
-        ],
-        ["id", "txt"],
-    )
-    a = {
-        r.mh_id: (list(r.shingles), list(r.sig))
-        for r in D.minhash_signatures(df, "txt", "id", 8, 3, use_arrow=True).collect()
+def test_minhash_matches_the_oracle_mirror(spark):
+    """The Arrow signature path equals DuckDB running the oracle's own
+    shingle and signature mirror, edge inputs included."""
+    import duckdb
+
+    from codecdb_queryengine_spark.queries.pipeline import _sql_minhash_mins, _sql_word_shingles
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "pack my box with five dozen liquor jugs"),
+        (3, "x y"),  # too short -> no shingles, dropped
+        (4, ""),
+        (5, "  spaced   out   tokens   here   now "),
+        (6, "a b c a b c a b c"),  # repeated shingles count once
+    ]
+    df = spark.createDataFrame(rows, ["id", "txt"])
+    got = {
+        r.mh_id: (sorted(r.shingles), list(r.sig))
+        for r in D.minhash_signatures(df, "txt", "id", 8, 3).collect()
     }
-    b = {
-        r.mh_id: (list(r.shingles), list(r.sig))
-        for r in D.minhash_signatures(df, "txt", "id", 8, 3, use_arrow=False).collect()
-    }
-    assert a == b
-    assert 3 not in a and 4 not in a
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    sigs = con.execute(
+        f"""
+        WITH sh AS (
+            SELECT doc_id AS mh_id, shingles FROM (
+                SELECT doc_id, {_sql_word_shingles(3)} AS shingles FROM documents)
+            WHERE len(shingles) > 0)
+        SELECT mh_id, shingles, {_sql_minhash_mins(8)} FROM sh
+        """
+    ).fetchall()
+    want = {r[0]: (sorted(r[1]), list(r[2:])) for r in sigs}
+    assert got == want
+    assert set(got) == {1, 2, 5, 6}
 
 
 def test_lsh_band_keys_arrow_matches_expression_signature(spark):

@@ -43,27 +43,40 @@ def test_slot_plan_matches_ceil_rule():
     assert AI._slot_plan({1: 0}, 16) == [(1, 1)]
 
 
-def test_tiny_meta_roundtrip_both_engines(spark, tmp_path):
+def test_tiny_meta_roundtrip_both_engines(spark, tmp_path, monkeypatch):
     """pyarrow-written meta must be Spark-readable and vice versa — the
-    local fast path and the schemed-storage fallback share one on-disk
-    format."""
-    pa = pytest.importorskip("pyarrow")
+    local fast path and the schemed-storage Spark path share one on-disk
+    format and read back the same table."""
+    import pyarrow as pa
+
+    table = pa.table(
+        {
+            "cols": pa.array([["a", "b"]], type=pa.list_(pa.string())),
+            "bits": pa.array([8], type=pa.int32()),
+            "ids": pa.array([[1, 2, 3]], type=pa.list_(pa.int64())),
+        }
+    )
     p1 = str(tmp_path / "meta_pa")
-    assert IO.tiny_meta_write(
-        p1, pa.table({"num_buckets": pa.array([32], type=pa.int32())})
-    )
-    assert spark.read.parquet(p1).first()["num_buckets"] == 32
+    IO.tiny_meta_write(spark, p1, table)
+    assert [f.endswith(".parquet") for f in os.listdir(p1)] == [True]
+    r = spark.read.parquet(p1).first()
+    assert (list(r["cols"]), r["bits"], list(r["ids"])) == (["a", "b"], 8, [1, 2, 3])
+    local = IO.tiny_meta_read(spark, p1)
+    assert local.to_pylist() == table.to_pylist()
+    assert IO.tiny_meta_read(spark, str(tmp_path / "missing")) is None
+
+    # the schemed-storage branch: Spark writes and reads the same bytes
+    monkeypatch.setattr(IO, "_local_fs_path", lambda path: None)
     p2 = str(tmp_path / "meta_spark")
-    spark.createDataFrame([(7,)], "num_buckets int").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(p2)
-    t = IO.tiny_meta_read(p2)
-    assert t is not None and t.column("num_buckets")[0].as_py() == 7
-    # schemed paths decline, so callers fall back to Spark
-    assert IO.tiny_meta_read("s3a://bucket/meta") is None
-    assert not IO.tiny_meta_write(
-        "hdfs://nn/meta", pa.table({"x": pa.array([1])})
-    )
+    IO.tiny_meta_write(spark, p2, table)
+    assert any(f.startswith("part-") for f in os.listdir(p2))
+    remote = IO.tiny_meta_read(spark, p2)
+    assert remote.to_pylist() == table.to_pylist()
+    assert remote.schema.types == table.schema.types
+    assert IO.tiny_meta_read(spark, p1).to_pylist() == local.to_pylist()
+    assert IO.tiny_meta_read(spark, str(tmp_path / "missing")) is None
+    monkeypatch.undo()
+    assert IO.tiny_meta_read(spark, p2).to_pylist() == table.to_pylist()
 
 
 def test_tiny_meta_col_max_exact(spark, tmp_path):

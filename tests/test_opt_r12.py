@@ -87,9 +87,7 @@ def test_read_buckets_zero_row_meta_raises(spark, tmp_path):
     pa = pytest.importorskip("pyarrow")
     path = str(tmp_path / "ti")
     meta = TI._meta_path(path, "postings")
-    assert IO.tiny_meta_write(
-        meta, pa.table({"num_buckets": pa.array([], type=pa.int32())})
-    )
+    IO.tiny_meta_write(spark, meta, pa.table({"num_buckets": pa.array([], type=pa.int32())}))
     with pytest.raises(ValueError, match="no rows"):
         TI._read_buckets(spark, path, 32)
     # pre-meta layouts still use the fallback

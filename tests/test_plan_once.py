@@ -13,7 +13,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 import __spark_entry__ as entry
 from codecdb_queryengine_spark import catalog
@@ -230,7 +230,7 @@ def test_text_index_schemas_match_inferred_batch_layouts(spark, tmp_path):
     for base in (sep, one):
         for layout, schema in TI._LAYOUT_SCHEMAS.items():
             assert _inferred(spark, os.path.join(base, layout)) == schema, (base, layout)
-    assert _inferred(spark, TI._meta_path(sep, "postings")) == TI.META_SCHEMA
+    assert _inferred(spark, TI._meta_path(sep, "postings")) == TI._cols(num_buckets=IntegerType())
 
 
 def test_text_index_schemas_match_inferred_mutation_layouts(spark, tmp_path):

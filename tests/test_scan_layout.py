@@ -6,9 +6,9 @@ money sums give the same bits whatever the layout.
 Pinned here: the copy's rows, schema and lifecycle (written once, replaced
 when the source changes, never written over the source); a multi-row-group
 source is read as it is; footer schemas equal Spark's inferred ones;
-load_tables launches no job; and the layout-dependent entries answer
-bit-identically on a split copy and on a shuffled many-row-group input,
-each equal to its DuckDB oracle."""
+load_tables launches no job; and the entries whose sums follow the
+queries/sums.py rule answer bit-identically on a split copy and on a
+shuffled many-row-group input, each equal to its DuckDB oracle."""
 
 import hashlib
 import os
@@ -22,11 +22,21 @@ import __spark_entry__ as entry
 from codecdb_queryengine_spark import catalog
 from codecdb_queryengine_spark.oracle import compare
 
-# The entries whose double sums used to depend on the row-group layout,
-# and the SQL-text twins that share their oracle text.
+# The entries that sum money over the fact tables with unit_sum, and the
+# SQL-text twins that share their oracle text.
 LAYOUT_ENTRIES = (
-    "q1", "q6", "q8", "q11", "q14", "q14_plan", "q15", "ext_rollup", "ext_cube",
-    "q1_sql", "q6_sql", "q8_sql", "q11_sql", "q14_sql", "q15_sql",
+    "q1", "q6", "q8", "q11", "q14", "q14_plan", "q15", "q17", "q17_plan", "q22",
+    "ext_rollup", "ext_cube", "ext_salted_join", "ext_pivot", "ext_unpivot",
+    "ext_zorder", "ext_zorder_lifecycle",
+    "q1_sql", "q6_sql", "q8_sql", "q11_sql", "q14_sql", "q15_sql", "q17_sql", "q22_sql",
+)
+# The entries that sum event values with unit_sum: batch, windowed and
+# streaming (state merged across tasks).
+EVENT_ENTRIES = (
+    "events_window", "events_rolling", "events_anomaly", "events_resample",
+    "events_stream_window", "events_stream_totals", "events_stream_dedup",
+    "events_stream_sliding", "events_stream_rollup", "events_stream_files",
+    "events_stream_enrich", "events_stream_score",
 )
 
 
@@ -173,20 +183,13 @@ def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
-def test_layout_dependent_entries_answer_the_same_bits_on_every_layout(spark, sf_dir, tmp_path):
-    """The shipped dir (one row group per table: the catalog scans a split
-    copy) and a dir whose facts already hold many row groups in shuffled
-    row order (read as they are, one task per row group) give bit-identical
-    rows, and each equals its DuckDB oracle exactly."""
-    n = spark.sparkContext.defaultParallelism
-    shuffled = str(tmp_path / "shuffled")
-    rewrite = _shuffled(2 * n)
-    _copy_tables(sf_dir, shuffled, {"lineitem": rewrite, "orders": rewrite})
+def _same_bits_on_both_layouts(spark, sf_dir, shuffled, entries):
+    """Each entry equals its DuckDB oracle exactly on `sf_dir` and on
+    `shuffled`, read with one scan task per row group, and answers the
+    same rows on both."""
     queries, oracles = entry.queries(), entry.oracle_sql()
-    tables = catalog.load_tables(spark, sf_dir)
-    assert len(tables["lineitem"].inputFiles()) == n
     answers = {}
-    for name in LAYOUT_ENTRIES:
+    for name in entries:
         df = queries[name](spark, sf_dir)
         ok, detail = compare(df, oracles[name], sf_dir, ndigits=None)
         assert ok, (name, "shipped", detail)
@@ -197,10 +200,7 @@ def test_layout_dependent_entries_answer_the_same_bits_on_every_layout(spark, sf
     try:
         for k, v in conf.items():
             spark.conf.set(k, v)
-        assert _scanned(catalog.load_tables(spark, shuffled)["lineitem"]) == [
-            os.path.join(shuffled, "lineitem.parquet")
-        ]
-        for name in LAYOUT_ENTRIES:
+        for name in entries:
             df = queries[name](spark, shuffled)
             ok, detail = compare(df, oracles[name], shuffled, ndigits=None)
             assert ok, (name, "shuffled", detail)
@@ -209,3 +209,31 @@ def test_layout_dependent_entries_answer_the_same_bits_on_every_layout(spark, sf
         for k, v in saved.items():
             spark.conf.set(k, v)
         catalog._catalogs.get(spark, {}).pop(shuffled, None)
+
+
+def test_layout_dependent_entries_answer_the_same_bits_on_every_layout(spark, sf_dir, tmp_path):
+    """The shipped dir (one row group per table: the catalog scans a split
+    copy) and a dir whose facts already hold many row groups in shuffled
+    row order (read as they are, one task per row group) give bit-identical
+    rows, and each equals its DuckDB oracle exactly."""
+    n = spark.sparkContext.defaultParallelism
+    shuffled = str(tmp_path / "shuffled")
+    rewrite = _shuffled(2 * n)
+    _copy_tables(sf_dir, shuffled, {"lineitem": rewrite, "orders": rewrite})
+    assert len(catalog.load_tables(spark, sf_dir)["lineitem"].inputFiles()) == n
+    assert _scanned(catalog.load_tables(spark, shuffled)["lineitem"]) == [
+        os.path.join(shuffled, "lineitem.parquet")
+    ]
+    _same_bits_on_both_layouts(spark, sf_dir, shuffled, LAYOUT_ENTRIES)
+
+
+def test_event_entries_answer_the_same_bits_on_every_layout(spark, sf_dir, tmp_path):
+    """The same for the event sums, with `events` shuffled into many row
+    groups: the batch, range-window and streaming forms all merge partial
+    sums in an order the layout decides."""
+    n = spark.sparkContext.defaultParallelism
+    shuffled = str(tmp_path / "shuffled_events")
+    _copy_tables(sf_dir, shuffled, {"events": _shuffled(2 * n)})
+    path = os.path.join(shuffled, "events.parquet")
+    assert pq.ParquetFile(path).metadata.num_row_groups == 2 * n
+    _same_bits_on_both_layouts(spark, sf_dir, shuffled, EVENT_ENTRIES)
