@@ -78,7 +78,7 @@ def bpe_train(
 
     Stops early when no adjacent pair reaches `min_pair_count`.  The
     returned table is the model artifact (tiny — broadcast it), the analog
-    of kmeans_centroids'/pq_codebooks' collected model frames.
+    of the Lloyd trainers' collected centroid and codebook lists.
     """
     # localCheckpoint (lazy), not persist: a persisted frame still carries
     # its full logical plan, so round r pays O(r) re-analysis and the loop

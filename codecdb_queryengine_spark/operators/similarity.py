@@ -23,8 +23,6 @@ import pandas as pd  # noqa: F401
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from codecdb_queryengine_spark.session import run_parallel
-
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢbᵢ as double, JVM-side (zip_with + aggregate)."""
@@ -55,18 +53,17 @@ def _topk_per_query(
     score: str,
     k: int,
     desc: bool = False,
-    extra: tuple[str, ...] = (),
 ) -> DataFrame:
     """The per-query top-k cut every ANN serve ends with: a row_number
     window PARTITIONED by q_id, ordered by `score` (descending for
     similarities, ascending for distances) with ties to the smaller n_id,
-    filtered to rk <= k.  Output (q_id, n_id, `score`, rk long, *extra)."""
+    filtered to rk <= k.  Output (q_id, n_id, `score`, rk long)."""
     order = F.col(score).desc() if desc else F.col(score).asc()
     w = Window.partitionBy("q_id").orderBy(order, F.col("n_id").asc())
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", score, F.col("rk").cast("long").alias("rk"), *extra)
+        .select("q_id", "n_id", score, F.col("rk").cast("long").alias("rk"))
     )
 
 
@@ -260,36 +257,6 @@ def lsh_band_pairs(
     return bucket_candidate_pairs(bk, "bid", ["band", "band_key"])
 
 
-def kmeans_centroids(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    k: int = 16,
-    seed: int = 13,
-    max_iter: int = 10,
-) -> DataFrame:
-    """Train a coarse quantizer with pyspark.ml KMeans and return it in
-    ivf_topk's centroid contract: (c_id, c_vec, c_norm).
-
-    KMeans|| init + Lloyd iterations run distributed (one pass per
-    iteration, model state broadcast); the returned frame is k rows, built
-    driver-side from the fitted centers — exactly what ivf_topk broadcasts
-    anyway.  Trained centers adapt the inverted lists to the corpus
-    distribution, which is what makes IVF recall hold on clustered real
-    embeddings (vs the deterministic mod-id stand-in the oracle pins).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = vectors.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feats)
-    spark = vectors.sparkSession
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cents = spark.createDataFrame(rows, "c_id long, c_vec array<double>")
-    return cents.select("c_id", "c_vec", norm(F.col("c_vec")).alias("c_norm"))
-
-
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -298,24 +265,15 @@ def ivf_topk(
     k: int = 5,
     centroid_mod: int = 29,
     nprobe: int = 2,
-    centroids: DataFrame | None = None,
-    keep_vecs: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the other classic ANN scale
     path next to LSH bucketing.
 
-    `keep_vecs=True` additionally returns the (q_vec, n_vec) pair each
-    result was scored from: the scored frame carries them anyway, so a
-    consumer that needs to RE-DERIVE something from the matched vectors
-    (the trained-quantizer invariant gates) gets them as a pure projection
-    of the shared scoring subplan instead of two corpus join-backs
-    (r7 verdict item 5 — one subplan, two projections).
-
-    Coarse quantizer: by default centroids are the vectors whose id ≡ 0 mod
-    `centroid_mod` — a deterministic, training-free stand-in the DuckDB
-    oracle can recompute exactly; pass `centroids` (c_id, c_vec, c_norm —
-    e.g. from kmeans_centroids) to use a trained quantizer through the
-    identical plumbing.  Every vector joins its nearest centroid's inverted
+    Coarse quantizer: the vectors whose id ≡ 0 mod `centroid_mod` — a
+    deterministic, training-free stand-in the DuckDB oracle can recompute
+    exactly.  The trained coarse quantizer is the exact-integer Lloyd
+    tier (kmeans_lloyd_micro → ivf_topk_micro), which the oracle replays
+    bit for bit.  Every vector joins its nearest centroid's inverted
     list via a per-row argmax fold over the 1-row broadcast model — one
     shuffle-free projection of the corpus (no N×C expansion); queries
     probe the `nprobe` nearest lists and score exactly within them, so
@@ -324,19 +282,9 @@ def ivf_topk(
     persisted index (sources/ann_index) runs, so the two forms agree
     bit for bit.
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else _mod_centroids(vectors, vec_col, id_col, centroid_mod)
-    )
-    cmodel = _ivf_model(cents)
+    cmodel = _ivf_model(_mod_centroids(vectors, vec_col, id_col, centroid_mod))
     return _ivf_cosine_rank(
-        _ivf_assign(vectors, cmodel, vec_col, id_col),
-        queries,
-        cmodel,
-        k,
-        nprobe,
-        extra=("q_vec", "n_vec") if keep_vecs else (),
+        _ivf_assign(vectors, cmodel, vec_col, id_col), queries, cmodel, k, nprobe
     )
 
 
@@ -419,7 +367,6 @@ def _ivf_cosine_rank(
     k: int,
     nprobe: int,
     part_type: str | None = None,
-    extra: tuple[str, ...] = (),
 ) -> DataFrame:
     """Flat-IVF cosine serve over inverted lists (n_id, n_vec, n_norm,
     c_list) — in-memory (_ivf_assign) or a persisted `lists/` scan: per
@@ -437,7 +384,7 @@ def _ivf_cosine_rank(
     )
     cos = cosine_pre(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm"))
     scored = _probe_join(probes, lists, "cosine", cos, part_type=part_type)
-    return _topk_per_query(scored, "cosine", k, desc=True, extra=extra)
+    return _topk_per_query(scored, "cosine", k, desc=True)
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -756,54 +703,6 @@ def _fold_argmin_d(entries: Column) -> Column:
     )
 
 
-def pq_codebooks_kmeans(
-    vectors: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    num_subspaces: int = 4,
-    num_codewords: int = 8,
-    seed: int = 13,
-    max_iter: int = 10,
-) -> DataFrame:
-    """Trained PQ codebooks — one pyspark.ml KMeans per subspace over the
-    sliced vectors — in pq_topk's codebook contract (m, c_id, c_sub).
-
-    This is classic PQ training (independent K-means per subquantizer,
-    Jégou et al. 2011 §III).  Each fit runs distributed over the sliced
-    column; the k·num_subspaces centers are assembled driver-side (tiny)
-    exactly like ivf's kmeans_centroids.  Engine-specific by construction
-    (KMeans|| init), so consumers gate rows-only + recall tests.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sub = dim // num_subspaces
-    spark = vectors.sparkSession
-
-    def _fit(m: int) -> list:
-        feats = vectors.select(
-            array_to_vector(
-                F.slice(F.col(vec_col), m * sub + 1, sub).cast("array<double>")
-            ).alias("features")
-        )
-        model = KMeans(k=num_codewords, seed=seed + m, maxIter=max_iter).fit(feats)
-        return [
-            (m, c, [float(x) for x in center])
-            for c, center in enumerate(model.clusterCenters())
-        ]
-
-    # The subspace fits are independent; one thread per subspace overlaps
-    # their (short, serial-stage-heavy) job chains on the shared scheduler
-    # (r5 perf pass).  Each fit stays seed-deterministic — threading only
-    # changes when jobs are *submitted* — and assembly order is pinned by
-    # the result order of run_parallel.
-    fits = run_parallel(
-        spark, [lambda m=m: _fit(m) for m in range(num_subspaces)], num_subspaces
-    )
-    rows = [r for fit in fits for r in fit]
-    return spark.createDataFrame(rows, "m long, c_id long, c_sub array<double>")
-
-
 def pq_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -814,29 +713,20 @@ def pq_topk(
     num_subspaces: int = 4,
     num_codewords: int = 8,
     code_stride: int = 37,
-    codebooks: DataFrame | None = None,
-    keep_vecs: bool = False,
 ) -> DataFrame:
     """Product-quantization ANN — the memory-scale path next to LSH/IVF:
-
-    `keep_vecs=True` additionally returns each result's (q_vec, n_vec)
-    pair, carried through the scoring subplan so an invariant consumer
-    re-derives its checks as a projection instead of two corpus join-backs
-    (r7 verdict item 5; see ivf_topk).  NOTE this widens the pre-window
-    candidate stream by the full vectors — leave it off for plain serving,
-    where the codes-only stream is the point of PQ.
     each vector is compressed to `num_subspaces` small codes; query scoring
     is asymmetric-distance computation (ADC) — per neighbor just
     num_subspaces integer table lookups + adds, never a d-dim float dot.
     (Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
     Search", TPAMI 2011.)
 
-    Codebooks: by default codeword c of every subspace is the matching
-    slice of the corpus vector with id = c·code_stride — the same
-    deterministic, training-free sampling stand-in ivf_topk uses (mod-id
-    centroids), so the DuckDB oracle recomputes the codes exactly; pass
-    `codebooks` (m, c_id, c_sub — e.g. from pq_codebooks_kmeans) to run a
-    trained quantizer through the identical plumbing.
+    Codebooks: codeword c of every subspace is the matching slice of the
+    corpus vector with id = c·code_stride — the same deterministic,
+    training-free sampling stand-in ivf_topk uses (mod-id centroids), so
+    the DuckDB oracle recomputes the codes exactly.  The trained codebooks
+    are the exact-integer Lloyd tier (pq_codebooks_lloyd_micro →
+    pq_topk_micro).
 
     Cross-engine float discipline: encode argmin compares left-to-right
     squared-L2 sums (bit-identical both engines; ties break on codeword
@@ -853,32 +743,21 @@ def pq_topk(
     (smaller = nearer).
     """
     sub = _subspace_width(dim, num_subspaces)
-    # The caller passes K explicitly (pq_codebooks_kmeans can return FEWER
-    # centers per subspace — ids stay dense from 0, which only leaves
-    # unused key slots); the c_id < K rule is checked lazily by
-    # _pq_adc_map, so no eager job runs at plan-build time (r3 ADVICE: the
-    # old max(c_id) probe was a surprising action inside a pure
-    # plan-building API).
-    if codebooks is None:
-        codebooks = _stride_codebook(
-            vectors, id_col, F.col(vec_col), sub, num_subspaces, num_codewords,
-            code_stride,
-        )
+    codebooks = _stride_codebook(
+        vectors, id_col, F.col(vec_col), sub, num_subspaces, num_codewords,
+        code_stride,
+    )
     cb1 = _pq_model_1row(codebooks, num_subspaces)
     codes = _spread(vectors).crossJoin(cb1).select(
         F.col(id_col).alias("n_id"),
         _pq_code_map(F.col(vec_col), sub, num_subspaces).alias("cmap"),
-        *([F.col(vec_col).alias("n_vec")] if keep_vecs else []),
     )
     amaps = queries.crossJoin(cb1).select(
-        "q_id",
-        _pq_adc_map("q_vec", sub, num_codewords).alias("amap"),
-        *(["q_vec"] if keep_vecs else []),
+        "q_id", _pq_adc_map("q_vec", sub, num_codewords).alias("amap")
     )
     adc = _adc_sum(num_subspaces, num_codewords)
     scored = _probe_join(amaps, codes, "adc_micro", adc, on=None)
-    extra = ("q_vec", "n_vec") if keep_vecs else ()
-    return _topk_per_query(scored, "adc_micro", k, extra=extra)
+    return _topk_per_query(scored, "adc_micro", k)
 
 
 def _adc_sum(num_subspaces: int, num_codewords: int) -> Column:
@@ -924,7 +803,8 @@ def ivf_pq_scored(
     stand-in convention): coarse centroids are the vectors with id ≡ 0
     (mod centroid_mod); residual codeword c of each subspace is the
     matching slice of the RESIDUAL of the vector with id = c·code_stride.
-    Swap either for trained centers through the same frames.
+    The trained form is the exact-integer Lloyd tier
+    (ivf_pq_topk_lloyd_micro).
 
     Exactness discipline: every distance is a left-to-right zip_with/
     aggregate fold (mirrored term-for-term by the generated oracle SQL);
@@ -1625,8 +1505,7 @@ def kmeans_lloyd_micro(
     init_cents: list[tuple[int, list[int]]] | None = None,
 ) -> list[tuple[int, list[int]]]:
     """TRAINED coarse quantizer with a cross-engine-exact Lloyd iteration —
-    the value-gateable counterpart of kmeans_centroids (whose KMeans‖ init
-    is engine-specific and therefore rows-only gated).
+    the package's one IVF trainer, value-gated end to end.
 
     Everything is integer-anchored so a SQL oracle replays training
     bit-for-bit: vectors are micro-quantized (quantize_micro), assignment
@@ -1641,8 +1520,8 @@ def kmeans_lloyd_micro(
     Scale shape: per iteration ONE pass over the corpus (map-side
     literal-model argmin expression, no N×K shuffle) + ONE k×(dim+1)-cell
     aggregation; the k-row model is collected per round (the usual tiny
-    model artifact, like kmeans_centroids' fitted centers).  Returns
-    [(c_id, c_vec_micro)] rows for ivf_topk_micro / literal re-broadcast.
+    model artifact).  Returns [(c_id, c_vec_micro)] rows for
+    ivf_topk_micro / literal re-broadcast.
     """
     # operator-owned cache lifetime (the heavy_hitters discipline): the
     # quantized frame is scanned once per Lloyd round, so persist it for
@@ -1795,8 +1674,7 @@ def pq_codebooks_lloyd_micro(
     micro-quantized slices, BIGINT-L2 argmin with ties to the smaller
     codeword id, round(Σv/n) centroid updates).  Classic PQ training
     (independent k-means per subquantizer, Jégou et al. TPAMI'11 §III)
-    made bit-replayable by a SQL oracle, unlike pq_codebooks_kmeans whose
-    KMeans‖ init is engine-specific.
+    made bit-replayable by a SQL oracle — the package's one PQ trainer.
 
     Per round: ONE broadcast pass over all (vector, subspace) slices +
     ONE (num_subspaces·k)×(sub+1)-cell aggregation; the 32-row model is

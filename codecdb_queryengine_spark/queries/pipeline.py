@@ -1328,38 +1328,6 @@ def _pq_sql(
     """
 
 
-def sim_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ top-k with per-subspace pyspark.ml-KMeans-trained codebooks (the
-    production quantizer) through the same contract as sim_ann_pq — emitted
-    as its per-q_id invariant surface so the entry VALUE-hashes despite the
-    engine-specific KMeans|| codebooks (r6 verdict item 2 retired the
-    rows-only category; this absorbs the former sim_ann_pq_trained_gate
-    twin).  The full trained top-k is computed, then each returned neighbor
-    is independently re-encoded against the same codebooks and its ADC
-    re-summed (_pq_trained_invariants) — k results per query, distinct
-    neighbors, rk exactly 1..k, ADC non-decreasing, every score bit-equal
-    to the recomputation.  Raw trained pairs remain the operator API
-    (similarity.pq_topk + pq_codebooks_kmeans; quantization-MSE guarantee
-    pinned in tests/test_ann_recall.py); the fully value-gated trained tier
-    is sim_ann_pq_lloyd."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    # 5 Lloyd iterations: converged on this data (codebooks stable vs 10,
-    # measured), and at scale a production quantizer trains once offline —
-    # the per-query fit here exists to gate the train->encode plumbing
-    cbs = S.pq_codebooks_kmeans(emb, dim=64, max_iter=5)
-    # keep_vecs: the invariant surface re-encodes each returned neighbor
-    # from the (q_vec, n_vec) pair the scoring subplan already carries —
-    # a projection of the shared subplan instead of two corpus join-backs
-    # (r7 verdict item 5).  The re-encode still bypasses pq_topk's
-    # map-lookup ADC machinery (broadcast-join argmin + re-sum), so a
-    # key-aliasing or lookup bug there still flips n_score_exact.
-    topk = S.pq_topk(
-        emb, _query_vectors(emb), dim=64, k=_TOP_K, codebooks=cbs,
-        keep_vecs=True,
-    )
-    return _pq_trained_invariants(topk, cbs)
-
-
 def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ (IVFADC) top-k: coarse inverted lists cut the scan, residual
     product quantization cuts memory and per-candidate cost
@@ -1982,130 +1950,7 @@ def _ivfpq_curve_sql(
     """
 
 
-# --- multimodal plumbing ---------------------------------------------------
-
-
-def sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with pyspark.ml-KMeans-trained centroids (the production
-    quantizer) through the same centroid contract as sim_ann_ivf — emitted
-    as its per-q_id invariant surface so the entry VALUE-hashes despite the
-    engine-specific KMeans|| centers (r6 verdict item 2 retired the
-    rows-only category; this absorbs the former sim_ann_ivf_trained_gate
-    twin).  The trained pairs themselves are still computed in full; the
-    invariants pin k results per query, distinct neighbors, rk exactly
-    1..k, cosine non-increasing along rk, and every returned cosine EQUAL
-    (bit-exact) to an independent recomputation from the corpus vectors —
-    the substantive check: the reported scores really are the cosines of
-    the returned (q_id, n_id) pairs, whatever KMeans chose.  Raw trained
-    pairs remain the operator API (similarity.ivf_topk + kmeans_centroids,
-    recall pinned in tests/test_ann_recall.py); the fully value-gated
-    trained tier is sim_ann_ivf_lloyd."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = S.kmeans_centroids(emb, k=16, seed=13)
-    # keep_vecs: the scoring subplan already carries each result's
-    # (q_vec, n_vec) — re-deriving the score from the carried pair is a
-    # pure projection of the SHARED subplan instead of two corpus
-    # join-backs (r7 verdict item 5; the join-back form re-ran ~0.3 s of
-    # scan+join stages per bench run for the same check).  The norms are
-    # still recomputed from the vectors, so a rank/window/aliasing bug in
-    # the serving plan that pairs a score with the wrong vectors flips
-    # n_score_exact exactly as before.
-    re = S.ivf_topk(
-        emb, _query_vectors(emb), k=_TOP_K, nprobe=2, centroids=cents,
-        keep_vecs=True,
-    ).withColumn(
-        "re_score",
-        S.cosine_pre(
-            F.col("q_vec"),
-            F.col("n_vec"),
-            S.norm(F.col("q_vec")),
-            S.norm(F.col("n_vec")),
-        ),
-    )
-    return _gate_invariants(re, "cosine", asc=False)
-
-
-def _gate_invariants(scored: DataFrame, score_col: str, asc: bool) -> DataFrame:
-    """Per-q_id engine-independent invariants over a trained-quantizer
-    top-k result joined with an independently recomputed score (`re_score`
-    column): result count, neighbor distinctness, the rank sequence
-    (sum + max pin rk = 1..k exactly when count = k), ordering violations
-    along rk, and how many returned scores equal the recomputation.
-    All BIGINT — the oracle states the expected constants, so the gate is
-    value-hashed even though the trained pairs themselves are
-    engine-specific (r4 verdict, "What's missing" #2).
-    """
-    w = Window.partitionBy("q_id").orderBy("rk")
-    prev = F.lag(score_col).over(w)
-    cur = F.col(score_col)
-    viol = prev.isNotNull() & ((prev > cur) if asc else (prev < cur))
-    return (
-        scored.withColumn("viol", viol.cast("long"))
-        .groupBy("q_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_results"),
-            F.countDistinct("n_id").alias("n_distinct"),
-            F.sum("rk").alias("rk_sum"),
-            F.max("rk").alias("rk_max"),
-            F.sum("viol").alias("order_violations"),
-            F.sum((cur == F.col("re_score")).cast("long")).alias("n_score_exact"),
-        )
-        .orderBy("q_id")
-    )
-
-
-def _gate_invariants_sql(k: int = _TOP_K) -> str:
-    return f"""
-        SELECT vec_id AS q_id,
-               CAST({k} AS BIGINT) AS n_results,
-               CAST({k} AS BIGINT) AS n_distinct,
-               CAST({k * (k + 1) // 2} AS BIGINT) AS rk_sum,
-               CAST({k} AS BIGINT) AS rk_max,
-               CAST(0 AS BIGINT) AS order_violations,
-               CAST({k} AS BIGINT) AS n_score_exact
-        FROM embeddings WHERE vec_id < {_N_QUERIES} ORDER BY q_id
-    """
-
-
-def _pq_trained_invariants(topk: DataFrame, cbs: DataFrame) -> DataFrame:
-    """Invariant surface for the KMeans-trained PQ top-k (see
-    sim_ann_pq_trained).  The score check re-encodes each RETURNED neighbor
-    directly — slice, argmin over the SAME broadcast codebooks the top-k
-    ran with (ties to the smaller codeword id), micro-quantized ADC re-sum
-    — without pq_topk's map-lookup machinery, so a key-aliasing or lookup
-    bug there would show up as n_score_exact < k here.  `topk` must carry
-    the scored (q_vec, n_vec) pair (pq_topk(keep_vecs=True)): the
-    re-encode is then a projection of the shared scoring subplan, not a
-    pair of corpus join-backs (r7 verdict item 5)."""
-    sub = 64 // 4
-    ms = F.explode(F.array(*[F.lit(m).cast("long") for m in range(4)])).alias("m")
-    slices = (
-        topk.withColumnRenamed("n_vec", "nv")
-        .select("q_id", "n_id", "adc_micro", "rk", ms, "q_vec", "nv")
-        .select(
-            "q_id",
-            "n_id",
-            "adc_micro",
-            "rk",
-            "m",
-            F.slice("q_vec", (F.col("m") * sub + 1).cast("int"), sub).alias("q_sub"),
-            F.slice("nv", (F.col("m") * sub + 1).cast("int"), sub).alias("v_sub"),
-        )
-    )
-    enc = (
-        slices.join(F.broadcast(cbs), "m")
-        .withColumn("d", S.l2sq(F.col("v_sub"), F.col("c_sub")))
-        .withColumn(
-            "contrib",
-            F.round(F.lit(1e6) * S.l2sq(F.col("q_sub"), F.col("c_sub"))).cast("long"),
-        )
-        .groupBy("q_id", "n_id", "adc_micro", "rk", "m")
-        .agg(F.min_by("contrib", F.struct(F.col("d"), F.col("c_id"))).alias("contrib"))
-    )
-    re = enc.groupBy("q_id", "n_id", "adc_micro", "rk").agg(
-        F.sum("contrib").alias("re_score")
-    )
-    return _gate_invariants(re, "adc_micro", asc=True)
+# --- trained quantizers: exact-integer Lloyd -------------------------------
 
 
 def sim_ann_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2118,8 +1963,8 @@ def sim_ann_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, assignment is BIGINT-L2 argmin, and the centroid update rounds
     Σv/n back to integers — every step is bit-identical in Spark and
     DuckDB, so the oracle replays the full train→assign→probe→score loop
-    exactly.  Unlike sim_ann_ivf_trained (pyspark.ml KMeans‖ — engine-
-    specific init, rows-only gated) this entry hashes end to end.
+    exactly, and this entry hashes end to end.  kmeans_lloyd_micro is the
+    package's one IVF trainer.
     """
     emb = load_tables(spark, sf_dir)["embeddings"]
     cents = S.kmeans_lloyd_micro(emb, dim=64, k=8, stride=37, iters=2)
@@ -2435,9 +2280,8 @@ def sim_ann_pq_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart of sim_ann_ivf_lloyd (operators/similarity.
     pq_codebooks_lloyd_micro + pq_topk_micro; everything BIGINT from the
     micro-quantized slices on, so the DuckDB oracle replays training,
-    encoding and ADC scoring bit-for-bit).  Completes the trained-
-    quantizer story for the PQ family next to the engine-specific
-    pyspark.ml tier (sim_ann_pq_trained, contract-gated)."""
+    encoding and ADC scoring bit-for-bit).  pq_codebooks_lloyd_micro is
+    the package's one PQ trainer."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     cbs = S.pq_codebooks_lloyd_micro(emb, dim=64, stride=37, iters=2)
     return S.pq_topk_micro(emb, _query_vectors(emb), cbs, dim=64, k=_TOP_K)
@@ -2814,6 +2658,9 @@ def _ivf_pq_lloyd_sql(
             FROM scored)
         WHERE rk <= {_TOP_K}
     """
+
+
+# --- multimodal plumbing ---------------------------------------------------
 
 
 def mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6762,13 +6609,9 @@ def events_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = E.read_events_stream(spark, sf_dir)
     res = E.run_to_memory(E.sliding_avg(stream), "q_events_stream_sliding")
-    # Gate on the algebraic partials (count, sum): an avg of 2-decimal
-    # values can land exactly on a .xx5 boundary (e.g. 220.49/2), where
-    # cross-engine FP noise flips the oracle's 2-decimal rounding; sums of
-    # 2-decimal values never sit on a boundary.
-    return res.select("window_start", "event_type", "n", "sum_value").orderBy(
-        "window_start", "event_type"
-    )
+    return res.select(
+        "window_start", "event_type", "n", "sum_value", "avg_value"
+    ).orderBy("window_start", "event_type")
 
 
 _EVENTS_STREAM_SLIDING_SQL = f"""
@@ -6780,7 +6623,8 @@ _EVENTS_STREAM_SLIDING_SQL = f"""
         SELECT event_type, value, bucket AS window_start FROM b
         UNION ALL
         SELECT event_type, value, bucket - INTERVAL 30 MINUTE FROM b)
-    SELECT window_start, event_type, count(*) AS n, {unit_sum_sql("value", 2)} AS sum_value
+    SELECT window_start, event_type, count(*) AS n, {unit_sum_sql("value", 2)} AS sum_value,
+           {unit_sum_sql("value", 2)} / count(*) AS avg_value
     FROM x GROUP BY 1, 2 ORDER BY 1, 2
 """
 
@@ -7684,8 +7528,6 @@ QUERIES = {
     "sim_ann_lsh_reranked": sim_ann_lsh_reranked,
     "sim_ann_recall_lsh_reranked": sim_ann_recall_lsh_reranked,
     "sim_ann_ivfpq_curve": sim_ann_ivfpq_curve,
-    "sim_ann_pq_trained": sim_ann_pq_trained,
-    "sim_ann_ivf_trained": sim_ann_ivf_trained,
     "sim_ann_ivf_lloyd": sim_ann_ivf_lloyd,
     "sim_ann_ivf_lloyd_indexed": sim_ann_ivf_lloyd_indexed,
     "sim_ann_pq_lloyd": sim_ann_pq_lloyd,
@@ -7949,8 +7791,6 @@ ORACLE: dict[str, str] = {
     "sim_ann_ivfpq_lloyd_indexed": _ivf_pq_lloyd_sql(),
     "sim_ann_ivfpq_filtered": _ivf_pq_lloyd_sql(cand_filter="e.label = 1"),
     "sim_ann_ivfpq_upserted": _ivf_pq_lloyd_sql(mutated=True),
-    "sim_ann_ivf_trained": _gate_invariants_sql(),
-    "sim_ann_pq_trained": _gate_invariants_sql(),
     "mm_features": _mm_sql(),
     "mm_decode_real": _mm_decode_real_sql(),
     "mm_phash_dedup": _mm_phash_sql(),

@@ -71,14 +71,15 @@ BUCKETS_PER_WRITE_TASK = 4
 
 
 def _write_bucketed(rows: DataFrame, out: str, n_tasks: int) -> None:
-    """The one bucket-partitioned layout write (builds, upsert deltas and
-    purge folds): `n_tasks` write tasks, one directory per t_bucket."""
-    (
-        rows.repartition(n_tasks, "t_bucket")
-        .write.mode("overwrite")
-        .partitionBy("t_bucket")
-        .parquet(out)
-    )
+    """The bucket-partitioned layout write (builds, upsert deltas and purge
+    folds; _write_layout's ranked rows arrive partitioned already):
+    `n_tasks` write tasks, one directory per t_bucket."""
+    _write_partitioned(rows.repartition(n_tasks, "t_bucket"), out)
+
+
+def _write_partitioned(rows: DataFrame, out: str) -> None:
+    """Write rows already hash-partitioned by t_bucket, one task each."""
+    rows.write.mode("overwrite").partitionBy("t_bucket").parquet(out)
 
 
 def _bucket_of(term: str, num_buckets: int) -> int:
@@ -327,12 +328,18 @@ POSTINGS_TF_SCHEMA = _cols(
 DOCLENS_SCHEMA = _cols(doc_id=LongType(), dl=LongType())
 
 
-def _tf_rows(toks: _Tokens, num_buckets: int) -> DataFrame:
-    return (
-        _positional_rows(toks, num_buckets)
-        .groupBy("doc_id", "term", "t_bucket")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+def _tf_rows(
+    toks: _Tokens, num_buckets: int, n_tasks: int | None = None
+) -> DataFrame:
+    """`n_tasks`: hash-partition the token rows by t_bucket into that many
+    partitions before the groupBy, exactly as _write_bucketed would
+    partition the result.  That partitioning already clusters the
+    (doc_id, term, t_bucket) groups, so the aggregate adds no shuffle and
+    its output is written as it stands: one shuffle per ranked write."""
+    rows = _positional_rows(toks, num_buckets)
+    if n_tasks is not None:
+        rows = rows.repartition(n_tasks, "t_bucket")
+    return rows.groupBy("doc_id", "term", "t_bucket").agg(F.count(F.lit(1)).alias("tf"))
 
 
 def _doclens_rows(toks: _Tokens) -> DataFrame:
@@ -569,6 +576,16 @@ _LAYOUT_SCHEMAS = {
 DOCGEN_SCHEMA = _cols(doc_id=LongType(), gen=IntegerType(), deleted=BooleanType())
 
 
+def _write_layout(
+    layout: str, toks: _Tokens, num_buckets: int, out: str, n_tasks: int
+) -> None:
+    """Write one postings layout of `toks` (builds and upsert deltas)."""
+    if layout == "postings_tf":
+        _write_partitioned(_tf_rows(toks, num_buckets, n_tasks), out)
+    else:
+        _write_bucketed(_LAYOUTS[layout](toks, num_buckets), out, n_tasks)
+
+
 def _delta_schema(layout: str) -> StructType:
     """A `<layout>_delta` read: the layout's file columns, then the
     partition columns in path order — gen=N, and t_bucket=M for postings
@@ -753,7 +770,7 @@ def text_index_upsert(
         def _delta_write(layout: str) -> None:
             nb = _read_buckets(spark, path, 32, layout=layout)
             out = os.path.join(_delta_root(path, layout), f"gen={new_gen}")
-            _write_bucketed(_LAYOUTS[layout](toks, nb), out, n_tasks)
+            _write_layout(layout, toks, nb, out, n_tasks)
 
         def _doclens_delta() -> None:
             (
@@ -868,7 +885,7 @@ def text_index_build_all(
 
     def _build(layout: str) -> None:
         out = os.path.join(path, layout)
-        _write_bucketed(_LAYOUTS[layout](toks, num_buckets), out, n_tasks)
+        _write_layout(layout, toks, num_buckets, out, n_tasks)
         _write_meta(spark, path, num_buckets, layout=layout)
 
     def _build_doclens() -> None:

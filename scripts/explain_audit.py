@@ -44,7 +44,6 @@ EXPECT_NESTED = {
     "sim_topk",
     # IVF assignment is definitionally all-vectors × broadcast(centroids)
     "sim_ann_ivf",
-    "sim_ann_ivf_trained",
     "sim_ann_ivf_indexed",
     "sim_ann_ivf_indexed_split",
     "sim_ann_ivf_indexed_append",
@@ -87,7 +86,6 @@ EXPECT_NESTED = {
     # PQ ADC scoring streams all codes past the broadcast per-query lookup
     # maps — the linear-scan-over-codes shape that defines IVF-free PQ
     "sim_ann_pq",
-    "sim_ann_pq_trained",
     # IVF-PQ assignment/probe is all-vectors × broadcast(centroids), like IVF
     "sim_ann_ivfpq",
     # the recall@k gates each contain the brute-force ground-truth leg
@@ -109,8 +107,8 @@ EXPECT_NESTED = {
     # broadcast-model shape) + the brute-force ground-truth leg + 1-row
     # (hits × rows_read) aggregate crossjoins per operating point
     "sim_ann_ivfpq_curve",
-    # the exact-Lloyd tier and the trained-quantizer invariant gates reuse
-    # the same all-vectors × broadcast(model) assignment shape
+    # the exact-Lloyd tier reuses the same all-vectors × broadcast(model)
+    # assignment shape
     "sim_ann_ivf_lloyd",
     "sim_ann_ivf_lloyd_indexed",
     "sim_ann_pq_lloyd",

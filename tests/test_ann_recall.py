@@ -40,11 +40,12 @@ def test_lsh_topk_subset_of_bruteforce_order(spark, sf_dir):
     assert hits >= 1
 
 
-def test_ivf_kmeans_centroids_recall_at_least_mod(spark, sf_dir):
-    """Trained (pyspark.ml KMeans) centroids through the same ivf_topk
-    plumbing must match-or-beat the deterministic mod-id stand-in on
-    recall@5 vs brute force (seeded -> deterministic; measured 0.48 vs
-    0.32 at sf0.001 with ~17 lists, nprobe=2)."""
+def test_ivf_lloyd_centroids_recall_at_least_mod(spark, sf_dir):
+    """The trained IVF tier (exact-integer Lloyd centroids, ivf_topk_micro)
+    must match-or-beat the deterministic mod-id stand-in on recall@5 vs
+    brute force (deterministic; measured 0.48 vs 0.32 at sf0.001 with
+    k=17 requested, nprobe=2; the stride init alone reaches 0.38, and
+    tests/test_lloyd.py pins trained >= init)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -56,9 +57,11 @@ def test_ivf_kmeans_centroids_recall_at_least_mod(spark, sf_dir):
         return len(hits & exact) / len(exact)
 
     r_mod = recall(S.ivf_topk(emb, queries, k=5, centroid_mod=29, nprobe=2))
-    cents = S.kmeans_centroids(emb, k=17, seed=13)
-    assert cents.count() == 17
-    r_trained = recall(S.ivf_topk(emb, queries, k=5, nprobe=2, centroids=cents))
+    cents = S.kmeans_lloyd_micro(emb, dim=64, k=17, stride=37, iters=2)
+    # one centroid per stride-init id present in the corpus (ids 0, 37, …)
+    init_ids = emb.filter((F.col("vec_id") % 37 == 0) & (F.col("vec_id") < 37 * 17))
+    assert [c for c, _ in cents] == list(range(init_ids.count()))
+    r_trained = recall(S.ivf_topk_micro(emb, queries, cents, k=5, nprobe=2))
     assert r_trained >= r_mod > 0
 
 
@@ -109,59 +112,6 @@ def test_pq_adc_ranks_sanely_vs_bruteforce(spark, sf_dir):
     # random 64-d embeddings are adversarial for 4x8 PQ; require evidence of
     # signal, not SOTA recall (measured: 7/25 at sf0.001)
     assert hits >= 2, hits
-
-
-def test_pq_kmeans_codebooks_cut_quantization_error(spark, sf_dir):
-    """Trained (per-subspace KMeans) codebooks must beat the sampled
-    stand-in on the objective KMeans optimizes: mean squared
-    reconstruction (quantization) error (measured 0.80 vs 1.20 at
-    sf0.001).  Recall-vs-cosine is deliberately NOT asserted: on these
-    near-isotropic synthetic embeddings MSE-optimal centers pull toward
-    the mean, compressing the ADC spread, so trained codebooks do not
-    improve cosine recall (a data property, cross-checked with a numpy
-    replica; real clustered embeddings are where training pays, and the
-    residual IVF-PQ composition is implemented as S.ivf_pq_topk).  The trained query path itself is pinned
-    structurally."""
-    import numpy as np
-
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    pdf = emb.toPandas()
-    v = np.stack(pdf.embedding.to_numpy()).astype(np.float64)
-    ids = list(pdf.vec_id.to_numpy())
-    sub = 16
-
-    def mse(rows):
-        cb = {}
-        for m, c, vec in rows:
-            cb.setdefault(m, {})[c] = np.asarray(vec, dtype=np.float64)
-        total = 0.0
-        for m in range(4):
-            sl = v[:, m * sub : (m + 1) * sub]
-            centers = np.stack([cb[m][c] for c in sorted(cb[m])])
-            d = ((sl[:, None, :] - centers[None, :, :]) ** 2).sum(2)
-            total += d.min(1).mean()
-        return total
-
-    sampled_rows = []
-    for c in range(8):
-        vec = v[ids.index(c * 37)]
-        for m in range(4):
-            sampled_rows.append((m, c, vec[m * sub : (m + 1) * sub]))
-    cbs = S.pq_codebooks_kmeans(emb, dim=64)
-    trained_rows = [(r.m, r.c_id, r.c_sub) for r in cbs.collect()]
-    assert mse(trained_rows) < mse(sampled_rows)
-
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    pq = S.pq_topk(emb, queries, dim=64, k=5, codebooks=cbs).collect()
-    by_q: dict[int, list] = {}
-    for r in sorted(pq, key=lambda r: (r.q_id, r.rk)):
-        by_q.setdefault(r.q_id, []).append(r)
-    assert set(by_q) == {0, 1, 2, 3, 4}
-    for rows in by_q.values():
-        assert len(rows) == 5 and len({r.n_id for r in rows}) == 5
-        assert [r.adc_micro for r in rows] == sorted(r.adc_micro for r in rows)
 
 
 def test_ivfpq_structure_and_candidates_come_from_probed_lists(spark, sf_dir):
@@ -240,12 +190,20 @@ def _clustered_fixture(spark, n_clusters=16, n=400, dim=64, sigma=0.15):
 def test_clustered_recall_all_ann_tiers(spark):
     """recall@5 vs brute force on clustered data, per ANN tier.
 
-    Measured on this fixture (seed 7): lsh 0.72, trained-IVF 1.0, mod-IVF
-    1.0, PQ-ADC exact-recall 0.17 but cluster-recall ~1.0 — PQ collapses
-    same-cluster near-twins to identical codes, so it retrieves the right
-    CLUSTER while tie-breaking arbitrarily inside it; that is the designed
-    coarse-quantization behavior, hence the cluster-level assertion.
-    Thresholds carry slack below the measured values."""
+    Measured on this fixture (seed 7): lsh 0.72, mod-IVF 1.0, trained IVF
+    (Lloyd centroids, ivf_topk_micro) 1.0 against the integer-L2 top-5 it
+    ranks by (0.87 against the cosine top-5), trained PQ (Lloyd
+    codebooks, pq_topk_micro) exact-recall 0.17 but cluster-recall 1.0 —
+    PQ collapses same-cluster near-twins to identical codes, so it
+    retrieves the right CLUSTER while tie-breaking arbitrarily inside it;
+    that is the designed coarse-quantization behavior, hence the
+    cluster-level assertion.  Stride 17 seeds the Lloyd inits with one
+    vector of every cluster (17 ≡ 1 mod 16).  Thresholds carry slack
+    below the measured values."""
+    import math
+
+    import numpy as np
+
     n_clusters = 16
     emb = _clustered_fixture(spark, n_clusters=n_clusters)
     queries = emb.filter(F.col("vec_id") < 12).select(
@@ -262,12 +220,26 @@ def test_clustered_recall_all_ann_tiers(spark):
         same = sum(1 for r in rows if r.n_id % n_clusters == r.q_id % n_clusters)
         return same / len(rows)
 
+    # the integer tier ranks by micro-unit L2, so its truth is the exact
+    # integer-L2 top-5 (ties to the smaller id)
+    rows = sorted((int(r["vec_id"]), r["embedding"]) for r in emb.collect())
+    V = np.array(
+        [[math.floor(float(np.float32(x)) * 1e6 + 0.5) for x in vec] for _, vec in rows],
+        dtype=np.int64,
+    )
+    exact_l2 = set()
+    for q in range(12):
+        d = ((V - V[q]) ** 2).sum(axis=1)
+        order = [int(i) for i in np.argsort(d, kind="stable") if i != q]
+        exact_l2 |= {(q, i) for i in order[:5]}
+
     assert recall(S.lsh_bucket_topk(emb, queries, dim=64, k=5, num_planes=6)) >= 0.5
-    cents = S.kmeans_centroids(emb, k=n_clusters, seed=13)
-    assert recall(S.ivf_topk(emb, queries, k=5, nprobe=2, centroids=cents)) >= 0.9
+    cents = S.kmeans_lloyd_micro(emb, dim=64, k=n_clusters, stride=17, iters=2)
+    ivf_lloyd = S.ivf_topk_micro(emb, queries, cents, k=5, nprobe=2).collect()
+    assert len({(r.q_id, r.n_id) for r in ivf_lloyd} & exact_l2) / len(exact_l2) >= 0.9
     assert recall(S.ivf_topk(emb, queries, k=5, centroid_mod=29, nprobe=2)) >= 0.9
-    cbs = S.pq_codebooks_kmeans(emb, dim=64, num_subspaces=4, num_codewords=16)
-    pq = S.pq_topk(emb, queries, dim=64, k=5, codebooks=cbs, num_codewords=16)
+    cbs = S.pq_codebooks_lloyd_micro(emb, dim=64, num_codewords=16, stride=17, iters=2)
+    pq = S.pq_topk_micro(emb, queries, cbs, dim=64, k=5, num_codewords=16)
     assert cluster_recall(pq) >= 0.8
     ivfpq = S.ivf_pq_topk(emb, queries, dim=64, k=5, centroid_mod=29, nprobe=2)
     assert cluster_recall(ivfpq) >= 0.8
@@ -280,9 +252,14 @@ def test_clustered_recall_all_ann_tiers(spark):
 def test_ivf_assign_arrow_matches_expression_assignment(spark):
     """The vectorized Arrow assignment must agree with the expression-fold
     assignment (the oracle-gated face) wherever centroids are separated —
-    clustered fixture: every vector sits near its own center."""
+    clustered fixture: vectors 0..7 lie in eight different clusters, so
+    as centroids they are mutually far apart."""
     emb = _clustered_fixture(spark)
-    cents = S.kmeans_centroids(emb, k=8, seed=13)
+    cents = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_vec"),
+        S.norm(F.col("embedding")).alias("c_norm"),
+    )
     fast = {r.n_id: r.c_list for r in S.ivf_assign_arrow(emb, centroids=cents).collect()}
     # expression form: same ranking ivf_topk uses for its inverted lists
     from pyspark.sql import functions as FX

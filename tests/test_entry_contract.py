@@ -131,3 +131,24 @@ def test_bench_prebuilt_set_matches_ensure_layout_gates():
         sorted(registered - entry.BENCH_PREBUILT),
     )
     assert entry.BENCH_PREBUILT <= entry.BENCH_LIFECYCLE
+
+
+def test_curated_name_lists_name_registered_queries():
+    """Every name in the plan audit's EXPECT_* sets and in the bench's
+    BENCH_SKIP / BENCH_PREBUILT must be a queries() key: a retired or
+    renamed entry would otherwise leave a stale name that silently
+    exempts or skips nothing."""
+    import importlib.util
+    from pathlib import Path
+
+    script = Path(__file__).resolve().parent.parent / "scripts" / "explain_audit.py"
+    spec = importlib.util.spec_from_file_location("explain_audit", script)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    lists = {n: getattr(audit, n) for n in dir(audit) if n.startswith("EXPECT_")}
+    assert lists, "explain_audit.py defines no EXPECT_* sets"
+    lists["BENCH_SKIP"] = entry.BENCH_SKIP
+    lists["BENCH_PREBUILT"] = entry.BENCH_PREBUILT
+    registered = set(entry.queries())
+    stale = {n: sorted(set(v) - registered) for n, v in lists.items() if set(v) - registered}
+    assert not stale, stale

@@ -1,5 +1,6 @@
-"""Exact-integer Lloyd k-means (operators/similarity.kmeans_lloyd_micro):
-the trained-quantizer tier that IS value-gateable.  The DuckDB oracle
+"""Exact-integer Lloyd k-means (operators/similarity.kmeans_lloyd_micro
+and pq_codebooks_lloyd_micro): the one trainer per quantizer, and
+value-gateable.  The DuckDB oracle
 replays the whole training in the gate (pipeline._ivf_lloyd_sql); here an
 independent numpy mirror pins the Spark implementation a third way and the
 classic Lloyd property (within-cluster SS never increases) is asserted on
@@ -80,6 +81,49 @@ def test_lloyd_micro_improves_quantization(spark, emb):
     init = S.kmeans_lloyd_micro(emb, dim=DIM, k=K, stride=STRIDE, iters=0)
     trained = S.kmeans_lloyd_micro(emb, dim=DIM, k=K, stride=STRIDE, iters=2)
     assert wss(trained) < wss(init)
+
+
+def test_pq_lloyd_codebooks_cut_quantization_error(spark, emb):
+    """The trained PQ codebooks (pq_codebooks_lloyd_micro) must beat their
+    stride-sampled init on the objective Lloyd optimizes: mean squared
+    per-subspace quantization error in micro² units (measured 1.20e12 at
+    the init vs 0.83e12 after 2 rounds at sf0.001).  The trained query
+    path (pq_topk_micro) is pinned structurally: k distinct non-self
+    neighbors per query in ascending ADC order."""
+    rows = sorted((int(r["vec_id"]), r["embedding"]) for r in emb.collect())
+    V = np.array(
+        [
+            [math.floor(float(np.float64(x)) * 1e6 + 0.5) for x in vec]
+            for _, vec in rows
+        ],
+        dtype=np.int64,
+    )
+    sub = DIM // 4
+
+    def mse(cbs):
+        total = 0.0
+        for m in range(4):
+            C = np.array([c for mm, _, c in sorted(cbs) if mm == m], dtype=np.int64)
+            sl = V[:, m * sub : (m + 1) * sub]
+            total += ((sl[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).min(axis=1).mean()
+        return total
+
+    init = S.pq_codebooks_lloyd_micro(emb, dim=DIM, stride=STRIDE, iters=0)
+    trained = S.pq_codebooks_lloyd_micro(emb, dim=DIM, stride=STRIDE, iters=2)
+    assert mse(trained) < mse(init)
+
+    queries = emb.filter(emb.vec_id < 5).selectExpr("vec_id AS q_id", "embedding AS q_vec")
+    by_q: dict[int, list] = {}
+    for r in sorted(
+        S.pq_topk_micro(emb, queries, trained, dim=DIM, k=5).collect(),
+        key=lambda r: (r.q_id, r.rk),
+    ):
+        by_q.setdefault(r.q_id, []).append(r)
+    assert set(by_q) == {0, 1, 2, 3, 4}
+    for q, rs in by_q.items():
+        assert len(rs) == 5 and len({r.n_id for r in rs}) == 5
+        assert all(r.n_id != q for r in rs)
+        assert [r.adc_q for r in rs] == sorted(r.adc_q for r in rs)
 
 
 def test_ivf_topk_micro_structure(spark, emb):

@@ -33,22 +33,22 @@ def _queries(emb):
 def test_ivf_topk_invariant_under_centroid_order(spark, sf_dir):
     """Reversing the centroid frame's row order must not change one row of
     the result — the per-row argmax fold and the probe sort both tie-break
-    on c_id, so collect_list order is irrelevant."""
+    on c_id, so collect_list order is irrelevant.  Runs ivf_topk's own
+    model / assign / serve core over both centroid orders."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
-    fwd = S.ivf_topk(emb, _queries(emb), k=5, nprobe=2, centroids=cents)
-    rev = S.ivf_topk(
-        emb,
-        _queries(emb),
-        k=5,
-        nprobe=2,
-        centroids=cents.orderBy(F.col("c_id").desc()),
-    )
+    cents = S._mod_centroids(emb, "embedding", "vec_id", 29)
+
+    def serve(cents):
+        cmodel = S._ivf_model(cents)
+        lists = S._ivf_assign(emb, cmodel, "embedding", "vec_id")
+        return S._ivf_cosine_rank(lists, _queries(emb), cmodel, k=5, nprobe=2)
+
+    fwd = serve(cents)
+    rev = serve(cents.orderBy(F.col("c_id").desc()))
     assert sorted(map(tuple, fwd.collect())) == sorted(map(tuple, rev.collect()))
+    assert sorted(map(tuple, fwd.collect())) == sorted(
+        map(tuple, S.ivf_topk(emb, _queries(emb), k=5, nprobe=2).collect())
+    )
 
 
 def test_pq_encode_matches_python_argmin(spark, sf_dir):
@@ -114,21 +114,27 @@ def test_pq_encode_matches_python_argmin(spark, sf_dir):
 def test_pq_codebook_guards(spark, sf_dir):
     """The three PQ codebook guards fail loudly instead of scoring with
     aliased ADC keys: a float codebook c_id >= num_codewords raises when
-    the plan runs, a codebook missing a subspace trips the model's
-    coverage assert, and the integer serve rejects a bad c_id at build."""
+    the ADC map is built, a codebook missing a subspace trips the model's
+    coverage assert, and the integer serve rejects a bad c_id at build.
+    The float guards sit in the model and ADC-map internals every float PQ
+    serve (pq_topk, the IVFADC residual tier) reads."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     M, K, sub = 4, 8, 16
 
     def books(rows):
         return spark.createDataFrame(rows, "m long, c_id long, c_sub array<double>")
 
+    def adc_maps(codebooks):
+        cb1 = S._pq_model_1row(codebooks, M)
+        return _queries(emb).crossJoin(cb1).select(S._pq_adc_map("q_vec", sub, K))
+
     too_big = books([(m, c, [float(c)] * sub) for m in range(M) for c in range(K + 1)])
     aliased = r">= num_codewords 8 — ADC keys would alias adjacent subspaces"
     with pytest.raises(Exception, match=aliased):
-        S.pq_topk(emb, _queries(emb), dim=64, k=3, codebooks=too_big).collect()
+        adc_maps(too_big).collect()
     no_m3 = books([(m, c, [float(c)] * sub) for m in range(M - 1) for c in range(K)])
     with pytest.raises(Exception, match="no entries for some subspace"):
-        S.pq_topk(emb, _queries(emb), dim=64, k=3, codebooks=no_m3).collect()
+        adc_maps(no_m3).collect()
     micro = [(m, c, [c] * sub) for m in range(M) for c in range(K + 1)]
     with pytest.raises(ValueError, match="alias adjacent subspaces"):
         S.pq_topk_micro(emb, _queries(emb), micro, dim=64, k=3)

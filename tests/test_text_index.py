@@ -1,6 +1,8 @@
 """Persisted inverted text index (sources/text_index): build, prune, AND."""
 
 import glob
+import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -279,6 +281,36 @@ def test_upsert_phrase_and_ranked_equal_rebuild(spark, tmp_path):
     assert [(r["doc_id"], r["score"]) for r in got] == [
         (r["doc_id"], r["score"]) for r in want
     ]
+
+
+def test_every_layout_write_shuffles_once(spark, tmp_path, monkeypatch):
+    """Each postings layout write — a build of all three layouts and an
+    upsert delta — plans exactly ONE shuffle exchange.  The ranked layout
+    would otherwise pay two, the tf groupBy's (doc_id, term, t_bucket)
+    shuffle and the write's t_bucket repartition: _tf_rows partitions the
+    token rows the way the write does, and the write keeps that
+    partitioning.  The upsert here writes single-task deltas, where the
+    planner would not drop a second SinglePartition exchange."""
+    writes = []
+    real = TI._write_partitioned
+
+    def spy(rows, out):
+        writes.append((out, rows))
+        real(rows, out)
+
+    monkeypatch.setattr(TI, "_write_partitioned", spy)
+    path = str(tmp_path / "ti")
+    TI.text_index_build_all(_corpus(spark), path, num_buckets=8)
+    _apply_mutations(spark, path)
+    written = {os.path.relpath(out, path).split(os.sep)[0] for out, _ in writes}
+    assert written == {
+        "postings", "postings_pos", "postings_tf",
+        "postings_delta", "postings_pos_delta", "postings_tf_delta",
+    }
+    for out, df in writes:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # shuffles only: BroadcastExchange / ReusedExchange do not count
+        assert len(re.findall(r"(?<![A-Za-z])Exchange ", plan)) == 1, (out, plan)
 
 
 def test_purge_folds_overlay_and_is_idempotent(spark, tmp_path):
