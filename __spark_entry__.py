@@ -8,6 +8,7 @@ value-hash -> CORRECTNESS_r{N}.json).
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -17,7 +18,22 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from codecdb_queryengine_spark.catalog import plan_once
-from codecdb_queryengine_spark.queries import extensions, pipeline, sqltext, ssb, tpch
+from codecdb_queryengine_spark.queries import (
+    ann,
+    dedup,
+    events,
+    extensions,
+    media,
+    search,
+    sqltext,
+    ssb,
+    text,
+    tpch,
+)
+
+# Scenario modules beyond TPC-H/SSB, in registry order.  Each one's DuckDB
+# oracle text is the same-named module of codecdb_queryengine_spark/oracle/.
+_SCENARIOS = (text, dedup, search, ann, media, events, extensions)
 
 # Queries bench.py does NOT time (correctness-gated like everything else):
 # the SQL-text variants compile to the same Catalyst physical plans as the
@@ -149,6 +165,8 @@ BENCH_LIFECYCLE = frozenset({
     "emb_stream_ivfpq_ingest",
     "emb_stream_mutations",
     "emb_stream_pq_mutations",
+    "events_stream_files",
+    "events_stream_rollup",
     "ext_zorder_lifecycle",
     "graph_cc_chain_ckpt",
     "graph_pagerank_ckpt",
@@ -167,7 +185,7 @@ BENCH_LIFECYCLE = frozenset({
 
 
 # Pure-serve lifecycle gates that route their base-layout build through
-# pipeline._ensure_layout (r9 verdict item 3): under bench.py's
+# scenario._ensure_layout (r9 verdict item 3): under bench.py's
 # SPARK_GRAFT_PREBUILT_LAYOUTS=1 the base builds once per process and the
 # timed number is the SERVE, not N identical rebuilds.  Mutation / crash /
 # stream / roundtrip gates are deliberately NOT here — their rebuild IS the
@@ -198,7 +216,7 @@ BENCH_PREBUILT = frozenset({
 # kept analyzed plan.  Index, stream, mutation and training entries build
 # on every call.  The SQL-text twins stay uncached: bench.py times their
 # parse and analysis on purpose (_SQL_KEEP).
-PLAN_ONCE = tpch.PLAN_ONCE | ssb.PLAN_ONCE | pipeline.PLAN_ONCE | extensions.PLAN_ONCE
+PLAN_ONCE = tpch.PLAN_ONCE | ssb.PLAN_ONCE | frozenset().union(*(m.PLAN_ONCE for m in _SCENARIOS))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -212,8 +230,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     merged.update(tpch.QUERIES)
     merged.update(ssb.QUERIES)
-    merged.update(pipeline.QUERIES)
-    merged.update(extensions.QUERIES)
+    for mod in _SCENARIOS:
+        twice = merged.keys() & mod.QUERIES.keys()
+        assert not twice, f"{mod.__name__} re-registers {sorted(twice)}"
+        merged.update(mod.QUERIES)
     # A *_sql name registered by a non-sqltext module would be silently
     # shadowed by the generated variant — refuse instead.
     overlap = sqltext.QUERIES.keys() & merged.keys()
@@ -231,7 +251,13 @@ def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
     out.update(tpch.ORACLE)
     out.update(ssb.ORACLE)
-    out.update(pipeline.ORACLE)
-    out.update(extensions.ORACLE)
+    # Imported here, not at module load: running the engine needs no DuckDB.
+    for scenario in _SCENARIOS:
+        mod = importlib.import_module(
+            "codecdb_queryengine_spark.oracle." + scenario.__name__.rsplit(".", 1)[1]
+        )
+        twice = out.keys() & mod.ORACLE.keys()
+        assert not twice, f"{mod.__name__} re-registers {sorted(twice)}"
+        out.update(mod.ORACLE)
     out.update(sqltext.ORACLE)
     return out

@@ -3,8 +3,8 @@
 The reference opens each Parquet file with an explicit column subset
 (ParquetTable::Open, reference: cpp/src/lqf/data_model.h:482-484); in Spark
 column pruning is automatic, so the catalog just exposes the full tables and
-lets Catalyst prune.  Tables follow TESTDATA.md; `lineorder` and `dates` are
-derived views giving the SSB star schema over the same data.
+lets Catalyst prune.  Tables follow TESTDATA.md; the SSB star schema runs
+over the same tables (queries/ssb.py builds its fact and date columns).
 """
 
 from __future__ import annotations
@@ -280,32 +280,3 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables
-
-
-def lineorder(tables: dict[str, DataFrame]) -> DataFrame:
-    """SSB-style denormalized fact view: lineitem ⋈ orders.
-
-    The reference ships a separate SSB corpus (cpp/src/lqf/ssb/ssbquery.h:17-98,
-    fact table `lineorder`); the driver testdata has only the TPC-H-ish tables,
-    so SSB queries run over this derived view.  `lo_revenue` follows the SSB
-    definition revenue = extendedprice * (1 - discount).
-    """
-    li, o = tables["lineitem"], tables["orders"]
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("l_orderkey").alias("lo_orderkey"),
-            F.col("l_linenumber").alias("lo_linenumber"),
-            F.col("o_custkey").alias("lo_custkey"),
-            F.col("l_partkey").alias("lo_partkey"),
-            F.col("l_suppkey").alias("lo_suppkey"),
-            F.col("o_orderdate").alias("lo_orderdate"),
-            F.col("o_orderpriority").alias("lo_orderpriority"),
-            F.col("l_quantity").alias("lo_quantity"),
-            F.col("l_extendedprice").alias("lo_extendedprice"),
-            F.col("o_totalprice").alias("lo_ordtotalprice"),
-            F.col("l_discount").alias("lo_discount"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("lo_revenue"),
-            F.col("l_tax").alias("lo_tax"),
-        )
-    )

@@ -9,7 +9,7 @@ counting, shingling, fingerprinting.
 Design rule: every function here returns a *Column expression* built from
 pyspark.sql.functions only — JVM-side, whole-stage-codegen friendly, zero
 Python row-at-a-time UDFs.  Each has an exact DuckDB-SQL mirror used by the
-correctness oracle (queries/pipeline.py), so the implementations are pinned
+correctness oracle (oracle/fragments.py), so the implementations are pinned
 cross-engine.
 
 All hashing is md5-based: md5 is bit-identical across Spark, DuckDB and

@@ -22,7 +22,7 @@ is TPC-H/SSB); these are driver-mandated extensions, built Spark-first:
                      which slice of a 100 TB crawl to train on.
 
 Everything is pure `pyspark.sql.functions` column algebra so each operator
-has an exact DuckDB mirror in queries/pipeline.py.
+has an exact DuckDB mirror in oracle/text.py.
 """
 
 from __future__ import annotations
@@ -289,27 +289,6 @@ def lm_scores(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
 # --- deterministic sampling / mixture materialization -------------------------
 
 
-def sample_hash(
-    df: DataFrame,
-    key_col: str,
-    keep_per_10k: int,
-    salt: str = "sample|",
-) -> DataFrame:
-    """Deterministic hash sampling: keep rows whose content-stable md5
-    bucket (of the key, mod 10,000) falls under `keep_per_10k`.
-
-    The sampling operator a training pipeline actually wants is not
-    TABLESAMPLE/rand(): membership must be reproducible across runs,
-    independent of partitioning, and stable under corpus growth (a row's
-    fate never changes when neighbors arrive — the docs_train_split
-    argument).  A pure filter projection: no shuffle, no state, pushes
-    into the scan's codegen stage at any corpus size."""
-    if not 0 <= keep_per_10k <= 10_000:
-        raise ValueError(f"keep_per_10k {keep_per_10k} outside [0, 10000]")
-    b = F.pmod(T.md5_slice32(salt, F.col(key_col).cast("string")), F.lit(10_000))
-    return df.filter(b < keep_per_10k)
-
-
 def sample_stratified(
     df: DataFrame,
     key_col: str,
@@ -318,11 +297,17 @@ def sample_stratified(
     default_per_10k: int = 10_000,
     salt: str = "sample|",
 ) -> DataFrame:
-    """Per-stratum deterministic sampling — the corpus-rebalancing pass
-    (downsample overrepresented languages/sources to target proportions).
-    Same hash discipline as sample_hash with a per-stratum threshold
-    (unlisted strata keep `default_per_10k`); still one pure filter, no
-    shuffle, no per-stratum scans."""
+    """Per-stratum deterministic hash sampling — the corpus-rebalancing
+    pass (downsample overrepresented languages/sources to target
+    proportions): keep rows whose content-stable md5 bucket (of the key,
+    mod 10,000) falls under their stratum's threshold (unlisted strata
+    keep `default_per_10k`).
+
+    The sampling a training pipeline wants is not TABLESAMPLE/rand():
+    membership must be reproducible across runs, independent of
+    partitioning, and stable under corpus growth (a row's fate never
+    changes when neighbors arrive — the docs_train_split argument).  One
+    pure filter projection: no shuffle, no state, no per-stratum scans."""
     for s, r in rates_per_10k.items():
         if not 0 <= r <= 10_000:
             raise ValueError(f"rate for stratum {s!r} outside [0, 10000]: {r}")
@@ -345,7 +330,7 @@ def corpus_mix(
     (num mod den)/den fraction — the epoch-weighting step that turns
     mixture WEIGHTS (docs_mixture_weights computes those) into an actual
     training corpus.  Weights are exact rationals, the fractional copy is
-    the same content-stable md5 draw as sample_hash, and the output
+    the same content-stable md5 draw as sample_stratified, and the output
     carries the 0-based `epoch` of each copy, so the materialization is
     bit-reproducible and oracle-replayable.  Unlisted strata keep weight
     1.  Plan shape: one projection + explode(sequence) — rows scale with
@@ -525,7 +510,7 @@ def gumbel_topk(
     top k, which draws k items WITHOUT replacement with probability
     proportional to their (softmax) weights.
 
-    The noise is deterministic and content-stable (the sample_hash
+    The noise is deterministic and content-stable (the sample_stratified
     argument — a row's draw never changes with partitioning or corpus
     growth): u = (md5_slice32(salt, id) + 0.5) / 2^32 ∈ (0,1), then the
     standard inverse-CDF g = −ln(−ln u), micro-quantized through the one

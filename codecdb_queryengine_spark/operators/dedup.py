@@ -34,7 +34,7 @@ SURVEY.md §2); these are the driver-mandated extensions, built Spark-first:
                        docs_dup_spans' measurement.
 
 Everything is built from pyspark.sql.functions so each operator has an
-exact DuckDB mirror in queries/pipeline.py.
+exact DuckDB mirror in oracle/dedup.py.
 """
 
 from __future__ import annotations

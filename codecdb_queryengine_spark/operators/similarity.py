@@ -1494,6 +1494,19 @@ def _micro_adc_map(vec: str, cbs: list, sub: int, num_codewords: int) -> Column:
     return F.expr(f"map_from_entries(array({entries}))")
 
 
+def _check_stride_sample(ids, k: int, stride: int) -> None:
+    """A Lloyd init is the stride sample ids 0, stride, …, (k−1)·stride;
+    when the corpus lacks some of them, training would silently return
+    fewer than `k` centroids (and every probe sized against `k` would be
+    wrong), so refuse instead."""
+    ids = sorted(ids)
+    if len(ids) < k:
+        raise ValueError(
+            f"Lloyd init needs k={k} stride-sample ids (0, {stride}, …, "
+            f"{(k - 1) * stride}) but stride={stride} found {len(ids)}: {ids}"
+        )
+
+
 def kmeans_lloyd_micro(
     vectors: DataFrame,
     vec_col: str = "embedding",
@@ -1515,7 +1528,8 @@ def kmeans_lloyd_micro(
     zero round is identical in Spark, DuckDB and this driver-side mirror.
     Init = the deterministic stride sample (ids 0, stride, …, (k−1)·stride),
     i.e. the same training-free stand-in the untrained tier uses — after
-    `iters` Lloyd rounds the centers are genuinely data-adapted.
+    `iters` Lloyd rounds the centers are genuinely data-adapted.  Raises
+    ValueError when the sample (or `init_cents`) holds fewer than k ids.
 
     Scale shape: per iteration ONE pass over the corpus (map-side
     literal-model argmin expression, no N×K shuffle) + ONE k×(dim+1)-cell
@@ -1549,6 +1563,7 @@ def kmeans_lloyd_micro(
             ).collect()
         )
     try:
+        _check_stride_sample([c * stride for c, _ in cents], k, stride)
         cents = _lloyd_rounds(spark, vm, (), cents, dim, iters)
     finally:
         if iters > 1:
@@ -1678,7 +1693,8 @@ def pq_codebooks_lloyd_micro(
 
     Per round: ONE broadcast pass over all (vector, subspace) slices +
     ONE (num_subspaces·k)×(sub+1)-cell aggregation; the 32-row model is
-    collected per round.  Returns [(m, c_id, c_sub_micro)] rows.
+    collected per round.  Returns [(m, c_id, c_sub_micro)] rows; raises
+    ValueError when the stride sample holds fewer than num_codewords ids.
     """
     sub = _subspace_width(dim, num_subspaces)
     vm = _subspace_slices(
@@ -1695,6 +1711,7 @@ def pq_codebooks_lloyd_micro(
     cbs = sorted(
         (int(r["m"]), int(r["c_id"]), [int(x) for x in r["c_sub"]]) for r in init
     )
+    _check_stride_sample({c * stride for _, c, _ in cbs}, num_codewords, stride)
     # operator-owned cache lifetime: the sliced frame feeds every Lloyd
     # round — persist for the loop, release before returning
     if iters > 1:
@@ -1826,7 +1843,9 @@ def ivfpq_train_micro(
     the tiny model pair `(cents, cbs)` — cents = [(c_id, vec_micro)],
     cbs = [(m, c_id, c_sub_micro)] — the driver-side artifacts
     ivfpq_encode_micro / ivfpq_rank_micro (and the persisted index build)
-    consume.  See ivf_pq_topk_lloyd_micro for the exactness story."""
+    consume.  See ivf_pq_topk_lloyd_micro for the exactness story.  Raises
+    ValueError when the shared stride sample holds fewer than
+    max(k_coarse, num_codewords) ids."""
     sub = _subspace_width(dim, num_subspaces)
     spark = vectors.sparkSession
     # ONE stride-sample collect feeds BOTH quantizers' inits (r12; was two
@@ -1847,6 +1866,7 @@ def ivfpq_train_micro(
             (F.col("n_id") % stride == 0) & (F.col("n_id") < stride * n_sample)
         ).collect()
     }
+    _check_stride_sample(sample, n_sample, stride)
     cents = kmeans_lloyd_micro(
         vectors, vec_col=vec_col, id_col=id_col, dim=dim, k=k_coarse,
         stride=stride, iters=iters,

@@ -1,6 +1,12 @@
 """Local mirror of the driver's correctness gate: Spark result vs DuckDB
 oracle on the same parquet, order-insensitive.
 
+The oracle text itself lives beside this harness, one module per query
+domain (text, dedup, search, ann, media, events, extensions; shared SQL
+mirrors in fragments.py), each with an ORACLE
+mapping.  Those modules import the engine's scenario constants; no engine
+module imports this package.
+
 Precision model (r3 post-mortem): the driver hashes values at full
 precision — the old 2-decimal rounding here certified queries the driver
 then failed (sim_topk diverged in the 6th decimal).  The local gate is now

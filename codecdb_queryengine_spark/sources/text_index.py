@@ -257,22 +257,13 @@ POSTINGS_POS_SCHEMA = _cols(
 
 
 def _positional_rows(toks: _Tokens, num_buckets: int) -> DataFrame:
-    return toks.frame.select(
-        toks.doc_id, F.posexplode(toks.tokens).alias("pos", "term")
-    ).withColumn("t_bucket", _bucket(num_buckets))
-
-
-def positional_postings_of(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_buckets: int = 32,
-) -> DataFrame:
     """(doc_id, pos, term, t_bucket): EVERY token occurrence with its
     0-based position — the positional layout phrase queries need (the
     distinct layout answers AND/OR membership but cannot see adjacency).
     ~n_tokens rows instead of distinct-terms rows; same bucketing."""
-    return _positional_rows(_tokenized(docs, text_col, id_col), num_buckets)
+    return toks.frame.select(
+        toks.doc_id, F.posexplode(toks.tokens).alias("pos", "term")
+    ).withColumn("t_bucket", _bucket(num_buckets))
 
 
 def text_index_build_positional(
@@ -331,7 +322,10 @@ DOCLENS_SCHEMA = _cols(doc_id=LongType(), dl=LongType())
 def _tf_rows(
     toks: _Tokens, num_buckets: int, n_tasks: int | None = None
 ) -> DataFrame:
-    """`n_tasks`: hash-partition the token rows by t_bucket into that many
+    """(doc_id, term, tf, t_bucket): per-document term frequencies, the
+    ranked layout's rows for both the batch build and the upsert deltas.
+
+    `n_tasks`: hash-partition the token rows by t_bucket into that many
     partitions before the groupBy, exactly as _write_bucketed would
     partition the result.  That partitioning already clusters the
     (doc_id, term, t_bucket) groups, so the aggregate adds no shuffle and
@@ -347,18 +341,6 @@ def _doclens_rows(toks: _Tokens) -> DataFrame:
     # (size() of a NULL array is -1 with ANSI off)
     dl = F.coalesce(F.array_size(toks.tokens), F.lit(0)).cast("long").alias("dl")
     return toks.frame.select(toks.doc_id, dl)
-
-
-def tf_postings_of(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_buckets: int = 32,
-) -> DataFrame:
-    """(doc_id, term, tf, t_bucket): per-document term frequencies — the
-    ranked layout's row shape.  Shared by the batch build and the upsert
-    delta writer so the two paths can never tokenize differently."""
-    return _tf_rows(_tokenized(docs, text_col, id_col), num_buckets)
 
 
 def text_index_build_ranked(

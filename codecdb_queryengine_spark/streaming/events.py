@@ -3,7 +3,7 @@
 The reference has no stream processing (SURVEY.md §2.8 — its `stream.h` is
 an internal lazy-iterator utility, reference: cpp/src/lqf/stream.h:149,229);
 this module is the driver-mandated extension.  Batch twins of these
-aggregations live in queries/pipeline.py (events_window / events_sessionize)
+aggregations live in queries/events.py (events_window / events_sessionize)
 so the correctness oracle still applies; here the same transformations run
 against an unbounded source with watermarks.
 
@@ -133,7 +133,7 @@ def sliding_avg(events: DataFrame, window: str = "1 hour", slide: str = "30 minu
 
 def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native session windows per user (gap-based), the streaming twin of
-    the batch lag/cumsum sessionization in queries/pipeline.py."""
+    the batch lag/cumsum sessionization in queries/events.py."""
     return (
         events.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", gap), "user_id")

@@ -44,7 +44,7 @@ def test_ivf_lloyd_centroids_recall_at_least_mod(spark, sf_dir):
     """The trained IVF tier (exact-integer Lloyd centroids, ivf_topk_micro)
     must match-or-beat the deterministic mod-id stand-in on recall@5 vs
     brute force (deterministic; measured 0.48 vs 0.32 at sf0.001 with
-    k=17 requested, nprobe=2; the stride init alone reaches 0.38, and
+    k=14, nprobe=2; the stride init alone reaches 0.38, and
     tests/test_lloyd.py pins trained >= init)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -57,9 +57,9 @@ def test_ivf_lloyd_centroids_recall_at_least_mod(spark, sf_dir):
         return len(hits & exact) / len(exact)
 
     r_mod = recall(S.ivf_topk(emb, queries, k=5, centroid_mod=29, nprobe=2))
-    cents = S.kmeans_lloyd_micro(emb, dim=64, k=17, stride=37, iters=2)
-    # one centroid per stride-init id present in the corpus (ids 0, 37, …)
-    init_ids = emb.filter((F.col("vec_id") % 37 == 0) & (F.col("vec_id") < 37 * 17))
+    cents = S.kmeans_lloyd_micro(emb, dim=64, k=14, stride=37, iters=2)
+    # one centroid per stride-init id (ids 0, 37, …, 13·37)
+    init_ids = emb.filter((F.col("vec_id") % 37 == 0) & (F.col("vec_id") < 37 * 14))
     assert [c for c, _ in cents] == list(range(init_ids.count()))
     r_trained = recall(S.ivf_topk_micro(emb, queries, cents, k=5, nprobe=2))
     assert r_trained >= r_mod > 0
@@ -292,7 +292,7 @@ def test_recall_gates_pin_quality_values(spark, sf_dir):
     for ANN, hence the honest low absolutes; the relative order
     (full-precision IVF above the code-quantized and bucket-cut tiers)
     is the substantive invariant."""
-    from codecdb_queryengine_spark.queries import pipeline as P
+    from codecdb_queryengine_spark.queries import ann
 
     expected = {
         "sim_ann_recall_ivf": {0: (10, 1.0), 1: (0, 0.0), 2: (4, 0.4),
@@ -308,7 +308,7 @@ def test_recall_gates_pin_quality_values(spark, sf_dir):
     means = {}
     per_q = {}
     for name, want in expected.items():
-        rows = P.QUERIES[name](spark, sf_dir).collect()
+        rows = ann.QUERIES[name](spark, sf_dir).collect()
         got = {r.q_id: (r.hits, r.recall_at_10) for r in rows}
         assert got == want, f"{name}: {got}"
         means[name] = sum(v[1] for v in got.values()) / len(got)
@@ -332,7 +332,7 @@ def test_two_stage_rerank_flat_tiers(spark, sf_dir):
     top-10 of the SAME shortlist — the guarantee the rerank provides by
     construction (it keeps the truly nearest 10 of the R candidates, so
     no stage-1 order over those candidates can beat it)."""
-    from codecdb_queryengine_spark.queries import pipeline as P
+    from codecdb_queryengine_spark.queries import ann
 
     expected = {
         "sim_ann_recall_ivf_reranked": {0: (10, 1.0), 1: (2, 0.2),
@@ -344,7 +344,7 @@ def test_two_stage_rerank_flat_tiers(spark, sf_dir):
     }
     got = {}
     for name, want in expected.items():
-        rows = P.QUERIES[name](spark, sf_dir).collect()
+        rows = ann.QUERIES[name](spark, sf_dir).collect()
         got[name] = {r.q_id: (r.hits, r.recall_at_10) for r in rows}
         assert got[name] == want, f"{name}: {got[name]}"
 
@@ -352,7 +352,7 @@ def test_two_stage_rerank_flat_tiers(spark, sf_dir):
     # hits, lsh 4->7 at sf0.001)
     single = {}
     for name in ("sim_ann_recall_ivf", "sim_ann_recall_lsh"):
-        rows = P.QUERIES[name](spark, sf_dir).collect()
+        rows = ann.QUERIES[name](spark, sf_dir).collect()
         single[name] = sum(r.hits for r in rows)
     assert sum(h for h, _ in got["sim_ann_recall_ivf_reranked"].values()) > \
         single["sim_ann_recall_ivf"]
@@ -395,9 +395,9 @@ def test_ivfpq_operating_curve_pinned(spark, sf_dir):
     noise impostors competing for the R ADC slots — visible in the pinned
     values (nprobe 18, R=20 scores 0.20 under nprobe 1's 0.24), the
     honest ADC artifact the curve exists to expose."""
-    from codecdb_queryengine_spark.queries import pipeline as P
+    from codecdb_queryengine_spark.queries import ann
 
-    rows = P.QUERIES["sim_ann_ivfpq_curve"](spark, sf_dir).collect()
+    rows = ann.QUERIES["sim_ann_ivfpq_curve"](spark, sf_dir).collect()
     got = {(r.nprobe, r.r_shortlist): (r.hits, r.recall_at_10, r.rows_read)
            for r in rows}
     assert got == {

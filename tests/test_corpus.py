@@ -62,7 +62,7 @@ def test_decontaminate_matches_the_oracle_mirror(spark):
     inputs included."""
     import duckdb
 
-    from codecdb_queryengine_spark.queries.pipeline import _DECONTAM_SQL
+    from codecdb_queryengine_spark.oracle.text import _DECONTAM_SQL
 
     rows = [(i, f"w{i} common a b c tail{i % 3}") for i in range(1, 9)] + [
         (9, "a b"),  # too short: no shingles
@@ -86,35 +86,40 @@ def test_decontaminate_matches_the_oracle_mirror(spark):
 
 
 def test_stream_tmpdir_reaps_dead_and_own_dirs(tmp_path, monkeypatch):
+    """_scratch_dir reaps only dead processes' directories and wipes its
+    own on every fresh call."""
     import os
     import tempfile
 
-    from codecdb_queryengine_spark.queries.pipeline import _stream_tmpdir
+    from codecdb_queryengine_spark.queries import scenario
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    dead = tmp_path / "sg_test_prefix_999999999_abcd1234"  # no such pid
+    monkeypatch.setattr(scenario, "_SCRATCH", {})
+    dead = tmp_path / "codecdb_test_kind_sf_abcd1234_999999999"  # no such pid
     dead.mkdir()
     (dead / "junk").write_text("x")
-    # A sibling family whose prefix EXTENDS ours must never be touched —
-    # its pid slot would misparse ('v2') and a naive reaper would delete a
-    # live process's checkpoint.
-    sibling = tmp_path / f"sg_test_prefix_v2_{os.getpid()}_cafe0000"
+    # A live directory of a kind that EXTENDS ours matches our glob and
+    # must never be touched: only the pid decides.
+    sibling = tmp_path / f"codecdb_test_kind_v2_sf_cafe0000_{os.getpid()}"
     sibling.mkdir()
-    alive = tmp_path / f"sg_test_prefix_{os.getpid()}_deadbeef"  # other sf_dir,
+    alive = tmp_path / f"codecdb_test_kind_other_deadbeef_{os.getpid()}"  # other sf_dir,
     alive.mkdir()  # same live pid -> must survive
-    base = _stream_tmpdir("sg_test_prefix", "/some/sf")
+    base = scenario._scratch_dir("test_kind", "/some/sf", fresh=True)
     assert not dead.exists()
     assert sibling.exists()
     assert alive.exists()
     assert base.startswith(str(tmp_path))
-    # our own (fresh) dir is wiped, not pre-created
-    assert not os.path.exists(base)
+    # our own dir is wiped on every fresh call, not resumed
+    with open(os.path.join(base, "junk"), "w") as fh:
+        fh.write("x")
+    assert scenario._scratch_dir("test_kind", "/some/sf", fresh=True) == base
+    assert os.listdir(base) == []
 
 
 def test_pack_chunks_conserve_tokens(spark, sf_dir):
     """Chunk occupancy must conserve tokens: per bucket, the clipped
     contributions sum back to the bucket's total token count."""
-    from codecdb_queryengine_spark.queries.pipeline import (
+    from codecdb_queryengine_spark.queries.text import (
         docs_pack_chunks,
         docs_pack_sequences,
     )
@@ -256,7 +261,7 @@ def test_chunk_overlap_oracle_pair_drops_null_text(spark):
     import pandas as pd
 
     from codecdb_queryengine_spark.operators.corpus import chunk_sliding
-    from codecdb_queryengine_spark.queries.pipeline import _chunk_overlap_sql
+    from codecdb_queryengine_spark.oracle.text import _chunk_overlap_sql
 
     rows = [(0, "a b c d e f g"), (1, None), (2, "x y")]
     con = duckdb.connect()
@@ -365,9 +370,9 @@ def test_dsir_gate_enriches_target_domain(spark, sf_dir):
     sample is 34/50 target-language vs the corpus' 38.6% base rate —
     importance resampling measurably pulls the sample toward the target
     domain even through the Gumbel noise."""
-    from codecdb_queryengine_spark.queries import pipeline as P
+    from codecdb_queryengine_spark.queries import text
 
-    rows = P.QUERIES["docs_dsir_sample"](spark, sf_dir).collect()
+    rows = text.QUERIES["docs_dsir_sample"](spark, sf_dir).collect()
     assert len(rows) == 50
     n_target = sum(1 for r in rows if r.is_target)
     assert n_target == 34

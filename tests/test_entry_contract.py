@@ -48,13 +48,15 @@ def test_no_duplicate_registry_keys_in_module_sources():
     key, so registering two different queries under one name — or defining
     two functions with the same name in one module — ships whichever comes
     later with no error (this nearly happened with docs_sample_stratified).
-    Scan each query module's source for duplicate dict keys and duplicate
-    top-level def names."""
+    Scan each query module's and each oracle text module's source for
+    duplicate dict keys and duplicate top-level def names."""
     import re
     from pathlib import Path
 
-    qdir = Path("codecdb_queryengine_spark/queries")
-    for mod in sorted(qdir.glob("*.py")):
+    pkg = Path("codecdb_queryengine_spark")
+    mods = sorted(pkg.glob("queries/*.py")) + sorted(pkg.glob("oracle/*.py"))
+    assert len(mods) > len(list(pkg.glob("queries/*.py")))
+    for mod in mods:
         src = mod.read_text()
         defs = re.findall(r"^def (\w+)\(", src, re.M)
         dupes = {d for d in defs if defs.count(d) > 1}
@@ -66,6 +68,46 @@ def test_no_duplicate_registry_keys_in_module_sources():
             keys = re.findall(r'^\s{4}"([^"]+)":', m.group(1), re.M)
             kd = {k for k in keys if keys.count(k) > 1}
             assert not kd, f"{mod.name} {dict_name}: duplicate keys {sorted(kd)}"
+
+
+def test_oracle_text_lives_outside_the_engine():
+    """Engine code and DuckDB oracle text stay apart.  Under queries/, only
+    the TPC-H/SSB modules and the SQL-text surface that executes their text
+    define an ORACLE mapping; every other oracle lives in the oracle
+    package.  No module outside the oracle package imports it: the oracle
+    text imports engine constants, never the reverse."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "codecdb_queryengine_spark"
+    for path in sorted((pkg / "queries").glob("*.py")):
+        tree = ast.parse(path.read_text())
+        targets = [
+            t
+            for node in tree.body
+            if isinstance(node, (ast.Assign, ast.AnnAssign))
+            for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        ]
+        if path.stem not in {"tpch", "ssb", "sqltext"}:
+            assert not any(
+                isinstance(t, ast.Name) and t.id == "ORACLE" for t in targets
+            ), f"{path.name} defines ORACLE"
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).parts[0] == "oracle":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [f"{node.module}.{a.name}" for a in node.names]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            bad = [
+                n for n in names
+                if n == "codecdb_queryengine_spark.oracle"
+                or n.startswith("codecdb_queryengine_spark.oracle.")
+            ]
+            assert not bad, f"{path.relative_to(pkg)} imports {bad}"
 
 
 def test_bench_lifecycle_set_matches_scratch_layout_gates():
@@ -82,7 +124,7 @@ def test_bench_lifecycle_set_matches_scratch_layout_gates():
         "queries",
     )
     derived = set()
-    for mod in ("pipeline.py", "extensions.py"):
+    for mod in sorted(f for f in os.listdir(qdir) if f.endswith(".py")):
         src = open(os.path.join(qdir, mod)).read()
         for fname, body in re.findall(
             r"def (\w+)\(spark: SparkSession, sf_dir: str\) -> DataFrame:"
@@ -102,7 +144,7 @@ def test_bench_lifecycle_set_matches_scratch_layout_gates():
 def test_bench_prebuilt_set_matches_ensure_layout_gates():
     """BENCH_PREBUILT (r9 verdict item 3's pure-serve fixture family) must
     be EXACTLY the gates whose body routes its base build through
-    pipeline._ensure_layout — regenerated from the query sources so the
+    scenario._ensure_layout — regenerated from the query sources so the
     set can't drift — and every such gate must also be in
     BENCH_LIFECYCLE (a prebuilt gate still builds a scratch layout when
     the fixture is off)."""
@@ -115,7 +157,7 @@ def test_bench_prebuilt_set_matches_ensure_layout_gates():
         "queries",
     )
     derived = set()
-    for mod in ("pipeline.py", "extensions.py"):
+    for mod in sorted(f for f in os.listdir(qdir) if f.endswith(".py")):
         src = open(os.path.join(qdir, mod)).read()
         for fname, body in re.findall(
             r"def (\w+)\(spark: SparkSession, sf_dir: str\) -> DataFrame:"

@@ -197,11 +197,11 @@ def test_prebuilt_layout_fixture_reuses_base_and_serves_identically(
     invocation must touch NO layout file (serve-only) and return identical
     rows.  With the env unset (the correctness gate), every invocation
     rebuilds as before (covered by the rest of the suite)."""
-    from codecdb_queryengine_spark.queries import pipeline as P
+    from codecdb_queryengine_spark.queries import ann, scenario
 
     monkeypatch.setenv("SPARK_GRAFT_PREBUILT_LAYOUTS", "1")
-    a = P.QUERIES["sim_ann_ivf_indexed"](spark, sf_dir).collect()
-    path = P._scratch_dir("ivf_index", sf_dir)
+    a = ann.QUERIES["sim_ann_ivf_indexed"](spark, sf_dir).collect()
+    path = scenario._scratch_dir("ivf_index", sf_dir)
     assert os.path.exists(os.path.join(path, "_prebuilt_flat.ok"))
 
     def snapshot():
@@ -213,6 +213,6 @@ def test_prebuilt_layout_fixture_reuses_base_and_serves_identically(
         return out
 
     before = snapshot()
-    b = P.QUERIES["sim_ann_ivf_indexed"](spark, sf_dir).collect()
+    b = ann.QUERIES["sim_ann_ivf_indexed"](spark, sf_dir).collect()
     assert snapshot() == before, "second invocation rewrote the layout"
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))

@@ -1,7 +1,7 @@
 """Exact-integer Lloyd k-means (operators/similarity.kmeans_lloyd_micro
 and pq_codebooks_lloyd_micro): the one trainer per quantizer, and
 value-gateable.  The DuckDB oracle
-replays the whole training in the gate (pipeline._ivf_lloyd_sql); here an
+replays the whole training in the gate (oracle/ann._ivf_lloyd_sql); here an
 independent numpy mirror pins the Spark implementation a third way and the
 classic Lloyd property (within-cluster SS never increases) is asserted on
 the real corpus.
@@ -124,6 +124,23 @@ def test_pq_lloyd_codebooks_cut_quantization_error(spark, emb):
         assert len(rs) == 5 and len({r.n_id for r in rs}) == 5
         assert all(r.n_id != q for r in rs)
         assert [r.adc_q for r in rs] == sorted(r.adc_q for r in rs)
+
+
+def test_lloyd_inits_raise_on_short_stride_sample(spark, emb):
+    """sf0.001 has 500 vectors, so stride 37 reaches ids 0..481: 14 ids.
+    Asking any Lloyd trainer for more centroids or codewords than the
+    sample holds raises (it used to train 14 and return them silently),
+    naming k, the stride and the ids found."""
+    with pytest.raises(ValueError, match=r"k=17 .*stride=37 found 14"):
+        S.kmeans_lloyd_micro(emb, dim=DIM, k=17, stride=STRIDE, iters=0)
+    short = [(c, [0] * DIM) for c in range(5)]
+    with pytest.raises(ValueError, match=r"k=8 .*stride=37 found 5: \[0, 37, 74, 111, 148\]"):
+        S.kmeans_lloyd_micro(emb, dim=DIM, k=K, stride=STRIDE, iters=0, init_cents=short)
+    with pytest.raises(ValueError, match=r"k=17 .*stride=37 found 14"):
+        S.pq_codebooks_lloyd_micro(emb, dim=DIM, num_codewords=17, stride=STRIDE, iters=0)
+    with pytest.raises(ValueError, match=r"k=17 .*stride=37 found 14"):
+        S.ivfpq_train_micro(emb, dim=DIM, k_coarse=8, num_codewords=17, stride=STRIDE)
+    assert len(S.kmeans_lloyd_micro(emb, dim=DIM, k=14, stride=STRIDE, iters=0)) == 14
 
 
 def test_ivf_topk_micro_structure(spark, emb):

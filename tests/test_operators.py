@@ -299,7 +299,7 @@ def test_minhash_matches_the_oracle_mirror(spark):
     shingle and signature mirror, edge inputs included."""
     import duckdb
 
-    from codecdb_queryengine_spark.queries.pipeline import _sql_minhash_mins, _sql_word_shingles
+    from codecdb_queryengine_spark.oracle.fragments import _sql_minhash_mins, _sql_word_shingles
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -489,13 +489,13 @@ def test_exact_substring_dedup_consistent_with_dup_spans(spark, sf_dir):
     removal (docs_dedup_substrings) — removal only ever targets positions
     covered by a span occurring >= 2 times.  Also pins the sf0.001
     surgery totals (1470 tokens removed across 30 touched docs of 500)."""
-    from codecdb_queryengine_spark.queries import pipeline as P
+    from codecdb_queryengine_spark.queries import dedup
 
     spans = {
         r.doc_id: r.dup_frac_micro
-        for r in P.QUERIES["docs_dup_spans"](spark, sf_dir).collect()
+        for r in dedup.QUERIES["docs_dup_spans"](spark, sf_dir).collect()
     }
-    sub = P.QUERIES["docs_dedup_substrings"](spark, sf_dir).collect()
+    sub = dedup.QUERIES["docs_dedup_substrings"](spark, sf_dir).collect()
     assert len(sub) == 500
     for r in sub:
         assert 0 <= r.n_removed <= r.n_tokens

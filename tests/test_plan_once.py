@@ -104,12 +104,12 @@ def write_roots(spark, tmp_path_factory):
     layouts go under tempfile.gettempdir()), the scratch dirs earlier
     tests already created, and the warehouse.  /tmp itself is shared with
     other processes, so it is not watched as a whole."""
-    from codecdb_queryengine_spark.queries import pipeline
+    from codecdb_queryengine_spark.queries import scenario
 
     prev = tempfile.tempdir
     tempfile.tempdir = str(tmp_path_factory.mktemp("plan_once_tmp"))
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    yield [tempfile.tempdir, warehouse, *pipeline._SCRATCH.values()]
+    yield [tempfile.tempdir, warehouse, *scenario._SCRATCH.values()]
     tempfile.tempdir = prev
 
 
@@ -152,14 +152,14 @@ def test_marked_entry_builds_without_side_effects_and_replays_exactly(
 
 @pytest.mark.parametrize("name", ["docs_stream_index_ingest", "sim_ann_ivf_indexed"])
 def test_side_effect_entries_build_on_every_call(spark, sf_dir, name):
-    from codecdb_queryengine_spark.queries import pipeline
+    from codecdb_queryengine_spark.queries import scenario
 
     fn = entry.queries()[name]
     assert name not in entry.PLAN_ONCE and not hasattr(fn, "__wrapped__")
     for _ in range(2):
-        before = _files(*pipeline._SCRATCH.values())
+        before = _files(*scenario._SCRATCH.values())
         fn(spark, sf_dir)
-        assert _files(*pipeline._SCRATCH.values()) != before  # it wrote its index again
+        assert _files(*scenario._SCRATCH.values()) != before  # it wrote its index again
     assert name not in {k[0] for k in catalog._catalogs[spark][sf_dir].plans}
 
 

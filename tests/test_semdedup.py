@@ -129,4 +129,5 @@ def test_semantic_dedup_guard_rejects_overflow_range_vectors(spark):
     rows = [(i, [100.0] * 64) for i in range(8)]  # milli comps 100000 >> ~3096
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     with pytest.raises(Exception, match="overflow"):
-        D.semantic_dedup(df).collect()
+        # stride 1: the Lloyd init needs ids 0..k-1, which these 8 rows hold
+        D.semantic_dedup(df, stride=1).collect()

@@ -108,10 +108,8 @@ def test_numpy_overflow_raises_with_a_cause(values):
 # Sums of squares and cross products overflow any BIGINT unit sum (see the
 # queries/sums.py docstring), so these keep DECIMAL(38); nothing else may.
 SECOND_MOMENTS = {
-    "queries/extensions.py": {
-        "ext_stats", "_STATS_SQL", "ext_stats_approx", "_STATS_APPROX_SQL",
-        "ext_corr", "_CORR_SQL",
-    },
+    "queries/extensions.py": {"ext_stats", "ext_stats_approx", "ext_corr"},
+    "oracle/extensions.py": {"_STATS_SQL", "_STATS_APPROX_SQL", "_CORR_SQL"},
     "operators/similarity.py": {"pca_power_micro"},
 }
 _DECIMAL_CAST = re.compile(r"""cast\(\s*["']decimal\(|\bAS\s+DECIMAL\(|DecimalType\(""", re.I)

@@ -344,20 +344,20 @@ def test_gate_purge_boolean_parity_on_sf_corpus(spark, sf_dir, tmp_path):
     purge — and pins that the folded base serves the same boolean
     relation as the overlay did."""
     from codecdb_queryengine_spark.catalog import load_tables
-    from codecdb_queryengine_spark.queries import pipeline as P
+    from codecdb_queryengine_spark.queries import search
 
     docs = load_tables(spark, sf_dir)["documents"]
     path = str(tmp_path / "ti_gate_purge")
     TI.text_index_build_all(docs, path, layouts=("postings", "postings_tf"))
-    P._text_index_mutate(spark, sf_dir, path)
+    search._text_index_mutate(spark, sf_dir, path)
     pre = {
         r["doc_id"]
-        for r in TI.text_index_search_all(spark, path, P._SEARCH_TERMS).collect()
+        for r in TI.text_index_search_all(spark, path, search._SEARCH_TERMS).collect()
     }
     assert TI.text_index_purge(spark, path)
     post = {
         r["doc_id"]
-        for r in TI.text_index_search_all(spark, path, P._SEARCH_TERMS).collect()
+        for r in TI.text_index_search_all(spark, path, search._SEARCH_TERMS).collect()
     }
     assert post == pre
     assert pre, "parity check is vacuous: the gate terms match no docs"
@@ -671,7 +671,8 @@ def test_ranked_search_with_a_null_text_matches_the_oracle(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from codecdb_queryengine_spark.oracle import compare
-    from codecdb_queryengine_spark.queries.pipeline import _SEARCH_TERMS, _search_ranked_sql
+    from codecdb_queryengine_spark.oracle.search import _search_ranked_sql
+    from codecdb_queryengine_spark.queries.search import _SEARCH_TERMS
 
     texts = [
         "hash scan merge", "hash hash join", None, "scan the table", "merge sort merge",
