@@ -134,30 +134,6 @@ def word_shingles_all_from_tokens(toks: Column, k: int = 3) -> Column:
     ).otherwise(F.expr("array()").cast("array<string>"))
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
-    """MinHash signature: element i = min over shingles of md5('i|'||s).
-
-    md5-as-string min is a valid uniform hash order and is engine-portable.
-    Stays entirely in array expressions — no explode, no shuffle; the
-    signature computes scan-side even at 100 TB.
-
-    NOTE: costs num_hashes md5 digests per shingle.  The hot dedup path
-    (operators/dedup.minhash_signatures) slices four 32-bit hashes out of
-    each digest instead (4× less hashing); kept for the simple
-    one-expression form and existing fixtures.
-    """
-    # NB: the lambda must be single-argument — pyspark inspects lambda arity,
-    # and a `lambda s, i=i:` form is treated as the (element, index) binary
-    # variant, binding i to the array index Column.
-    def hash_with(prefix: str):
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    sig = [
-        F.array_min(F.transform(shingles, hash_with(f"{i}|"))) for i in range(num_hashes)
-    ]
-    return F.array(*sig)
-
-
 # Each md5 digest yields four independent 8-hex-char (32-bit) hash slices;
 # a num_hashes MinHash needs only ceil(num_hashes/4) digests per shingle.
 HASHES_PER_DIGEST = 4

@@ -329,7 +329,15 @@ def _ivf_assign(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
         norm(F.col(vec_col)).alias("n_norm"),
-        _fold_argmax_sim(_centroid_sims(F.col(vec_col)))["c_id"].alias("c_list"),
+        _fold_argmax_sim(
+            F.transform(
+                F.col("model"),
+                lambda c: F.struct(
+                    (dot(F.col(vec_col), c["c_vec"]) / c["c_norm"]).alias("sim"),
+                    c["c_id"].cast("long").alias("c_id"),
+                ),
+            )
+        )["c_id"].alias("c_list"),
         *[F.col(c) for c in meta_cols],
     )
 
@@ -387,21 +395,6 @@ def _ivf_cosine_rank(
     return _topk_per_query(scored, "cosine", k, desc=True)
 
 
-def l2sq(a: Column, b: Column) -> Column:
-    """Σ (aᵢ−bᵢ)² as double, JVM-side, left-to-right (the oracle-mirrorable
-    summation order, like `dot`)."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the session's shuffle parallelism,
     ONLY when the input has fewer partitions.  The shuffle-free model-fold
@@ -457,108 +450,6 @@ def _fold_argmax_sim(entries: Column) -> Column:
     )
 
 
-def _pq_model_1row(cbm: DataFrame, num_subspaces: int) -> DataFrame:
-    """A (m, c_id, c_sub) codebook frame as the 1-row broadcast model
-    array `model` the float encode and ADC maps read, with an
-    execution-time subspace-coverage guard (r5 review): an m absent from
-    the codebook would make the per-row argmin fold return its −1 init,
-    and the ADC lookup key m·K−1 would ALIAS the previous subspace's last
-    codeword — a plausible wrong score instead of a loud failure.  The
-    guard is evaluated once on the single model row (assert_true inside
-    the model projection, so column pruning cannot drop it), never in the
-    per-row encode path."""
-    cond = F.forall(
-        F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)]),
-        lambda m: F.exists(F.col("model0"), lambda e: e["m"] == m),
-    )
-    agg = cbm.agg(
-        F.collect_list(F.struct("m", "c_id", "c_sub")).alias("model0")
-    )
-    return F.broadcast(
-        agg.select(
-            F.when(
-                F.assert_true(
-                    cond,
-                    F.lit(
-                        "pq encode: codebook has no entries for some subspace in "
-                        f"0..{num_subspaces - 1} — ADC keys would alias adjacent "
-                        "subspaces"
-                    ),
-                ).isNull(),
-                F.col("model0"),
-            ).alias("model")
-        )
-    )
-
-
-def _pq_code_map(vec: Column, sub: int, num_subspaces: int) -> Column:
-    """cmap = map<m, code> over the runtime codebook model: per subspace m
-    the order-free argmin of the left-assoc squared-L2 between `vec`'s
-    m-th `sub`-wide slice and the model's subspace-m codewords (ties to
-    the smaller id) — the float encode of pq_topk and the IVFADC residual
-    encode; the integer twin is _micro_code_map.  NB: per-m values are
-    captured via the `entry` def, not lambda default args — PySpark
-    infers HOF lambda arity from the signature, so a second (defaulted)
-    parameter would silently become the ARRAY INDEX."""
-
-    def entry(m: int) -> Column:
-        ents = F.filter(F.col("model"), lambda e: e["m"] == F.lit(m))
-        return F.struct(
-            F.lit(m).cast("long").alias("m"),
-            _fold_argmin_d(
-                F.transform(
-                    ents,
-                    lambda e: F.struct(
-                        l2sq(F.slice(vec, m * sub + 1, sub), e["c_sub"]).alias("d"),
-                        e["c_id"].cast("long").alias("c_id"),
-                    ),
-                )
-            )["c_id"].alias("code"),
-        )
-
-    return F.map_from_entries(F.array(*[entry(m) for m in range(num_subspaces)]))
-
-
-def _pq_adc_map(qvec: str, sub: int, num_codewords: int) -> Column:
-    """amap = map<m·K + c_id, round(1e6 · squared-L2 of `qvec`'s m-th
-    slice to that codeword)> over the runtime codebook model — the float
-    query-side ADC lookup table _adc_sum reads; the integer twin is
-    _micro_adc_map.  Contributions are quantized to integer micro-units
-    BEFORE the per-pair sum, so the ranking sum is an order-free BIGINT.
-
-    Every codebook c_id must be < num_codewords, or m·K + c_id aliases an
-    adjacent subspace's entry and silently corrupts every score (r4
-    ADVICE).  Zero-cost lazy guard: misuse fails loudly at execution.
-    Encode and lookup read the same model array, so guarding the key
-    build covers the lookup too."""
-
-    def entry(e: Column) -> Column:
-        key = F.when(
-            e["c_id"] < num_codewords,
-            e["m"] * num_codewords + e["c_id"],
-        ).otherwise(
-            F.raise_error(
-                F.format_string(
-                    "pq ADC: codebook c_id %s >= num_codewords %s — ADC keys "
-                    "would alias adjacent subspaces; pass num_codewords matching "
-                    "the trained codebooks",
-                    e["c_id"].cast("string"),
-                    F.lit(str(num_codewords)),
-                )
-            ).cast("long")
-        )
-        contrib = F.round(
-            F.lit(1e6)
-            * l2sq(
-                F.slice(F.col(qvec), (e["m"] * sub + 1).cast("int"), sub),
-                e["c_sub"],
-            )
-        ).cast("long")
-        return F.struct(key.alias("key"), contrib.alias("contrib"))
-
-    return F.map_from_entries(F.transform(F.col("model"), entry))
-
-
 def _subspace_width(dim: int, num_subspaces: int) -> int:
     """The PQ slice width; a remainder would silently drop trailing dims."""
     sub = dim // num_subspaces
@@ -577,7 +468,7 @@ def _subspace_slices(
 ) -> DataFrame:
     """(*keep, m, `out`): one row per (input row, subspace m) holding the
     m-th `sub`-wide slice of the array column `vec` — the per-subspace
-    view every codebook sample and Lloyd trainer reads."""
+    view the PQ Lloyd trainers read."""
     ms = F.explode(
         F.array(*[F.lit(m).cast("long") for m in range(num_subspaces)])
     ).alias("m")
@@ -588,31 +479,10 @@ def _subspace_slices(
     )
 
 
-def _stride_codebook(
-    df: DataFrame,
-    id_col: str,
-    vec: Column,
-    sub: int,
-    num_subspaces: int,
-    num_codewords: int,
-    stride: int,
-) -> DataFrame:
-    """(c_id, m, c_sub): the deterministic, training-free PQ codebook —
-    codeword c of subspace m is the m-th slice of `vec` on the row whose
-    `id_col` = c·stride (the mod-id stand-in convention of the IVF tiers,
-    so the DuckDB oracles recompute the codes exactly).  Also the init of
-    the exact-Lloyd PQ trainer."""
-    sample = df.filter(
-        (F.col(id_col) % stride == 0) & (F.col(id_col) < stride * num_codewords)
-    ).select((F.col(id_col) / stride).cast("long").alias("c_id"), vec.alias("cv"))
-    return _subspace_slices(sample, "cv", sub, num_subspaces, "c_sub", ("c_id",))
-
-
 def _probe_centroids(
     queries: DataFrame,
     cmodel: DataFrame,
     nprobe: int,
-    with_vec: bool = False,
     with_rank: bool = False,
 ) -> DataFrame:
     """(q_id, q_vec, p) — per query the `nprobe` nearest centroids from
@@ -625,15 +495,13 @@ def _probe_centroids(
     argmax still sends every vector to its list under Spark's
     NaN-greatest comparisons, so inverting the probe order would serve
     zero results where the window form served k).  The struct carries
-    c_id (+ c_vec when requested) behind the sort fields; c_id is unique
-    so trailing fields never compare.  Shared by ivf_topk and
-    ivf_pq_topk (r5 review: the two inlined copies risked diverging)."""
+    c_id behind the sort fields.  Shared by ivf_topk and
+    ivf_coarse_shortlist."""
     sims = F.transform(
         F.col("model"),
         lambda c: F.struct(
             (dot(F.col("q_vec"), c["c_vec"]) / c["c_norm"]).alias("sim"),
             c["c_id"].cast("long").alias("c_id"),
-            *([c["c_vec"].alias("c_vec")] if with_vec else []),
         ),
     )
     # second transform so the dot is computed ONCE per centroid — the
@@ -644,7 +512,6 @@ def _probe_centroids(
             F.when(F.isnan(s["sim"]), F.lit(0)).otherwise(F.lit(1)).alias("nn"),
             (-s["sim"]).alias("nsim"),
             s["c_id"].alias("c_id"),
-            *([s["c_vec"].alias("c_vec")] if with_vec else []),
         ),
     )
     if with_rank:
@@ -663,297 +530,6 @@ def _probe_centroids(
     )
 
 
-def _centroid_sims(vec: Column) -> Column:
-    """array<struct(sim, c_id)> of dot/|c| for `vec` against every
-    centroid of the runtime 1-row model array (the ivf ranking; one
-    definition shared by _ivf_assign and ivf_pq_scored's residual
-    assignment — r5 review: inlined copies risked diverging)."""
-    return F.transform(
-        F.col("model"),
-        lambda c: F.struct(
-            (dot(vec, c["c_vec"]) / c["c_norm"]).alias("sim"),
-            c["c_id"].cast("long").alias("c_id"),
-        ),
-    )
-
-
-# Above this model size, _micro_nearest switches from the literal
-# array_min / array_sort expression (whose SQL text grows with K·dim and
-# breaks codegen) to the broadcast-model form.  Both compute the identical
-# lexicographic (d, c_id) ranking — pinned by tests/test_lloyd.py and
-# tests/test_ann_index.py.
-_ENCODE_LITERAL_MAX = 32
-
-
-def _fold_argmin_d(entries: Column) -> Column:
-    """struct(d double, c_id long) with the SMALLEST d (ties to the
-    smaller c_id) from an array<struct(d, c_id)> — the exact min_by
-    (d, c_id) ranking the PQ encoders always used, as an order-free
-    fold."""
-    init = F.struct(
-        F.lit(float("inf")).alias("d"), F.lit(-1).cast("long").alias("c_id")
-    )
-    return F.aggregate(
-        entries,
-        init,
-        lambda acc, s: F.when(
-            (s["d"] < acc["d"]) | ((s["d"] == acc["d"]) & (s["c_id"] < acc["c_id"])),
-            s,
-        ).otherwise(acc),
-    )
-
-
-def pq_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    num_subspaces: int = 4,
-    num_codewords: int = 8,
-    code_stride: int = 37,
-) -> DataFrame:
-    """Product-quantization ANN — the memory-scale path next to LSH/IVF:
-    each vector is compressed to `num_subspaces` small codes; query scoring
-    is asymmetric-distance computation (ADC) — per neighbor just
-    num_subspaces integer table lookups + adds, never a d-dim float dot.
-    (Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
-    Search", TPAMI 2011.)
-
-    Codebooks: codeword c of every subspace is the matching slice of the
-    corpus vector with id = c·code_stride — the same deterministic,
-    training-free sampling stand-in ivf_topk uses (mod-id centroids), so
-    the DuckDB oracle recomputes the codes exactly.  The trained codebooks
-    are the exact-integer Lloyd tier (pq_codebooks_lloyd_micro →
-    pq_topk_micro).
-
-    Cross-engine float discipline: encode argmin compares left-to-right
-    squared-L2 sums (bit-identical both engines; ties break on codeword
-    id), and ADC contributions are quantized to integer micro-units
-    BEFORE the per-pair sum, so the ranking sum is a BIGINT — order-free.
-
-    Plan shape (r5 perf pass): the codebook rides along as a 1-row
-    broadcast array, so encode is num_subspaces per-row order-free argmin
-    folds — one shuffle-free projection of the corpus; scoring is the
-    flat (keyless) case of the IVF probe join: the broadcast per-query
-    lookup maps meet every code row (n rows streaming, no pair shuffle),
-    then the top-k window on q_id, the only exchange left.  Scored output
-    column `adc_micro` is the micro-quantized squared-L2 ADC estimate
-    (smaller = nearer).
-    """
-    sub = _subspace_width(dim, num_subspaces)
-    codebooks = _stride_codebook(
-        vectors, id_col, F.col(vec_col), sub, num_subspaces, num_codewords,
-        code_stride,
-    )
-    cb1 = _pq_model_1row(codebooks, num_subspaces)
-    codes = _spread(vectors).crossJoin(cb1).select(
-        F.col(id_col).alias("n_id"),
-        _pq_code_map(F.col(vec_col), sub, num_subspaces).alias("cmap"),
-    )
-    amaps = queries.crossJoin(cb1).select(
-        "q_id", _pq_adc_map("q_vec", sub, num_codewords).alias("amap")
-    )
-    adc = _adc_sum(num_subspaces, num_codewords)
-    scored = _probe_join(amaps, codes, "adc_micro", adc, on=None)
-    return _topk_per_query(scored, "adc_micro", k)
-
-
-def _adc_sum(num_subspaces: int, num_codewords: int) -> Column:
-    """Σₘ amap[m·K + cmap[m]] — the asymmetric-distance score of one
-    (query, candidate) pair: the candidate's per-subspace code `cmap`
-    indexes the query-side lookup map `amap`, whose key is m·K + codeword
-    (K = num_codewords).  Integer (micro-unit) terms, so the sum is
-    order-free BIGINT; shared by every PQ / IVF-PQ serve."""
-    adc: Column | None = None
-    for m in range(num_subspaces):
-        term = F.element_at(
-            F.col("amap"),
-            F.lit(m * num_codewords).cast("long")
-            + F.element_at(F.col("cmap"), F.lit(m).cast("long")),
-        )
-        adc = term if adc is None else adc + term
-    return adc
-
-
-def ivf_pq_scored(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_mod: int = 29,
-    nprobe: int = 2,
-    num_subspaces: int = 4,
-    num_codewords: int = 8,
-    code_stride: int = 37,
-    with_probe_rank: bool = False,
-) -> DataFrame:
-    """IVF-PQ (IVFADC, Jégou et al. 2011 §IV) — the production-scale ANN
-    composition: a coarse inverted-file quantizer cuts the SCAN (only
-    `nprobe` lists are visited) and a product quantizer over the
-    RESIDUALS (vector − its centroid) cuts the MEMORY (num_subspaces
-    bytes per vector) and the per-candidate cost (ADC table lookups).
-    Residual encoding is what plain PQ lacks on clustered data: after
-    subtracting the coarse centroid the residuals are near-isotropic,
-    so the subquantizers spend their bits on local detail.
-
-    Deterministic, oracle-reproducible quantizers (the ivf_topk/pq_topk
-    stand-in convention): coarse centroids are the vectors with id ≡ 0
-    (mod centroid_mod); residual codeword c of each subspace is the
-    matching slice of the RESIDUAL of the vector with id = c·code_stride.
-    The trained form is the exact-integer Lloyd tier
-    (ivf_pq_topk_lloyd_micro).
-
-    Exactness discipline: every distance is a left-to-right zip_with/
-    aggregate fold (mirrored term-for-term by the generated oracle SQL);
-    ADC contributions are micro-quantized BEFORE the per-pair BIGINT sum.
-    The query's residual differs per probed list, so the broadcast ADC
-    table is (q × nprobe × M × K) rows — still tiny.
-
-    Plan shape (r5 perf pass): the coarse model and residual codebook
-    ride along as 1-row broadcast arrays — assignment + residual are ONE
-    shuffle-free projection (argmax fold + in-array centroid lookup),
-    encode is per-row argmin folds over the same projection; scoring
-    joins the code stream of the PROBED LISTS ONLY against the broadcast
-    ADC maps and ranks per query (the top-k window is the only exchange).
-
-    This function returns the SCORED relation (q_id, n_id, adc_micro)
-    before the top-k cut; ivf_pq_topk adds the rank window.
-    `with_probe_rank=True` additionally carries `pr` — the 1-based probe
-    rank of the candidate's list for that query — which makes ONE
-    all-lists relation (nprobe = K) servable at every smaller nprobe by
-    a filter: the factoring the recall-vs-cost curve gate sweeps over.
-    """
-    sub = _subspace_width(dim, num_subspaces)
-    cmodel = _ivf_model(_mod_centroids(vectors, vec_col, id_col, centroid_mod))
-    res = _ivf_residuals(vectors, cmodel, vec_col, id_col)
-    rcb1 = _pq_model_1row(
-        _stride_codebook(
-            res, "n_id", F.col("r"), sub, num_subspaces, num_codewords, code_stride
-        ),
-        num_subspaces,
-    )
-    codes = res.crossJoin(rcb1).select(
-        "n_id", "c_list", _pq_code_map(F.col("r"), sub, num_subspaces).alias("cmap")
-    )
-    return _ivfpq_rank(
-        codes, queries, cmodel, rcb1, sub, nprobe, num_subspaces, num_codewords,
-        with_probe_rank,
-    )
-
-
-def _residual(v: Column, c: Column) -> Column:
-    """v − c element-wise as array<double>."""
-    return F.zip_with(v, c, lambda x, y: x.cast("double") - y.cast("double"))
-
-
-def _ivf_residuals(
-    vectors: DataFrame, cmodel: DataFrame, vec_col: str, id_col: str
-) -> DataFrame:
-    """(n_id, c_list, r): every vector's nearest coarse centroid (the
-    _ivf_assign ranking + tie-break) and its double residual v − c — the
-    float IVFADC encode input; the integer twin is _micro_residuals.  The
-    model rides along as a 1-row broadcast array (r5 perf pass): argmax
-    fold + centroid lookup + residual in ONE shuffle-free projection — no
-    crossJoin expansion, no groupBy(n_id) exchange, no
-    assigned⋈vectors⋈cents re-joins."""
-    return (
-        _spread(vectors).crossJoin(cmodel)
-        .select(
-            F.col(id_col).alias("n_id"),
-            F.col(vec_col).alias("v"),
-            F.col("model"),
-            _fold_argmax_sim(_centroid_sims(F.col(vec_col))).alias("w"),
-        )
-        .select(
-            "n_id",
-            F.col("w")["c_id"].alias("c_list"),
-            _residual(
-                F.col("v"),
-                F.element_at(
-                    F.filter(
-                        F.col("model"), lambda c: c["c_id"] == F.col("w")["c_id"]
-                    ),
-                    1,
-                )["c_vec"],
-            ).alias("r"),
-        )
-        # Materialized once: rcb init, encoding, and serving all read this
-        # frame, and HOF folds see no CSE — without a barrier, collapsed
-        # projections would re-inline the argmax fold into every consumer
-        # (measured 7× slower).  LAZY localCheckpoint, not persist (r5
-        # review): persist left a corpus-sized cache entry parked in the
-        # caller's session with no unpersist point (the consumers are all
-        # in the returned lazy plan); the checkpoint truncates lineage the
-        # same way, lives outside the cache manager, and its blocks free
-        # when the frame is GC'd.  Trade-off (the bpe.py/sketch.py note):
-        # checkpoint blocks are not recomputable on executor loss.
-        .localCheckpoint(eager=False)
-    )
-
-
-def _ivfpq_rank(
-    codes: DataFrame,
-    queries: DataFrame,
-    cmodel: DataFrame,
-    rcb1: DataFrame,
-    sub: int,
-    nprobe: int,
-    num_subspaces: int,
-    num_codewords: int,
-    with_probe_rank: bool,
-) -> DataFrame:
-    """Float ADC scoring over an encoded IVFADC corpus `codes` (n_id,
-    c_list, cmap): per query the `nprobe` nearest coarse lists
-    (_probe_centroids, the old rank window's exact order — the probed
-    centroid rides in the sort struct), the query residual per probed
-    list, its ADC lookup map over the residual codebook model `rcb1`,
-    then the shared probe join.  Returns the scored relation (q_id, n_id,
-    [pr,] adc_micro) before any top-k cut; the integer twin is
-    ivfpq_rank_micro."""
-    pr = [F.col("pr")] if with_probe_rank else []
-    probes = _probe_centroids(
-        queries, cmodel, nprobe, with_vec=True, with_rank=with_probe_rank
-    ).select(
-        "q_id",
-        *([(F.col("pr") + 1).cast("long").alias("pr")] if with_probe_rank else []),
-        F.col("p")["c_id"].alias("c_list"),
-        _residual(F.col("q_vec"), F.col("p")["c_vec"]).alias("qr"),
-    )
-    amaps = probes.crossJoin(rcb1).select(
-        "q_id", *pr, "c_list", _pq_adc_map("qr", sub, num_codewords).alias("amap")
-    )
-    adc = _adc_sum(num_subspaces, num_codewords)
-    return _probe_join(amaps, codes, "adc_micro", adc).select(
-        "q_id", "n_id", *pr, "adc_micro"
-    )
-
-
-def ivf_pq_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    centroid_mod: int = 29,
-    nprobe: int = 2,
-    num_subspaces: int = 4,
-    num_codewords: int = 8,
-    code_stride: int = 37,
-) -> DataFrame:
-    """IVFADC top-k: ivf_pq_scored's candidate relation (see there for the
-    full composition/scale notes) cut by the per-query rank window
-    (adc_micro ASC, n_id ASC)."""
-    scored = ivf_pq_scored(
-        vectors, queries, dim, vec_col, id_col, centroid_mod, nprobe,
-        num_subspaces, num_codewords, code_stride,
-    )
-    return _topk_per_query(scored, "adc_micro", k)
-
-
 def exact_rerank(
     vectors: DataFrame,
     queries: DataFrame,
@@ -967,7 +543,7 @@ def exact_rerank(
     ADC cuts the corpus to R candidates on codes alone, then the R true
     vectors are fetched and ranked exactly; reference lineage:
     the CodecDB papers' eval reports quality the same way).  `shortlist`
-    is any (q_id, n_id) frame (e.g. ivf_pq_topk at k=R); output is
+    is any (q_id, n_id) frame (e.g. ivfpq_rank_micro at k=R); output is
     (q_id, n_id, cosine, rk ≤ k) — identical shape and ORDER SEMANTICS to
     brute_force_topk (cosine desc, n_id asc), so recall gates compose.
 
@@ -979,7 +555,7 @@ def exact_rerank(
 
     The shortlist contract is ANY (q_id, n_id) frame: duplicates are
     dropped and q_id = n_id self-pairs filtered here (r10 advice — the
-    rk-unique, self-excluded ivf_pq_topk output never exercised either,
+    rk-unique, self-excluded ivfpq_rank_micro output never exercised either,
     but a caller handing a multi-band candidate union would otherwise get
     duplicate neighbors inside its top-k).  Both ops act on the tiny
     R·|q| frame before the broadcast, so the corpus side never pays."""
@@ -1271,7 +847,7 @@ def ivf_assign_expr(vec_sql: str, centroid_rows: list) -> Column:
 
 def quantize_micro(a: Column, scale: float = 1e6) -> Column:
     """Element-wise floor(x·scale + 0.5) as array<long> — the cross-engine
-    integer anchor (same discipline as pq_topk's ADC micro-units): float32
+    integer anchor (the discipline every PQ / IVF-PQ ADC runs on): float32
     elements cast to double, one correctly-rounded multiply, floor.  Both
     engines produce identical BIGINTs, so every distance derived from the
     quantized vectors is exact integer arithmetic — order-free, no float
@@ -1333,17 +909,21 @@ def _sql_dist_arr(vec_sql: str, entries, with_center: bool = False) -> str:
     groupBy(n_id) form paid a full-corpus shuffle per use).  Generated as
     SQL TEXT parsed by one F.expr call because building the same tree
     through the Python Column API costs hundreds of py4j round-trips
-    (~2 s of driver time per plan at K·M=32 centers — measured)."""
-    elems = []
-    for cid, c in entries:
-        carr = _sql_long_arr(c)
-        fields = (
-            f"'d',{_sql_l2_micro(vec_sql, carr)},'c_id',CAST({int(cid)} AS BIGINT)"
-        )
-        if with_center:
-            fields += f",'c',{carr}"
-        elems.append(f"named_struct({fields})")
-    return "array(" + ",".join(elems) + ")"
+    (~2 s of driver time per plan at K·M=32 centers — measured).  The
+    centers ride as ONE literal array under one transform, which the
+    optimizer folds to a single literal: the plan carries one distance
+    fold however many centers there are, where an unrolled fold per
+    center made every optimizer and AQE re-plan pass walk K copies.
+    """
+    model = ",".join(
+        f"named_struct('c_id',CAST({int(cid)} AS BIGINT),'c',{_sql_long_arr(c)})"
+        for cid, c in entries
+    )
+    center = ",'c',e.c" if with_center else ""
+    return (
+        f"transform(array({model}),"
+        f"e->named_struct('d',{_sql_l2_micro(vec_sql, 'e.c')},'c_id',e.c_id{center}))"
+    )
 
 
 def _micro_argmin_sql(vec_sql: str, entries, with_center: bool = False) -> str:
@@ -1351,6 +931,14 @@ def _micro_argmin_sql(vec_sql: str, entries, with_center: bool = False) -> str:
     (ties to the smaller c_id; `c` never participates in comparison
     because c_id is unique).  See _sql_dist_arr."""
     return f"array_min({_sql_dist_arr(vec_sql, entries, with_center)})"
+
+
+# Above this model size, _micro_nearest switches from the literal
+# array_min / array_sort expression (whose SQL text grows with K·dim and
+# breaks codegen) to the broadcast-model form.  Both compute the identical
+# lexicographic (d, c_id) ranking — pinned by tests/test_lloyd.py and
+# tests/test_ann_index.py.
+_ENCODE_LITERAL_MAX = 32
 
 
 def _micro_nearest(
@@ -1366,7 +954,8 @@ def _micro_nearest(
     column `vec` by BIGINT L2, ties to the smaller c_id — one row per input
     row when `nprobe` is None (assignment), else the `nprobe` nearest
     exploded one row each in ascending (d, c_id) order (probe selection,
-    exactly the old rank window's order).
+    exactly the old rank window's order) with `pr`, the 0-based probe
+    rank, from the same posexplode.
 
     The form is picked by model size: up to _ENCODE_LITERAL_MAX centers
     the model inlines as a literal array_min / array_sort expression (the
@@ -1379,12 +968,11 @@ def _micro_nearest(
     set does not."""
     if len(cents) <= _ENCODE_LITERAL_MAX:
         dist = _sql_dist_arr(vec, cents, with_center)
-        pick = (
-            f"array_min({dist})"
-            if nprobe is None
-            else f"explode(slice(array_sort({dist}), 1, {nprobe}))"
+        if nprobe is None:
+            return df.selectExpr(*keep, f"array_min({dist}) AS p")
+        return df.selectExpr(
+            *keep, f"posexplode(slice(array_sort({dist}), 1, {nprobe})) AS (pr, p)"
         )
-        return df.selectExpr(*keep, f"{pick} AS p")
     cmodel = F.broadcast(
         _model_1row(
             df.sparkSession.createDataFrame(sorted(cents), "c_id long, c array<long>"),
@@ -1403,7 +991,7 @@ def _micro_nearest(
     if nprobe is None:
         return _spread(df).crossJoin(cmodel).select(*keep, F.array_min(dist).alias("p"))
     return df.crossJoin(cmodel).select(
-        *keep, F.explode(F.slice(F.array_sort(dist), 1, nprobe)).alias("p")
+        *keep, F.posexplode(F.slice(F.array_sort(dist), 1, nprobe)).alias("pr", "p")
     )
 
 
@@ -1458,14 +1046,30 @@ def _micro_residuals(
     )
 
 
+def _codebook_by_subspace(cbs: list, num_subspaces: int) -> dict[int, list]:
+    """{m: [(c_id, c_sub_micro)]} of a codebook [(m, c_id, c_sub_micro)].
+    A subspace in 0..num_subspaces−1 with no codewords would leave its
+    code and ADC lookups unfilled, so raise at build time, naming every
+    missing subspace."""
+    by_m: dict[int, list] = {}
+    for m, c_id, c_sub_v in cbs:
+        by_m.setdefault(int(m), []).append((c_id, c_sub_v))
+    missing = [m for m in range(num_subspaces) if m not in by_m]
+    if missing:
+        raise ValueError(
+            f"pq codebook has no codewords for subspace(s) {missing} of "
+            f"0..{num_subspaces - 1}"
+        )
+    return by_m
+
+
 def _micro_code_map(vec: str, cbs: list, sub: int, num_subspaces: int) -> Column:
     """cmap = map<m, code>: per subspace m, the nearest literal codeword of
     the m-th `sub`-wide slice of the array<long> column `vec` (BIGINT L2,
     ties to the smaller id) — the PQ encode of pq_topk_micro and the
-    IVFADC residual encode.  `cbs` = [(m, c_id, c_sub_micro)]."""
-    by_m: dict[int, list] = {}
-    for m, c_id, c_sub_v in cbs:
-        by_m.setdefault(int(m), []).append((c_id, c_sub_v))
+    IVFADC residual encode.  `cbs` = [(m, c_id, c_sub_micro)]; raises
+    ValueError when it lacks a subspace."""
+    by_m = _codebook_by_subspace(cbs, num_subspaces)
     entries = ",".join(
         f"named_struct('m',CAST({m} AS BIGINT),'code',"
         f"({_micro_argmin_sql(f'slice({vec},{m * sub + 1},{sub})', by_m[m])}).c_id)"
@@ -1474,24 +1078,48 @@ def _micro_code_map(vec: str, cbs: list, sub: int, num_subspaces: int) -> Column
     return F.expr(f"map_from_entries(array({entries}))")
 
 
-def _micro_adc_map(vec: str, cbs: list, sub: int, num_codewords: int) -> Column:
+def _micro_adc_map(
+    vec: str, cbs: list, sub: int, num_subspaces: int, num_codewords: int
+) -> Column:
     """amap = map<m·K + c_id, BIGINT L2 of `vec`'s m-th slice to codeword
     c_id> — the query-side ADC lookup table _adc_sum reads (K =
-    num_codewords).  The same key-aliasing rule _pq_adc_map guards: a
-    codebook c_id >= K would collide with an adjacent subspace's slot.
-    The codebook is driver-side here, so it fails loudly at BUILD time."""
+    num_codewords).  A codebook c_id >= K would collide with an adjacent
+    subspace's slot, and a missing subspace would leave its lookups
+    unfilled; the codebook is driver-side, so both fail loudly at BUILD
+    time.  One transform over the literal codebook array, as in
+    _sql_dist_arr."""
+    _codebook_by_subspace(cbs, num_subspaces)
     bad = sorted({int(c_id) for _, c_id, _ in cbs if int(c_id) >= num_codewords})
     if bad:
         raise ValueError(
             f"pq ADC: codebook c_id(s) {bad} >= num_codewords {num_codewords} "
             "— ADC keys would alias adjacent subspaces"
         )
-    entries = ",".join(
+    model = ",".join(
         f"named_struct('key',CAST({int(m) * num_codewords + int(c_id)} AS BIGINT),"
-        f"'contrib',{_sql_l2_micro(f'slice({vec},{int(m) * sub + 1},{sub})', _sql_long_arr(c_sub_v))})"
+        f"'start',{int(m) * sub + 1},'c',{_sql_long_arr(c_sub_v)})"
         for m, c_id, c_sub_v in cbs
     )
-    return F.expr(f"map_from_entries(array({entries}))")
+    contrib = _sql_l2_micro(f"slice({vec},e.start,{sub})", "e.c")
+    return F.expr(
+        f"map_from_entries(transform(array({model}),"
+        f"e->named_struct('key',e.key,'contrib',{contrib})))"
+    )
+
+
+def _adc_sum(num_subspaces: int, num_codewords: int) -> Column:
+    """Σₘ amap[m·K + cmap[m]] — the asymmetric-distance score of one
+    (query, candidate) pair: the candidate's per-subspace code `cmap`
+    indexes the query-side lookup map `amap`, whose key is m·K + codeword
+    (K = num_codewords).  Integer (micro-unit) terms, so the sum is
+    order-free BIGINT; shared by every PQ / IVF-PQ serve.  One F.expr
+    parse: the Column API form costs a py4j round trip per node."""
+    return F.expr(
+        " + ".join(
+            f"element_at(amap, {m * num_codewords}L + element_at(cmap, {m}L))"
+            for m in range(num_subspaces)
+        )
+    )
 
 
 def _check_stride_sample(ids, k: int, stride: int) -> None:
@@ -1697,27 +1325,29 @@ def pq_codebooks_lloyd_micro(
     ValueError when the stride sample holds fewer than num_codewords ids.
     """
     sub = _subspace_width(dim, num_subspaces)
-    vm = _subspace_slices(
-        vectors.select(
-            F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("vv")
-        ),
-        "vv", sub, num_subspaces, "v", ("n_id",),
+    vm = vectors.select(
+        F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("v")
     )
-    spark = vectors.sparkSession
-    init = _stride_codebook(
-        vectors, id_col, quantize_micro(F.col(vec_col)), sub, num_subspaces,
-        num_codewords, stride,
+    # init: codeword c of subspace m is the m-th slice of the micro vector
+    # with id c·stride — one small collect, sliced driver-side
+    sample = vm.filter(
+        (F.col("n_id") % stride == 0) & (F.col("n_id") < stride * num_codewords)
     ).collect()
+    _check_stride_sample([int(r["n_id"]) for r in sample], num_codewords, stride)
     cbs = sorted(
-        (int(r["m"]), int(r["c_id"]), [int(x) for x in r["c_sub"]]) for r in init
+        (m, int(r["n_id"]) // stride, [int(x) for x in r["v"][m * sub:(m + 1) * sub]])
+        for r in sample
+        for m in range(num_subspaces)
     )
-    _check_stride_sample({c * stride for _, c, _ in cbs}, num_codewords, stride)
+    if iters == 0:  # the untrained stride-sample codebook
+        return cbs
+    vm = _subspace_slices(vm, "v", sub, num_subspaces, "v", ("n_id",))
     # operator-owned cache lifetime: the sliced frame feeds every Lloyd
     # round — persist for the loop, release before returning
     if iters > 1:
         vm = vm.persist()
     try:
-        cbs = _lloyd_rounds(spark, vm, ("m",), cbs, sub, iters)
+        cbs = _lloyd_rounds(vectors.sparkSession, vm, ("m",), cbs, sub, iters)
     finally:
         if iters > 1:
             vm.unpersist()
@@ -1735,8 +1365,9 @@ def pq_topk_micro(
     num_subspaces: int = 4,
     num_codewords: int = 8,
 ) -> DataFrame:
-    """PQ ADC top-k over the micro-quantized integer space with trained
-    (pq_codebooks_lloyd_micro) codebooks — every encode distance AND every
+    """PQ ADC top-k over the micro-quantized integer space with
+    pq_codebooks_lloyd_micro codebooks (trained, or at iters=0 the
+    stride-sample codebook of sim_ann_pq) — every encode distance AND every
     ADC contribution is BIGINT, so training + encode + scoring replay
     bit-for-bit in a SQL oracle (no 1e6-rounding step: the inputs are
     already integers, and a 64-dim micro L2 is ≤ ~3e14, far inside BIGINT).
@@ -1750,7 +1381,10 @@ def pq_topk_micro(
     sub = _subspace_width(dim, num_subspaces)
     amaps = queries.select(
         "q_id", quantize_micro(F.col("q_vec")).alias("qv")
-    ).select("q_id", _micro_adc_map("qv", codebooks, sub, num_codewords).alias("amap"))
+    ).select(
+        "q_id",
+        _micro_adc_map("qv", codebooks, sub, num_subspaces, num_codewords).alias("amap"),
+    )
     codes = vectors.select(
         F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("vv")
     ).select("n_id", _micro_code_map("vv", codebooks, sub, num_subspaces).alias("cmap"))
@@ -1781,9 +1415,8 @@ def ivf_pq_topk_lloyd_micro(
     Everything runs in the micro-quantized integer space (the
     kmeans_lloyd_micro discipline): coarse training, residuals
     (v − centroid stays BIGINT), per-subspace residual-codebook training
-    (init = residual slices of the stride-sampled vectors, mirroring
-    ivf_pq_topk's deterministic rcbsrc convention), encoding, and ADC —
-    so every intermediate is exact and order-free.
+    (init = residual slices of the stride-sampled vectors), encoding, and
+    ADC — so every intermediate is exact and order-free.
 
     Plan shape (r5 perf pass — the literal-model expression discipline of
     ivf_topk_micro/pq_topk_micro applied end to end): residual computation
@@ -1838,6 +1471,7 @@ def ivfpq_train_micro(
     iters: int = 2,
     num_subspaces: int = 4,
     num_codewords: int = 8,
+    centroid_mod: int | None = None,
 ) -> tuple[list, list]:
     """Train the two IVFADC quantizers in micro-integer space and return
     the tiny model pair `(cents, cbs)` — cents = [(c_id, vec_micro)],
@@ -1845,7 +1479,13 @@ def ivfpq_train_micro(
     ivfpq_encode_micro / ivfpq_rank_micro (and the persisted index build)
     consume.  See ivf_pq_topk_lloyd_micro for the exactness story.  Raises
     ValueError when the shared stride sample holds fewer than
-    max(k_coarse, num_codewords) ids."""
+    max(k_coarse, num_codewords) ids.
+
+    `centroid_mod`: the coarse init is every vector whose id ≡ 0 (mod
+    centroid_mod), c_id = id // centroid_mod — the mod-id sample of the
+    untrained IVF tiers — instead of the k_coarse stride sample.  With
+    iters=0 both quantizers are then the untrained samples the
+    sim_ann_ivfpq family serves, from one collect."""
     sub = _subspace_width(dim, num_subspaces)
     spark = vectors.sparkSession
     # ONE stride-sample collect feeds BOTH quantizers' inits (r12; was two
@@ -1856,26 +1496,37 @@ def ivfpq_train_micro(
     # driver mirrors bit-for-bit (same (d, c_id)-lexicographic argmin as
     # _micro_argmin_sql, same integer subtraction and slicing), so the
     # recurrence and its SQL oracle are unchanged.
-    n_sample = max(k_coarse, num_codewords)
+    n_sample = num_codewords if centroid_mod else max(k_coarse, num_codewords)
     vm = vectors.select(
         F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("v")
     )
-    sample = {
+    in_sample = (F.col("n_id") % stride == 0) & (F.col("n_id") < stride * n_sample)
+    if centroid_mod:
+        in_sample = in_sample | (F.col("n_id") % centroid_mod == 0)
+    rows = {
         int(r["n_id"]): [int(x) for x in r["v"]]
-        for r in vm.filter(
-            (F.col("n_id") % stride == 0) & (F.col("n_id") < stride * n_sample)
-        ).collect()
+        for r in vm.filter(in_sample).collect()
+    }
+    sample = {
+        nid: v for nid, v in rows.items()
+        if nid % stride == 0 and nid < stride * n_sample
     }
     _check_stride_sample(sample, n_sample, stride)
+    if centroid_mod:
+        init = [(nid // centroid_mod, v) for nid, v in rows.items()
+                if nid % centroid_mod == 0]
+        k_coarse = max(len(init), 1)  # an empty mod sample fails the init check
+    else:
+        init = [(nid // stride, v) for nid, v in sample.items()
+                if nid < stride * k_coarse]
     cents = kmeans_lloyd_micro(
         vectors, vec_col=vec_col, id_col=id_col, dim=dim, k=k_coarse,
-        stride=stride, iters=iters,
-        init_cents=[
-            (nid // stride, v) for nid, v in sample.items() if nid < stride * k_coarse
-        ],
+        stride=centroid_mod or stride, iters=iters, init_cents=init,
     )
     # residuals: nearest coarse centroid (integer L2, min-c_id ties), r = v − c
-    res = _micro_residuals(vm, cents).persist()  # feeds the Lloyd stats rounds
+    res = _micro_residuals(vm, cents)
+    if iters > 0:
+        res = res.persist()  # feeds the Lloyd stats rounds
     try:
         cbs = []
         for nid, v in sample.items():
@@ -1907,7 +1558,8 @@ def ivfpq_train_micro(
         # caller's session.  Consumers recompute residuals from the
         # returned model — one extra pass, the price of not parking cache
         # on the caller.
-        res.unpersist(False)
+        if iters > 0:
+            res.unpersist(False)
 
 
 def ivfpq_encode_micro(
@@ -1944,6 +1596,51 @@ def ivfpq_encode_micro(
     )
 
 
+def ivfpq_scored_micro(
+    codes_wide: DataFrame,
+    queries: DataFrame,
+    cents: list,
+    cbs: list,
+    dim: int = 64,
+    nprobe: int = 2,
+    num_subspaces: int = 4,
+    num_codewords: int = 8,
+    probe_list_type: str | None = None,
+) -> DataFrame:
+    """The ADC-scored candidates (q_id, n_id, pr, adc_q) of an encoded
+    IVFADC corpus `codes_wide` (n_id, c_list, cmap — from
+    ivfpq_encode_micro or a persisted index scan), before any top-k cut:
+    probe selection (_micro_nearest), per-(query, probed list) ADC lookup
+    maps as a pure projection, then the shared probe join (_probe_join).
+    `pr` is the 0-based probe rank of the candidate's list for its query,
+    so ONE all-lists relation (nprobe = K) serves every smaller nprobe by
+    the filter pr < nprobe — the factoring sim_ann_ivfpq_curve sweeps
+    over.  `probe_list_type`: the c_list partition type of a persisted
+    codes scan (see _probe_join)."""
+    sub = _subspace_width(dim, num_subspaces)
+    # probes: nprobe nearest coarse lists per query (_micro_nearest, the
+    # same size switch as the encode); query residual per list
+    qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
+    probes = _micro_nearest(
+        qm, "qv", cents, ("q_id", "qv"), nprobe=nprobe, with_center=True
+    ).select(
+        "q_id",
+        "pr",
+        F.col("p")["c_id"].alias("c_list"),
+        F.zip_with(F.col("qv"), F.col("p")["c"], lambda x, y: x - y).alias("qr"),
+    )
+    amaps = probes.select(
+        "q_id",
+        "pr",
+        "c_list",
+        _micro_adc_map("qr", cbs, sub, num_subspaces, num_codewords).alias("amap"),
+    )
+    adc = _adc_sum(num_subspaces, num_codewords)
+    return _probe_join(
+        amaps, codes_wide, "adc_q", adc, part_type=probe_list_type
+    ).select("q_id", "n_id", "pr", "adc_q")
+
+
 def ivfpq_rank_micro(
     codes_wide: DataFrame,
     queries: DataFrame,
@@ -1956,29 +1653,13 @@ def ivfpq_rank_micro(
     num_codewords: int = 8,
     probe_list_type: str | None = None,
 ) -> DataFrame:
-    """ADC top-k over an encoded IVFADC corpus `codes_wide`
-    (n_id, c_list, cmap — from ivfpq_encode_micro or a persisted index
-    scan): probe selection (_micro_nearest), per-(query, probed list) ADC
-    lookup maps as a pure projection, then the shared probe join
-    (_probe_join) and top-k cut.  Output (q_id, n_id, adc_q, rk);
-    smaller = nearer.  `probe_list_type`: the c_list partition type of a
-    persisted codes scan (see _probe_join)."""
-    sub = _subspace_width(dim, num_subspaces)
-    # probes: nprobe nearest coarse lists per query (_micro_nearest, the
-    # same size switch as the encode); query residual per list
-    qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
-    probes = _micro_nearest(
-        qm, "qv", cents, ("q_id", "qv"), nprobe=nprobe, with_center=True
-    ).select(
-        "q_id",
-        F.col("p")["c_id"].alias("c_list"),
-        F.zip_with(F.col("qv"), F.col("p")["c"], lambda x, y: x - y).alias("qr"),
+    """ADC top-k over an encoded IVFADC corpus: ivfpq_scored_micro's
+    candidates cut per query.  Output (q_id, n_id, adc_q, rk); smaller =
+    nearer."""
+    scored = ivfpq_scored_micro(
+        codes_wide, queries, cents, cbs, dim, nprobe, num_subspaces,
+        num_codewords, probe_list_type,
     )
-    amaps = probes.select(
-        "q_id", "c_list", _micro_adc_map("qr", cbs, sub, num_codewords).alias("amap")
-    )
-    adc = _adc_sum(num_subspaces, num_codewords)
-    scored = _probe_join(amaps, codes_wide, "adc_q", adc, part_type=probe_list_type)
     return _topk_per_query(scored, "adc_q", k)
 
 
@@ -2021,7 +1702,7 @@ def sq8_topk(
 ) -> DataFrame:
     """Top-k by EXACT integer dot product over trained int8 codes — the
     scalar-quantization compression tier between the full-precision scan
-    (brute_force_topk) and the codebook tiers (pq_topk): 4× smaller scan
+    (brute_force_topk) and the codebook tiers (pq_topk_micro): 4× smaller scan
     footprint, no codebook training, distances exact BIGINT arithmetic so
     the whole tier value-gates bit-for-bit.
 

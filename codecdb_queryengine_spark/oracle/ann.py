@@ -195,153 +195,6 @@ _UPSERTED_PRE_CTE = f"""mutated AS (
             FROM embeddings WHERE NOT {_UPS_DEL}),"""
 
 
-def _pq_sql(
-    dim: int = 64, m_sub: int = 4, k_codes: int = 8, stride: int = 37
-) -> str:
-    sub = dim // m_sub
-
-    def l2sq(va: str, vb: str) -> str:
-        # element (m*sub + j); left-assoc + mirrors the zip_with/aggregate
-        # left fold; per-term (x-y)*(x-y) mirrors the lambda exactly
-        terms = [
-            f"((CAST({va}[ms.m*{sub} + {j}] AS DOUBLE) - CAST({vb}[ms.m*{sub} + {j}] AS DOUBLE))"
-            f" * (CAST({va}[ms.m*{sub} + {j}] AS DOUBLE) - CAST({vb}[ms.m*{sub} + {j}] AS DOUBLE)))"
-            for j in range(1, sub + 1)
-        ]
-        return " + ".join(terms)
-
-    return f"""
-        WITH cb AS (
-            SELECT CAST(vec_id // {stride} AS BIGINT) AS c_id, embedding
-            FROM embeddings
-            WHERE vec_id % {stride} = 0 AND vec_id < {stride * k_codes}),
-        ms AS (SELECT unnest(range(0, {m_sub})) AS m),
-        codes AS (
-            SELECT n_id, m, c_id FROM (
-                SELECT v.vec_id AS n_id, ms.m, cb.c_id,
-                       row_number() OVER (
-                           PARTITION BY v.vec_id, ms.m
-                           ORDER BY ({l2sq('v.embedding', 'cb.embedding')}) ASC,
-                                    cb.c_id ASC) AS r
-                FROM embeddings v CROSS JOIN ms CROSS JOIN cb) WHERE r = 1),
-        adc AS (
-            SELECT q.vec_id AS q_id, ms.m, cb.c_id,
-                   CAST(round(1e6 * ({l2sq('q.embedding', 'cb.embedding')})) AS BIGINT)
-                     AS contrib
-            FROM embeddings q CROSS JOIN ms CROSS JOIN cb
-            WHERE q.vec_id < {_N_QUERIES}),
-        scored AS (
-            -- CAST: DuckDB sum(BIGINT) is HUGEINT, which pandas-style
-            -- consumers widen to float64 — a type-level hash hazard even
-            -- when every value matches; the engine emits BIGINT.
-            SELECT q_id, n_id, CAST(sum(contrib) AS BIGINT) AS adc_micro
-            FROM codes JOIN adc USING (m, c_id)
-            WHERE q_id <> n_id
-            GROUP BY q_id, n_id)
-        SELECT q_id, n_id, adc_micro, rk FROM (
-            SELECT q_id, n_id, adc_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY adc_micro ASC, n_id ASC) AS BIGINT) AS rk
-            FROM scored)
-        WHERE rk <= {_TOP_K}
-    """
-
-
-def _ivf_pq_sql(
-    dim: int = 64,
-    centroid_mod: int = 29,
-    nprobe: int = 2,
-    m_sub: int = 4,
-    k_codes: int = 8,
-    stride: int = 37,
-    k: int = _TOP_K,
-) -> str:
-    sub = dim // m_sub
-
-    def dotvc(va: str, vb: str) -> str:
-        return " + ".join(
-            f"CAST({va}[{d + 1}] AS DOUBLE) * CAST({vb}[{d + 1}] AS DOUBLE)"
-            for d in range(dim)
-        )
-
-    def res_el(v: str, c: str, idx: str) -> str:
-        return f"(CAST({v}[{idx}] AS DOUBLE) - CAST({c}[{idx}] AS DOUBLE))"
-
-    def l2sq_res(v: str, c: str, sv: str, svc: str) -> str:
-        # Σ_j ((v-c)[j] - (sv-svc)[j])² with idx = ms.m*sub + j, left-assoc
-        terms = []
-        for j in range(1, sub + 1):
-            idx = f"ms.m*{sub} + {j}"
-            t = f"({res_el(v, c, idx)} - {res_el(sv, svc, idx)})"
-            terms.append(f"({t} * {t})")
-        return " + ".join(terms)
-
-    sim = f"({dotvc('v.embedding', 'c.c_vec')}) / sqrt({dotvc('c.c_vec', 'c.c_vec')})"
-    qsim = f"({dotvc('q.embedding', 'c.c_vec')}) / sqrt({dotvc('c.c_vec', 'c.c_vec')})"
-    return f"""
-        WITH cents AS (
-            SELECT vec_id AS c_id, embedding AS c_vec
-            FROM embeddings WHERE vec_id % {centroid_mod} = 0),
-        ms AS (SELECT unnest(range(0, {m_sub})) AS m),
-        assign AS (
-            SELECT n_id, c_id AS c_list FROM (
-                SELECT v.vec_id AS n_id, c.c_id,
-                       row_number() OVER (
-                           PARTITION BY v.vec_id
-                           ORDER BY {sim} DESC, c.c_id ASC) AS r
-                FROM embeddings v CROSS JOIN cents c) WHERE r = 1),
-        rcbsrc AS (
-            SELECT CAST(v.vec_id // {stride} AS BIGINT) AS pq_c,
-                   v.embedding AS sve, cv.c_vec AS svcv
-            FROM embeddings v
-            JOIN assign a ON v.vec_id = a.n_id
-            JOIN cents cv ON cv.c_id = a.c_list
-            WHERE v.vec_id % {stride} = 0 AND v.vec_id < {stride * k_codes}),
-        codes AS (
-            SELECT n_id, c_list, m, pq_c FROM (
-                SELECT v.vec_id AS n_id, a.c_list, ms.m, r.pq_c,
-                       row_number() OVER (
-                           PARTITION BY v.vec_id, ms.m
-                           ORDER BY ({l2sq_res('v.embedding', 'cv.c_vec', 'r.sve', 'r.svcv')}) ASC,
-                                    r.pq_c ASC) AS rn
-                FROM embeddings v
-                JOIN assign a ON v.vec_id = a.n_id
-                JOIN cents cv ON cv.c_id = a.c_list
-                CROSS JOIN ms CROSS JOIN rcbsrc r) WHERE rn = 1),
-        probes AS (
-            SELECT q_id, c_list FROM (
-                SELECT q.vec_id AS q_id, c.c_id AS c_list,
-                       row_number() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY {qsim} DESC, c.c_id ASC) AS r
-                FROM embeddings q CROSS JOIN cents c
-                WHERE q.vec_id < {_N_QUERIES}) WHERE r <= {nprobe}),
-        adc AS (
-            SELECT p.q_id, p.c_list, ms.m, r.pq_c,
-                   CAST(round(1e6 * ({l2sq_res('q.embedding', 'cv.c_vec', 'r.sve', 'r.svcv')})) AS BIGINT)
-                     AS contrib
-            FROM probes p
-            JOIN embeddings q ON q.vec_id = p.q_id
-            JOIN cents cv ON cv.c_id = p.c_list
-            CROSS JOIN ms CROSS JOIN rcbsrc r),
-        scored AS (
-            -- CAST: DuckDB sum(BIGINT) is HUGEINT (see _pq_sql note)
-            SELECT a.q_id, c.n_id, CAST(sum(a.contrib) AS BIGINT) AS adc_micro
-            FROM codes c
-            JOIN adc a ON a.c_list = c.c_list AND a.m = c.m AND a.pq_c = c.pq_c
-            WHERE a.q_id <> c.n_id
-            GROUP BY a.q_id, c.n_id)
-        SELECT q_id, n_id, adc_micro, rk FROM (
-            SELECT q_id, n_id, adc_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY adc_micro ASC, n_id ASC) AS BIGINT) AS rk
-            FROM scored)
-        WHERE rk <= {k}
-    """
-
-
 def _recall_sql(approx_sql: str, k: int = _RECALL_K) -> str:
     """Compose the brute-force ground-truth SQL with an approximate serve's
     own oracle SQL (both at k) and replay the set intersection."""
@@ -469,145 +322,6 @@ def _lsh_collision_short_sql(
     """
 
 
-def _ivfpq_curve_sql(
-    dim: int = 64,
-    centroid_mod: int = 29,
-    m_sub: int = 4,
-    k_codes: int = 8,
-    stride: int = 37,
-    k: int = _RECALL_K,
-) -> str:
-    """The whole (nprobe × R) sweep from ONE all-lists ADC relation:
-    `scored` carries each candidate pair's probe rank `pr`, so every
-    operating point is a windowed SELECT over it (pr <= nprobe → ADC rank
-    <= R → exact re-rank → recall vs exact), and rows_read is a filtered
-    count of the same relation.  The per-stage expressions are verbatim
-    _ivf_pq_sql / _reranked_sql mirrors; MATERIALIZED everywhere the
-    branches share (DuckDB would otherwise inline the ADC body six
-    times)."""
-    sub = dim // m_sub
-
-    def dotvc(va: str, vb: str) -> str:
-        return " + ".join(
-            f"CAST({va}[{d + 1}] AS DOUBLE) * CAST({vb}[{d + 1}] AS DOUBLE)"
-            for d in range(dim)
-        )
-
-    def res_el(v: str, c: str, idx: str) -> str:
-        return f"(CAST({v}[{idx}] AS DOUBLE) - CAST({c}[{idx}] AS DOUBLE))"
-
-    def l2sq_res(v: str, c: str, sv: str, svc: str) -> str:
-        terms = []
-        for j in range(1, sub + 1):
-            idx = f"ms.m*{sub} + {j}"
-            t = f"({res_el(v, c, idx)} - {res_el(sv, svc, idx)})"
-            terms.append(f"({t} * {t})")
-        return " + ".join(terms)
-
-    sim = f"({dotvc('v.embedding', 'c.c_vec')}) / sqrt({dotvc('c.c_vec', 'c.c_vec')})"
-    qsim = f"({dotvc('q.embedding', 'c.c_vec')}) / sqrt({dotvc('c.c_vec', 'c.c_vec')})"
-    nq_k = float(_N_QUERIES * k)
-
-    branches = []
-    i = 0
-    for np_req in _CURVE_NPROBES:
-        cond = "TRUE" if np_req is None else f"pr <= {np_req}"
-        np_out = "(SELECT kk FROM kcnt)" if np_req is None else f"CAST({np_req} AS BIGINT)"
-        for r in _CURVE_RS:
-            branches.append(f"""
-        short{i} AS (
-            SELECT q_id, n_id FROM (
-                SELECT q_id, n_id, row_number() OVER (
-                           PARTITION BY q_id
-                           ORDER BY adc_micro ASC, n_id ASC) AS rk
-                FROM scored WHERE {cond}) WHERE rk <= {r}),
-        rr{i} AS (
-            SELECT q_id, n_id FROM (
-                SELECT q_id, n_id, row_number() OVER (
-                           PARTITION BY q_id
-                           ORDER BY cosine DESC, n_id ASC) AS rk
-                FROM (
-                    SELECT s.q_id, s.n_id,
-                           ({dotvc('q.embedding', 'n.embedding')}) / (q.nrm * n.nrm)
-                             AS cosine
-                    FROM short{i} s
-                    JOIN nvr q ON q.vec_id = s.q_id
-                    JOIN nvr n ON n.vec_id = s.n_id)) WHERE rk <= {k}),
-        pt{i} AS (
-            SELECT {np_out} AS nprobe,
-                   CAST({r} AS BIGINT) AS r_shortlist,
-                   (SELECT CAST(count(*) AS BIGINT) FROM exact e
-                    JOIN rr{i} a ON a.q_id = e.q_id AND a.n_id = e.n_id) AS hits,
-                   (SELECT CAST(count(*) AS BIGINT)
-                    FROM scored WHERE {cond}) AS rows_read)""")
-            i += 1
-    union = " UNION ALL ".join(
-        f"SELECT nprobe, r_shortlist, hits, CAST(hits AS DOUBLE) / {nq_k} AS recall_at_10, rows_read FROM pt{j}"
-        for j in range(i)
-    )
-    return f"""
-        WITH cents AS MATERIALIZED (
-            SELECT vec_id AS c_id, embedding AS c_vec
-            FROM embeddings WHERE vec_id % {centroid_mod} = 0),
-        kcnt AS (SELECT CAST(count(*) AS BIGINT) AS kk FROM cents),
-        ms AS (SELECT unnest(range(0, {m_sub})) AS m),
-        assign AS MATERIALIZED (
-            SELECT n_id, c_id AS c_list FROM (
-                SELECT v.vec_id AS n_id, c.c_id,
-                       row_number() OVER (
-                           PARTITION BY v.vec_id
-                           ORDER BY {sim} DESC, c.c_id ASC) AS r
-                FROM embeddings v CROSS JOIN cents c) WHERE r = 1),
-        rcbsrc AS MATERIALIZED (
-            SELECT CAST(v.vec_id // {stride} AS BIGINT) AS pq_c,
-                   v.embedding AS sve, cv.c_vec AS svcv
-            FROM embeddings v
-            JOIN assign a ON v.vec_id = a.n_id
-            JOIN cents cv ON cv.c_id = a.c_list
-            WHERE v.vec_id % {stride} = 0 AND v.vec_id < {stride * k_codes}),
-        codes AS MATERIALIZED (
-            SELECT n_id, c_list, m, pq_c FROM (
-                SELECT v.vec_id AS n_id, a.c_list, ms.m, r.pq_c,
-                       row_number() OVER (
-                           PARTITION BY v.vec_id, ms.m
-                           ORDER BY ({l2sq_res('v.embedding', 'cv.c_vec', 'r.sve', 'r.svcv')}) ASC,
-                                    r.pq_c ASC) AS rn
-                FROM embeddings v
-                JOIN assign a ON v.vec_id = a.n_id
-                JOIN cents cv ON cv.c_id = a.c_list
-                CROSS JOIN ms CROSS JOIN rcbsrc r) WHERE rn = 1),
-        probes AS MATERIALIZED (
-            SELECT q.vec_id AS q_id, c.c_id AS c_list,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {qsim} DESC, c.c_id ASC) AS pr
-            FROM embeddings q CROSS JOIN cents c
-            WHERE q.vec_id < {_N_QUERIES}),
-        adc AS MATERIALIZED (
-            SELECT p.q_id, p.c_list, p.pr, ms.m, r.pq_c,
-                   CAST(round(1e6 * ({l2sq_res('q.embedding', 'cv.c_vec', 'r.sve', 'r.svcv')})) AS BIGINT)
-                     AS contrib
-            FROM probes p
-            JOIN embeddings q ON q.vec_id = p.q_id
-            JOIN cents cv ON cv.c_id = p.c_list
-            CROSS JOIN ms CROSS JOIN rcbsrc r),
-        scored AS MATERIALIZED (
-            SELECT a.q_id, c.n_id, a.pr,
-                   CAST(sum(a.contrib) AS BIGINT) AS adc_micro
-            FROM codes c
-            JOIN adc a ON a.c_list = c.c_list AND a.m = c.m AND a.pq_c = c.pq_c
-            WHERE a.q_id <> c.n_id
-            GROUP BY a.q_id, c.n_id, a.pr),
-        nvr AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   sqrt({dotvc('embedding', 'embedding')}) AS nrm
-            FROM embeddings),
-        exact AS MATERIALIZED ({_sim_topk_sql(k=k)}),
-        {','.join(branches)}
-        {union}
-    """
-
-
 def _lloyd_l2(dim: int):
     """Unrolled BIGINT L2 between two `v` array columns (oracle text)."""
 
@@ -620,23 +334,28 @@ def _lloyd_l2(dim: int):
     return l2
 
 
-def _lloyd_train_ctes(dim: int, k: int, stride: int, iters: int) -> list[str]:
+def _lloyd_train_ctes(
+    dim: int, k: int | None, stride: int, iters: int
+) -> list[str]:
     """The CTE block every exact-Lloyd oracle shares: micro-quantized `vm`,
     stride-sample init `c0`, `iters` assign/sum/update rounds, and the final
     full-corpus `assign` — a verbatim SQL replay of
     similarity.kmeans_lloyd_micro + the literal-model argmin assignment
-    (ties to the smaller c_id).  Factored so _ivf_lloyd_sql and
-    _semdedup_sql can never drift from each other."""
+    (ties to the smaller c_id).  Factored so _ivf_lloyd_sql,
+    _ivf_pq_lloyd_sql and _semdedup_sql can never drift from each other.
+    `k=None` takes every id ≡ 0 (mod stride) as init: the mod-id sample
+    of ivfpq_train_micro(centroid_mod=stride)."""
     l2 = _lloyd_l2(dim)
     quant = ", ".join(
         f"CAST(floor(CAST(embedding[{j}] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
         for j in range(1, dim + 1)
     )
+    cap = "" if k is None else f" AND vec_id < {stride * k}"
     ctes = [
         f"vm AS MATERIALIZED (SELECT vec_id, [{quant}] AS v FROM embeddings)",
         f"""c0 AS MATERIALIZED (
             SELECT CAST(vec_id // {stride} AS BIGINT) AS c_id, v FROM vm
-            WHERE vec_id % {stride} = 0 AND vec_id < {stride * k})""",
+            WHERE vec_id % {stride} = 0{cap})""",
     ]
     for t in range(iters):
         sums = ", ".join(
@@ -710,6 +429,11 @@ def _ivf_lloyd_sql(
     """
 
 
+# Every ADC `scored` CTE casts its sum back to BIGINT: DuckDB sum(BIGINT)
+# is HUGEINT, which pandas-style consumers widen to float64 — a type-level
+# hash hazard even when every value matches.  The SQL comments cite this
+# as the "_pq_sql note", after the oracle that first carried it; they stay
+# verbatim so the Lloyd oracles' text (and its recorded hashes) is stable.
 def _pq_lloyd_sql(
     dim: int = 64,
     m_sub: int = 4,
@@ -717,7 +441,8 @@ def _pq_lloyd_sql(
     stride: int = 37,
     iters: int = 2,
 ) -> str:
-    """Bit-exact SQL replay of pq_codebooks_lloyd_micro + pq_topk_micro."""
+    """Bit-exact SQL replay of pq_codebooks_lloyd_micro + pq_topk_micro;
+    at iters=0 the untrained stride-sample codebook of sim_ann_pq."""
     sub = dim // m_sub
 
     def l2(v: str, c: str, moff: str) -> str:
@@ -798,26 +523,27 @@ def _pq_lloyd_sql(
     """
 
 
-def _ivf_pq_lloyd_sql(
+def _ivf_pq_lloyd_ctes(
     dim: int = 64,
     k_coarse: int = 8,
     stride: int = 37,
     iters: int = 2,
-    nprobe: int = 2,
+    nprobe: int | None = 2,
     m_sub: int = 4,
     k_codes: int = 8,
     mutated: bool = False,
     cand_filter: str = "",
-) -> str:
-    """Bit-exact SQL replay of ivf_pq_topk_lloyd_micro: coarse Lloyd →
-    residuals → per-subspace residual Lloyd → encode → probes → ADC."""
+    centroid_mod: int | None = None,
+) -> list[str]:
+    """The CTEs of the ivf_pq_topk_lloyd_micro replay, through `scored`
+    (q_id, n_id[, pr], adc_q): coarse Lloyd (_lloyd_train_ctes) →
+    residuals → per-subspace residual Lloyd → encode → probes → ADC.
+    `centroid_mod` swaps the coarse init to the mod-id sample
+    (ivfpq_train_micro(centroid_mod=...)); `nprobe=None` probes every
+    list and carries each candidate's 1-based probe rank `pr` into
+    `scored` (the all-lists relation of the operating curve)."""
     sub = dim // m_sub
-
-    def l2full(a: str, b: str) -> str:
-        return " + ".join(
-            f"({a}.v[{j}] - {b}.v[{j}]) * ({a}.v[{j}] - {b}.v[{j}])"
-            for j in range(1, dim + 1)
-        )
+    l2full = _lloyd_l2(dim)
 
     def l2res(r: str, c: str, moff: str) -> str:
         return " + ".join(
@@ -826,59 +552,30 @@ def _ivf_pq_lloyd_sql(
             for j in range(1, sub + 1)
         )
 
+    def pr(t: str) -> str:
+        return f" {t}.pr," if nprobe is None else ""
+
     quant = ", ".join(
         f"CAST(floor(CAST(embedding[{j}] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
         for j in range(1, dim + 1)
     )
     resid = ", ".join(f"v.v[{j}] - c.v[{j}]" for j in range(1, dim + 1))
     rslice = ", ".join(f"r.r[ms.m*{sub} + {j}]" for j in range(1, sub + 1))
-    ctes = [
-        f"vm AS MATERIALIZED (SELECT vec_id, [{quant}] AS v FROM embeddings)",
-        f"""c0 AS MATERIALIZED (
-            SELECT CAST(vec_id // {stride} AS BIGINT) AS c_id, v FROM vm
-            WHERE vec_id % {stride} = 0 AND vec_id < {stride * k_coarse})""",
-    ]
+    if centroid_mod:
+        ctes = _lloyd_train_ctes(dim, None, centroid_mod, iters)
+    else:
+        ctes = _lloyd_train_ctes(dim, k_coarse, stride, iters)
     if mutated:
         # the sim_ann_ivfpq_upserted corpus: quantizers stay trained on the
         # ORIGINAL vm (fixed at build time — same contract as the flat-IVF
         # upsert oracle), only the ENCODED side swaps to this CTE
-        ctes.append(f"""vm_m AS MATERIALIZED (
+        ctes.insert(2, f"""vm_m AS MATERIALIZED (
             SELECT vec_id, [{quant}] AS v FROM (
                 SELECT vec_id,
                        CASE WHEN {_UPS_UPD} THEN list_reverse(embedding)
                             ELSE embedding END AS embedding
                 FROM embeddings WHERE NOT {_UPS_DEL}))""")
-    # coarse Lloyd rounds (the _ivf_lloyd_sql recurrence)
-    for t in range(iters):
-        sums = ", ".join(
-            f"CAST(sum(v.v[{j}]) AS BIGINT) AS s{j}" for j in range(1, dim + 1)
-        )
-        upd = ", ".join(
-            f"CASE WHEN s.n IS NULL THEN c.v[{j}] "
-            f"ELSE " + _sql_round_ratio(f"s.s{j}", "s.n") + " END"
-            for j in range(1, dim + 1)
-        )
-        ctes.append(f"""a{t} AS MATERIALIZED (
-            SELECT n_id, c_id FROM (
-                SELECT v.vec_id AS n_id, c.c_id,
-                       row_number() OVER (
-                           PARTITION BY v.vec_id
-                           ORDER BY ({l2full('v', 'c')}) ASC, c.c_id ASC) AS r
-                FROM vm v CROSS JOIN c{t} c) WHERE r = 1)""")
-        ctes.append(f"""s{t} AS MATERIALIZED (
-            SELECT a.c_id, count(*) AS n, {sums}
-            FROM a{t} a JOIN vm v ON v.vec_id = a.n_id GROUP BY a.c_id)""")
-        ctes.append(f"""c{t + 1} AS MATERIALIZED (
-            SELECT c.c_id, [{upd}] AS v
-            FROM c{t} c LEFT JOIN s{t} s ON s.c_id = c.c_id)""")
     cf = f"c{iters}"
-    ctes.append(f"""assign AS MATERIALIZED (
-        SELECT n_id, c_id FROM (
-            SELECT v.vec_id AS n_id, c.c_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY ({l2full('v', 'c')}) ASC, c.c_id ASC) AS r
-            FROM vm v CROSS JOIN {cf} c) WHERE r = 1)""")
     ctes.append(f"""res AS MATERIALIZED (
         SELECT a.n_id, a.c_id AS c_list, [{resid}] AS r
         FROM assign a
@@ -943,31 +640,44 @@ def _ivf_pq_lloyd_sql(
                        PARTITION BY r.n_id, c.m
                        ORDER BY ({l2res('r', 'c', 'c.m')}) ASC, c.c_id ASC) AS rr
             FROM {enc_src} r {cj} CROSS JOIN {rcf} c {cw}) WHERE rr = 1)""")
+    if nprobe is None:
+        probe_cols, cut = "q_id, c_id AS c_list, r AS pr", ""
+    else:
+        probe_cols, cut = "q_id, c_id AS c_list", f" WHERE r <= {nprobe}"
     ctes.append(f"""probes AS MATERIALIZED (
-        SELECT q_id, c_id AS c_list FROM (
+        SELECT {probe_cols} FROM (
             SELECT q.vec_id AS q_id, c.c_id,
                    row_number() OVER (
                        PARTITION BY q.vec_id
                        ORDER BY ({l2full('q', 'c')}) ASC, c.c_id ASC) AS r
             FROM vm q CROSS JOIN {cf} c
-            WHERE q.vec_id < {_N_QUERIES}) WHERE r <= {nprobe})""")
+            WHERE q.vec_id < {_N_QUERIES}){cut})""")
     ctes.append(f"""qres AS MATERIALIZED (
-        SELECT p.q_id, p.c_list, [{resid.replace('v.v', 'q.v')}] AS r
+        SELECT p.q_id, p.c_list,{pr('p')} [{resid.replace('v.v', 'q.v')}] AS r
         FROM probes p
         JOIN vm q ON q.vec_id = p.q_id
         JOIN {cf} c ON c.c_id = p.c_list)""")
     ctes.append(f"""adc AS MATERIALIZED (
-        SELECT qr.q_id, qr.c_list, c.m, c.c_id AS pq_c,
+        SELECT qr.q_id, qr.c_list,{pr('qr')} c.m, c.c_id AS pq_c,
                ({l2res('qr', 'c', 'c.m')}) AS contrib
         FROM qres qr CROSS JOIN {rcf} c)""")
-    ctes.append("""scored AS MATERIALIZED (
+    group_pr = ", a.pr" if nprobe is None else ""
+    ctes.append(f"""scored AS MATERIALIZED (
         -- CAST: DuckDB sum(BIGINT) is HUGEINT (see _pq_sql note)
-        SELECT a.q_id, cd.n_id, CAST(sum(a.contrib) AS BIGINT) AS adc_q
+        SELECT a.q_id, cd.n_id,{pr('a')} CAST(sum(a.contrib) AS BIGINT) AS adc_q
         FROM codes cd
         JOIN adc a ON a.c_list = cd.c_list AND a.m = cd.m AND a.pq_c = cd.pq_c
         WHERE a.q_id <> cd.n_id
-        GROUP BY a.q_id, cd.n_id)""")
-    body = ",\n".join(ctes)
+        GROUP BY a.q_id, cd.n_id{group_pr})""")
+    return ctes
+
+
+def _ivf_pq_lloyd_sql(k: int = _TOP_K, **kw) -> str:
+    """Bit-exact SQL replay of ivf_pq_topk_lloyd_micro (see
+    _ivf_pq_lloyd_ctes for the knobs), cut to the per-query top `k`.
+    With iters=0 and centroid_mod=29 it replays the untrained IVFADC
+    serve of the sim_ann_ivfpq family."""
+    body = ",\n".join(_ivf_pq_lloyd_ctes(**kw))
     return f"""
         WITH {body}
         SELECT q_id, n_id, adc_q, rk FROM (
@@ -976,7 +686,69 @@ def _ivf_pq_lloyd_sql(
                        PARTITION BY q_id
                        ORDER BY adc_q ASC, n_id ASC) AS BIGINT) AS rk
             FROM scored)
-        WHERE rk <= {_TOP_K}
+        WHERE rk <= {k}
+    """
+
+
+def _ivfpq_curve_sql(k: int = _RECALL_K) -> str:
+    """The whole (nprobe × R) sweep of sim_ann_ivfpq_curve from ONE
+    all-lists ADC relation: the untrained IVFADC replay
+    (_ivf_pq_lloyd_ctes at iters=0 over the mod-29 coarse sample, every
+    list probed) carries each candidate pair's probe rank `pr` in
+    `scored`, so every operating point is a windowed SELECT over it
+    (pr <= nprobe → ADC rank <= R → exact re-rank → recall vs exact), and
+    rows_read is a filtered count of the same relation.  The re-rank is
+    the _reranked_sql cosine; every shared CTE is MATERIALIZED (DuckDB
+    would otherwise inline the ADC body six times)."""
+    nq_k = float(_N_QUERIES * k)
+    ctes = _ivf_pq_lloyd_ctes(iters=0, nprobe=None, centroid_mod=29)
+    ctes += [
+        "kcnt AS (SELECT CAST(count(*) AS BIGINT) AS kk FROM c0)",
+        f"""nvr AS MATERIALIZED (
+            SELECT vec_id, embedding,
+                   sqrt({_sql_dot('embedding', 'embedding', 64)}) AS nrm
+            FROM embeddings)""",
+        f"exact AS MATERIALIZED ({_sim_topk_sql(k=k)})",
+    ]
+    points = []
+    for np_req in _CURVE_NPROBES:
+        cond = "TRUE" if np_req is None else f"pr <= {np_req}"
+        np_out = "(SELECT kk FROM kcnt)" if np_req is None else f"CAST({np_req} AS BIGINT)"
+        for r in _CURVE_RS:
+            i = len(points)
+            ctes += [
+                f"""short{i} AS (
+            SELECT q_id, n_id FROM (
+                SELECT q_id, n_id, row_number() OVER (
+                           PARTITION BY q_id
+                           ORDER BY adc_q ASC, n_id ASC) AS rk
+                FROM scored WHERE {cond}) WHERE rk <= {r})""",
+                f"""rr{i} AS (
+            SELECT q_id, n_id FROM (
+                SELECT q_id, n_id, row_number() OVER (
+                           PARTITION BY q_id
+                           ORDER BY cosine DESC, n_id ASC) AS rk
+                FROM (
+                    SELECT s.q_id, s.n_id,
+                           ({_sql_dot('q.embedding', 'n.embedding', 64)})
+                             / (q.nrm * n.nrm) AS cosine
+                    FROM short{i} s
+                    JOIN nvr q ON q.vec_id = s.q_id
+                    JOIN nvr n ON n.vec_id = s.n_id)) WHERE rk <= {k})""",
+            ]
+            points.append(f"""
+        SELECT {np_out} AS nprobe, CAST({r} AS BIGINT) AS r_shortlist,
+               (SELECT CAST(count(*) AS BIGINT) FROM exact e
+                JOIN rr{i} a ON a.q_id = e.q_id AND a.n_id = e.n_id) AS hits,
+               (SELECT CAST(count(*) AS BIGINT)
+                FROM scored WHERE {cond}) AS rows_read""")
+    body = ",\n".join(ctes)
+    union = " UNION ALL ".join(points)
+    return f"""
+        WITH {body}
+        SELECT nprobe, r_shortlist, hits,
+               CAST(hits AS DOUBLE) / {nq_k} AS recall_at_10, rows_read
+        FROM ({union})
     """
 
 
@@ -1190,14 +962,20 @@ ORACLE: dict[str, str] = {
     "emb_stream_mutations": _ivf_sql(corpus="mutated", pre_cte=_UPSERTED_PRE_CTE),
     "emb_stream_pq_mutations": _ivf_pq_lloyd_sql(mutated=True),
     "sim_ann_ivf_filtered": _ivf_sql(cand_where="WHERE v.label = 1"),
-    "sim_ann_pq": _pq_sql(),
-    "sim_ann_ivfpq": _ivf_pq_sql(),
+    "sim_ann_pq": _pq_lloyd_sql(iters=0),
+    "sim_ann_ivfpq": _ivf_pq_lloyd_sql(iters=0, centroid_mod=29),
     "sim_ann_recall_ivf": _recall_sql(_ivf_sql(k=_RECALL_K)),
-    "sim_ann_recall_ivfpq": _recall_sql(_ivf_pq_sql(k=_RECALL_K)),
+    "sim_ann_recall_ivfpq": _recall_sql(
+        _ivf_pq_lloyd_sql(k=_RECALL_K, iters=0, centroid_mod=29)
+    ),
     "sim_ann_recall_lsh": _recall_sql(_ann_sql(k=_RECALL_K)),
-    "sim_ann_ivfpq_reranked": _reranked_sql(_ivf_pq_sql(k=_RERANK_R)),
+    "sim_ann_ivfpq_reranked": _reranked_sql(
+        _ivf_pq_lloyd_sql(k=_RERANK_R, iters=0, centroid_mod=29)
+    ),
     "sim_ann_recall_ivfpq_reranked": _recall_sql(
-        _reranked_sql(_ivf_pq_sql(k=_RERANK_R), k=_RECALL_K)
+        _reranked_sql(
+            _ivf_pq_lloyd_sql(k=_RERANK_R, iters=0, centroid_mod=29), k=_RECALL_K
+        )
     ),
     "sim_ann_ivf_reranked": _reranked_sql(_ivf_coarse_short_sql()),
     "sim_ann_recall_ivf_reranked": _recall_sql(

@@ -335,19 +335,38 @@ def emb_stream_pq_mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-k (operators/similarity.pq_topk):
-    4 subspaces × 8 sampled codewords over the 64-dim embeddings."""
+    """Product-quantization ADC top-k (operators/similarity.pq_topk_micro):
+    4 subspaces × 8 codewords sampled at stride 37 over the 64-dim
+    embeddings — the untrained codebook, pq_codebooks_lloyd_micro at
+    iters=0 — with exact BIGINT encode and ADC."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return S.pq_topk(emb, _query_vectors(emb), dim=64, k=_TOP_K)
+    cbs = S.pq_codebooks_lloyd_micro(emb, dim=64, stride=37, iters=0)
+    return S.pq_topk_micro(emb, _query_vectors(emb), cbs, dim=64, k=_TOP_K)
+
+
+def _ivfpq_sampled(emb: DataFrame) -> tuple[list, list, DataFrame]:
+    """The untrained IVFADC model and the corpus encoded against it, in
+    micro-integer space: coarse lists are the vectors whose id ≡ 0
+    (mod 29), residual codebooks the stride-37 sample
+    (similarity.ivfpq_train_micro at iters=0, one collect)."""
+    cents, cbs = S.ivfpq_train_micro(emb, dim=64, centroid_mod=29, iters=0)
+    return cents, cbs, S.ivfpq_encode_micro(emb, cents, cbs, dim=64)
+
+
+def _ivfpq_topk(emb: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """ADC top-k of the untrained IVFADC model at nprobe=2."""
+    cents, cbs, codes = _ivfpq_sampled(emb)
+    return S.ivfpq_rank_micro(codes, q, cents, cbs, dim=64, k=k, nprobe=2)
 
 
 def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ (IVFADC) top-k: coarse inverted lists cut the scan, residual
     product quantization cuts memory and per-candidate cost
-    (operators/similarity.ivf_pq_topk; deterministic quantizers so the
-    DuckDB oracle recomputes codes and ADC exactly)."""
+    (operators/similarity.ivfpq_rank_micro over the untrained quantizer
+    samples; exact BIGINT arithmetic, so the DuckDB oracle recomputes
+    codes and ADC exactly)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return S.ivf_pq_topk(emb, _query_vectors(emb), dim=64, k=_TOP_K)
+    return _ivfpq_topk(emb, _query_vectors(emb), _TOP_K)
 
 
 # --- ANN retrieval quality: recall@k vs exact ground truth ------------------
@@ -399,12 +418,12 @@ def sim_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sim_ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of the IVFADC serve (coarse mod-29 lists, nprobe=2,
-    residual PQ with the deterministic codebooks) vs exact top-10 — the
+    residual PQ with the stride-37 sampled codebooks) vs exact top-10 — the
     quality cost of scoring on 4-byte codes instead of vectors."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     q = _query_vectors(emb)
     exact = S.brute_force_topk(emb, q, k=_RECALL_K)
-    approx = S.ivf_pq_topk(emb, q, dim=64, k=_RECALL_K)
+    approx = _ivfpq_topk(emb, q, _RECALL_K)
     return _recall_df(exact, approx, _RECALL_K)
 
 
@@ -434,7 +453,7 @@ def sim_ann_ivfpq_reranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-rank verbatim and the doubles hash bit-exact."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     q = _query_vectors(emb)
-    short = S.ivf_pq_topk(emb, q, dim=64, k=_RERANK_R)
+    short = _ivfpq_topk(emb, q, _RERANK_R)
     return S.exact_rerank(emb, q, short, k=_TOP_K)
 
 
@@ -447,7 +466,7 @@ def sim_ann_recall_ivfpq_reranked(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_tables(spark, sf_dir)["embeddings"]
     q = _query_vectors(emb)
     exact = S.brute_force_topk(emb, q, k=_RECALL_K)
-    short = S.ivf_pq_topk(emb, q, dim=64, k=_RERANK_R)
+    short = _ivfpq_topk(emb, q, _RERANK_R)
     approx = S.exact_rerank(emb, q, short, k=_RECALL_K)
     return _recall_df(exact, approx, _RECALL_K)
 
@@ -546,35 +565,33 @@ def sim_ann_ivfpq_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     100}) operating point, the two-stage serve's recall@10 (ADC shortlist
     at k=R → exact re-rank, vs brute-force ground truth) next to
     rows_read — the number of (query, candidate) code rows the ADC stage
-    scores at that nprobe (similarity.ivf_candidate_rows; the scan-cost
-    axis).  Output: one row per operating point (nprobe, r_shortlist,
-    hits, recall_at_10, rows_read), the eval-style curve the CodecDB
-    papers report for encoding choices.  The DuckDB oracle replays the
-    whole sweep from ONE materialized all-lists ADC relation, so every
-    point is bit-exact gated.
+    scores at that nprobe (the scan-cost axis).  Output: one row per
+    operating point (nprobe, r_shortlist, hits, recall_at_10, rows_read),
+    the eval-style curve the CodecDB papers report for encoding choices.
+    The DuckDB oracle replays the whole sweep from ONE materialized
+    all-lists ADC relation, so every point is bit-exact gated.
 
-    K (and the nprobe=K row's label) is the corpus's centroid count — a
-    bounded meta fetch, like the centroid collects elsewhere.  Cost
-    factoring mirrors the oracle: ONE all-lists ADC relation with each
-    candidate's probe rank (similarity.ivf_pq_scored at nprobe=K,
-    with_probe_rank) is lazily checkpointed, and every operating point is
-    a filter + window over it — the sweep scores the corpus once, not
-    six times; rows_read is a filtered count of the same relation."""
+    K (and the nprobe=K row's label) is the coarse quantizer's centroid
+    count, known once the sampled model is collected.  Cost factoring
+    mirrors the oracle: ONE all-lists ADC relation with each candidate's
+    0-based probe rank `pr` (similarity.ivfpq_scored_micro at nprobe=K)
+    is lazily checkpointed, and every operating point is a filter + window
+    over it — the sweep scores the corpus once, not six times; rows_read
+    is a filtered count of the same relation."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     q = _query_vectors(emb)
-    kk = emb.filter(F.col("vec_id") % 29 == 0).count()
-    scored = S.ivf_pq_scored(
-        emb, q, dim=64, nprobe=kk, with_probe_rank=True
+    cents, cbs, codes = _ivfpq_sampled(emb)
+    kk = len(cents)
+    scored = S.ivfpq_scored_micro(
+        codes, q, cents, cbs, dim=64, nprobe=kk
     ).localCheckpoint(eager=False)
     exact = S.brute_force_topk(emb, q, k=_RECALL_K).localCheckpoint(eager=False)
     denom = float(_N_QUERIES * _RECALL_K)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_micro").asc(), F.col("n_id").asc()
-    )
+    w = Window.partitionBy("q_id").orderBy(F.col("adc_q").asc(), F.col("n_id").asc())
     combos = []
     for np_req in _CURVE_NPROBES:
         np_eff = kk if np_req is None else np_req
-        sub = scored.filter(F.col("pr") <= np_eff)
+        sub = scored.filter(F.col("pr") < np_eff)
         rows_read = sub.agg(F.count(F.lit(1)).cast("long").alias("rows_read"))
         for r in _CURVE_RS:
             short = (
@@ -1230,7 +1247,6 @@ PLAN_ONCE = frozenset({
     "sim_topk",
     "sim_ann_lsh",
     "sim_ann_ivf",
-    "sim_ann_pq",
     "sim_ann_recall_ivf",
     "sim_ann_recall_lsh",
     "sim_ann_ivf_reranked",

@@ -92,30 +92,33 @@ def rerank_stage(spark, sf_dir: str, index_dir: str, k: int = 5,
 
 def operating_curve(spark, sf_dir: str, n_queries: int = 5):
     """Tune before you scale (r11): sweep (nprobe, R) over ONE all-lists
-    ADC relation carrying each candidate's probe rank
-    (similarity.ivf_pq_scored at nprobe=K) — every operating point is a
-    filter + window over it, so the whole sweep scores the corpus once.
-    Prints recall@10 next to rows_read (the ADC-scored pairs that point
-    pays): the same quality-vs-cost table the gated sim_ann_ivfpq_curve
-    value-hashes, here as the tuning workflow."""
+    ADC relation carrying each candidate's 0-based probe rank `pr`
+    (similarity.ivfpq_scored_micro at nprobe=K over the untrained
+    quantizer samples: mod-29 coarse lists, stride-37 residual codebooks)
+    — every operating point is a filter + window over it, so the whole
+    sweep scores the corpus once.  Prints recall@10 next to rows_read (the
+    ADC-scored pairs that point pays): the same quality-vs-cost table the
+    gated sim_ann_ivfpq_curve value-hashes, here as the tuning workflow."""
     from pyspark.sql import Window
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    kk = emb.filter(F.col("vec_id") % 29 == 0).count()
-    scored = S.ivf_pq_scored(
-        emb, queries, dim=64, nprobe=kk, with_probe_rank=True
+    cents, cbs = S.ivfpq_train_micro(emb, dim=64, centroid_mod=29, iters=0)
+    kk = len(cents)
+    scored = S.ivfpq_scored_micro(
+        S.ivfpq_encode_micro(emb, cents, cbs, dim=64), queries, cents, cbs,
+        dim=64, nprobe=kk,
     ).localCheckpoint(eager=False)
     exact = {
         (r.q_id, r.n_id)
         for r in S.brute_force_topk(emb, queries, k=10).select("q_id", "n_id").collect()
     }
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_micro").asc(), F.col("n_id").asc())
+    w = Window.partitionBy("q_id").orderBy(F.col("adc_q").asc(), F.col("n_id").asc())
     print(f"{'nprobe':>6} {'R':>4} {'recall@10':>9} {'rows_read':>9}")
     for np_ in (1, 4, kk):
-        sub = scored.filter(F.col("pr") <= np_)
+        sub = scored.filter(F.col("pr") < np_)
         rows_read = sub.count()
         for r_ in (20, 100):
             short = (

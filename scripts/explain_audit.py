@@ -23,10 +23,11 @@ Usage: python scripts/explain_audit.py [sf_dir] [name...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from codecdb_queryengine_spark.session import get_spark
@@ -86,16 +87,12 @@ EXPECT_NESTED = {
     # PQ ADC scoring streams all codes past the broadcast per-query lookup
     # maps — the linear-scan-over-codes shape that defines IVF-free PQ
     "sim_ann_pq",
-    # IVF-PQ assignment/probe is all-vectors × broadcast(centroids), like IVF
-    "sim_ann_ivfpq",
     # the recall@k gates each contain the brute-force ground-truth leg
     # (sim_topk's broadcast queries × all vectors) next to their serve
     "sim_ann_recall_ivf",
     "sim_ann_recall_ivfpq",
     "sim_ann_recall_lsh",
-    # the two-stage serve carries the ADC shortlist stage's broadcast ADC
-    # maps (sim_ann_ivfpq's shape); its recall gate adds the brute-force leg
-    "sim_ann_ivfpq_reranked",
+    # the two-stage serve's recall gate carries the brute-force leg too
     "sim_ann_recall_ivfpq_reranked",
     # the flat-tier two-stage serves carry their stage 1's all-vectors ×
     # broadcast(model) assignment (coarse shortlist, IVF's shape); recall
@@ -103,8 +100,7 @@ EXPECT_NESTED = {
     "sim_ann_ivf_reranked",
     "sim_ann_recall_ivf_reranked",
     "sim_ann_recall_lsh_reranked",
-    # the operating-curve sweep: one all-lists ADC relation (ivfpq's
-    # broadcast-model shape) + the brute-force ground-truth leg + 1-row
+    # the operating-curve sweep: the brute-force ground-truth leg + 1-row
     # (hits × rows_read) aggregate crossjoins per operating point
     "sim_ann_ivfpq_curve",
     # the exact-Lloyd tier reuses the same all-vectors × broadcast(model)

@@ -86,15 +86,29 @@ def test_ivf_topk_ranked_and_within_corpus(spark, sf_dir):
     assert len(wide) >= len(approx)
 
 
+def _micro(vec):
+    """floor(x·1e6 + 0.5) of a float32 vector — quantize_micro in Python."""
+    import math
+
+    return [math.floor(float(x) * 1e6 + 0.5) for x in vec]
+
+
+def _hits(df, exact):
+    return len({(r.q_id, r.n_id) for r in df.collect()} & exact)
+
+
 def test_pq_adc_ranks_sanely_vs_bruteforce(spark, sf_dir):
     """PQ compresses 64 floats to 4 codes, so ADC ranking is coarse by
     design; the gate pins structure (k results per query, dedup'd ids,
-    ascending ADC) and a loose recall floor vs exact top-20."""
+    ascending ADC) and loose recall floors vs exact top-20 and top-10, on
+    sim_ann_pq's serve: the stride-37 codebook (pq_codebooks_lloyd_micro
+    at iters=0) under exact-integer encode and ADC."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    pq = S.pq_topk(emb, queries, dim=64, k=5).collect()
+    cbs = S.pq_codebooks_lloyd_micro(emb, dim=64, stride=37, iters=0)
+    pq = S.pq_topk_micro(emb, queries, cbs, dim=64, k=5).collect()
     by_q: dict[int, list] = {}
     for r in sorted(pq, key=lambda r: (r.q_id, r.rk)):
         by_q.setdefault(r.q_id, []).append(r)
@@ -102,7 +116,7 @@ def test_pq_adc_ranks_sanely_vs_bruteforce(spark, sf_dir):
     for rows in by_q.values():
         assert len(rows) == 5
         assert len({r.n_id for r in rows}) == 5
-        adcs = [r.adc_micro for r in rows]
+        adcs = [r.adc_q for r in rows]
         assert adcs == sorted(adcs)
         assert all(r.n_id != r.q_id for r in rows)
     exact20 = {
@@ -112,63 +126,55 @@ def test_pq_adc_ranks_sanely_vs_bruteforce(spark, sf_dir):
     # random 64-d embeddings are adversarial for 4x8 PQ; require evidence of
     # signal, not SOTA recall (measured: 7/25 at sf0.001)
     assert hits >= 2, hits
+    # recall@10 floor: the retired double-precision PQ serve over the same
+    # codebook sample measured 6/50 = 0.12 here (the integer serve: 0.12)
+    exact10 = {
+        (r.q_id, r.n_id) for r in S.brute_force_topk(emb, queries, k=10).collect()
+    }
+    assert _hits(S.pq_topk_micro(emb, queries, cbs, dim=64, k=10), exact10) >= 6
 
 
 def test_ivfpq_structure_and_candidates_come_from_probed_lists(spark, sf_dir):
-    """IVF-PQ output structure: k dedup'd neighbors per query in ascending
-    ADC order, and every returned neighbor belongs to one of the query's
-    nprobe probed inverted lists (the scan-cut invariant)."""
+    """IVF-PQ output structure on sim_ann_ivfpq's serve (mod-29 coarse
+    lists, stride-37 residual codebooks, ivfpq_train_micro at iters=0): k
+    dedup'd neighbors per query in ascending ADC order, every returned
+    neighbor belongs to one of the query's nprobe probed inverted lists
+    (the scan-cut invariant, replayed here in Python integer L2), and a
+    recall@10 floor."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    out = S.ivf_pq_topk(emb, queries, dim=64, k=5).collect()
+    cents, cbs = S.ivfpq_train_micro(emb, dim=64, centroid_mod=29, iters=0)
+    codes = S.ivfpq_encode_micro(emb, cents, cbs, dim=64)
+    out = S.ivfpq_rank_micro(codes, queries, cents, cbs, dim=64, k=5, nprobe=2).collect()
     by_q: dict[int, list] = {}
     for r in sorted(out, key=lambda r: (r.q_id, r.rk)):
         by_q.setdefault(r.q_id, []).append(r)
     assert set(by_q) == {0, 1, 2, 3, 4}
     for rows in by_q.values():
         assert len(rows) == 5 and len({r.n_id for r in rows}) == 5
-        assert [r.adc_micro for r in rows] == sorted(r.adc_micro for r in rows)
-    # scan-cut invariant: neighbors only from probed lists
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
-    from pyspark.sql import Window
+        assert [r.adc_q for r in rows] == sorted(r.adc_q for r in rows)
+    # the coarse quantizer is the mod-29 sample, c_id = id // 29
+    vecs = {int(r.vec_id): _micro(r.embedding) for r in emb.collect()}
+    assert cents == sorted((i // 29, v) for i, v in vecs.items() if i % 29 == 0)
 
-    assigned = {
-        r.n_id: r.c_list
-        for r in emb.crossJoin(F.broadcast(cents))
-        .select(
-            F.col("vec_id").alias("n_id"),
-            "c_id",
-            (S.dot(F.col("embedding"), F.col("c_vec")) / F.col("c_norm")).alias("sim"),
+    def ranked(v):  # (integer L2, c_id) ascending — the serve's order
+        return sorted(
+            (sum((a - b) * (a - b) for a, b in zip(v, c)), cid) for cid, c in cents
         )
-        .groupBy("n_id")
-        .agg(
-            F.max_by(
-                "c_id", F.struct(F.col("sim").alias("s"), (-F.col("c_id")).alias("t"))
-            ).alias("c_list")
-        )
-        .collect()
-    }
-    wp = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id").asc())
-    probed = {}
-    for r in (
-        queries.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id", "c_id",
-            (S.dot(F.col("q_vec"), F.col("c_vec")) / F.col("c_norm")).alias("sim"),
-        )
-        .withColumn("rnk", F.row_number().over(wp))
-        .filter(F.col("rnk") <= 2)
-        .collect()
-    ):
-        probed.setdefault(r.q_id, set()).add(r.c_id)
+
+    assigned = {i: ranked(v)[0][1] for i, v in vecs.items()}
+    probed = {q: {cid for _, cid in ranked(vecs[q])[:2]} for q in range(5)}
     for r in out:
         assert assigned[r.n_id] in probed[r.q_id], (r.q_id, r.n_id)
+    # recall@10 floor: the retired double-precision IVFADC serve over the
+    # same quantizer samples measured 5/50 = 0.1 here (the integer: 0.1)
+    exact10 = {
+        (r.q_id, r.n_id) for r in S.brute_force_topk(emb, queries, k=10).collect()
+    }
+    top10 = S.ivfpq_rank_micro(codes, queries, cents, cbs, dim=64, k=10, nprobe=2)
+    assert _hits(top10, exact10) >= 5
 
 
 def _clustered_fixture(spark, n_clusters=16, n=400, dim=64, sigma=0.15):
@@ -192,7 +198,9 @@ def test_clustered_recall_all_ann_tiers(spark):
 
     Measured on this fixture (seed 7): lsh 0.72, mod-IVF 1.0, trained IVF
     (Lloyd centroids, ivf_topk_micro) 1.0 against the integer-L2 top-5 it
-    ranks by (0.87 against the cosine top-5), trained PQ (Lloyd
+    ranks by (0.87 against the cosine top-5), untrained IVFADC
+    (ivfpq_rank_micro over the mod-29 / stride-37 samples) exact-recall
+    0.25 and cluster-recall 1.0, trained PQ (Lloyd
     codebooks, pq_topk_micro) exact-recall 0.17 but cluster-recall 1.0 —
     PQ collapses same-cluster near-twins to identical codes, so it
     retrieves the right CLUSTER while tie-breaking arbitrarily inside it;
@@ -241,12 +249,20 @@ def test_clustered_recall_all_ann_tiers(spark):
     cbs = S.pq_codebooks_lloyd_micro(emb, dim=64, num_codewords=16, stride=17, iters=2)
     pq = S.pq_topk_micro(emb, queries, cbs, dim=64, k=5, num_codewords=16)
     assert cluster_recall(pq) >= 0.8
-    ivfpq = S.ivf_pq_topk(emb, queries, dim=64, k=5, centroid_mod=29, nprobe=2)
+    # IVFADC over the mod-29 coarse sample and stride-37 residual codebooks
+    pq_cents, pq_cbs = S.ivfpq_train_micro(emb, dim=64, centroid_mod=29, iters=0)
+    codes = S.ivfpq_encode_micro(emb, pq_cents, pq_cbs, dim=64)
+    ivfpq = S.ivfpq_rank_micro(codes, queries, pq_cents, pq_cbs, dim=64, k=5, nprobe=2)
     assert cluster_recall(ivfpq) >= 0.8
     # every tier must beat the random-guess baseline on exact recall too
     # (5 correct of 399 candidates ~ 0.0125)
     assert recall(pq) >= 0.1
     assert recall(ivfpq) >= 0.1
+    # IVFADC recall@10 floor: the retired double-precision serve over the
+    # same quantizer samples measured 50/120 here (the integer serve: 50)
+    exact10 = {(r.q_id, r.n_id) for r in S.brute_force_topk(emb, queries, k=10).collect()}
+    ivfpq10 = S.ivfpq_rank_micro(codes, queries, pq_cents, pq_cbs, dim=64, k=10, nprobe=2)
+    assert _hits(ivfpq10, exact10) >= 50
 
 
 def test_ivf_assign_arrow_matches_expression_assignment(spark):

@@ -1,9 +1,9 @@
 """Regression guards for the r5 shuffle-free model-fold plans
-(operators/similarity: _model_1row + _fold_argmax_sim/_fold_argmin_d,
-_spread, ivf_assign_sql).
+(operators/similarity: _model_1row + _fold_argmax_sim, _spread,
+ivf_assign_sql) and for the integer PQ encode, ADC and codebook guards.
 
 The load-bearing claims pinned here:
-- the argmin/argmax folds are ORDER-FREE (collect_list gives no order
+- the argmax fold is ORDER-FREE (collect_list gives no order
   guarantee, so the fold's total tie-break must make any order produce
   the same winner);
 - `_spread` adds an exchange only for under-partitioned inputs and is a
@@ -52,92 +52,73 @@ def test_ivf_topk_invariant_under_centroid_order(spark, sf_dir):
 
 
 def test_pq_encode_matches_python_argmin(spark, sf_dir):
-    """The per-subspace fold encode must equal a plain-Python argmin over
-    the same codebook (d = left-assoc Σ(a−b)², ties to the smaller id) —
-    guards the HOF lambda-arity trap (a defaulted lambda parameter
-    silently becomes the array INDEX) that produced wrong subspace
-    bindings during development."""
+    """The integer PQ serve (sim_ann_pq's: the stride-37 codebook,
+    pq_codebooks_lloyd_micro at iters=0, then pq_topk_micro) must equal a
+    plain-Python replay of encode + ADC over the same micro-quantized
+    codebook: encode is the per-subspace argmin of Σ(a−b)² with ties to
+    the smaller id, ADC the sum of the query's per-subspace distances to
+    the candidate's codewords — all exact integers."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     sub, M, K, stride = 16, 4, 8, 37
-    cb_rows = (
-        emb.filter((F.col("vec_id") % stride == 0) & (F.col("vec_id") < stride * K))
-        .select((F.col("vec_id") / stride).cast("long").alias("c_id"), "embedding")
-        .collect()
-    )
+
+    def micro(vec):
+        return [math.floor(float(x) * 1e6 + 0.5) for x in vec]
+
+    def l2(a, b):
+        return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+    vecs = {int(r["vec_id"]): micro(r["embedding"]) for r in emb.collect()}
     books = {
-        (m, int(r["c_id"])): [float(x) for x in r["embedding"]][m * sub : (m + 1) * sub]
-        for r in cb_rows
+        (m, i // stride): v[m * sub : (m + 1) * sub]
+        for i, v in vecs.items()
+        if i % stride == 0 and i < stride * K
         for m in range(M)
     }
-
-    def py_l2(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s += (x - y) * (x - y)
-        return s
-
-    got = S.pq_topk(emb, _queries(emb), dim=64, k=3)
-    # pull the encode maps straight out of the plan's intermediate: rebuild
-    # them via the public query instead — compare the ADC winner per query
-    # against a full Python replay of encode + ADC over the small corpus
-    emb_rows = emb.select("vec_id", "embedding").collect()
-    q_rows = _queries(emb).collect()
-    codes = {}
-    for r in emb_rows:
-        v = [float(x) for x in r["embedding"]]
-        codes[int(r["vec_id"])] = [
-            min(
-                range(K),
-                key=lambda c: (py_l2(v[m * sub : (m + 1) * sub], books[(m, c)]), c),
-            )
+    cbs = S.pq_codebooks_lloyd_micro(emb, dim=64, stride=stride, iters=0)
+    assert cbs == sorted((m, c, v) for (m, c), v in books.items())
+    got = S.pq_topk_micro(emb, _queries(emb), cbs, dim=64, k=3)
+    codes = {
+        nid: [
+            min(range(K), key=lambda c: (l2(v[m * sub : (m + 1) * sub], books[(m, c)]), c))
             for m in range(M)
         ]
+        for nid, v in vecs.items()
+    }
     expect = {}
-    for q in q_rows:
-        qv = [float(x) for x in q["q_vec"]]
-        adc = {}
-        for nid, cs in codes.items():
-            if nid == int(q["q_id"]):
-                continue
-            tot = 0
-            for m, c in enumerate(cs):
-                tot += int(
-                    math.floor(py_l2(qv[m * sub : (m + 1) * sub], books[(m, c)]) * 1e6 + 0.5)
-                )
-            adc[nid] = tot
-        expect[int(q["q_id"])] = sorted(adc.items(), key=lambda kv: (kv[1], kv[0]))[:3]
+    for q in range(3):
+        qv = vecs[q]
+        adc = {
+            nid: sum(
+                l2(qv[m * sub : (m + 1) * sub], books[(m, c)]) for m, c in enumerate(cs)
+            )
+            for nid, cs in codes.items()
+            if nid != q
+        }
+        expect[q] = sorted(adc.items(), key=lambda kv: (kv[1], kv[0]))[:3]
     for r in got.collect():
         nid, score = expect[int(r["q_id"])][int(r["rk"]) - 1]
-        assert (int(r["n_id"]), int(r["adc_micro"])) == (nid, score), r
+        assert (int(r["n_id"]), int(r["adc_q"])) == (nid, score), r
 
 
 def test_pq_codebook_guards(spark, sf_dir):
-    """The three PQ codebook guards fail loudly instead of scoring with
-    aliased ADC keys: a float codebook c_id >= num_codewords raises when
-    the ADC map is built, a codebook missing a subspace trips the model's
-    coverage assert, and the integer serve rejects a bad c_id at build.
-    The float guards sit in the model and ADC-map internals every float PQ
-    serve (pq_topk, the IVFADC residual tier) reads."""
+    """The PQ codebook guards fail loudly at build time instead of
+    scoring with aliased or missing ADC keys: a codebook c_id >=
+    num_codewords, and a codebook missing a subspace, each raise a
+    ValueError from the ADC map, and the missing subspace also from the
+    encode map, naming it."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     M, K, sub = 4, 8, 16
-
-    def books(rows):
-        return spark.createDataFrame(rows, "m long, c_id long, c_sub array<double>")
-
-    def adc_maps(codebooks):
-        cb1 = S._pq_model_1row(codebooks, M)
-        return _queries(emb).crossJoin(cb1).select(S._pq_adc_map("q_vec", sub, K))
-
-    too_big = books([(m, c, [float(c)] * sub) for m in range(M) for c in range(K + 1)])
-    aliased = r">= num_codewords 8 — ADC keys would alias adjacent subspaces"
-    with pytest.raises(Exception, match=aliased):
-        adc_maps(too_big).collect()
-    no_m3 = books([(m, c, [float(c)] * sub) for m in range(M - 1) for c in range(K)])
-    with pytest.raises(Exception, match="no entries for some subspace"):
-        adc_maps(no_m3).collect()
-    micro = [(m, c, [c] * sub) for m in range(M) for c in range(K + 1)]
+    too_big = [(m, c, [c] * sub) for m in range(M) for c in range(K + 1)]
     with pytest.raises(ValueError, match="alias adjacent subspaces"):
-        S.pq_topk_micro(emb, _queries(emb), micro, dim=64, k=3)
+        S.pq_topk_micro(emb, _queries(emb), too_big, dim=64, k=3)
+    no_m3 = [(m, c, [c] * sub) for m in range(M - 1) for c in range(K)]
+    missing = r"no codewords for subspace\(s\) \[3\]"
+    with pytest.raises(ValueError, match=missing):
+        S.pq_topk_micro(emb, _queries(emb), no_m3, dim=64, k=3)
+    with pytest.raises(ValueError, match=missing):
+        S._micro_code_map("v", no_m3, sub, M)
+    with pytest.raises(ValueError, match=missing):
+        S._micro_adc_map("v", no_m3, sub, M, K)
 
 
 def test_spread_noop_when_partitioned(spark, sf_dir):

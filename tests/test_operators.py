@@ -23,7 +23,7 @@ def test_exact_dedup_keeps_min_id(spark):
     assert out[bbb] == (2, 1)
 
 
-def test_word_shingles_and_minhash(spark):
+def test_word_shingles(spark):
     df = spark.createDataFrame([(1, "a b c d"), (2, "x y")], ["id", "txt"])
     rows = {
         r.id: r.sh
@@ -31,13 +31,6 @@ def test_word_shingles_and_minhash(spark):
     }
     assert rows[1] == ["a b c", "b c d"]
     assert rows[2] == []  # shorter than k -> empty, not descending-sequence garbage
-    sig = df.select(
-        "id", T.minhash_signature(T.word_shingles("txt", 3), 4).alias("sig")
-    ).collect()
-    by_id = {r.id: r.sig for r in sig}
-    exp0 = min(hashlib.md5(b"0|a b c").hexdigest(), hashlib.md5(b"0|b c d").hexdigest())
-    assert by_id[1][0] == exp0
-    assert len(by_id[1]) == 4
 
 
 def test_minhash_identical_docs_always_candidates(spark):
