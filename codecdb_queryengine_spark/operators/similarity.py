@@ -15,8 +15,6 @@ from __future__ import annotations
 
 # Module-level so pandas-UDF type hints (stringified by the future
 # annotations import) resolve against module globals.
-import math
-
 import numpy as np  # noqa: F401
 import pandas as pd  # noqa: F401
 
@@ -257,91 +255,6 @@ def lsh_band_pairs(
     return bucket_candidate_pairs(bk, "bid", ["band", "band_key"])
 
 
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    centroid_mod: int = 29,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the other classic ANN scale
-    path next to LSH bucketing.
-
-    Coarse quantizer: the vectors whose id ≡ 0 mod `centroid_mod` — a
-    deterministic, training-free stand-in the DuckDB oracle can recompute
-    exactly.  The trained coarse quantizer is the exact-integer Lloyd
-    tier (kmeans_lloyd_micro → ivf_topk_micro), which the oracle replays
-    bit for bit.  Every vector joins its nearest centroid's inverted
-    list via a per-row argmax fold over the 1-row broadcast model — one
-    shuffle-free projection of the corpus (no N×C expansion); queries
-    probe the `nprobe` nearest lists and score exactly within them, so
-    the scored candidate set is ~nprobe/C of the corpus.  Assignment
-    (_ivf_assign) and serve (_ivf_cosine_rank) are the same functions the
-    persisted index (sources/ann_index) runs, so the two forms agree
-    bit for bit.
-    """
-    cmodel = _ivf_model(_mod_centroids(vectors, vec_col, id_col, centroid_mod))
-    return _ivf_cosine_rank(
-        _ivf_assign(vectors, cmodel, vec_col, id_col), queries, cmodel, k, nprobe
-    )
-
-
-def _mod_centroids(
-    vectors: DataFrame, vec_col: str, id_col: str, centroid_mod: int
-) -> DataFrame:
-    """The deterministic, training-free coarse quantizer every untrained
-    IVF tier defaults to: the vectors whose id ≡ 0 (mod `centroid_mod`),
-    in the (c_id, c_vec, c_norm) centroid contract — the stand-in the
-    DuckDB oracles recompute exactly."""
-    return vectors.filter(F.col(id_col) % centroid_mod == 0).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_norm"),
-    )
-
-
-def _ivf_model(cents: DataFrame) -> DataFrame:
-    """A (c_id, c_vec, c_norm) centroid frame as the 1-row broadcast model
-    array that both the assignment fold and the probe selection read."""
-    return F.broadcast(_model_1row(cents, "c_id", "c_vec", "c_norm"))
-
-
-def _ivf_assign(
-    vectors: DataFrame,
-    cmodel: DataFrame,
-    vec_col: str,
-    id_col: str,
-    meta_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Inverted lists (n_id, n_vec, n_norm, c_list[, meta...]): every
-    vector joins its nearest centroid's list.  Nearest-centroid choice
-    ranks dot/|c| — the vector's own norm is a positive per-row constant,
-    so dropping it preserves the cosine argmax and removes two of three
-    dot products per (vector, centroid) pair; ties go to the smaller
-    centroid id.  Assignment is a per-row order-free fold over the 1-row
-    broadcast model (r5 perf pass), so the lists are ONE shuffle-free
-    projection of the corpus — no crossJoin expansion, no groupBy(n_id)
-    exchange, no assigned⋈vectors re-join.  Shared by ivf_topk and the
-    persisted index's build / append / upsert passes."""
-    return _spread(vectors).crossJoin(cmodel).select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        norm(F.col(vec_col)).alias("n_norm"),
-        _fold_argmax_sim(
-            F.transform(
-                F.col("model"),
-                lambda c: F.struct(
-                    (dot(F.col(vec_col), c["c_vec"]) / c["c_norm"]).alias("sim"),
-                    c["c_id"].cast("long").alias("c_id"),
-                ),
-            )
-        )["c_id"].alias("c_list"),
-        *[F.col(c) for c in meta_cols],
-    )
-
-
 def _probe_join(
     probes: DataFrame,
     lists: DataFrame,
@@ -366,33 +279,6 @@ def _probe_join(
     probes = F.broadcast(probes)
     pairs = probes.crossJoin(lists) if on is None else probes.join(lists, on)
     return pairs.filter(F.col("q_id") != F.col("n_id")).withColumn(score_name, score)
-
-
-def _ivf_cosine_rank(
-    lists: DataFrame,
-    queries: DataFrame,
-    cmodel: DataFrame,
-    k: int,
-    nprobe: int,
-    part_type: str | None = None,
-) -> DataFrame:
-    """Flat-IVF cosine serve over inverted lists (n_id, n_vec, n_norm,
-    c_list) — in-memory (_ivf_assign) or a persisted `lists/` scan: per
-    query the `nprobe` nearest lists of the broadcast model, exact cosine
-    within them.  Probe selection is the WINDOW-FREE fold
-    (_probe_centroids, the old rank window's order): a window function on
-    the probe side makes Spark's PlanDynamicPruningFilters fail its
-    broadcast-reuse check and silently degrade a persisted scan's
-    partition filter to `dynamicpruningexpression(true)` (r8)."""
-    probes = _probe_centroids(queries, cmodel, nprobe).select(
-        "q_id",
-        "q_vec",
-        F.col("p")["c_id"].alias("c_list"),
-        norm(F.col("q_vec")).alias("q_norm"),
-    )
-    cos = cosine_pre(F.col("q_vec"), F.col("n_vec"), F.col("q_norm"), F.col("n_norm"))
-    scored = _probe_join(probes, lists, "cosine", cos, part_type=part_type)
-    return _topk_per_query(scored, "cosine", k, desc=True)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -432,24 +318,6 @@ def _model_1row(df: DataFrame, *cols: str) -> DataFrame:
     return df.agg(F.collect_list(F.struct(*[F.col(c) for c in cols])).alias("model"))
 
 
-def _fold_argmax_sim(entries: Column) -> Column:
-    """struct(sim double, c_id long) with the LARGEST sim (ties to the
-    smaller c_id) from an array<struct(sim, c_id)> — the exact max_by
-    (sim, −c_id) ranking ivf_topk always used, as an order-free fold."""
-    init = F.struct(
-        F.lit(float("-inf")).alias("sim"), F.lit(-1).cast("long").alias("c_id")
-    )
-    return F.aggregate(
-        entries,
-        init,
-        lambda acc, s: F.when(
-            (s["sim"] > acc["sim"])
-            | ((s["sim"] == acc["sim"]) & (s["c_id"] < acc["c_id"])),
-            s,
-        ).otherwise(acc),
-    )
-
-
 def _subspace_width(dim: int, num_subspaces: int) -> int:
     """The PQ slice width; a remainder would silently drop trailing dims."""
     sub = dim // num_subspaces
@@ -476,57 +344,6 @@ def _subspace_slices(
         *keep,
         "m",
         F.slice(F.col(vec), (F.col("m") * sub + 1).cast("int"), sub).alias(out),
-    )
-
-
-def _probe_centroids(
-    queries: DataFrame,
-    cmodel: DataFrame,
-    nprobe: int,
-    with_rank: bool = False,
-) -> DataFrame:
-    """(q_id, q_vec, p) — per query the `nprobe` nearest centroids from
-    the 1-row broadcast model, ranked exactly like the old rank window:
-    sim DESC with Spark's NaN-greatest FIRST, ties to the smaller c_id.
-    Ascending sort key = (non-NaN flag, −sim, c_id): negation is
-    sign-exact for ordering non-NaN sims, and the leading flag restores
-    NaN-first, which plain ascending −sim would invert (r5 review — a
-    zero-norm centroid yields NaN sims for everyone; the assignment
-    argmax still sends every vector to its list under Spark's
-    NaN-greatest comparisons, so inverting the probe order would serve
-    zero results where the window form served k).  The struct carries
-    c_id behind the sort fields.  Shared by ivf_topk and
-    ivf_coarse_shortlist."""
-    sims = F.transform(
-        F.col("model"),
-        lambda c: F.struct(
-            (dot(F.col("q_vec"), c["c_vec"]) / c["c_norm"]).alias("sim"),
-            c["c_id"].cast("long").alias("c_id"),
-        ),
-    )
-    # second transform so the dot is computed ONCE per centroid — the
-    # NaN flag re-reads s.sim instead of re-folding the dot
-    keyed = F.transform(
-        sims,
-        lambda s: F.struct(
-            F.when(F.isnan(s["sim"]), F.lit(0)).otherwise(F.lit(1)).alias("nn"),
-            (-s["sim"]).alias("nsim"),
-            s["c_id"].alias("c_id"),
-        ),
-    )
-    if with_rank:
-        # posexplode exposes the probe's 0-based rank in the sorted slice
-        # (`pr`) — the coarse-shortlist stage-1 sort key of
-        # ivf_coarse_shortlist; same order, same struct otherwise
-        return queries.crossJoin(cmodel).select(
-            "q_id",
-            "q_vec",
-            F.posexplode(F.slice(F.array_sort(keyed), 1, nprobe)).alias("pr", "p"),
-        )
-    return queries.crossJoin(cmodel).select(
-        "q_id",
-        "q_vec",
-        F.explode(F.slice(F.array_sort(keyed), 1, nprobe)).alias("p"),
     )
 
 
@@ -586,33 +403,35 @@ def exact_rerank(
 def ivf_coarse_shortlist(
     vectors: DataFrame,
     queries: DataFrame,
+    cents: list[tuple[int, list[int]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     r: int = 100,
-    centroid_mod: int = 29,
     nprobe: int = 4,
 ) -> DataFrame:
     """Stage 1 of two-stage retrieval on the FLAT IVF tier: an R-candidate
     shortlist ranked by the COARSE quantizer alone — a candidate's score
     is its inverted list's probe rank (how near the query is to that
-    list's centroid), tie-broken by n_id.  No candidate vector is ever
-    read: stage 1 touches only the (n_id, c_list) assignment stream, the
-    zero-bytes-per-vector analog of IVFADC's code scan, and exact_rerank
-    then fetches just the R true vectors (Jégou'11 §V composition).
+    list's center `cents`, [(c_id, vec_micro)]), tie-broken by n_id.  No
+    candidate vector is ever read: stage 1 touches only the (n_id,
+    c_list) assignment stream, the zero-bytes-per-vector analog of
+    IVFADC's code scan, and exact_rerank then fetches just the R true
+    vectors (Jégou'11 §V composition).
 
-    Why this exists next to ivf_topk: re-ranking ivf_topk's own shortlist
-    is the IDENTITY (its stage already scores candidates by exact cosine),
-    so the meaningful flat-tier two-stage serve is coarse-rank → exact
-    re-rank.  Because a list's members share its probe rank, R should be
-    sized generously (default 100) relative to expected list population —
+    Why this exists next to ivf_topk_micro: re-ranking its own shortlist
+    only re-orders candidates the serve already scored exactly, so the
+    meaningful flat-tier two-stage serve is coarse-rank → exact re-rank.
+    Because a list's members share its probe rank, R should be sized
+    generously (default 100) relative to expected list population —
     exactly the recall-vs-rows_read dial the ivfpq curve gate measures.
 
-    Scale shape: assignment is the shuffle-free broadcast-model argmax
-    fold over the corpus; probes ride broadcast; the only exchange is the
-    per-query rank window over probed-list members."""
-    cmodel = _ivf_model(_mod_centroids(vectors, vec_col, id_col, centroid_mod))
-    inv = _ivf_assign(vectors, cmodel, vec_col, id_col).select("n_id", "c_list")
-    probes = _probe_centroids(queries, cmodel, nprobe, with_rank=True).select(
+    Scale shape: assignment and probe ranking are the integer-L2
+    _micro_nearest projections of ivf_topk_micro; probes ride broadcast;
+    the only exchange is the per-query rank window over probed-list
+    members."""
+    inv = _micro_assign(vectors, cents, vec_col, id_col).select("n_id", "c_list")
+    qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
+    probes = _micro_nearest(qm, "qv", cents, ("q_id",), nprobe=nprobe).select(
         "q_id", "pr", F.col("p")["c_id"].alias("c_list")
     )
     scored = _probe_join(probes, inv, "pr", F.col("pr"))
@@ -731,36 +550,33 @@ def lsh_bucket_topk(
 
 def ivf_assign_arrow(
     vectors: DataFrame,
+    cents: list[tuple[int, list[int]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    centroid_mod: int = 29,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """(n_id, c_list): nearest-centroid assignment as ONE vectorized Arrow
-    batch matmul — the throughput twin of ivf_topk's expression-fold
-    assignment (r3 verdict item 8: the interpreted 69-centroid HOF fold is
-    the local cost driver of in-stream encoding).
+    """(n_id, c_list): nearest-center assignment as ONE vectorized Arrow
+    batch per partition — the throughput twin of _micro_assign's
+    expression form for in-stream encoding.
 
-    Semantics match the expression form: rank dot(v,c)/|c| descending,
-    tie-break to the smallest c_id (centroid rows are ordered by c_id and
-    np.argmax returns the FIRST maximum).  Numerics: the matmul sums
-    pairwise where the fold sums left-to-right — assignments can only
-    differ when two centroids' similarities agree to ~1e-13, so the
-    expression form remains the oracle-gated face and this one is pinned
-    equal on separated data in tests (same contract as lsh_band_keys_arrow
-    vs the expression signatures).
+    Same integer arithmetic as the expression form: each component is
+    micro-quantized with floor(x·1e6 + 0.5) (float32 → double, one
+    multiply, one add, floor — the quantize_micro op sequence), and the
+    BIGINT L2 to every center `cents` ([(c_id, vec_micro)]) is
+    |v|² − 2·v·c + |c|² in int64, which equals Σ(v − c)² exactly (every
+    term stays far inside int64).  np.argmin returns the FIRST minimum
+    over centers sorted by c_id, i.e. ties go to the smaller c_id — so
+    the answer equals the expression fold's by integer arithmetic, with no
+    summation-order caveat.
 
     Works unchanged on a streaming DataFrame (stateless projection).
     """
     import numpy as np
     import pandas as pd
 
-    if centroids is None:
-        centroids = _mod_centroids(vectors, vec_col, id_col, centroid_mod)
-    model = sorted(centroids.collect(), key=lambda r: r["c_id"])
-    ids = np.array([int(r["c_id"]) for r in model], dtype=np.int64)
-    C = np.array([[float(x) for x in r["c_vec"]] for r in model], dtype=np.float64)
-    norms = np.array([float(r["c_norm"]) for r in model], dtype=np.float64)
+    model = sorted(cents)
+    ids = np.array([int(c_id) for c_id, _ in model], dtype=np.int64)
+    C = np.array([[int(x) for x in c] for _, c in model], dtype=np.int64)
+    c_sq = (C * C).sum(axis=1)
 
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import LongType
@@ -768,78 +584,13 @@ def ivf_assign_arrow(
     @pandas_udf(returnType=LongType())
     def assign(vs: pd.Series) -> pd.Series:
         mat = np.stack(vs.to_numpy()).astype(np.float64)  # (n, d)
-        sims = (mat @ C.T) / norms  # (n, K)
-        return pd.Series(ids[np.argmax(sims, axis=1)])
+        v = np.floor(mat * 1e6 + 0.5).astype(np.int64)
+        d = (v * v).sum(axis=1)[:, None] - 2 * (v @ C.T) + c_sq[None, :]
+        return pd.Series(ids[np.argmin(d, axis=1)])
 
     return vectors.select(
         F.col(id_col).alias("n_id"), assign(F.col(vec_col)).alias("c_list")
     )
-
-
-def _sql_double(v: float) -> str:
-    """SQL text for an exact DOUBLE literal.  repr() is the shortest
-    round-trip form and Spark's string→double cast (Double.parseDouble)
-    is correctly rounded, so the parsed value is bit-identical to the
-    Python float — scientific notation included, which a bare SQL numeric
-    literal would type as DECIMAL."""
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
-
-
-def _sql_double_arr(vals) -> str:
-    """SQL text for an array<double> literal (see _sql_double)."""
-    return "array(" + ",".join(_sql_double(v) for v in vals) + ")"
-
-
-def _sql_dot(a_sql: str, b_sql: str) -> str:
-    """SQL text for `dot` (left-to-right zip_with/aggregate double fold)
-    — the same op sequence as the Column form and the oracle mirrors, so
-    results are bit-identical."""
-    return (
-        f"aggregate(zip_with({a_sql},{b_sql},"
-        f"(x,y)->CAST(x AS DOUBLE)*CAST(y AS DOUBLE)),"
-        f"CAST(0 AS DOUBLE),(acc,x)->acc+x)"
-    )
-
-
-def ivf_assign_sql(vec_sql: str, centroid_rows: list) -> str:
-    """SQL text for the nearest-centroid id of `vec_sql` — the stateless
-    model-broadcast scorer used by the in-stream encoders, with the
-    centroid model embedded as literals.  Ranking and tie-break match
-    ivf_topk's assignment exactly (dot/|c| descending, smaller c_id
-    wins), and every dot is the same left-to-right zip_with/aggregate
-    fold the oracle SQL mirrors — so outputs stay value-gateable.
-    `centroid_rows` are collected (c_id, c_vec[, ...]) rows, the usual
-    tiny model artifact.  Generated as SQL TEXT parsed by one F.expr
-    (r5 perf pass): building the same tree through the Python Column API
-    costs thousands of py4j round-trips of driver time per plan (the
-    _sql_dist_arr rationale).  |c| is pre-folded driver-side with the
-    identical IEEE op sequence (left-assoc Σx², correctly-rounded sqrt —
-    both engines' doubles), bit-identical to what Catalyst would
-    constant-fold from the literal."""
-    elems = []
-    for r in centroid_rows:
-        c_vec = [float(x) for x in r["c_vec"]]
-        s = 0.0
-        for v in c_vec:
-            s += v * v
-        sim = f"{_sql_dot(vec_sql, _sql_double_arr(c_vec))}/{_sql_double(math.sqrt(s))}"
-        elems.append(
-            f"named_struct('sim',{sim},'c_id',CAST({int(r['c_id'])} AS BIGINT))"
-        )
-    # similarity computed ONCE per centroid (array element), then a cheap
-    # fold picks the argmax — HOF lambdas are interpreted with no CSE, so
-    # a fold whose predicate repeated the dot would pay it three times
-    init = "named_struct('sim',CAST('-Infinity' AS DOUBLE),'c_id',CAST(-1 AS BIGINT))"
-    return (
-        f"(aggregate(array({','.join(elems)}),{init},"
-        f"(acc,s)->IF(s.sim>acc.sim OR (s.sim=acc.sim AND s.c_id<acc.c_id),"
-        f"s,acc))).c_id"
-    )
-
-
-def ivf_assign_expr(vec_sql: str, centroid_rows: list) -> Column:
-    """Column form of ivf_assign_sql (one F.expr parse)."""
-    return F.expr(ivf_assign_sql(vec_sql, centroid_rows))
 
 
 # --- exact-integer Lloyd k-means + IVF (the value-gateable TRAINED tier) ---
@@ -996,16 +747,23 @@ def _micro_nearest(
 
 
 def _micro_assign(
-    vectors: DataFrame, cents: list, vec_col: str, id_col: str
+    vectors: DataFrame,
+    cents: list,
+    vec_col: str,
+    id_col: str,
+    meta_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Micro inverted lists (n_id, v, c_list): micro-quantized vectors and
-    their nearest center — shared by ivf_topk_micro and the persisted
-    integer index build."""
+    """Micro inverted lists (n_id, v, c_list[, meta...]): micro-quantized
+    vectors and their nearest center — shared by ivf_topk_micro, the
+    coarse shortlist and the persisted index's build / append / upsert
+    passes.  `meta_cols` ride along for filtered search."""
     vm = vectors.select(
-        F.col(id_col).alias("n_id"), quantize_micro(F.col(vec_col)).alias("v")
+        F.col(id_col).alias("n_id"),
+        quantize_micro(F.col(vec_col)).alias("v"),
+        *[F.col(c) for c in meta_cols],
     )
-    return _micro_nearest(vm, "v", cents, ("n_id", "v")).select(
-        "n_id", "v", F.col("p")["c_id"].alias("c_list")
+    return _micro_nearest(vm, "v", cents, ("n_id", "v", *meta_cols)).select(
+        "n_id", "v", F.col("p")["c_id"].alias("c_list"), *meta_cols
     )
 
 
@@ -1019,8 +777,13 @@ def _ivf_micro_rank(
 ) -> DataFrame:
     """Flat-IVF integer-L2 serve over micro lists (n_id, v, c_list) —
     in-memory (_micro_assign) or a persisted `lists/` scan: the `nprobe`
-    nearest centers per query (window-free, see _ivf_cosine_rank), exact
-    BIGINT L2 within them.  Output (q_id, n_id, l2_micro2, rk)."""
+    nearest centers per query, exact BIGINT L2 within them.  Probe
+    selection is the WINDOW-FREE array_sort slice of _micro_nearest: a
+    window function on the probe side makes Spark's
+    PlanDynamicPruningFilters fail its broadcast-reuse check and silently
+    degrade a persisted scan's partition filter to
+    `dynamicpruningexpression(true)` (r8).  Output (q_id, n_id, l2_micro2,
+    rk)."""
     qm = queries.select("q_id", quantize_micro(F.col("q_vec")).alias("qv"))
     probes = _micro_nearest(qm, "qv", cents, ("q_id", "qv"), nprobe=nprobe).select(
         "q_id", "qv", F.col("p")["c_id"].alias("c_list")
@@ -1140,7 +903,7 @@ def kmeans_lloyd_micro(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dim: int = 64,
-    k: int = 8,
+    k: int | None = 8,
     stride: int = 37,
     iters: int = 2,
     init_cents: list[tuple[int, list[int]]] | None = None,
@@ -1156,8 +919,11 @@ def kmeans_lloyd_micro(
     zero round is identical in Spark, DuckDB and this driver-side mirror.
     Init = the deterministic stride sample (ids 0, stride, …, (k−1)·stride),
     i.e. the same training-free stand-in the untrained tier uses — after
-    `iters` Lloyd rounds the centers are genuinely data-adapted.  Raises
-    ValueError when the sample (or `init_cents`) holds fewer than k ids.
+    `iters` Lloyd rounds the centers are genuinely data-adapted.
+    `k=None` takes every id ≡ 0 (mod stride) as init, c_id = id // stride:
+    at iters=0 that is the mod-id sample the untrained flat-IVF entries
+    serve (stride 29).  Raises ValueError when the sample (or
+    `init_cents`) holds fewer than k ids (fewer than one when k is None).
 
     Scale shape: per iteration ONE pass over the corpus (map-side
     literal-model argmin expression, no N×K shuffle) + ONE k×(dim+1)-cell
@@ -1184,14 +950,15 @@ def kmeans_lloyd_micro(
         # quantizers' inits) — identical tuples, one fewer action
         cents = sorted(init_cents)
     else:
+        in_sample = F.col("n_id") % stride == 0
+        if k is not None:
+            in_sample = in_sample & (F.col("n_id") < stride * k)
         cents = sorted(
             (int(r["n_id"]) // stride, [int(x) for x in r["v"]])
-            for r in vm.filter(
-                (F.col("n_id") % stride == 0) & (F.col("n_id") < stride * k)
-            ).collect()
+            for r in vm.filter(in_sample).collect()
         )
     try:
-        _check_stride_sample([c * stride for c, _ in cents], k, stride)
+        _check_stride_sample([c * stride for c, _ in cents], k or 1, stride)
         cents = _lloyd_rounds(spark, vm, (), cents, dim, iters)
     finally:
         if iters > 1:
@@ -1288,14 +1055,16 @@ def ivf_topk_micro(
     (kmeans_lloyd_micro) centroid model — every distance is BIGINT, so the
     whole query (training included) is bit-exact against a SQL oracle.
 
-    Same semantics as ivf_topk with the model folded into map-side
-    expressions (the r5 perf pass, _micro_nearest): corpus assignment is
+    The model is folded into map-side expressions (the r5 perf pass,
+    _micro_nearest): corpus assignment is
     an argmin projection (no crossJoin expansion, no groupBy(n_id)
     shuffle) and probe selection is array_sort over the same distances
     (ascending (d, c_id) — exactly the old rank window's order) sliced to
     nprobe — so the serve plan is scan → broadcast join → ONE top-k
-    window.  The persisted integer index runs the same assignment and
-    serve core.  Output (q_id, n_id, l2_micro2, rk); smaller = nearer.
+    window.  The persisted index (sources/ann_index) runs the same
+    assignment and serve core.  The untrained entries pass the mod-29
+    sample (kmeans_lloyd_micro(k=None, stride=29, iters=0)).  Output
+    (q_id, n_id, l2_micro2, rk); smaller = nearer.
     """
     return _ivf_micro_rank(
         _micro_assign(vectors, cents, vec_col, id_col), queries, cents, k, nprobe

@@ -122,79 +122,6 @@ def _ann_sql(dim: int = 64, planes: int = 6, k: int = _TOP_K) -> str:
     """
 
 
-def _ivf_sql(
-    centroid_mod: int = 29,
-    nprobe: int = 2,
-    dim: int = 64,
-    cand_where: str = "",
-    corpus: str = "embeddings",
-    pre_cte: str = "",
-    k: int = _TOP_K,
-) -> str:
-    """Mirrors operators/similarity.ivf_topk expression-for-expression:
-    assignment/probe rank dot(v,c)/sqrt(dot(c,c)) and the in-list score is
-    dot/(q_nrm*n_nrm) — all unrolled left-assoc double folds (DuckDB's
-    list_cosine_similarity is FLOAT32; see _SIM_TOPK_SQL).  `cand_where`
-    (e.g. "WHERE v.label = 1") restricts the CANDIDATE set — the filtered
-    vector-search mirror: per-vector assignment commutes with the filter,
-    so filtering the assign CTE equals serving over a meta-filtered lists
-    scan (sim_ann_ivf_filtered).  `corpus` (+ `pre_cte` defining it)
-    swaps the INDEXED side — assignment and neighbor vectors — to a
-    derived table while centroids and query vectors stay on the original
-    embeddings (the quantizer is fixed at build time and queries are
-    external): the mutated-corpus mirror for sim_ann_ivf_upserted."""
-    return f"""
-        WITH {pre_cte} cents AS (
-            SELECT vec_id AS c_id, embedding AS c_vec,
-                   sqrt({_sql_dot('embedding', 'embedding', dim)}) AS c_norm
-            FROM embeddings WHERE vec_id % {centroid_mod} = 0),
-        assign AS (
-            SELECT n_id, c_id FROM (
-                SELECT n_id, c_id, row_number() OVER (
-                           PARTITION BY n_id ORDER BY sim DESC, c_id ASC) AS r
-                FROM (
-                    SELECT v.vec_id AS n_id, c.c_id,
-                           ({_sql_dot('v.embedding', 'c.c_vec', dim)}) / c.c_norm AS sim
-                    FROM {corpus} v, cents c {cand_where})) WHERE r = 1),
-        probe AS (
-            SELECT q_id, c_id FROM (
-                SELECT q_id, c_id, row_number() OVER (
-                           PARTITION BY q_id ORDER BY sim DESC, c_id ASC) AS r
-                FROM (
-                    SELECT q.vec_id AS q_id, c.c_id,
-                           ({_sql_dot('q.embedding', 'c.c_vec', dim)}) / c.c_norm AS sim
-                    FROM embeddings q, cents c
-                    WHERE q.vec_id < {_N_QUERIES})) WHERE r <= {nprobe}),
-        nv AS (
-            SELECT vec_id, embedding,
-                   sqrt({_sql_dot('embedding', 'embedding', dim)}) AS nrm
-            FROM {corpus}),
-        scored AS (
-            SELECT p.q_id, a.n_id,
-                   ({_sql_dot('q.embedding', 'n.embedding', dim)}) / (q.nrm * n.nrm)
-                     AS cosine
-            FROM probe p
-            JOIN assign a ON p.c_id = a.c_id
-            JOIN nv q ON q.vec_id = p.q_id
-            JOIN nv n ON n.vec_id = a.n_id
-            WHERE p.q_id <> a.n_id)
-        SELECT q_id, n_id, cosine, rk FROM (
-            SELECT q_id, n_id, cosine,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY cosine DESC, n_id ASC) AS BIGINT) AS rk
-            FROM scored)
-        WHERE rk <= {k}
-    """
-
-
-_UPSERTED_PRE_CTE = f"""mutated AS (
-            SELECT vec_id,
-                   CASE WHEN {_UPS_UPD} THEN list_reverse(embedding)
-                        ELSE embedding END AS embedding
-            FROM embeddings WHERE NOT {_UPS_DEL}),"""
-
-
 def _recall_sql(approx_sql: str, k: int = _RECALL_K) -> str:
     """Compose the brute-force ground-truth SQL with an approximate serve's
     own oracle SQL (both at k) and replay the set intersection."""
@@ -236,51 +163,6 @@ def _reranked_sql(short_sql: str, k: int = _TOP_K) -> str:
                 JOIN nv q ON q.vec_id = s.q_id
                 JOIN nv n ON n.vec_id = s.n_id))
         WHERE rk <= {k}
-    """
-
-
-def _ivf_coarse_short_sql(
-    centroid_mod: int = 29,
-    nprobe: int = _COARSE_NPROBE,
-    r: int = _COARSE_R,
-    dim: int = 64,
-) -> str:
-    """Mirror of similarity.ivf_coarse_shortlist: the same cents/assign/
-    probe expressions as _ivf_sql (unrolled left-assoc folds), then the
-    shortlist rank over (probe rank ASC, n_id ASC) — no vector ever joins
-    in; the re-rank wrapper fetches them."""
-    return f"""
-        SELECT q_id, n_id FROM (
-            SELECT p.q_id, a.n_id,
-                   row_number() OVER (
-                       PARTITION BY p.q_id
-                       ORDER BY p.r ASC, a.n_id ASC) AS rr
-            FROM (
-                SELECT q_id, c_id, r FROM (
-                    SELECT q_id, c_id, row_number() OVER (
-                               PARTITION BY q_id ORDER BY sim DESC, c_id ASC) AS r
-                    FROM (
-                        SELECT q.vec_id AS q_id, c.c_id,
-                               ({_sql_dot('q.embedding', 'c.c_vec', dim)}) / c.c_norm AS sim
-                        FROM embeddings q, (
-                            SELECT vec_id AS c_id, embedding AS c_vec,
-                                   sqrt({_sql_dot('embedding', 'embedding', dim)}) AS c_norm
-                            FROM embeddings WHERE vec_id % {centroid_mod} = 0) c
-                        WHERE q.vec_id < {_N_QUERIES})) WHERE r <= {nprobe}) p
-            JOIN (
-                SELECT n_id, c_id FROM (
-                    SELECT n_id, c_id, row_number() OVER (
-                               PARTITION BY n_id ORDER BY sim DESC, c_id ASC) AS rn
-                    FROM (
-                        SELECT v.vec_id AS n_id, c.c_id,
-                               ({_sql_dot('v.embedding', 'c.c_vec', dim)}) / c.c_norm AS sim
-                        FROM embeddings v, (
-                            SELECT vec_id AS c_id, embedding AS c_vec,
-                                   sqrt({_sql_dot('embedding', 'embedding', dim)}) AS c_norm
-                            FROM embeddings WHERE vec_id % {centroid_mod} = 0) c))
-                WHERE rn = 1) a ON p.c_id = a.c_id
-            WHERE p.q_id <> a.n_id)
-        WHERE rr <= {r}
     """
 
 
@@ -390,32 +272,94 @@ def _lloyd_train_ctes(
     return ctes
 
 
-def _ivf_lloyd_sql(
+def _mutated_ctes(dim: int, cf: str) -> tuple[str, str]:
+    """(vm_m, assign_m): the micro-quantized mutated corpus of the upsert
+    gates (the %17==3 slice deleted, the %17==5 slice reversed) and its
+    assignment to the final centers `cf` — the quantizers stay trained on
+    the ORIGINAL vm (fixed at build time); only the indexed side swaps."""
+    l2full = _lloyd_l2(dim)
+    quant = ", ".join(
+        f"CAST(floor(CAST(embedding[{j}] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
+        for j in range(1, dim + 1)
+    )
+    return (
+        f"""vm_m AS MATERIALIZED (
+            SELECT vec_id, [{quant}] AS v FROM (
+                SELECT vec_id,
+                       CASE WHEN {_UPS_UPD} THEN list_reverse(embedding)
+                            ELSE embedding END AS embedding
+                FROM embeddings WHERE NOT {_UPS_DEL}))""",
+        f"""assign_m AS MATERIALIZED (
+            SELECT n_id, c_id FROM (
+                SELECT v.vec_id AS n_id, c.c_id,
+                       row_number() OVER (
+                           PARTITION BY v.vec_id
+                           ORDER BY ({l2full('v', 'c')}) ASC, c.c_id ASC) AS r
+                FROM vm_m v CROSS JOIN {cf} c) WHERE r = 1)""",
+    )
+
+
+def _ivf_lloyd_ctes(
     dim: int = 64,
-    k: int = 8,
+    k_coarse: int = 8,
     stride: int = 37,
     iters: int = 2,
     nprobe: int = 2,
-) -> str:
-    """Bit-exact SQL replay of kmeans_lloyd_micro + ivf_topk_micro."""
+    mutated: bool = False,
+    centroid_mod: int | None = None,
+    probe_rank: bool = False,
+) -> list[str]:
+    """The CTEs of the kmeans_lloyd_micro + ivf_topk_micro replay through
+    `probes` (q_id, c_id[, r]): the Lloyd block (_lloyd_train_ctes) and
+    the nprobe nearest centers per query.  `centroid_mod` swaps the init
+    to the whole mod-id sample (kmeans_lloyd_micro(k=None,
+    stride=centroid_mod)) — at iters=0 the untrained flat-IVF entries.
+    `mutated` adds the mutated corpus and its assignment (_mutated_ctes);
+    `probe_rank` carries each probe's 1-based rank `r`."""
     l2 = _lloyd_l2(dim)
     cf = f"c{iters}"
-    ctes = _lloyd_train_ctes(dim, k, stride, iters)
+    if centroid_mod:
+        ctes = _lloyd_train_ctes(dim, None, centroid_mod, iters)
+    else:
+        ctes = _lloyd_train_ctes(dim, k_coarse, stride, iters)
+    if mutated:
+        ctes.extend(_mutated_ctes(dim, cf))
+    cols = "q_id, c_id, r" if probe_rank else "q_id, c_id"
     ctes.append(f"""probes AS MATERIALIZED (
-        SELECT q_id, c_id FROM (
+        SELECT {cols} FROM (
             SELECT q.vec_id AS q_id, c.c_id,
                    row_number() OVER (
                        PARTITION BY q.vec_id
                        ORDER BY ({l2('q', 'c')}) ASC, c.c_id ASC) AS r
             FROM vm q CROSS JOIN {cf} c
             WHERE q.vec_id < {_N_QUERIES}) WHERE r <= {nprobe})""")
+    return ctes
+
+
+def _ivf_lloyd_sql(
+    k: int = _TOP_K, mutated: bool = False, cand_filter: str = "", **kw
+) -> str:
+    """Bit-exact SQL replay of kmeans_lloyd_micro + ivf_topk_micro (see
+    _ivf_lloyd_ctes for the knobs), cut to the per-query top `k`.  With
+    iters=0 and centroid_mod=29 it replays the untrained flat-IVF serve
+    of the sim_ann_ivf family.  `mutated` scores the mutated corpus
+    (sim_ann_ivf_upserted); `cand_filter`, a predicate over the
+    candidate's embeddings row `e`, restricts the candidates
+    (sim_ann_ivf_filtered: per-vector assignment commutes with the
+    filter, so filtering here equals serving a meta-filtered lists
+    scan)."""
+    l2 = _lloyd_l2(kw.get("dim", 64))
+    ctes = _ivf_lloyd_ctes(mutated=mutated, **kw)
+    asg, nvm = ("assign_m", "vm_m") if mutated else ("assign", "vm")
+    cj = "\n        JOIN embeddings e ON e.vec_id = a.n_id" if cand_filter else ""
+    cw = f" AND {cand_filter}" if cand_filter else ""
     ctes.append(f"""scored AS MATERIALIZED (
         SELECT p.q_id, a.n_id, ({l2('qv', 'nv')}) AS l2_micro2
         FROM probes p
-        JOIN assign a ON a.c_id = p.c_id
-        JOIN vm nv ON nv.vec_id = a.n_id
-        JOIN vm qv ON qv.vec_id = p.q_id
-        WHERE p.q_id <> a.n_id)""")
+        JOIN {asg} a ON a.c_id = p.c_id
+        JOIN {nvm} nv ON nv.vec_id = a.n_id
+        JOIN vm qv ON qv.vec_id = p.q_id{cj}
+        WHERE p.q_id <> a.n_id{cw})""")
     body = ",\n".join(ctes)
     return f"""
         WITH {body}
@@ -425,7 +369,46 @@ def _ivf_lloyd_sql(
                        PARTITION BY q_id
                        ORDER BY l2_micro2 ASC, n_id ASC) AS BIGINT) AS rk
             FROM scored)
-        WHERE rk <= {_TOP_K}
+        WHERE rk <= {k}
+    """
+
+
+# The untrained flat-IVF quantizer: the whole mod-29 sample, no Lloyd round.
+_IVF_SAMPLED = {"iters": 0, "centroid_mod": 29}
+
+
+def _ivf_coarse_short_lloyd_sql(
+    nprobe: int = _COARSE_NPROBE, r: int = _COARSE_R
+) -> str:
+    """Mirror of similarity.ivf_coarse_shortlist over the mod-29 sample:
+    the probes with their rank, the assignment, then the shortlist rank
+    over (probe rank ASC, n_id ASC) — no vector ever joins in; the
+    re-rank wrapper fetches them."""
+    body = ",\n".join(_ivf_lloyd_ctes(nprobe=nprobe, probe_rank=True, **_IVF_SAMPLED))
+    return f"""
+        WITH {body}
+        SELECT q_id, n_id FROM (
+            SELECT p.q_id, a.n_id,
+                   row_number() OVER (
+                       PARTITION BY p.q_id
+                       ORDER BY p.r ASC, a.n_id ASC) AS rr
+            FROM probes p JOIN assign a ON a.c_id = p.c_id
+            WHERE p.q_id <> a.n_id)
+        WHERE rr <= {r}
+    """
+
+
+def _ivf_list_sizes_sql(dim: int = 64) -> str:
+    """Per-list vector counts of the mod-29 assignment (the in-stream
+    encoders emb_stream_encode / _fast): the Lloyd block at zero
+    iterations, grouped by list."""
+    body = ",\n".join(_lloyd_train_ctes(dim, None, 29, 0))
+    return f"""
+        WITH {body}
+        SELECT a.c_id AS c_list, count(*) AS n_vectors
+        FROM assign a JOIN embeddings e ON e.vec_id = a.n_id
+        WHERE e.embedding IS NOT NULL
+        GROUP BY a.c_id ORDER BY a.c_id
     """
 
 
@@ -555,27 +538,19 @@ def _ivf_pq_lloyd_ctes(
     def pr(t: str) -> str:
         return f" {t}.pr," if nprobe is None else ""
 
-    quant = ", ".join(
-        f"CAST(floor(CAST(embedding[{j}] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
-        for j in range(1, dim + 1)
-    )
     resid = ", ".join(f"v.v[{j}] - c.v[{j}]" for j in range(1, dim + 1))
     rslice = ", ".join(f"r.r[ms.m*{sub} + {j}]" for j in range(1, sub + 1))
     if centroid_mod:
         ctes = _lloyd_train_ctes(dim, None, centroid_mod, iters)
     else:
         ctes = _lloyd_train_ctes(dim, k_coarse, stride, iters)
+    cf = f"c{iters}"
     if mutated:
         # the sim_ann_ivfpq_upserted corpus: quantizers stay trained on the
         # ORIGINAL vm (fixed at build time — same contract as the flat-IVF
-        # upsert oracle), only the ENCODED side swaps to this CTE
-        ctes.insert(2, f"""vm_m AS MATERIALIZED (
-            SELECT vec_id, [{quant}] AS v FROM (
-                SELECT vec_id,
-                       CASE WHEN {_UPS_UPD} THEN list_reverse(embedding)
-                            ELSE embedding END AS embedding
-                FROM embeddings WHERE NOT {_UPS_DEL}))""")
-    cf = f"c{iters}"
+        # upsert oracle), only the ENCODED side swaps to it
+        vm_m, assign_m = _mutated_ctes(dim, cf)
+        ctes.insert(2, vm_m)
     ctes.append(f"""res AS MATERIALIZED (
         SELECT a.n_id, a.c_id AS c_list, [{resid}] AS r
         FROM assign a
@@ -584,13 +559,7 @@ def _ivf_pq_lloyd_ctes(
     if mutated:
         # mutated-corpus residuals feed ONLY the final `codes` CTE — the
         # residual-codebook training below keeps reading the original res
-        ctes.append(f"""assign_m AS MATERIALIZED (
-            SELECT n_id, c_id FROM (
-                SELECT v.vec_id AS n_id, c.c_id,
-                       row_number() OVER (
-                           PARTITION BY v.vec_id
-                           ORDER BY ({l2full('v', 'c')}) ASC, c.c_id ASC) AS r
-                FROM vm_m v CROSS JOIN {cf} c) WHERE r = 1)""")
+        ctes.append(assign_m)
         ctes.append(f"""res_m AS MATERIALIZED (
             SELECT a.n_id, a.c_id AS c_list, [{resid}] AS r
             FROM assign_m a
@@ -915,56 +884,30 @@ def _label_eval_sql(dim: int = 64) -> str:
 
 _EMB_ENCODE_PARITY_SQL = """
     SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-           CAST(0 AS BIGINT) AS n_mismatch,
-           CAST(0 AS BIGINT) AS n_margin_tight
+           CAST(0 AS BIGINT) AS n_mismatch
     FROM embeddings WHERE embedding IS NOT NULL
 """
-
-
-def _emb_stream_encode_sql(dim: int = 64, centroid_mod: int = 29) -> str:
-    def dotvc(va: str, vb: str) -> str:
-        return " + ".join(
-            f"CAST({va}[{d + 1}] AS DOUBLE) * CAST({vb}[{d + 1}] AS DOUBLE)"
-            for d in range(dim)
-        )
-
-    sim = f"({dotvc('v.embedding', 'c.c_vec')}) / sqrt({dotvc('c.c_vec', 'c.c_vec')})"
-    return f"""
-        WITH cents AS (
-            SELECT vec_id AS c_id, embedding AS c_vec
-            FROM embeddings WHERE vec_id % {centroid_mod} = 0),
-        assign AS (
-            SELECT n_id, c_id AS c_list FROM (
-                SELECT v.vec_id AS n_id, c.c_id,
-                       row_number() OVER (
-                           PARTITION BY v.vec_id
-                           ORDER BY {sim} DESC, c.c_id ASC) AS r
-                FROM embeddings v CROSS JOIN cents c
-                WHERE v.embedding IS NOT NULL) WHERE r = 1)
-        SELECT c_list, count(*) AS n_vectors
-        FROM assign GROUP BY c_list ORDER BY c_list
-    """
 
 
 ORACLE: dict[str, str] = {
     "sim_ann_sq8": _sq8_sql(),
     "sim_topk": _SIM_TOPK_SQL,
     "sim_ann_lsh": _ann_sql(),
-    "sim_ann_ivf": _ivf_sql(),
-    "sim_ann_ivf_indexed": _ivf_sql(),
-    "sim_ann_ivf_indexed_split": _ivf_sql(),
-    "sim_ann_ivf_indexed_append": _ivf_sql(),
-    "sim_ann_ivf_cached": _ivf_sql(),
-    "sim_ann_ivf_appended_split": _ivf_sql(),
-    "sim_ann_ivf_upserted": _ivf_sql(corpus="mutated", pre_cte=_UPSERTED_PRE_CTE),
+    "sim_ann_ivf": _ivf_lloyd_sql(**_IVF_SAMPLED),
+    "sim_ann_ivf_indexed": _ivf_lloyd_sql(**_IVF_SAMPLED),
+    "sim_ann_ivf_indexed_split": _ivf_lloyd_sql(**_IVF_SAMPLED),
+    "sim_ann_ivf_indexed_append": _ivf_lloyd_sql(**_IVF_SAMPLED),
+    "sim_ann_ivf_cached": _ivf_lloyd_sql(**_IVF_SAMPLED),
+    "sim_ann_ivf_appended_split": _ivf_lloyd_sql(**_IVF_SAMPLED),
+    "sim_ann_ivf_upserted": _ivf_lloyd_sql(mutated=True, **_IVF_SAMPLED),
     # the drained CDC stream equals the one-batch mutation (disjoint
     # update/delete slices), so the oracle is sim_ann_ivf_upserted's verbatim
-    "emb_stream_mutations": _ivf_sql(corpus="mutated", pre_cte=_UPSERTED_PRE_CTE),
+    "emb_stream_mutations": _ivf_lloyd_sql(mutated=True, **_IVF_SAMPLED),
     "emb_stream_pq_mutations": _ivf_pq_lloyd_sql(mutated=True),
-    "sim_ann_ivf_filtered": _ivf_sql(cand_where="WHERE v.label = 1"),
+    "sim_ann_ivf_filtered": _ivf_lloyd_sql(cand_filter="e.label = 1", **_IVF_SAMPLED),
     "sim_ann_pq": _pq_lloyd_sql(iters=0),
     "sim_ann_ivfpq": _ivf_pq_lloyd_sql(iters=0, centroid_mod=29),
-    "sim_ann_recall_ivf": _recall_sql(_ivf_sql(k=_RECALL_K)),
+    "sim_ann_recall_ivf": _recall_sql(_ivf_lloyd_sql(k=_RECALL_K, **_IVF_SAMPLED)),
     "sim_ann_recall_ivfpq": _recall_sql(
         _ivf_pq_lloyd_sql(k=_RECALL_K, iters=0, centroid_mod=29)
     ),
@@ -977,9 +920,9 @@ ORACLE: dict[str, str] = {
             _ivf_pq_lloyd_sql(k=_RERANK_R, iters=0, centroid_mod=29), k=_RECALL_K
         )
     ),
-    "sim_ann_ivf_reranked": _reranked_sql(_ivf_coarse_short_sql()),
+    "sim_ann_ivf_reranked": _reranked_sql(_ivf_coarse_short_lloyd_sql()),
     "sim_ann_recall_ivf_reranked": _recall_sql(
-        _reranked_sql(_ivf_coarse_short_sql(), k=_RECALL_K)
+        _reranked_sql(_ivf_coarse_short_lloyd_sql(), k=_RECALL_K)
     ),
     "sim_ann_lsh_reranked": _reranked_sql(_lsh_collision_short_sql()),
     "sim_ann_recall_lsh_reranked": _recall_sql(
@@ -1000,11 +943,11 @@ ORACLE: dict[str, str] = {
     "emb_pca_power": _pca_power_sql(),
     "emb_pca_project": _pca_project_sql(),
     "emb_pca_served": _pca_project_sql(),
-    "emb_stream_encode": _emb_stream_encode_sql(),
-    "emb_stream_encode_fast": _emb_stream_encode_sql(),
-    "emb_stream_index_ingest": _ivf_sql(),
+    "emb_stream_encode": _ivf_list_sizes_sql(),
+    "emb_stream_encode_fast": _ivf_list_sizes_sql(),
+    "emb_stream_index_ingest": _ivf_lloyd_sql(**_IVF_SAMPLED),
     "emb_stream_index_compact": "SELECT s.*, TRUE AS files_shrunk FROM ("
-    + _ivf_sql()
+    + _ivf_lloyd_sql(**_IVF_SAMPLED)
     + ") s",
     "emb_stream_ivfpq_ingest": _ivf_pq_lloyd_sql(),
 }

@@ -47,10 +47,20 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.lsh_bucket_topk(emb, _query_vectors(emb), dim=64, k=_TOP_K, num_planes=6)
 
 
+def _ivf_sampled(emb: DataFrame) -> list:
+    """The untrained flat-IVF coarse quantizer in micro-integer space:
+    every vector whose id ≡ 0 (mod 29), c_id = id // 29
+    (similarity.kmeans_lloyd_micro at iters=0 over the whole mod sample,
+    one collect)."""
+    return S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0)
+
+
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed approximate top-k (deterministic mod-centroids)."""
+    """IVF-bucketed approximate top-k over the mod-29 coarse sample
+    (similarity.ivf_topk_micro: exact BIGINT L2, nprobe=2)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    return S.ivf_topk(emb, _query_vectors(emb), k=_TOP_K, centroid_mod=29, nprobe=2)
+    q = _query_vectors(emb)
+    return S.ivf_topk_micro(emb, q, _ivf_sampled(emb), k=_TOP_K, nprobe=2)
 
 
 def sim_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,7 +68,7 @@ def sim_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned inverted-file layout once, then answer the top-k query by
     reading only the probed list partitions (dynamic partition pruning on
     the c_list partition column).  Bit-identical to sim_ann_ivf — same
-    assignment/scoring expressions, norms persisted exactly — so the same
+    assignment and serve core over the same integers — so the same
     oracle gates the serving path end-to-end through storage.
     """
     from codecdb_queryengine_spark.sources import ann_index as AI
@@ -66,7 +76,7 @@ def sim_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = _ensure_layout(
         "ivf_index", sf_dir, "flat",
-        lambda p: AI.ivf_index_build(emb, p, centroid_mod=29),
+        lambda p: AI.ivf_index_build(emb, p, _ivf_sampled(emb)),
     )
     return AI.ivf_index_topk(spark, path, _query_vectors(emb), k=_TOP_K, nprobe=2)
 
@@ -87,7 +97,7 @@ def sim_ann_ivf_indexed_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = _ensure_layout(
         "ivf_index_split", sf_dir, "split",
-        lambda p: AI.ivf_index_build(emb, p, centroid_mod=29, max_list_rows=16),
+        lambda p: AI.ivf_index_build(emb, p, _ivf_sampled(emb), max_list_rows=16),
     )
     return AI.ivf_index_topk(spark, path, _query_vectors(emb), k=_TOP_K, nprobe=2)
 
@@ -107,12 +117,7 @@ def sim_ann_ivf_indexed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch_dir("ivf_index_append", sf_dir, fresh=True)
     # centroids from the FULL corpus (same mod-29 contract as sim_ann_ivf):
     # a production build fixes the quantizer before ingest begins
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
-    AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), path, centroids=cents)
+    AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), path, _ivf_sampled(emb))
     AI.ivf_index_append(emb.filter(F.col("vec_id") % 2 == 1), path)
     return AI.ivf_index_topk(spark, path, _query_vectors(emb), k=_TOP_K, nprobe=2)
 
@@ -133,12 +138,7 @@ def sim_ann_ivf_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
 
     def build(path: str) -> None:
-        cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-            F.col("vec_id").alias("c_id"),
-            F.col("embedding").alias("c_vec"),
-            S.norm(F.col("embedding")).alias("c_norm"),
-        )
-        AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), path, centroids=cents)
+        AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), path, _ivf_sampled(emb))
         AI.ivf_index_topk(
             spark, path, _query_vectors(emb), k=_TOP_K, nprobe=2, cached=True
         ).collect()
@@ -168,7 +168,7 @@ def sim_ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = _ensure_layout(
         "ivf_index_meta", sf_dir, "meta",
-        lambda p: AI.ivf_index_build(emb, p, centroid_mod=29, meta_cols=("label",)),
+        lambda p: AI.ivf_index_build(emb, p, _ivf_sampled(emb), meta_cols=("label",)),
     )
     return AI.ivf_index_topk(
         spark,
@@ -199,13 +199,8 @@ def sim_ann_ivf_appended_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = _scratch_dir("ivf_index_app_split", sf_dir, fresh=True)
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
     AI.ivf_index_build(
-        emb.filter(F.col("vec_id") % 2 == 0), path, centroids=cents,
+        emb.filter(F.col("vec_id") % 2 == 0), path, _ivf_sampled(emb),
         max_list_rows=16,
     )
     AI.ivf_index_append(emb.filter(F.col("vec_id") % 2 == 1), path)
@@ -231,19 +226,15 @@ def sim_ann_ivf_upserted(spark: SparkSession, sf_dir: str) -> DataFrame:
     between lists), rewrites ONLY the touched lists with the persisted
     cap re-applied, and drops any list emptied by the deletes — all
     through the journaled swap.  Serving must equal a from-scratch build
-    over the mutated corpus, so the oracle is sim_ann_ivf over a
-    mutated-corpus CTE: a resurrected deleted vector, a stale pre-update
-    vector, or a missed migration each flip the hash."""
+    over the mutated corpus, so the oracle is sim_ann_ivf's replay with
+    the indexed side swapped to the mutated corpus: a resurrected deleted
+    vector, a stale pre-update vector, or a missed migration each flip
+    the hash."""
     from codecdb_queryengine_spark.sources import ann_index as AI
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = _scratch_dir("ivf_index_upsert", sf_dir, fresh=True)
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
-    AI.ivf_index_build(emb, path, centroids=cents, max_list_rows=16)
+    AI.ivf_index_build(emb, path, _ivf_sampled(emb), max_list_rows=16)
     AI.ivf_index_upsert(
         path,
         updates=emb.filter(F.expr(_UPS_UPD)).select(
@@ -291,12 +282,7 @@ def emb_stream_mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     base = _scratch_dir("ivf_index_cdc", sf_dir, fresh=True)
     path = os.path.join(base, "index")
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
-    AI.ivf_index_build(emb, path, centroids=cents, max_list_rows=16)
+    AI.ivf_index_build(emb, path, _ivf_sampled(emb), max_list_rows=16)
 
     stream = _vector_mutation_stream(spark, emb, base)
     q = SK.stream_apply_vector_mutations(stream, path, os.path.join(base, "ckpt"))
@@ -309,7 +295,8 @@ def emb_stream_pq_mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
     completes the CDC story across all three mutable index families:
     text generations, IVF touched-lists, and now the PQ tier): the same
     two event files as emb_stream_mutations drain through
-    stream_apply_vector_mutations(index_kind="ivfpq") — each committed
+    stream_apply_vector_mutations, which finds the layout's `codebooks/`
+    and takes the IVFADC upsert — each committed
     batch re-ENCODES its updates against the layout's persisted
     quantizer pair and rewrites only the touched code lists.  The
     drained state equals the one-batch mutation, so the oracle is
@@ -325,9 +312,7 @@ def emb_stream_pq_mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
     AI.ivfpq_index_build_micro(emb, path, cents, cbs, max_list_rows=16)
 
     stream = _vector_mutation_stream(spark, emb, base)
-    q = SK.stream_apply_vector_mutations(
-        stream, path, os.path.join(base, "ckpt"), index_kind="ivfpq"
-    )
+    q = SK.stream_apply_vector_mutations(stream, path, os.path.join(base, "ckpt"))
     q.awaitTermination()
     return AI.ivfpq_index_topk_micro(
         spark, path, _query_vectors(emb), k=_TOP_K, nprobe=2
@@ -412,7 +397,7 @@ def sim_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     q = _query_vectors(emb)
     exact = S.brute_force_topk(emb, q, k=_RECALL_K)
-    approx = S.ivf_topk(emb, q, k=_RECALL_K, centroid_mod=29, nprobe=2)
+    approx = S.ivf_topk_micro(emb, q, _ivf_sampled(emb), k=_RECALL_K, nprobe=2)
     return _recall_df(exact, approx, _RECALL_K)
 
 
@@ -473,13 +458,13 @@ def sim_ann_recall_ivfpq_reranked(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- two-stage retrieval on the FLAT tiers (r10 verdict item 4) -------------
 #
-# Re-ranking ivf_topk's or lsh_bucket_topk's own shortlist would be the
-# IDENTITY: both flat serves already score candidates by exact cosine, so
-# their order IS the re-rank order.  The meaningful composition gives each
-# tier the cheap stage 1 it would run at 100 TB — a candidate order that
-# never reads a vector — and lets exact_rerank pay the vector read for R
-# candidates only (the same IVFADC+R recipe, with the ADC table replaced
-# by the coarse-quantizer rank / the band-collision count).
+# Re-ranking a flat serve's own shortlist adds nothing: lsh_bucket_topk
+# already scores candidates by exact cosine, and ivf_topk_micro by exact
+# micro-unit L2.  The meaningful composition gives each tier the cheap
+# stage 1 it would run at 100 TB — a candidate order that never reads a
+# vector — and lets exact_rerank pay the vector read for R candidates
+# only (the same IVFADC+R recipe, with the ADC table replaced by the
+# coarse-quantizer rank / the band-collision count).
 
 _COARSE_R = 100  # coarse ranks are list-granular: R spans ~nprobe lists
 _COARSE_NPROBE = 4
@@ -495,7 +480,7 @@ def sim_ann_ivf_reranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     q = _query_vectors(emb)
     short = S.ivf_coarse_shortlist(
-        emb, q, r=_COARSE_R, centroid_mod=29, nprobe=_COARSE_NPROBE
+        emb, q, _ivf_sampled(emb), r=_COARSE_R, nprobe=_COARSE_NPROBE
     )
     return S.exact_rerank(emb, q, short, k=_TOP_K)
 
@@ -510,7 +495,7 @@ def sim_ann_recall_ivf_reranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _query_vectors(emb)
     exact = S.brute_force_topk(emb, q, k=_RECALL_K)
     short = S.ivf_coarse_shortlist(
-        emb, q, r=_COARSE_R, centroid_mod=29, nprobe=_COARSE_NPROBE
+        emb, q, _ivf_sampled(emb), r=_COARSE_R, nprobe=_COARSE_NPROBE
     )
     approx = S.exact_rerank(emb, q, short, k=_RECALL_K)
     return _recall_df(exact, approx, _RECALL_K)
@@ -645,8 +630,8 @@ def sim_ann_ivf_lloyd_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full production ANN loop with a TRAINED quantizer, value-gated
     end to end: exact-integer Lloyd training (kmeans_lloyd_micro) →
     persisted partition-by-list index layout (sources/ann_index.
-    ivf_index_build_micro) → partition-pruned serving (ivf_index_topk_micro,
-    DPP pinned by scripts/explain_audit.py).  The persisted layout must not
+    ivf_index_build) → partition-pruned serving (ivf_index_topk, DPP
+    pinned by scripts/explain_audit.py).  The persisted layout must not
     change results, so the oracle is sim_ann_ivf_lloyd's verbatim — DuckDB
     replays training and scoring straight off the base table."""
     from codecdb_queryengine_spark.sources import ann_index as AI
@@ -655,10 +640,10 @@ def sim_ann_ivf_lloyd_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         cents = S.kmeans_lloyd_micro(emb, dim=64, k=8, stride=37, iters=2)
-        AI.ivf_index_build_micro(emb, path, cents)
+        AI.ivf_index_build(emb, path, cents)
 
     path = _ensure_layout("ivf_lloyd_index", sf_dir, "lloyd", build)
-    return AI.ivf_index_topk_micro(spark, path, _query_vectors(emb), k=_TOP_K, nprobe=2)
+    return AI.ivf_index_topk(spark, path, _query_vectors(emb), k=_TOP_K, nprobe=2)
 
 
 def sim_ann_pq_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -927,31 +912,23 @@ def emb_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_stream_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN-index ingestion: the embeddings file stream is
     ENCODED in-stream — each vector assigned to its nearest IVF centroid
-    by a pure expression fold over the centroid model embedded as a
-    literal (the model-broadcast pattern: ~C·d floats, collected once
-    driver-side like every deployed scorer) — fully stateless append, no
-    state store, no join.  Rolled up to per-list counts batch-side after
-    the drain; oracle = the batch IVF assignment (same dot/|c| ranking
-    and min-c_id tie-break as similarity.ivf_topk).
+    by the literal-model BIGINT-L2 argmin over the micro-quantized
+    vector (similarity._micro_assign, the model-broadcast pattern: the
+    mod-29 centers collected once driver-side like every deployed
+    scorer) — fully stateless append, no state store, no join.  Rolled
+    up to per-list counts batch-side after the drain; oracle = the batch
+    assignment of the flat-IVF Lloyd replay at zero iterations.
     """
     from codecdb_queryengine_spark.streaming import events as E
 
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = (
-        emb.filter(F.col("vec_id") % 29 == 0)
-        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"))
-        .collect()
-    )
-    # NULL embeddings would fold to the init sentinel while the oracle's
-    # NULLS-LAST ranking assigns a centroid — exclude them on both sides
     stream = E.read_table_stream(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    encoded = stream.select(
-        F.col("vec_id").alias("n_id"),
-        S.ivf_assign_expr("embedding", cents).alias("c_list"),
+    encoded = S._micro_assign(stream, _ivf_sampled(emb), "embedding", "vec_id")
+    res = E.run_to_memory(
+        encoded.select("n_id", "c_list"), "q_emb_stream_encode", output_mode="append"
     )
-    res = E.run_to_memory(encoded, "q_emb_stream_encode", output_mode="append")
     return (
         res.groupBy("c_list")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
@@ -961,8 +938,8 @@ def emb_stream_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def emb_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone serving composition: the embeddings stream is encoded
-    in-stream (stateless expression-fold assignment against the broadcast
-    quantizer model) and appended EXACTLY-ONCE into the persisted IVF
+    in-stream (stateless literal-model integer assignment,
+    similarity._micro_assign) and appended EXACTLY-ONCE into the persisted IVF
     index's partitioned list layout (file-sink commit log); the drained
     index then answers the standard top-k query through the
     partition-pruned read path (sources/ann_index.ivf_index_topk).
@@ -978,27 +955,16 @@ def emb_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codecdb_queryengine_spark.streaming import sinks as SK
 
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents_df = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
+    cents = _ivf_sampled(emb)
     # fresh: the file sink's commit log must not see a prior invocation's
     # ingested lists or the stream would (correctly) append nothing new
     base = _scratch_dir("ivf_stream_index", sf_dir, fresh=True)
-    cents_df.write.mode("overwrite").parquet(os.path.join(base, "centroids"))
-    cents = cents_df.select("c_id", "c_vec").collect()
+    AI._write_centroids(spark, base, cents)
     stream = E.read_table_stream(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    enc = stream.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_vec"),
-        S.norm(F.col("embedding")).alias("n_norm"),
-        S.ivf_assign_expr("embedding", cents).alias("c_list"),
-    )
     q = SK.stream_to_parquet(
-        enc,
+        S._micro_assign(stream, cents, "embedding", "vec_id"),
         os.path.join(base, "lists"),
         os.path.join(base, "ckpt"),
         partition_by=("c_list",),
@@ -1026,14 +992,9 @@ def emb_stream_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codecdb_queryengine_spark.streaming import sinks as SK
 
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents_df = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
+    cents = _ivf_sampled(emb)
     base = _scratch_dir("ivf_stream_index_compact", sf_dir, fresh=True)
-    cents_df.write.mode("overwrite").parquet(os.path.join(base, "centroids"))
-    cents = cents_df.select("c_id", "c_vec").collect()
+    AI._write_centroids(spark, base, cents)
     staged = os.path.join(base, "in")
     emb.filter(F.col("embedding").isNotNull()).select(
         "vec_id", "embedding"
@@ -1044,12 +1005,7 @@ def emb_stream_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    enc = stream.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_vec"),
-        S.norm(F.col("embedding")).alias("n_norm"),
-        S.ivf_assign_expr("embedding", cents).alias("c_list"),
-    )
+    enc = S._micro_assign(stream, cents, "embedding", "vec_id")
     lists_path = os.path.join(base, "lists")
     q = SK.stream_to_parquet(
         enc, lists_path, os.path.join(base, "ckpt"), partition_by=("c_list",),
@@ -1088,10 +1044,7 @@ def emb_stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh: the file sink's commit log must not see a prior invocation's
     # ingested lists or the stream would (correctly) append nothing new
     base = _scratch_dir("ivfpq_stream_index", sf_dir, fresh=True)
-    AI._write_model_table(
-        spark, os.path.join(base, "centroids"), sorted(cents),
-        (("c_id", "long"), ("c", "array")),
-    )
+    AI._write_centroids(spark, base, cents)
     AI._write_model_table(
         spark, os.path.join(base, "codebooks"), sorted(cbs),
         (("m", "long"), ("c_id", "long"), ("c_sub", "array")),
@@ -1114,80 +1067,44 @@ def emb_stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def emb_encode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-gated parity between the two IVF assignment implementations
-    (r4 verdict item 5): the oracle-mirrorable expression fold
-    (similarity.ivf_assign_expr — what emb_stream_encode gates) and the
-    Arrow batch-matmul fast path (similarity.ivf_assign_arrow — what a
-    production ingest stream runs, 3× faster scoring, previously pinned
-    only in tests).  Both assign every corpus vector; the query emits the
-    exact integer counts (total, mismatches) — mismatches can only arise
-    from numpy pairwise- vs fold left-summation on near-tied centroids,
-    and on this corpus there are none, which the oracle now asserts per
-    gate run instead of per test run.
-
-    The tie-margin assumption is itself a CHECKED precondition (r7
-    ADVICE): `n_margin_tight` counts vectors whose best-vs-runner-up
-    centroid-similarity margin is below 1e-9 — five orders of magnitude
-    above the ~1e-14 divergence float64 summation order can introduce,
-    yet far below any real margin on this corpus.  The oracle states 0,
-    so if a future corpus DOES carry a near-tie, this column goes red
-    alongside (or instead of) n_mismatch and the failure attributes
-    straight to the float-order artifact rather than reading as an
-    assignment-logic regression in emb_stream_encode_fast."""
+    (r4 verdict item 5): the literal-model expression form
+    (similarity._micro_assign — what emb_stream_encode gates) and the
+    Arrow batch fast path (similarity.ivf_assign_arrow — what a
+    production ingest stream runs).  Both assign every corpus vector by
+    the same integer L2 over the same micro-quantized values, so they
+    agree by arithmetic; the query emits the exact integer counts
+    (total, mismatches) and the oracle asserts zero mismatches per gate
+    run."""
     emb = load_tables(spark, sf_dir)["embeddings"].filter(
         F.col("embedding").isNotNull()
     )
-    cents_df = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
+    cents = _ivf_sampled(emb)
+    fold = S._micro_assign(emb, cents, "embedding", "vec_id").select(
+        "n_id", F.col("c_list").alias("c_fold")
     )
-    cents = cents_df.select("c_id", "c_vec").collect()
-    cmodel = F.broadcast(S._model_1row(cents_df, "c_id", "c_vec", "c_norm"))
-    sims = F.array_sort(
-        F.transform(
-            F.col("model"),
-            lambda c: S.dot(F.col("embedding"), c["c_vec"]) / c["c_norm"],
-        )
-    )
-    fold = emb.crossJoin(cmodel).select(
-        F.col("vec_id").alias("n_id"),
-        S.ivf_assign_expr("embedding", cents).alias("c_fold"),
-        (F.element_at(sims, -1) - F.element_at(sims, -2)).alias("margin"),
-    )
-    arrow = S.ivf_assign_arrow(emb, centroids=cents_df)
+    arrow = S.ivf_assign_arrow(emb, cents)
     return fold.join(arrow, "n_id").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.sum((F.col("c_fold") != F.col("c_list")).cast("long")).alias("n_mismatch"),
-        F.sum((F.col("margin") < F.lit(1e-9)).cast("long")).alias("n_margin_tight"),
     )
 
 
 def emb_stream_encode_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """emb_stream_encode's vectorized twin: the same stateless in-stream
-    IVF assignment through ONE Arrow batch matmul per partition
-    (similarity.ivf_assign_arrow) instead of the interpreted 69-centroid
-    expression fold — the throughput path for a production ingest stream.
-    VALUE-gated against the expression fold's oracle (r6 verdict item 2
-    retired the rows-only category): numpy's pairwise summation could in
-    principle diverge from the left-to-right fold on near-tied centroids,
-    but emb_encode_parity proves zero assignment mismatches on this corpus
-    per gate run (and tests/test_ann_recall.py pins equality on separated
-    data), so the per-list counts here hash bit-exact against the same
-    _emb_stream_encode_sql oracle the fold form uses — a future near-tie
-    divergence would surface as a hash mismatch here AND a nonzero
-    n_mismatch in emb_encode_parity, pointing straight at the cause."""
+    IVF assignment through ONE Arrow batch per partition
+    (similarity.ivf_assign_arrow: numpy int64 L2 over the same
+    micro-quantized values) instead of the expression fold — the
+    throughput path for a production ingest stream.  The assignment is
+    integer arithmetic on both paths, so the per-list counts hash
+    bit-exact against the same oracle as emb_stream_encode, and
+    emb_encode_parity checks the two forms row by row."""
     from codecdb_queryengine_spark.streaming import events as E
 
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
     stream = E.read_table_stream(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    encoded = S.ivf_assign_arrow(stream, centroids=cents)
+    encoded = S.ivf_assign_arrow(stream, _ivf_sampled(emb))
     res = E.run_to_memory(encoded, "q_emb_stream_encode_fast", output_mode="append")
     return (
         res.groupBy("c_list")
@@ -1246,11 +1163,7 @@ QUERIES = {
 PLAN_ONCE = frozenset({
     "sim_topk",
     "sim_ann_lsh",
-    "sim_ann_ivf",
-    "sim_ann_recall_ivf",
     "sim_ann_recall_lsh",
-    "sim_ann_ivf_reranked",
-    "sim_ann_recall_ivf_reranked",
     "sim_ann_lsh_reranked",
     "sim_ann_recall_lsh_reranked",
     "emb_label_centroids",

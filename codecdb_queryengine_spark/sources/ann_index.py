@@ -4,25 +4,30 @@ query with partition-pruned probes.
 The similarity operators (operators/similarity.py) recompute centroid
 assignment per query — right for one-shot analytics, wrong for a serving
 path that answers many top-k queries against the same corpus.  This module
-is the index-as-a-table form:
+is the index-as-a-table form, in the same exact-integer space as the
+in-memory serve:
 
-- `ivf_index_build` runs the SAME expression-form assignment ivf_topk uses
-  (dot/|c| ranking, min-c_id tie-break — oracle-compatible) ONCE and writes
-  two parquet tables: `centroids/` (K rows) and `lists/` partitioned BY
-  THE LIST ID, with each vector's norm precomputed.
-- `ivf_index_topk` ranks the nprobe nearest lists per query and joins the
-  broadcast probe set against `lists/` ON THE PARTITION COLUMN — Spark's
-  dynamic partition pruning turns that into reading only the probed
-  partitions, i.e. ~nprobe/K of the index regardless of corpus size.
-  That is the scale contract of an inverted-file index expressed in
-  storage layout instead of a custom in-memory structure: at 1e10 vectors
-  a query touches nprobe partitions, not the corpus.
+- `ivf_index_build` runs the in-memory tier's assignment
+  (similarity._micro_assign: micro-quantized vectors, BIGINT-L2 argmin,
+  ties to the smaller centroid id) ONCE and writes two parquet tables:
+  `centroids/` (c_id, c — the K micro centers, a tiny model artifact)
+  and `lists/` (n_id, v[, meta...]) partitioned BY THE LIST ID.
+- `ivf_index_topk` collects the centers back, ranks the nprobe nearest
+  lists per query and joins the broadcast probe set against `lists/` ON
+  THE PARTITION COLUMN — Spark's dynamic partition pruning turns that
+  into reading only the probed partitions, i.e. ~nprobe/K of the index
+  regardless of corpus size.  That is the scale contract of an
+  inverted-file index expressed in storage layout instead of a custom
+  in-memory structure: at 1e10 vectors a query touches nprobe
+  partitions, not the corpus.
+- `ivf_index_append` / `ivf_index_upsert` assign a batch against the
+  layout's OWN persisted centers and rewrite only the touched lists.
 
-Results are bit-identical to operators/similarity.ivf_topk: both forms
-run the same assignment (similarity._ivf_assign) and the same serve core
-(similarity._ivf_cosine_rank; the integer tier _micro_assign /
-_ivf_micro_rank), with norms persisted as exact doubles — so the
-sim_ann_ivf oracle gates the indexed path too.
+Every distance is BIGINT, so results equal
+operators/similarity.ivf_topk_micro exactly: both forms run the same
+assignment and the same serve core (similarity._ivf_micro_rank), and the
+Lloyd replay oracles gate the persisted path bit for bit.  The IVFADC
+layout below shares the routing, append and upsert cores.
 """
 
 from __future__ import annotations
@@ -33,12 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.operators.similarity import (
-    _ivf_assign,
-    _ivf_cosine_rank,
     _ivf_micro_rank,
-    _ivf_model,
     _micro_assign,
-    _mod_centroids,
 )
 from codecdb_queryengine_spark.session import run_parallel
 from codecdb_queryengine_spark.sources.io import (
@@ -57,17 +58,18 @@ def _scan(spark: SparkSession, table_dir: str, cached: bool) -> DataFrame:
 def ivf_index_build(
     vectors: DataFrame,
     path: str,
+    cents: list[tuple[int, list[int]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    centroid_mod: int = 29,
-    centroids: DataFrame | None = None,
     max_list_rows: int | None = None,
     meta_cols: tuple[str, ...] = (),
 ) -> None:
-    """Assign every vector to its nearest centroid and persist the index.
+    """Assign every vector to its nearest center in `cents` ([(c_id,
+    vec_micro)] — similarity.kmeans_lloyd_micro, trained or at iters=0
+    the untrained sample) and persist the index.
 
-    Layout: `<path>/centroids` (c_id, c_vec, c_norm) and `<path>/lists`
-    (n_id, n_vec, n_norm) partitioned by c_list.
+    Layout: `<path>/centroids` (c_id, c) and `<path>/lists` (n_id, v)
+    partitioned by c_list, v the micro-quantized vector.
 
     `meta_cols` rides metadata columns (labels, timestamps, source tags)
     into the lists layout next to each vector, which is what makes
@@ -90,42 +92,27 @@ def ivf_index_build(
     scale-correct shape: pass 1's result is K' rows however big the
     corpus is.
     """
-    if centroids is None:
-        centroids = _mod_centroids(vectors, vec_col, id_col, centroid_mod)
-    lists = _ivf_assign(vectors, _ivf_model(centroids), vec_col, id_col, meta_cols)
+    _write_centroids(vectors.sparkSession, path, cents)
+    assigned = _micro_assign(vectors, cents, vec_col, id_col, meta_cols)
+    _write_lists(assigned, path, max_list_rows, n_dirs_hint=len(cents))
 
-    def _write_cents() -> None:
-        centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 
-    if max_list_rows is not None:
-        # Capped layout: the slot plan sizes the write, so the centroid
-        # count is never needed — and the centroid-artifact write and the
-        # per-list count pass are INDEPENDENT jobs (the assignment folds
-        # the centroid DataFrame, not the written artifact): overlap them
-        # (guide §2.6; was three sequential actions, now two overlapped +
-        # the lists write).
-        _, rows = run_parallel(
-            vectors.sparkSession,
-            [
-                _write_cents,
-                lambda: lists.groupBy("c_list")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect(),
-            ],
-            2,
-        )
-        counts = {int(r["c_list"]): int(r["_n"]) for r in rows}
-        _write_lists(lists, path, max_list_rows, precomputed_counts=counts)
-    else:
-        _write_cents()
-        # K from the just-written centroid artifact (metadata-only count
-        # under parquet aggregate pushdown — re-counting the centroid
-        # DataFrame would re-run its corpus filter) sizes the uncapped
-        # layout write.
-        n_lists = vectors.sparkSession.read.parquet(
-            os.path.join(path, "centroids")
-        ).count()
-        _write_lists(lists, path, None, n_dirs_hint=int(n_lists))
+def _write_centroids(spark: SparkSession, path: str, cents: list) -> None:
+    """The `centroids/` model artifact (c_id, c) both index families and
+    the streamed ingests write."""
+    _write_model_table(
+        spark, os.path.join(path, "centroids"), sorted(cents),
+        (("c_id", "long"), ("c", "array")),
+    )
+
+
+def _read_centroids(spark: SparkSession, path: str) -> list:
+    """The layout's OWN persisted centers as [(c_id, vec_micro)] —
+    maintenance passes assign against these, never a caller's guess."""
+    cents = _collect_rows(spark, os.path.join(path, "centroids"), ("c_id", "c"))
+    if not cents:
+        raise ValueError(f"empty centroid artifact at {path}")
+    return cents
 
 
 def _check_append_schema(assigned: DataFrame, existing: DataFrame) -> None:
@@ -168,7 +155,7 @@ def ivf_index_append(
     """Incrementally add vectors to an EXISTING persisted index without a
     rebuild: read the layout's own centroid model back (never the
     caller's guess — the index-layout discipline), assign only the new
-    batch with the same fold expressions, and land new files only in the
+    batch with the same assignment expressions, and land new files only in the
     touched c_list directories — maintenance cost O(batch + touched
     lists), not O(corpus).
 
@@ -188,17 +175,15 @@ def ivf_index_append(
     sim_ann_ivf_indexed_append / sim_ann_ivf_appended_split under the
     verbatim sim_ann_ivf oracle)."""
     spark = new_vectors.sparkSession
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
-    assigned = _ivf_assign(
-        new_vectors, _ivf_model(centroids), vec_col, id_col, meta_cols
-    )
+    cents = _read_centroids(spark, path)
+    assigned = _micro_assign(new_vectors, cents, vec_col, id_col, meta_cols)
     _append_assigned(spark, path, assigned)
 
 
 def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> None:
     """Layout-agnostic append core shared by the flat-IVF and IVFADC
     indexes: `assigned` is the batch already in the layout's own row form
-    (vectors+norms for IVF, PQ codes for IVFADC) with its `c_list`
+    (micro vectors for IVF, PQ codes for IVFADC) with its `c_list`
     routing column; everything from here down is pure partition routing
     (see ivf_index_append's docstring for the slot-aware contract)."""
     from codecdb_queryengine_spark.sources import io as IO
@@ -372,13 +357,11 @@ def ivf_index_upsert(
     spark = spark or (updates.sparkSession if updates is not None else None)
     if spark is None:
         raise ValueError("ivf_index_upsert: pass spark= when updates is None")
-    if updates is not None:
-        centroids = spark.read.parquet(os.path.join(path, "centroids"))
-        assigned = _ivf_assign(
-            updates, _ivf_model(centroids), vec_col, id_col, meta_cols
-        )
-    else:
-        assigned = None
+    assigned = (
+        _micro_assign(updates, _read_centroids(spark, path), vec_col, id_col, meta_cols)
+        if updates is not None
+        else None
+    )
     return _upsert_assigned(
         spark, path, assigned, delete_ids,
         upd_id_frame=updates.select(id_col) if updates is not None else None,
@@ -595,7 +578,6 @@ def _write_lists(
     path: str,
     max_list_rows: int | None,
     n_dirs_hint: int | None = None,
-    precomputed_counts: dict[int, int] | None = None,
 ) -> None:
     """Write the `lists/` layout, splitting oversized lists across a
     secondary `c_slot` partition level when `max_list_rows` is set (see
@@ -613,13 +595,8 @@ def _write_lists(
     part_cols = ["c_list"]
     n_dirs = n_dirs_hint
     if max_list_rows is not None:
-        if precomputed_counts is not None:
-            counts = precomputed_counts
-        else:
-            rows = (
-                lists.groupBy("c_list").agg(F.count(F.lit(1)).alias("_n")).collect()
-            )
-            counts = {int(r["c_list"]): int(r["_n"]) for r in rows}
+        rows = lists.groupBy("c_list").agg(F.count(F.lit(1)).alias("_n")).collect()
+        counts = {int(r["c_list"]): int(r["_n"]) for r in rows}
         plan = _slot_plan(counts, max_list_rows)
         n_dirs = sum(s for _, s in plan)
         lists = _apply_slots(lists, spark, plan)
@@ -666,10 +643,12 @@ def ivf_index_topk(
     candidate_filter: str | None = None,
     cached: bool = False,
 ) -> DataFrame:
-    """Top-k over the persisted index: rank nprobe lists per query against
-    the (broadcast) centroid table, then score ONLY the probed partitions
+    """Top-k over the persisted index: the in-memory tier's serve core
+    (similarity._ivf_micro_rank — window-free probe selection against the
+    collected centers, exact BIGINT L2) scores ONLY the probed partitions
     of `lists/` — the c_list equi-join on the partition column lets
-    dynamic partition pruning skip every unprobed list's files.
+    dynamic partition pruning skip every unprobed list's files.  Output
+    (q_id, n_id, l2_micro2, rk), equal to similarity.ivf_topk_micro.
 
     `candidate_filter` (a SQL predicate over the lists columns, e.g.
     `"label = 1"` when the index was built with meta_cols) restricts the
@@ -680,20 +659,16 @@ def ivf_index_topk(
     filtering, so results equal brute-force-over-the-filtered-subset
     restricted to the probed lists — the same probe semantics as the
     unfiltered path."""
-    cents = _scan(spark, os.path.join(path, "centroids"), cached)
+    cents = _read_centroids(spark, path)
     lists = _scan(spark, os.path.join(path, "lists"), cached)
     if candidate_filter is not None:
         lists = lists.filter(candidate_filter)
     # the probe side casts to the partition type discovery inferred; the
     # scan side stays untouched so DPP fires (scripts/explain_audit.py pins
     # the LIVE dynamicpruning subquery on this scan)
-    return _ivf_cosine_rank(
-        lists, queries, _ivf_model(cents), k, nprobe,
-        part_type=dict(lists.dtypes)["c_list"],
+    return _ivf_micro_rank(
+        lists, queries, cents, k, nprobe, part_type=dict(lists.dtypes)["c_list"]
     )
-
-
-# --- exact-integer (Lloyd-trained) index variant ---------------------------
 
 
 def _write_model_table(
@@ -716,56 +691,6 @@ def _write_model_table(
         spark,
         table_dir,
         pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema),
-    )
-
-
-def ivf_index_build_micro(
-    vectors: DataFrame,
-    path: str,
-    cents: list[tuple[int, list[int]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_list_rows: int | None = None,
-) -> None:
-    """Persist an IVF index over the micro-quantized integer space with a
-    TRAINED centroid model (operators/similarity.kmeans_lloyd_micro) —
-    the trained counterpart of ivf_index_build, with the same layout
-    contract (`centroids/` K rows, `lists/` partitioned by c_list,
-    optional hot-list splitting via `max_list_rows` — see
-    ivf_index_build) but BIGINT vectors and integer-L2 assignment, so the
-    whole train→persist→serve loop stays bit-replayable by a SQL
-    oracle."""
-    spark = vectors.sparkSession
-    _write_model_table(
-        spark, os.path.join(path, "centroids"), sorted(cents),
-        (("c_id", "long"), ("c", "array")),
-    )
-    # the in-memory tier's own assignment projection (no crossJoin
-    # expansion, no groupBy(n_id) shuffle ahead of the repartition write)
-    assigned = _micro_assign(vectors, cents, vec_col, id_col)
-    _write_lists(assigned, path, max_list_rows, n_dirs_hint=len(cents))
-
-
-def ivf_index_topk_micro(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    cached: bool = False,
-) -> DataFrame:
-    """Top-k over the persisted integer index: the in-memory tier's serve
-    core (similarity._ivf_micro_rank — window-free probe selection, nprobe
-    lists per query, DPP on the c_list equi-join with the scan-side
-    partition column untouched) over the scanned lists, every distance
-    BIGINT.  Output matches operators/similarity.ivf_topk_micro exactly,
-    so one oracle gates both forms."""
-    cents = _collect_rows(spark, os.path.join(path, "centroids"), ("c_id", "c"))
-    if not cents:
-        raise ValueError(f"ivf_index_topk_micro: empty centroid artifact at {path}")
-    lists = _scan(spark, os.path.join(path, "lists"), cached)
-    return _ivf_micro_rank(
-        lists, queries, cents, k, nprobe, part_type=dict(lists.dtypes)["c_list"]
     )
 
 
@@ -799,10 +724,7 @@ def ivfpq_index_build_micro(
     from codecdb_queryengine_spark.operators.similarity import ivfpq_encode_micro
 
     spark = vectors.sparkSession
-    _write_model_table(
-        spark, os.path.join(path, "centroids"), sorted(cents),
-        (("c_id", "long"), ("c", "array")),
-    )
+    _write_centroids(spark, path, cents)
     _write_model_table(
         spark, os.path.join(path, "codebooks"), sorted(cbs),
         (("m", "long"), ("c_id", "long"), ("c_sub", "array")),

@@ -9,6 +9,8 @@ trigger is a no-op, a killed run resumes from the last committed batch.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -125,7 +127,6 @@ def stream_apply_vector_mutations(
     mutations: DataFrame,
     index_path: str,
     checkpoint: str,
-    index_kind: str = "ivf",
 ) -> StreamingQuery:
     """CDC into the persisted IVF vector index — the vector-side mirror of
     stream_apply_text_mutations: a stream of mutation events (`op` 'u'/'d',
@@ -142,10 +143,12 @@ def stream_apply_vector_mutations(
     locate nothing — so the layout converges to the same state
     (tests/test_ann_index.test_ivf_upsert_replay_idempotent).
 
-    `index_kind` selects the layout family: "ivf" (full-precision lists,
-    ivf_index_upsert) or "ivfpq" (codes-only IVFADC lists — updates are
-    RE-ENCODED against the layout's persisted quantizer pair through
-    ivfpq_index_upsert; same touched-lists + journaled-swap contract).
+    The layout's own artifacts pick the family, the way append and upsert
+    read their quantizers back from it: a `codebooks/` table means the
+    codes-only IVFADC lists (updates RE-ENCODED against the persisted
+    quantizer pair through ivfpq_index_upsert), otherwise flat IVF
+    (ivf_index_upsert); the same touched-lists + journaled-swap contract
+    either way.  A path with no `centroids/` is no index and raises.
 
     Intra-batch conflicts RAISE, exactly like the text twin (r9 ADVICE
     item 1): the event schema carries no ordering metadata, so a vec_id
@@ -157,10 +160,15 @@ def stream_apply_vector_mutations(
     from pyspark.sql import functions as F
 
     from codecdb_queryengine_spark.sources import ann_index as AI
+    from codecdb_queryengine_spark.sources.io import fs_exists
 
-    if index_kind not in ("ivf", "ivfpq"):
-        raise ValueError(f"unknown index_kind {index_kind!r}")
-    upsert = AI.ivf_index_upsert if index_kind == "ivf" else AI.ivfpq_index_upsert
+    spark = mutations.sparkSession
+    if not fs_exists(spark, os.path.join(index_path, "centroids")):
+        raise ValueError(f"{index_path}: no centroids/ artifact — not a vector index")
+    if fs_exists(spark, os.path.join(index_path, "codebooks")):
+        upsert = AI.ivfpq_index_upsert
+    else:
+        upsert = AI.ivf_index_upsert
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         # No pre-probe job (r12): the upsert core's fused rollup guard

@@ -32,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import load_tables
+from codecdb_queryengine_spark.operators import similarity as S
 from codecdb_queryengine_spark.session import get_spark
 from codecdb_queryengine_spark.sources import ann_index as AI
 from codecdb_queryengine_spark.sources import layout as L
@@ -70,16 +71,10 @@ def main() -> int:
 
     # --- ANN index: build -> append -> upsert/delete -> serve ----------------
     ai = os.path.join(work, "ivf_index")
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        F.sqrt(
-            F.aggregate(
-                "embedding", F.lit(0.0), lambda a, x: a + x.cast("double") * x
-            )
-        ).alias("c_norm"),
-    )
-    AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), ai, centroids=cents)
+    # the quantizer is fixed before ingest: the mod-29 sample of the full
+    # corpus in micro-integer units (the untrained coarse lists)
+    cents = S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0)
+    AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), ai, cents)
     AI.ivf_index_append(emb.filter(F.col("vec_id") % 2 == 1), ai)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")

@@ -9,7 +9,13 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+# Spark's Python workers import the engine too: they inherit PYTHONPATH from
+# the JVM, which inherits this process's environment when the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [_ROOT, os.environ.get("PYTHONPATH")])
+)
 
 import __spark_entry__ as entry_mod
 from codecdb_queryengine_spark.oracle import duckdb_connect

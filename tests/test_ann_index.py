@@ -1,5 +1,6 @@
 """Persisted IVF index (sources/ann_index): parity with the in-memory
-operator, partition-pruned probe reads, and overwrite idempotency."""
+integer operator, partition-pruned probe reads, maintenance passes, and
+overwrite idempotency."""
 
 import os
 import tempfile
@@ -25,6 +26,11 @@ def _dpp_live(df) -> bool:
     ) and "dynamicpruningexpression(true)" not in plan
 
 
+def _mod_cents(emb):
+    """The untrained flat-IVF quantizer: the mod-29 sample, c_id = id // 29."""
+    return S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0)
+
+
 def _queries(emb, n=5):
     return emb.filter(F.col("vec_id") < n).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -33,20 +39,25 @@ def _queries(emb, n=5):
 
 def test_index_topk_matches_inmemory_ivf_bitexact(spark, sf_dir):
     emb = load_tables(spark, sf_dir)["embeddings"]
+    cents = _mod_cents(emb)
+    assert [c for c, _ in cents] == list(range(18))  # ids 0, 29, …, 493
     path = tempfile.mkdtemp(prefix="ivf_idx_test_")
-    AI.ivf_index_build(emb, path, centroid_mod=29)
+    AI.ivf_index_build(emb, path, cents)
     via_index = AI.ivf_index_topk(spark, path, _queries(emb), k=5, nprobe=2).collect()
-    in_memory = S.ivf_topk(emb, _queries(emb), k=5, centroid_mod=29, nprobe=2).collect()
+    in_memory = S.ivf_topk_micro(emb, _queries(emb), cents, k=5, nprobe=2).collect()
     key = lambda r: (r.q_id, r.rk)  # noqa: E731
-    a = {key(r): (r.n_id, r.cosine) for r in via_index}
-    b = {key(r): (r.n_id, r.cosine) for r in in_memory}
-    assert a == b  # bit-exact: same assignment exprs, norms persisted exactly
+    a = {key(r): (r.n_id, r.l2_micro2) for r in via_index}
+    b = {key(r): (r.n_id, r.l2_micro2) for r in in_memory}
+    assert a == b  # bit-exact: same assignment and serve core, BIGINT
+    # the layout persists the micro vectors, no float columns
+    lists = spark.read.parquet(os.path.join(path, "lists"))
+    assert set(lists.columns) == {"n_id", "v", "c_list"}
 
 
 def test_index_probe_plan_uses_dynamic_partition_pruning(spark, sf_dir):
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = tempfile.mkdtemp(prefix="ivf_idx_dpp_")
-    AI.ivf_index_build(emb, path, centroid_mod=29)
+    AI.ivf_index_build(emb, path, _mod_cents(emb))
     df = AI.ivf_index_topk(spark, path, _queries(emb), k=5, nprobe=2)
     df.collect()
     assert _dpp_live(df)
@@ -65,8 +76,8 @@ def test_hot_list_split_rebalances_and_preserves_results(spark, sf_dir):
     cap = 8
     plain = tempfile.mkdtemp(prefix="ivf_idx_plain_")
     split = tempfile.mkdtemp(prefix="ivf_idx_split_")
-    AI.ivf_index_build(emb, plain, centroid_mod=29)
-    AI.ivf_index_build(emb, split, centroid_mod=29, max_list_rows=cap)
+    AI.ivf_index_build(emb, plain, _mod_cents(emb))
+    AI.ivf_index_build(emb, split, _mod_cents(emb), max_list_rows=cap)
     # physical layout: every list dir fans out over its slots, and each
     # oversized list has exactly ceil(n/cap) of them
     members: dict[int, list[int]] = {}
@@ -102,15 +113,11 @@ def test_index_append_matches_full_build(spark, sf_dir):
     be bit-identical to a from-scratch build over the full corpus, and
     the appended files must land only under existing c_list dirs."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
+    cents = _mod_cents(emb)
     full_p = tempfile.mkdtemp(prefix="ivf_idx_full_")
     incr_p = tempfile.mkdtemp(prefix="ivf_idx_incr_")
-    AI.ivf_index_build(emb, full_p, centroids=cents)
-    AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), incr_p, centroids=cents)
+    AI.ivf_index_build(emb, full_p, cents)
+    AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), incr_p, cents)
     AI.ivf_index_append(emb.filter(F.col("vec_id") % 2 == 1), incr_p)
     a = AI.ivf_index_topk(spark, full_p, _queries(emb), k=5, nprobe=2).collect()
     b = AI.ivf_index_topk(spark, incr_p, _queries(emb), k=5, nprobe=2).collect()
@@ -138,16 +145,12 @@ def test_append_into_split_layout_reapplies_cap(spark, sf_dir):
     slot layout and the served results must both equal a from-scratch
     split build over the full corpus."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
+    cents = _mod_cents(emb)
     full_p = tempfile.mkdtemp(prefix="ivf_split_full_")
     incr_p = tempfile.mkdtemp(prefix="ivf_split_incr_")
-    AI.ivf_index_build(emb, full_p, centroids=cents, max_list_rows=16)
+    AI.ivf_index_build(emb, full_p, cents, max_list_rows=16)
     AI.ivf_index_build(
-        emb.filter(F.col("vec_id") % 2 == 0), incr_p, centroids=cents,
+        emb.filter(F.col("vec_id") % 2 == 0), incr_p, cents,
         max_list_rows=16,
     )
     before = _slot_layout(incr_p)
@@ -173,11 +176,11 @@ def test_append_guards_schema_and_missing_meta(spark, sf_dir):
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     meta_p = tempfile.mkdtemp(prefix="ivf_guard_meta_")
-    AI.ivf_index_build(emb, meta_p, centroid_mod=29, meta_cols=("label",))
+    AI.ivf_index_build(emb, meta_p, _mod_cents(emb), meta_cols=("label",))
     with pytest.raises(ValueError, match="meta_cols"):
         AI.ivf_index_append(emb.limit(10), meta_p)  # missing label column
     split_p = tempfile.mkdtemp(prefix="ivf_guard_split_")
-    AI.ivf_index_build(emb, split_p, centroid_mod=29, max_list_rows=16)
+    AI.ivf_index_build(emb, split_p, _mod_cents(emb), max_list_rows=16)
     shutil.rmtree(os.path.join(split_p, "lists_meta"))
     with pytest.raises(ValueError, match="lists_meta"):
         AI.ivf_index_append(emb.limit(10), split_p)
@@ -190,16 +193,12 @@ def test_upsert_matches_fresh_build_over_mutated_corpus(spark, sf_dir):
     mutated corpus serves (same fixed centroids), on a SPLIT layout so
     the cap re-application path is exercised too."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
+    cents = _mod_cents(emb)
     mut_pred = (F.col("vec_id") % 29 != 0) & (F.col("vec_id") >= 5)
     del_pred = (F.col("vec_id") % 17 == 3) & mut_pred
     upd_pred = (F.col("vec_id") % 17 == 5) & mut_pred
     up_p = tempfile.mkdtemp(prefix="ivf_upsert_")
-    AI.ivf_index_build(emb, up_p, centroids=cents, max_list_rows=16)
+    AI.ivf_index_build(emb, up_p, cents, max_list_rows=16)
     dels = [int(r[0]) for r in emb.filter(del_pred).select("vec_id").collect()]
     upds = emb.filter(upd_pred).select(
         "vec_id", F.reverse("embedding").alias("embedding")
@@ -213,7 +212,7 @@ def test_upsert_matches_fresh_build_over_mutated_corpus(spark, sf_dir):
         .alias("embedding"),
     )
     fresh_p = tempfile.mkdtemp(prefix="ivf_fresh_mut_")
-    AI.ivf_index_build(mutated, fresh_p, centroids=cents, max_list_rows=16)
+    AI.ivf_index_build(mutated, fresh_p, cents, max_list_rows=16)
     a = AI.ivf_index_topk(spark, up_p, _queries(emb), k=5, nprobe=2).collect()
     b = AI.ivf_index_topk(spark, fresh_p, _queries(emb), k=5, nprobe=2).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
@@ -233,7 +232,7 @@ def test_upsert_rewrites_only_touched_lists_and_drops_emptied(spark, sf_dir):
     from the layout."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = tempfile.mkdtemp(prefix="ivf_upsert_touch_")
-    AI.ivf_index_build(emb, path, centroid_mod=29)
+    AI.ivf_index_build(emb, path, _mod_cents(emb))
     lists_dir = os.path.join(path, "lists")
     members: dict[int, list[int]] = {}
     for r in spark.read.parquet(lists_dir).select("c_list", "n_id").collect():
@@ -267,13 +266,9 @@ def test_cached_serving_sees_maintenance_passes(spark, sf_dir):
     pass invalidates it — a cached serve after append/upsert must reflect
     the mutation exactly like an uncached one."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
+    cents = _mod_cents(emb)
     path = tempfile.mkdtemp(prefix="ivf_idx_cache_")
-    AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), path, centroids=cents)
+    AI.ivf_index_build(emb.filter(F.col("vec_id") % 2 == 0), path, cents)
     first = AI.ivf_index_topk(
         spark, path, _queries(emb), k=5, nprobe=2, cached=True
     ).collect()
@@ -288,7 +283,7 @@ def test_cached_serving_sees_maintenance_passes(spark, sf_dir):
         spark, path, _queries(emb), k=5, nprobe=2, cached=True
     ).collect()
     full_p = tempfile.mkdtemp(prefix="ivf_idx_cache_full_")
-    AI.ivf_index_build(emb, full_p, centroids=cents)
+    AI.ivf_index_build(emb, full_p, cents)
     expected = AI.ivf_index_topk(spark, full_p, _queries(emb), k=5, nprobe=2).collect()
     assert sorted(map(tuple, after)) == sorted(map(tuple, expected))
     # out-of-band mutations have an explicit hook
@@ -304,7 +299,7 @@ def test_filtered_search_restricts_candidates_and_pushes_predicate(spark, sf_dir
     (filtered vector search as one scan, not a post-search join)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = tempfile.mkdtemp(prefix="ivf_idx_meta_")
-    AI.ivf_index_build(emb, path, centroid_mod=29, meta_cols=("label",))
+    AI.ivf_index_build(emb, path, _mod_cents(emb), meta_cols=("label",))
     df = AI.ivf_index_topk(spark, path, _queries(emb), k=5, nprobe=2,
                            candidate_filter="label = 1")
     rows = df.collect()
@@ -327,9 +322,9 @@ def test_filtered_search_restricts_candidates_and_pushes_predicate(spark, sf_dir
 def test_index_rebuild_overwrites_cleanly(spark, sf_dir):
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = tempfile.mkdtemp(prefix="ivf_idx_rebuild_")
-    AI.ivf_index_build(emb, path, centroid_mod=29)
+    AI.ivf_index_build(emb, path, _mod_cents(emb))
     first = AI.ivf_index_topk(spark, path, _queries(emb), k=3).collect()
-    AI.ivf_index_build(emb, path, centroid_mod=29)  # overwrite, same data
+    AI.ivf_index_build(emb, path, _mod_cents(emb))  # overwrite, same data
     second = AI.ivf_index_topk(spark, path, _queries(emb), k=3).collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
@@ -341,8 +336,8 @@ def test_micro_index_matches_inmemory_lloyd_exact(spark, sf_dir):
     emb = load_tables(spark, sf_dir)["embeddings"]
     cents = S.kmeans_lloyd_micro(emb, dim=64, k=8, stride=37, iters=2)
     path = tempfile.mkdtemp(prefix="ivf_lloyd_idx_test_")
-    AI.ivf_index_build_micro(emb, path, cents)
-    df = AI.ivf_index_topk_micro(spark, path, _queries(emb), k=5, nprobe=2)
+    AI.ivf_index_build(emb, path, cents)
+    df = AI.ivf_index_topk(spark, path, _queries(emb), k=5, nprobe=2)
     via_index = df.collect()
     in_memory = S.ivf_topk_micro(emb, _queries(emb), cents, k=5, nprobe=2).collect()
     key = lambda r: (r.q_id, r.rk)  # noqa: E731
@@ -451,13 +446,13 @@ def test_micro_serves_fold_path_matches_literal_at_large_k(spark, sf_dir, monkey
     qs = _queries(emb)
     # flat micro tier
     p1 = tempfile.mkdtemp(prefix="ivf_micro_bigk_")
-    AI.ivf_index_build_micro(emb, p1, cents)
-    fold = AI.ivf_index_topk_micro(spark, p1, qs, k=5, nprobe=2).collect()
+    AI.ivf_index_build(emb, p1, cents)
+    fold = AI.ivf_index_topk(spark, p1, qs, k=5, nprobe=2).collect()
     # the in-memory serve shares the assignment and serve core, so it takes
     # the same size switch: both of its forms must equal the persisted serve
     mem_fold = S.ivf_topk_micro(emb, qs, cents, k=5, nprobe=2).collect()
     monkeypatch.setattr(SIM, "_ENCODE_LITERAL_MAX", 10_000)
-    lit = AI.ivf_index_topk_micro(spark, p1, qs, k=5, nprobe=2).collect()
+    lit = AI.ivf_index_topk(spark, p1, qs, k=5, nprobe=2).collect()
     mem_lit = S.ivf_topk_micro(emb, qs, cents, k=5, nprobe=2).collect()
     assert sorted(map(tuple, fold)) == sorted(map(tuple, lit))
     assert sorted(map(tuple, mem_fold)) == sorted(map(tuple, fold))
@@ -491,7 +486,7 @@ def test_ivf_upsert_replay_idempotent(spark, sf_dir):
     already-deleted ids locate nothing."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = tempfile.mkdtemp(prefix="ivf_replay_")
-    AI.ivf_index_build(emb, path, centroid_mod=29, max_list_rows=16)
+    AI.ivf_index_build(emb, path, _mod_cents(emb), max_list_rows=16)
     upds = emb.filter((F.col("vec_id") % 17 == 5) & (F.col("vec_id") >= 5)).select(
         "vec_id", F.reverse("embedding").alias("embedding")
     )
@@ -526,7 +521,7 @@ def test_upsert_batch_guards_conflicts_duplicates_and_nulls(spark, sf_dir):
 
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = tempfile.mkdtemp(prefix="ivf_guard_")
-    AI.ivf_index_build(emb, path, centroid_mod=29)
+    AI.ivf_index_build(emb, path, _mod_cents(emb))
     upd = emb.filter(F.col("vec_id") == 7).select(
         "vec_id", F.reverse("embedding").alias("embedding")
     )
@@ -564,7 +559,7 @@ def test_vector_cdc_intra_batch_conflict_fails_batch(spark, sf_dir):
     emb = load_tables(spark, sf_dir)["embeddings"]
     base = tempfile.mkdtemp(prefix="ivf_cdc_conflict_")
     path = os.path.join(base, "index")
-    AI.ivf_index_build(emb, path, centroid_mod=29)
+    AI.ivf_index_build(emb, path, _mod_cents(emb))
     events = emb.filter(F.col("vec_id") == 9).select(
         F.lit("u").alias("op"), "vec_id", F.reverse("embedding").alias("embedding")
     ).unionByName(
@@ -617,7 +612,7 @@ def test_empty_upsert_runs_one_job_and_never_reads_the_layout(spark, sf_dir):
     for a non-empty batch."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     path = tempfile.mkdtemp(prefix="ivf_empty_upsert_")
-    AI.ivf_index_build(emb, path, centroid_mod=29)
+    AI.ivf_index_build(emb, path, _mod_cents(emb))
     lists = os.path.join(path, "lists")
     before = sorted(os.listdir(lists))
     drained = spark.range(10).filter(F.col("id") < 0).select(F.col("id").alias("vec_id"))
@@ -637,23 +632,14 @@ def test_append_stats_scan_only_touched_lists(spark, sf_dir):
     distinct lists, so dynamic partition pruning scans only the touched
     list directories — still one action."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
+    cents = _mod_cents(emb)
     path = tempfile.mkdtemp(prefix="ivf_append_stats_")
     AI.ivf_index_build(
-        emb.filter(F.col("vec_id") % 2 == 0), path, centroids=cents, max_list_rows=16
+        emb.filter(F.col("vec_id") % 2 == 0), path, cents, max_list_rows=16
     )
     existing = spark.read.parquet(os.path.join(path, "lists"))
     batch = emb.filter((F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 40))
-    assigned = S._ivf_assign(
-        batch,
-        S._ivf_model(spark.read.parquet(os.path.join(path, "centroids"))),
-        "embedding",
-        "vec_id",
-    )
+    assigned = S._micro_assign(batch, AI._read_centroids(spark, path), "embedding", "vec_id")
     stats_df = AI._append_stats(existing, assigned)
     stats, execs = _one_action(spark, "append-stats", stats_df.collect)
     assert len(execs) == 1
@@ -680,3 +666,23 @@ def test_append_stats_scan_only_touched_lists(spark, sf_dir):
 
     (lists_scan,) = list(scans(plan))
     assert lists_scan.metrics().get("numPartitions").get().value() == len(touched)
+
+
+def test_vector_cdc_sink_refuses_a_path_without_centroids(spark, tmp_path):
+    """stream_apply_vector_mutations picks its upsert from the layout's own
+    artifacts (`codebooks/` → IVFADC, else flat IVF); a path with no
+    `centroids/` is no vector index and raises before any stream starts."""
+    import pytest
+
+    from codecdb_queryengine_spark.streaming import sinks as SK
+
+    src = tmp_path / "mutations"
+    src.mkdir()
+    stream = spark.readStream.schema(
+        "op string, vec_id long, embedding array<float>"
+    ).parquet(str(src))
+    with pytest.raises(ValueError, match="centroids"):
+        SK.stream_apply_vector_mutations(
+            stream, str(tmp_path / "not_an_index"), str(tmp_path / "ckpt")
+        )
+    assert not spark.streams.active

@@ -56,7 +56,8 @@ def test_ivf_lloyd_centroids_recall_at_least_mod(spark, sf_dir):
         hits = {(r.q_id, r.n_id) for r in df.collect()}
         return len(hits & exact) / len(exact)
 
-    r_mod = recall(S.ivf_topk(emb, queries, k=5, centroid_mod=29, nprobe=2))
+    mod_cents = S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0)
+    r_mod = recall(S.ivf_topk_micro(emb, queries, mod_cents, k=5, nprobe=2))
     cents = S.kmeans_lloyd_micro(emb, dim=64, k=14, stride=37, iters=2)
     # one centroid per stride-init id (ids 0, 37, …, 13·37)
     init_ids = emb.filter((F.col("vec_id") % 37 == 0) & (F.col("vec_id") < 37 * 14))
@@ -70,7 +71,8 @@ def test_ivf_topk_ranked_and_within_corpus(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    approx = S.ivf_topk(emb, queries, k=10, centroid_mod=29, nprobe=2).collect()
+    cents = S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0)
+    approx = S.ivf_topk_micro(emb, queries, cents, k=10, nprobe=2).collect()
     assert len(approx) > 0
     # every query returns results and ranks are dense from 1
     by_q: dict[int, list] = {}
@@ -79,10 +81,10 @@ def test_ivf_topk_ranked_and_within_corpus(spark, sf_dir):
     assert set(by_q) == {0, 1, 2}
     for rows in by_q.values():
         assert [r.rk for r in rows] == list(range(1, len(rows) + 1))
-        scores = [r.cosine for r in rows]
-        assert scores == sorted(scores, reverse=True)
+        scores = [r.l2_micro2 for r in rows]
+        assert scores == sorted(scores)
     # probing more lists can only widen the candidate set
-    wide = S.ivf_topk(emb, queries, k=10, centroid_mod=29, nprobe=4).collect()
+    wide = S.ivf_topk_micro(emb, queries, cents, k=10, nprobe=4).collect()
     assert len(wide) >= len(approx)
 
 
@@ -196,9 +198,11 @@ def _clustered_fixture(spark, n_clusters=16, n=400, dim=64, sigma=0.15):
 def test_clustered_recall_all_ann_tiers(spark):
     """recall@5 vs brute force on clustered data, per ANN tier.
 
-    Measured on this fixture (seed 7): lsh 0.72, mod-IVF 1.0, trained IVF
-    (Lloyd centroids, ivf_topk_micro) 1.0 against the integer-L2 top-5 it
-    ranks by (0.87 against the cosine top-5), untrained IVFADC
+    Measured on this fixture (seed 7): lsh 0.72; mod-IVF (the mod-29
+    sample) and trained IVF (Lloyd centroids) through ivf_topk_micro 1.0
+    each against the integer-L2 top-5 they rank by (0.87 each against the
+    cosine top-5: the fixture is not unit-norm, so L2 and cosine
+    neighbours differ), untrained IVFADC
     (ivfpq_rank_micro over the mod-29 / stride-37 samples) exact-recall
     0.25 and cluster-recall 1.0, trained PQ (Lloyd
     codebooks, pq_topk_micro) exact-recall 0.17 but cluster-recall 1.0 —
@@ -245,7 +249,9 @@ def test_clustered_recall_all_ann_tiers(spark):
     cents = S.kmeans_lloyd_micro(emb, dim=64, k=n_clusters, stride=17, iters=2)
     ivf_lloyd = S.ivf_topk_micro(emb, queries, cents, k=5, nprobe=2).collect()
     assert len({(r.q_id, r.n_id) for r in ivf_lloyd} & exact_l2) / len(exact_l2) >= 0.9
-    assert recall(S.ivf_topk(emb, queries, k=5, centroid_mod=29, nprobe=2)) >= 0.9
+    mod_cents = S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0)
+    ivf_mod = S.ivf_topk_micro(emb, queries, mod_cents, k=5, nprobe=2).collect()
+    assert len({(r.q_id, r.n_id) for r in ivf_mod} & exact_l2) / len(exact_l2) >= 0.9
     cbs = S.pq_codebooks_lloyd_micro(emb, dim=64, num_codewords=16, stride=17, iters=2)
     pq = S.pq_topk_micro(emb, queries, cbs, dim=64, k=5, num_codewords=16)
     assert cluster_recall(pq) >= 0.8
@@ -265,37 +271,24 @@ def test_clustered_recall_all_ann_tiers(spark):
     assert _hits(ivfpq10, exact10) >= 50
 
 
-def test_ivf_assign_arrow_matches_expression_assignment(spark):
-    """The vectorized Arrow assignment must agree with the expression-fold
-    assignment (the oracle-gated face) wherever centroids are separated —
-    clustered fixture: vectors 0..7 lie in eight different clusters, so
-    as centroids they are mutually far apart."""
-    emb = _clustered_fixture(spark)
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        S.norm(F.col("embedding")).alias("c_norm"),
-    )
-    fast = {r.n_id: r.c_list for r in S.ivf_assign_arrow(emb, centroids=cents).collect()}
-    # expression form: same ranking ivf_topk uses for its inverted lists
-    from pyspark.sql import functions as FX
-
-    scored = (
-        emb.crossJoin(FX.broadcast(cents))
-        .select(
-            FX.col("vec_id").alias("n_id"),
-            "c_id",
-            (S.dot(FX.col("embedding"), FX.col("c_vec")) / FX.col("c_norm")).alias("sim"),
-        )
-        .groupBy("n_id")
-        .agg(
-            FX.max_by(
-                "c_id", FX.struct(FX.col("sim").alias("s"), (-FX.col("c_id")).alias("t"))
-            ).alias("c_id")
-        )
-    )
-    slow = {r.n_id: r.c_id for r in scored.collect()}
-    assert fast == slow
+def test_ivf_assign_arrow_matches_expression_assignment(spark, sf_dir):
+    """The vectorized Arrow assignment must equal the expression-form
+    assignment (similarity._micro_assign, the oracle-gated face) row for
+    row — both are integer L2 over the same micro-quantized values, so
+    they agree by arithmetic, not by a tie margin: on the real corpus with
+    the mod-29 sample, and on the clustered fixture with near-twin
+    centers."""
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    # stride 8 on the fixture: every 8th vector, two centers per cluster
+    for vecs, stride in ((emb, 29), (_clustered_fixture(spark), 8)):
+        cents = S.kmeans_lloyd_micro(vecs, dim=64, k=None, stride=stride, iters=0)
+        fast = {r.n_id: r.c_list for r in S.ivf_assign_arrow(vecs, cents).collect()}
+        slow = {
+            r.n_id: r.c_list
+            for r in S._micro_assign(vecs, cents, "embedding", "vec_id").collect()
+        }
+        assert fast == slow
+        assert len(fast) == vecs.count()
 
 
 def test_recall_gates_pin_quality_values(spark, sf_dir):
@@ -385,7 +378,8 @@ def test_two_stage_rerank_flat_tiers(spark, sf_dir):
         exact10.setdefault(r.q_id, set()).add(r.n_id)
     shortlists = {
         "sim_ann_recall_ivf_reranked": S.ivf_coarse_shortlist(
-            emb, queries, r=100, centroid_mod=29, nprobe=4
+            emb, queries, S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0),
+            r=100, nprobe=4,
         ),
         "sim_ann_recall_lsh_reranked": S.lsh_collision_shortlist(
             emb, queries, dim=64, r=20, bands=4, planes_per_band=4

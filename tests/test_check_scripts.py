@@ -32,3 +32,14 @@ def test_select_queries_rejects_unknown_names():
     mod = _load_check_mod()
     with pytest.raises(KeyError, match="q_typo"):
         mod.select_queries({"q1": 1}, ["q1", "q_typo"])
+
+
+def test_loading_puts_its_checkout_first_on_pythonpath(monkeypatch):
+    """Spark's Python workers find the engine only through PYTHONPATH, so
+    a run from any cwd must export the script's own checkout before the
+    session starts (Python-UDF entries failed with ModuleNotFoundError
+    otherwise)."""
+    monkeypatch.setenv("PYTHONPATH", "/elsewhere")
+    _load_check_mod()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert os.environ["PYTHONPATH"].split(os.pathsep) == [root, "/elsewhere"]

@@ -92,3 +92,38 @@ def test_embedding_search_rerank_stage_improves_or_holds_recall(
         by_q.setdefault(r.q_id, []).append(r.cosine)
     for scores in by_q.values():
         assert scores == sorted(scores, reverse=True)
+
+
+maint_spec = importlib.util.spec_from_file_location(
+    "index_maintenance",
+    os.path.join(os.path.dirname(os.path.dirname(__file__)), "examples", "index_maintenance.py"),
+)
+maint_mod = importlib.util.module_from_spec(maint_spec)
+maint_spec.loader.exec_module(maint_mod)
+
+
+def test_index_maintenance_example_end_to_end(spark, sf_dir, tmp_path, monkeypatch):
+    """examples/index_maintenance.py runs every day-2 pass (text upsert and
+    purge, IVF build/append/upsert/serve, z-order append and maintain);
+    afterwards the IVF layout holds no deleted vector, every update, and
+    still serves."""
+    from pyspark.sql import functions as F
+
+    from codecdb_queryengine_spark.catalog import load_tables
+    from codecdb_queryengine_spark.sources import ann_index as AI
+
+    work = str(tmp_path / "maint")
+    monkeypatch.setattr("sys.argv", ["index_maintenance.py", sf_dir, work])
+    assert maint_mod.main() == 0
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    ai = os.path.join(work, "ivf_index")
+    lists = spark.read.parquet(os.path.join(ai, "lists"))
+    left = {r.n_id for r in lists.select("n_id").collect()}
+    deleted = {r.vec_id for r in emb.filter(F.col("vec_id") % 17 == 3).collect()}
+    assert left == {r.vec_id for r in emb.collect()} - deleted
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    assert AI.ivf_index_topk(spark, ai, queries, k=3).count() == 9
+    for sub in ("text_index", "docs_zorder"):
+        assert os.path.isdir(os.path.join(work, sub))

@@ -1,17 +1,14 @@
 """Regression guards for the r5 shuffle-free model-fold plans
-(operators/similarity: _model_1row + _fold_argmax_sim, _spread,
-ivf_assign_sql) and for the integer PQ encode, ADC and codebook guards.
+(operators/similarity: the integer-L2 _micro_nearest forms, _spread) and
+for the integer PQ encode, ADC and codebook guards.
 
 The load-bearing claims pinned here:
-- the argmax fold is ORDER-FREE (collect_list gives no order
-  guarantee, so the fold's total tie-break must make any order produce
-  the same winner);
+- the IVF assignment and probe ranking are ORDER-FREE (collect_list gives
+  no order guarantee to the broadcast-model form, so the (d, c_id)
+  lexicographic argmin must make any center order produce the same
+  winner);
 - `_spread` adds an exchange only for under-partitioned inputs and is a
-  no-op once the input has enough splits;
-- `ivf_assign_sql` pre-folds |c| driver-side with the exact IEEE op
-  sequence the Spark expression fold produces (left-assoc Σx², correctly
-  rounded sqrt) — the bit-exactness argument behind embedding the norm
-  as a literal.
+  no-op once the input has enough splits.
 """
 
 import math
@@ -30,25 +27,24 @@ def _queries(emb):
     )
 
 
-def test_ivf_topk_invariant_under_centroid_order(spark, sf_dir):
-    """Reversing the centroid frame's row order must not change one row of
-    the result — the per-row argmax fold and the probe sort both tie-break
-    on c_id, so collect_list order is irrelevant.  Runs ivf_topk's own
-    model / assign / serve core over both centroid orders."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = S._mod_centroids(emb, "embedding", "vec_id", 29)
+def test_ivf_topk_invariant_under_centroid_order(spark, sf_dir, monkeypatch):
+    """Reversing the center list must not change one row of the integer
+    IVF serve — the per-row argmin and the probe sort both compare
+    (distance, c_id), so center order is irrelevant — in the literal
+    form and in the broadcast-model form whose collect_list order Spark
+    does not guarantee."""
+    import codecdb_queryengine_spark.operators.similarity as SIM
 
-    def serve(cents):
-        cmodel = S._ivf_model(cents)
-        lists = S._ivf_assign(emb, cmodel, "embedding", "vec_id")
-        return S._ivf_cosine_rank(lists, _queries(emb), cmodel, k=5, nprobe=2)
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    cents = S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0)
+
+    def serve(cs):
+        return sorted(map(tuple, S.ivf_topk_micro(emb, _queries(emb), cs, k=5).collect()))
 
     fwd = serve(cents)
-    rev = serve(cents.orderBy(F.col("c_id").desc()))
-    assert sorted(map(tuple, fwd.collect())) == sorted(map(tuple, rev.collect()))
-    assert sorted(map(tuple, fwd.collect())) == sorted(
-        map(tuple, S.ivf_topk(emb, _queries(emb), k=5, nprobe=2).collect())
-    )
+    assert serve(cents[::-1]) == fwd
+    monkeypatch.setattr(SIM, "_ENCODE_LITERAL_MAX", 0)  # broadcast-model form
+    assert serve(cents[::-1]) == fwd
 
 
 def test_pq_encode_matches_python_argmin(spark, sf_dir):
@@ -128,23 +124,3 @@ def test_spread_noop_when_partitioned(spark, sf_dir):
     assert S._spread(wide) is wide  # already adequate: no wrapper, no exchange
     narrow = emb.coalesce(1)
     assert S._spread(narrow).rdd.getNumPartitions() == p
-
-
-def test_assign_sql_norm_literal_is_ieee_identical(spark, sf_dir):
-    """The driver-side Σx²/sqrt pre-fold in ivf_assign_sql must equal the
-    Spark expression fold bit-for-bit (same op sequence, both IEEE
-    doubles) — checked over every real centroid vector in the fixture."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") % 29 == 0).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    spark_norms = {
-        int(r["c_id"]): r["n"]
-        for r in cents.select("c_id", S.norm(F.col("c_vec")).alias("n")).collect()
-    }
-    for r in cents.collect():
-        s = 0.0
-        for x in r["c_vec"]:
-            fx = float(x)
-            s += fx * fx
-        assert math.sqrt(s) == spark_norms[int(r["c_id"])]

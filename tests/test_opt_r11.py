@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from codecdb_queryengine_spark.operators import similarity as S
 from codecdb_queryengine_spark.sources import ann_index as AI
 from codecdb_queryengine_spark.sources import io as IO
 from codecdb_queryengine_spark.sources import layout as L
@@ -99,7 +100,8 @@ def test_one_file_per_partition_dir_after_sized_build(spark, tmp_path):
         ),
     )
     path = str(tmp_path / "idx")
-    AI.ivf_index_build(emb, path, centroid_mod=29, max_list_rows=16)
+    cents = S.kmeans_lloyd_micro(emb, dim=4, k=None, stride=29, iters=0)
+    AI.ivf_index_build(emb, path, cents, max_list_rows=16)
     lists = os.path.join(path, "lists")
     for c_dir in os.listdir(lists):
         if not c_dir.startswith("c_list="):

@@ -11,7 +11,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from codecdb_queryengine_spark.operators.similarity import norm
 from codecdb_queryengine_spark.sources import ann_index as AI
 from codecdb_queryengine_spark.sources import io as IO
 from codecdb_queryengine_spark.sources import text_index as TI
@@ -38,11 +37,8 @@ def test_upsert_slot_plan_counts_insert_only_target_lists(spark, tmp_path):
         (i, [float(3 + i % 2), 0.0, 0.0, 0.0]) for i in (101, 102, 103)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
-        "c_id long, c_vec array<float>",
-    ).select("c_id", "c_vec", norm(F.col("c_vec")).alias("c_norm"))
-    AI.ivf_index_build(emb, path, centroids=cents, max_list_rows=4)
+    cents = [(0, [1_000_000, 0, 0, 0]), (1, [0, 1_000_000, 0, 0])]  # micro units
+    AI.ivf_index_build(emb, path, cents, max_list_rows=4)
     lists_path = os.path.join(path, "lists")
     assert len(_slot_rows(lists_path, spark, 1)) == 3  # ceil(9/4)
 

@@ -6,6 +6,7 @@ import threading
 import time
 
 from codecdb_queryengine_spark.catalog import load_tables
+from codecdb_queryengine_spark.operators import similarity as S
 from codecdb_queryengine_spark.sources import ann_index as AI
 from codecdb_queryengine_spark.sources import text_index as TI
 
@@ -38,8 +39,8 @@ def _group_and_launched(spark, group, fn):
 
 
 def test_pool_jobs_count_under_the_callers_job_group(spark, sf_dir, tmp_path):
-    """A text upsert overlaps its delta and docgen-staging writes, and a
-    capped IVF build overlaps its centroid write with the per-list count:
+    """A text upsert overlaps its delta and docgen-staging writes on the
+    pool, and a capped IVF build runs its per-list count and list write:
     every job either launches is in the caller's job group."""
     path = str(tmp_path / "ti")
     docs = spark.createDataFrame(
@@ -48,10 +49,11 @@ def test_pool_jobs_count_under_the_callers_job_group(spark, sf_dir, tmp_path):
     TI.text_index_build_all(docs, path, num_buckets=8)
     updates = spark.createDataFrame([(1, "gamma delta")], "doc_id long, text string")
     emb = load_tables(spark, sf_dir)["embeddings"]
+    cents = S.kmeans_lloyd_micro(emb, dim=64, k=None, stride=29, iters=0)
 
     def mutate():
         TI.text_index_upsert(path, updates)
-        AI.ivf_index_build(emb, str(tmp_path / "ivf"), max_list_rows=16)
+        AI.ivf_index_build(emb, str(tmp_path / "ivf"), cents, max_list_rows=16)
 
     in_group, launched = _group_and_launched(spark, "run-parallel-jobs", mutate)
     assert len(launched) >= 5  # the delta writes, the staging, the IVF passes
